@@ -18,6 +18,8 @@ import time
 from contextlib import contextmanager
 from pathlib import Path
 
+import numpy as np
+
 ROOT = Path(__file__).resolve().parent.parent
 BENCH_DIR = ROOT / "perfbench"
 WORK_ROOT = BENCH_DIR / ".work"
@@ -34,6 +36,14 @@ DRIVER_MEM = "2g"
 # A timed loop always completes at least this many operations so
 # that the reported median has company even when one op is slow.
 MIN_TIMED_OPS = 3
+
+
+def input_seed(seed: int) -> int:
+    """The 32-bit seed the input generators use for the CLI's ``--seed``.
+
+    ``--seed`` is any integer; numpy's ``RandomState`` takes only
+    0 <= seed < 2**32, so the CLI seed is hashed into that range."""
+    return int(np.random.SeedSequence(seed % 2**64).generate_state(1)[0])
 
 
 class Checks:
@@ -238,7 +248,7 @@ class Run:
     def __init__(self, workload: str, seed: int, seconds: float,
                  trace: bool, cores: int = CORES, scale: float = 1.0):
         self.workload = workload
-        self.seed = seed
+        self.seed = input_seed(seed)
         self.seconds = seconds
         self.trace = trace
         self.cores = cores

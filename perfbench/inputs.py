@@ -144,7 +144,7 @@ AVI_STRIDE = 2
 def avi_payloads(n: int, seed: int, first_id: int):
     """``n`` uncompressed-DIB AVI clips.  Returns (payloads DF(doc_id,
     payload), expected ``frame_sample_real`` rows at AVI_STRIDE)."""
-    rng = np.random.RandomState(seed + 1)
+    rng = np.random.RandomState([seed, 1])
     payloads, expected = [], []
     for did in range(first_id, first_id + n):
         nf, w, h = rng.randint(4, 13), rng.randint(6, 14), rng.randint(5, 11)

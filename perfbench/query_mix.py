@@ -97,7 +97,7 @@ def run(b) -> int:
         per_query = b.detail.setdefault("query_s", {name: [] for name in MIX})
 
         def op(i):
-            order = np.random.RandomState(b.seed * 1000 + i).permutation(len(MIX))
+            order = np.random.RandomState([b.seed, i]).permutation(len(MIX))
             for k in order:
                 name = MIX[k]
                 t0 = time.perf_counter()

@@ -20,6 +20,8 @@ from __future__ import annotations
 import argparse
 import importlib
 import json
+import os
+import signal
 import statistics
 import subprocess
 import sys
@@ -33,7 +35,10 @@ from perfbench import harness, tracing  # noqa: E402
 from perfbench.metrics import (ALL_WORKLOADS, END_TO_END,  # noqa: E402
                                ITEM_ALIASES, PER_LAYER)
 
-CHILD_TIMEOUT_S = 170
+# A child run times only MIN_TIMED_OPS operations (``--seconds 0``),
+# so the traced run and its children together end well inside the
+# 180 s a run may take.
+CHILD_TIMEOUT_S = 75
 
 
 def _parse(argv):
@@ -49,16 +54,26 @@ def _parse(argv):
 
 
 def _child(args, cores: int | None = None, scale: float = 1.0) -> dict:
-    """Run this benchmark untraced in a child process; return the
-    throughputs from its detail file."""
+    """Run this benchmark untraced in a child process, timing only
+    MIN_TIMED_OPS operations; return the throughputs from its detail
+    file."""
     cmd = [sys.executable, str(Path(__file__).resolve()),
            "--workload", args.workload, "--seed", str(args.seed),
-           "--seconds", str(args.seconds), "--trace", "0",
+           "--seconds", "0", "--trace", "0",
            "--scale", str(args.scale * scale)]
     if cores:
         cmd += ["--cores", str(cores)]
-    subprocess.run(cmd, stdout=subprocess.DEVNULL, timeout=CHILD_TIMEOUT_S, check=True)
-    child = argparse.Namespace(**{**vars(args), "trace": 0, "cores": cores,
+    # its own process group, so a timeout also ends its JVM and workers
+    proc = subprocess.Popen(cmd, stdout=subprocess.DEVNULL, start_new_session=True)
+    try:
+        rc = proc.wait(timeout=CHILD_TIMEOUT_S)
+    except subprocess.TimeoutExpired:
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait()
+        raise
+    if rc != 0:
+        raise subprocess.CalledProcessError(rc, cmd)
+    child = argparse.Namespace(**{**vars(args), "seconds": 0.0, "trace": 0, "cores": cores,
                                   "scale": args.scale * scale})
     return _throughputs(harness.RESULTS_DIR / _result_name(child))
 

@@ -36,6 +36,19 @@ def _offline_run(seconds=0.0):
     return run
 
 
+def test_any_integer_seed_makes_inputs():
+    seeds = (0, 1, 4_294_967_295, 4_294_967_296, 10**30, -1, -7)
+    derived = [harness.input_seed(s) for s in seeds]
+    assert len(set(derived)) == len(seeds)
+    assert all(0 <= d < 2**32 for d in derived)
+    assert harness.input_seed(12345) == harness.input_seed(12345)
+    for d in derived:
+        np.random.RandomState([d, 1])      # the AVI and query-order streams
+    pd.testing.assert_frame_equal(inputs.skewed_points(50, derived[2]),
+                                  inputs.skewed_points(50, derived[2]))
+    assert harness.Run("query_mix", -7, 0.0, trace=False).seed == derived[-1]
+
+
 def test_wrong_output_is_a_failed_op():
     run = _offline_run()
     answers = iter([None, "digest differs"] + [None] * harness.MIN_TIMED_OPS)

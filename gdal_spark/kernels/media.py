@@ -229,7 +229,9 @@ def encode_png(img: np.ndarray, filter_mode: str = "cycle") -> bytes:
 def decode_png(payload: bytes) -> np.ndarray:
     """PNG -> uint8 array (H,W) for gray, (H,W,ch) otherwise.  All 5
     filter types; Sub reconstructs as a per-lane cumsum, Up as one
-    vector add, Average/Paeth walk pixels with whole-pixel vectors."""
+    vector add, Average/Paeth byte by byte as Python ints over a
+    bytearray (each byte depends on the one ``ch`` before it, and
+    int arithmetic beats several numpy calls per pixel)."""
     import zlib
     if payload[:8] != _PNG_SIG:
         raise ValueError("not a PNG payload")
@@ -274,27 +276,29 @@ def decode_png(payload: bytes) -> np.ndarray:
         elif f == 2:                       # Up
             rec = cur + prior
         elif f == 3:                       # Average
-            rec = np.empty(stride, dtype=np.uint8)
-            px = cur.reshape(w, ch).astype(np.int16)
-            pr = prior.reshape(w, ch).astype(np.int16)
-            left = np.zeros(ch, dtype=np.int16)
-            rv = rec.reshape(w, ch)
-            for i in range(w):
-                left = (px[i] + ((left + pr[i]) >> 1)) & 0xFF
-                rv[i] = left
+            rec = bytearray(cur.tobytes())
+            pr = prior.tobytes()
+            for i in range(ch):
+                rec[i] = (rec[i] + (pr[i] >> 1)) & 0xFF
+            for i in range(ch, stride):
+                rec[i] = (rec[i] + ((rec[i - ch] + pr[i]) >> 1)) & 0xFF
+            rec = np.frombuffer(rec, dtype=np.uint8)
         elif f == 4:                       # Paeth
-            rec = np.empty(stride, dtype=np.uint8)
-            px = cur.reshape(w, ch)
-            pr = prior.reshape(w, ch)
-            left = np.zeros(ch, dtype=np.uint8)
-            upleft = np.zeros(ch, dtype=np.uint8)
-            rv = rec.reshape(w, ch)
-            for i in range(w):
-                left = (px[i].astype(np.int16)
-                        + _paeth(left, pr[i], upleft)) & 0xFF
-                left = left.astype(np.uint8)
-                rv[i] = left
-                upleft = pr[i]
+            rec = bytearray(cur.tobytes())
+            pr = prior.tobytes()
+            for i in range(ch):            # left = upleft = 0: predicts up
+                rec[i] = (rec[i] + pr[i]) & 0xFF
+            for i in range(ch, stride):
+                a, b, c = rec[i - ch], pr[i], pr[i - ch]
+                pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - c - c)
+                if pa <= pb and pa <= pc:
+                    p = a
+                elif pb <= pc:
+                    p = b
+                else:
+                    p = c
+                rec[i] = (rec[i] + p) & 0xFF
+            rec = np.frombuffer(rec, dtype=np.uint8)
         else:
             raise ValueError(f"bad filter type {f}")
         out[r] = rec
@@ -730,7 +734,7 @@ def _entropy_segments(payload: bytes, pos: int) -> list:
     segs = []
     cur = bytearray()
     n = len(payload)
-    while pos < n - 1:
+    while pos < n:
         b = payload[pos]
         if b != 0xFF:
             nxt = payload.find(b"\xff", pos)
@@ -739,6 +743,8 @@ def _entropy_segments(payload: bytes, pos: int) -> list:
             cur += payload[pos:nxt]
             pos = nxt
             continue
+        if pos + 1 == n:                  # lone 0xFF: truncated marker
+            break
         m = payload[pos + 1]
         if m == 0x00:                     # stuffed data 0xFF
             cur.append(0xFF)
@@ -853,6 +859,8 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
             raise ValueError(f"expected marker at {pos}")
         while payload[pos + 1] == 0xFF:   # fill bytes
             pos += 1
+            if pos + 1 >= len(payload):
+                raise ValueError("truncated JPEG")
         m = payload[pos + 1]
         pos += 2
         if m == 0xD9:                     # EOI
@@ -919,6 +927,12 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
         raise ValueError("missing SOF/SOS")
     h, w, comps = frame
     scomps, data_pos = scan
+    if len(comps) == 1 and (comps[0][1] > 1 or comps[0][2] > 1):
+        # a one-component scan is non-interleaved (T.81 A.2.3): one
+        # block per MCU in raster order, not an h x v MCU of blocks
+        raise ValueError(
+            f"single-component JPEG with sampling "
+            f"{comps[0][1]}x{comps[0][2]} not supported")
     if len(scomps) != len(comps):
         # T.81 allows baseline images split into per-component scans;
         # this decoder handles the (ubiquitous) single interleaved
@@ -1059,12 +1073,13 @@ def decode_avi(payload: bytes):
         raise ValueError("not an AVI payload")
     w = h = None
     rate = scale = None
+    bottom_up = True                      # DIB rule: biHeight < 0 is top-down
     n_declared = 0
     frames = []
     cur_fcc = None                        # stream type of the last strh
 
     def walk(pos: int, end: int):
-        nonlocal w, h, rate, scale, n_declared, cur_fcc
+        nonlocal w, h, rate, scale, bottom_up, n_declared, cur_fcc
         while pos + 8 <= end:
             tag = payload[pos:pos + 4]
             (ln,) = struct.unpack("<I", payload[pos + 4:pos + 8])
@@ -1085,8 +1100,9 @@ def decode_avi(payload: bytes):
                 # only the VIDEO stream's format block is a
                 # BITMAPINFOHEADER — an audio strf (WAVEFORMATEX)
                 # must not be validated against it
-                bits, comp = struct.unpack(
-                    "<HI", payload[body_start + 14:body_start + 20])
+                bi_h, _planes, bits, comp = struct.unpack(
+                    "<iHHI", payload[body_start + 8:body_start + 20])
+                bottom_up = bi_h > 0
                 if bits != 24 or comp != 0:
                     raise ValueError(
                         f"only 24-bit BI_RGB DIB video supported "
@@ -1106,7 +1122,7 @@ def decode_avi(payload: bytes):
         if ln != stride * h:
             raise ValueError(f"frame {fi} size {ln} != {stride * h}")
         a = np.frombuffer(payload, dtype=np.uint8, count=ln, offset=off)
-        out[fi] = _dib_unpack(a, w, h)
+        out[fi] = _dib_unpack(a, w, h, bottom_up=bottom_up)
     return int(rate), int(scale), out
 
 

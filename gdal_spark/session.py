@@ -4,6 +4,15 @@ Scale posture (100 TB / 1000-executor design, local[N] test harness):
 AQE on (runtime re-plan + skew-join splitting), Arrow on (every
 pandas UDF boundary is Arrow-batched), small default advisory
 partition sizes appropriate for the sandbox but overridable via env.
+
+Python workers fork from ``gdal_spark.worker_daemon`` rather than
+``pyspark.daemon``.  PySpark calls ``importlib.invalidate_caches()`` at
+the start of every task, which makes each zipimporter on the workers'
+path re-read its archive's whole directory (pyspark.zip and the
+spark-core jar, 16 times a task); that daemon puts no large archive on
+the path.  ``spark.executorEnv.PYTHONPATH`` names the directory (or
+``--py-files`` zip) holding this package, so the daemon imports from
+any working directory.
 """
 
 from __future__ import annotations
@@ -11,6 +20,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "gdal_spark",
@@ -44,5 +55,7 @@ def get_spark(app_name: str = "gdal_spark",
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.daemon.module", "gdal_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     return builder.getOrCreate()

@@ -114,3 +114,17 @@ def test_avi_without_vids_stream_raises_cleanly():
     raw[i + 8:i + 12] = b"text"        # no vids stream any more
     with pytest.raises(ValueError, match="vids"):
         km.decode_avi(bytes(raw))
+
+
+def test_top_down_avi_decodes_upright():
+    # negative strf biHeight = top-down DIB rows (as decode_bmp reads
+    # them); such a stream must not come back vertically flipped
+    import struct
+    fr = np.random.default_rng(5).integers(0, 256, (3, 5, 7, 3),
+                                           dtype=np.uint8)
+    raw = bytearray(km.encode_avi(fr[:, ::-1]))   # rows stored top first
+    i = raw.find(b"strf")
+    assert struct.unpack_from("<i", raw, i + 16)[0] == 5
+    struct.pack_into("<i", raw, i + 16, -5)
+    _, _, out = km.decode_avi(bytes(raw))
+    np.testing.assert_array_equal(out, fr)

@@ -191,3 +191,34 @@ def test_huff_lut_cache_bounded():
         bits = [0, 1, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
         _huff_decode_table(bits, [v % 256, (v + 1) % 256])
     assert len(_HUFF_LUT_CACHE) <= 64
+
+
+def test_truncated_fill_bytes_raise_value_error():
+    # a payload that ends inside a run of 0xFF fill bytes must raise the
+    # parser contract's ValueError, not IndexError
+    raw = km.encode_jpeg(_block_gray(8, 8))
+    i = raw.find(b"\xFF\xDB")
+    for cut in (b"\xFF\xFF", b"\xFF\xFF\xFF\xFF"):
+        with pytest.raises(ValueError, match="truncated JPEG"):
+            km.decode_jpeg(raw[:i] + cut)
+
+
+def test_single_component_sampling_above_one_raises():
+    # one-component scans are non-interleaved (T.81 A.2.3); decoding
+    # them as 2x2 MCUs would scramble blocks, so the decoder refuses
+    raw = bytearray(km.encode_jpeg(_block_gray(16, 16)))
+    i = raw.find(b"\xFF\xC0")
+    assert raw[i + 9] == 1 and raw[i + 11] == 0x11    # nc=1, h=v=1
+    raw[i + 11] = 0x22
+    with pytest.raises(ValueError, match="single-component"):
+        km.decode_jpeg(bytes(raw))
+
+
+def test_stream_without_eoi_keeps_last_entropy_byte():
+    assert km._entropy_segments(b"\x12\x34", 0) == [b"\x12\x34"]
+    assert km._entropy_segments(b"\x12\xFF\x00\x34", 0) == [b"\x12\xFF\x34"]
+    assert km._entropy_segments(b"\x12\x34\xFF", 0) == [b"\x12\x34"]
+    img = np.random.default_rng(3).integers(0, 256, (24, 24), dtype=np.uint8)
+    raw = km.encode_jpeg(img, quality=75)
+    assert raw.endswith(b"\xFF\xD9")
+    np.testing.assert_array_equal(km.decode_jpeg(raw[:-2]), km.decode_jpeg(raw))

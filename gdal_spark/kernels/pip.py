@@ -92,10 +92,3 @@ def winding_number(px, py, ring_xy):
     down = (y1 > py[None, :]) & (y2 <= py[None, :]) & (is_left < 0)
     return (up.sum(axis=0) - down.sum(axis=0)).astype(np.int64)
 
-
-def envelope_of_ring(ring_xy):
-    """(minx, miny, maxx, maxy) of a ring, as plain floats."""
-    ring = np.asarray(ring_xy, dtype=np.float64)
-    mn = ring.min(axis=0)
-    mx = ring.max(axis=0)
-    return float(mn[0]), float(mn[1]), float(mx[0]), float(mx[1])

@@ -190,15 +190,6 @@ def lsh_topk(vectors: DataFrame, queries: DataFrame, dim: int, k: int = 3,
     )
 
 
-def dist2_scaled(a: Column, b: Column) -> Column:
-    """Exact int64 squared L2 distance of two scaled vectors."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 MAX_DRIVER_CENTROIDS = 4096
 
 

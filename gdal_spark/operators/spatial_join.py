@@ -1,21 +1,22 @@
 """Two-phase cell-indexed spatial join (the engine's flagship operator).
 
 Reproduces the reference's two-phase spatial filter — bbox reject,
-bbox-inside accept, exact test
-(/root/reference/ogr/ogrsf_frmts/generic/ogrlayer.cpp:2253-2325) —
-as a distributed plan:
+bbox-inside accept, exact test (ogrlayer.cpp:2253-2325) — as a
+distributed plan:
 
-  phase 1 (coarse, pure Catalyst):
-      points -> cell id (Column math, JVM-side);
-      polygons -> covering cell set (sequence + explode, JVM-side);
-      equi-join on cell — broadcast when the polygon side is small,
-      else shuffle with explicit hot-cell salting (north_rule), on
-      top of AQE's skew handling;
-      envelope pretest as a Column predicate (pushdown-friendly).
+  phase 1 (coarse candidates, one generator per cell system):
+      quadtree (``spatial_join``): points -> cell id (Column math);
+      polygons -> covering cell set (sequence + explode); equi-join
+      on cell — broadcast when the polygon side is small, else
+      shuffle with explicit hot-cell salting (north_rule), on top of
+      AQE's skew handling;
+      S2 (``spatial_join_s2``): the same equi-join on S2 cell keys.
 
-  phase 2 (exact, Arrow-vectorized):
-      ray-cast PIP in numpy inside mapInPandas — bit-identical to
-      OGRLinearRing::isPointInRing (ogrlinearring.cpp:462-532).
+  phase 2 (``_exact_tail``, shared by both generators):
+      envelope pretest as a Column predicate; ray-cast PIP as a JVM
+      fold over the fid's broadcast edge array — bit-identical to
+      OGRLinearRing::isPointInRing (ogrlinearring.cpp:462-532);
+      polygon attributes by fid; OGR first-match / LEFT JOIN shape.
 
 Matching GDAL's index-nested-loop (SetSpatialFilter per feature,
 ogrlayer.cpp:3345) result set with a shuffle plan that survives
@@ -26,13 +27,11 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from .. import functions as gf
 from ..kernels.cells import TileGrid
-from ..kernels import pip as kpip
 from ..kernels import wkb as kwkb
 
 DEFAULT_ZOOM = 12
@@ -109,23 +108,48 @@ def prepare_edges(polys: DataFrame) -> DataFrame:
     return edges_table(polys).persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def _exact_pip_cogroup(cand_pdf: pd.DataFrame,
-                       poly_pdf: pd.DataFrame) -> pd.DataFrame:
-    """Cogrouped-by-fid exact phase: decode this fid's WKB once, test
-    all its candidate points vectorized."""
-    if len(cand_pdf) == 0 or len(poly_pdf) == 0:
-        return cand_pdf.iloc[0:0]
-    rings = kwkb.polygon_rings(bytes(poly_pdf["wkb"].iloc[0]))
-    xs = cand_pdf["x"].to_numpy(dtype=np.float64)
-    ys = cand_pdf["y"].to_numpy(dtype=np.float64)
-    # envelope already pretested in phase 1 -> straight to the kernel
-    return cand_pdf[kpip.points_in_polygon(xs, ys, rings)]
+def _exact_tail(cand: DataFrame, points: DataFrame, polys: DataFrame,
+                edges: DataFrame | None, broadcast: bool | None,
+                first_match: bool, how: str) -> DataFrame:
+    """Phase 1b + 2 of every candidate generator.
+
+    cand: the point columns + (cell, fid, xmin, ymin, xmax, ymax) of
+    each candidate (point, polygon) pair.  Envelope pretest, JVM
+    ray-cast over the fid's edge array (no Python workers), polygon
+    attributes by fid, then the OGR join shape.  The whole point row is the point's identity — null-safe,
+    with multiplicity — so ``first_match`` returns one row per input
+    row and ``how='left'`` exactly the input rows without a match.
+    """
+    if edges is None:
+        edges = edges_table(polys)
+    if broadcast is not False:
+        edges = F.broadcast(edges)
+    matched = (
+        cand.filter(
+            (F.col("x") >= F.col("xmin")) & (F.col("x") <= F.col("xmax"))
+            & (F.col("y") >= F.col("ymin")) & (F.col("y") <= F.col("ymax")))
+        .join(edges, "fid", "inner")
+        .filter(gf.pip_inside_col(F.col("edges"), F.col("x"), F.col("y")))
+        .drop("edges", "cell", "xmin", "ymin", "xmax", "ymax"))
+
+    # re-attach full polygon attributes (cheap broadcast by fid)
+    attrs = polys.drop("wkb", "xmin", "ymin", "xmax", "ymax")
+    matched = matched.join(F.broadcast(attrs), "fid", "inner")
+
+    if first_match:
+        w = Window.partitionBy(*points.columns).orderBy(F.col("fid").asc())
+        matched = (matched.withColumn("_rk", F.rank().over(w))
+                   .filter(F.col("_rk") == 1).drop("_rk"))
+    if how == "left":
+        unmatched = points.exceptAll(matched.select(*points.columns))
+        matched = matched.unionByName(unmatched, allowMissingColumns=True)
+    return matched
 
 
 def spatial_join(points: DataFrame, polys: DataFrame, grid: TileGrid,
                  zoom: int = DEFAULT_ZOOM, how: str = "inner",
                  broadcast: bool | None = None, salt: int | str = 0,
-                 first_match: bool = False, exact: str = "column",
+                 first_match: bool = False,
                  edges: DataFrame | None = None) -> DataFrame:
     """Join point rows to containing polygons.
 
@@ -145,6 +169,11 @@ def spatial_join(points: DataFrame, polys: DataFrame, grid: TileGrid,
     edges  : pre-built edge table from ``prepare_edges(polys)`` —
              reuses one persisted edge build across repeated joins on
              the same layer instead of a fresh Python stage per call.
+
+    On a streaming ``points`` frame with ``broadcast=True`` this is the
+    stream-static join: Structured Streaming runs it statelessly per
+    micro-batch (inner only; ``first_match`` and ``how='left'`` need
+    batch input).
     """
     pts = points.withColumn("cell", gf.cell_col(grid, zoom, F.col("x"), F.col("y")))
 
@@ -179,66 +208,9 @@ def spatial_join(points: DataFrame, polys: DataFrame, grid: TileGrid,
         right = pcells
 
     cand = pts.join(right, join_keys, "inner")
-    # envelope pretest (phase 1b) as Column predicates
-    cand = cand.filter(
-        (F.col("x") >= F.col("xmin")) & (F.col("x") <= F.col("xmax"))
-        & (F.col("y") >= F.col("ymin")) & (F.col("y") <= F.col("ymax")))
-
-    cand = cand.drop("_salt") if (salt and salt > 1) else cand
-
-    # phase 2: exact ray-cast — JVM aggregate() fold by default (stays
-    # in whole-stage codegen; ~10x the Arrow-UDF path and no Python
-    # workers at all); cogrouped pandas kernel path for bit-match demos
-    if exact == "column":
-        if edges is None:
-            edges = edges_table(polys)
-        edges = F.broadcast(edges) if broadcast is not False else edges
-        cand = cand.join(edges, "fid", "inner")
-        matched = cand.filter(
-            gf.pip_inside_col(F.col("edges"), F.col("x"), F.col("y"))
-        ).drop("edges")
-    else:
-        # cogroup on (fid, point-hash split): the polygon side is
-        # replicated NSPLIT ways so one hot polygon's candidates
-        # spread over NSPLIT tasks instead of funneling into one
-        nsplit = 32
-        candg = cand.withColumn(
-            "_g", F.pmod(F.xxhash64("x", "y"), F.lit(nsplit)).cast("int"))
-        # rename the poly-side key: cand already carries polys lineage
-        # (via pcells), and cogroup keys match positionally anyway
-        polysg = polys.select(F.col("fid").alias("_pfid"), "wkb").withColumn(
-            "_g", F.explode(F.sequence(F.lit(0), F.lit(nsplit - 1))))
-        polysg = polysg.withColumn("_g", F.col("_g").cast("int"))
-        matched = (
-            candg.groupBy("fid", "_g")
-            .cogroup(polysg.groupBy("_pfid", "_g"))
-            .applyInPandas(
-                lambda left, right: _exact_pip_cogroup(left, right),
-                candg.schema)
-        ).drop("_g")
-
-    drop_cols = ["cell", "xmin", "ymin", "xmax", "ymax"]
-    matched = matched.drop(*drop_cols)
-
-    # re-attach full polygon attributes (cheap broadcast by fid)
-    attrs = polys.drop("wkb")
-    attrs = attrs.drop(*[c for c in ("xmin", "ymin", "xmax", "ymax")
-                         if c in attrs.columns])
-    matched = matched.join(F.broadcast(attrs), "fid", "inner")
-
-    if first_match:
-        from pyspark.sql.window import Window
-        pt_key = [c for c in points.columns if c not in ("x", "y", "spans")]
-        w = Window.partitionBy(*pt_key).orderBy(F.col("fid").asc())
-        matched = (matched.withColumn("_rn", F.row_number().over(w))
-                   .filter(F.col("_rn") == 1).drop("_rn"))
-
-    if how == "left":
-        pt_cols = [c for c in points.columns]
-        unmatched = points.join(matched.select(*pt_cols).distinct(),
-                                pt_cols[0:1], "left_anti")
-        matched = matched.unionByName(unmatched, allowMissingColumns=True)
-    return matched
+    if salt and salt > 1:
+        cand = cand.drop("_salt")
+    return _exact_tail(cand, points, polys, edges, broadcast, first_match, how)
 
 
 def spatial_join_s2(points: DataFrame, polys: DataFrame,
@@ -255,8 +227,8 @@ def spatial_join_s2(points: DataFrame, polys: DataFrame,
     the Arrow pandas UDF (kernels/s2.py, one key per point), polygons
     via the bbox coverer (overcovering candidate set; undercoverage
     bounded by the coverer's dilation rule).  Phase 1b/2 are the SAME
-    envelope pretest + JVM ray-cast edge fold as spatial_join, so the
-    exact semantics are shared, not re-implemented.
+    ``_exact_tail`` as spatial_join, so the exact semantics are shared,
+    not re-implemented.
 
     points: DF with lon/lat degree columns named x, y.
     polys:  DF(fid, wkb, xmin/ymin/xmax/ymax) in the same lon/lat CRS.
@@ -286,35 +258,6 @@ def spatial_join_s2(points: DataFrame, polys: DataFrame,
                              "ymin double, xmax double, ymax double")
 
     right = F.broadcast(pcells) if broadcast is True else pcells
-    cand = pts.join(right, "cell", "inner").filter(
-        (F.col("x") >= F.col("xmin")) & (F.col("x") <= F.col("xmax"))
-        & (F.col("y") >= F.col("ymin")) & (F.col("y") <= F.col("ymax")))
-
-    if edges is None:
-        edges = edges_table(polys)
-    edges_b = F.broadcast(edges) if broadcast is not False else edges
-    matched = (cand.join(edges_b, "fid", "inner")
-               .filter(gf.pip_inside_col(F.col("edges"),
-                                         F.col("x"), F.col("y")))
-               .drop("edges", "cell", "xmin", "ymin", "xmax", "ymax"))
-    # distinct candidate (point, fid) pairs can repeat only if a point
-    # bbox-matched one polygon through two covering cells -> impossible
-    # (a point has exactly ONE cell key), so no dedup needed.
-
-    attrs = polys.drop("wkb")
-    attrs = attrs.drop(*[c for c in ("xmin", "ymin", "xmax", "ymax")
-                         if c in attrs.columns])
-    matched = matched.join(F.broadcast(attrs), "fid", "inner")
-
-    if first_match:
-        from pyspark.sql.window import Window
-        pt_key = [c for c in points.columns if c not in ("x", "y", "spans")]
-        w = Window.partitionBy(*pt_key).orderBy(F.col("fid").asc())
-        matched = (matched.withColumn("_rn", F.row_number().over(w))
-                   .filter(F.col("_rn") == 1).drop("_rn"))
-    if how == "left":
-        keep = points.join(
-            matched.select(*points.columns).distinct(),
-            points.columns, "left_anti")
-        matched = matched.unionByName(keep, allowMissingColumns=True)
-    return matched
+    # a point has exactly ONE cell key, so no (point, fid) pair repeats
+    cand = pts.join(right, "cell", "inner")
+    return _exact_tail(cand, points, polys, edges, broadcast, first_match, how)

@@ -10,9 +10,7 @@ Mirrors the reference's canonical test data:
   (/root/reference/autotest/ogr/data, goldens
   /root/reference/autotest/ogr/ogr_sql_test.py:171-249), rings
   re-synthesized deterministically inside the canonical bbox;
-* ``idlink``   — join secondary (ogr_sql_test.py:241-249 semantics);
-* ``grid20``   — the byte.tif-role 20x20 uint8 raster fixture;
-* kNN / PIP golden cases.
+* ``idlink``   — join secondary (ogr_sql_test.py:241-249 semantics).
 
 Everything is reproducible from (seed, n_docs) alone — no external
 data, no wall-clock, no unseeded RNG.
@@ -23,7 +21,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from ..kernels import checksum as ck
 from ..kernels import wkb as kwkb
 
 SEED = 42
@@ -163,45 +160,6 @@ def docs_pandas(n_docs: int = 10_000, seed: int = SEED) -> pd.DataFrame:
         "doc_id": [f"doc-{i:09d}" for i in range(n_docs)],
         "spans": grouped.to_numpy(),
     })
-
-
-# ------------------------------------------------------------------ rasters
-def grid20_pandas() -> pd.DataFrame:
-    px = (np.arange(400, dtype=np.int64) * 7 % 256).astype(np.uint8)
-    return pd.DataFrame({
-        "z": [0], "x": [0], "y": [0], "band": [1],
-        "px": [px.tobytes()],
-        "checksum": [ck.checksum(px.reshape(20, 20))],
-    })
-
-
-# ------------------------------------------------------------------ kNN
-def knn_points(n: int = 200, seed: int = SEED) -> pd.DataFrame:
-    rng = np.random.RandomState(seed + 1)
-    minx, miny, maxx, maxy = POLY_BBOX
-    return pd.DataFrame({
-        "pid": np.arange(n, dtype=np.int64),
-        "x": rng.uniform(minx, maxx, n),
-        "y": rng.uniform(miny, maxy, n),
-    })
-
-
-def knn_golden(points: pd.DataFrame, queries: pd.DataFrame, k: int = 5) -> pd.DataFrame:
-    """Brute-force kNN golden with (distance, pid) tie-break — mirrors
-    nearest-search semantics of alg/gdalgrid.cpp:879-998."""
-    out = []
-    px = points["x"].to_numpy()
-    py = points["y"].to_numpy()
-    pid = points["pid"].to_numpy()
-    for _, q in queries.iterrows():
-        d2 = (px - q["x"]) ** 2 + (py - q["y"]) ** 2
-        order = np.lexsort((pid, d2))[:k]
-        for rank, j in enumerate(order):
-            out.append({
-                "qid": int(q["pid"]), "rank": rank + 1,
-                "pid": int(pid[j]), "dist2": float(d2[j]),
-            })
-    return pd.DataFrame(out)
 
 
 # ------------------------------------------------------------------ writers

@@ -14,7 +14,6 @@ from .pipeline import (
     cell_stream,
     dedup_stream,
     stream_docs_from_files,
-    stream_spatial_join,
     windowed_cell_counts,
     write_stream_with_lineage,
 )
@@ -22,7 +21,6 @@ from .pipeline import (
 __all__ = [
     "dedup_stream",
     "stream_docs_from_files",
-    "stream_spatial_join",
     "cell_stream",
     "windowed_cell_counts",
     "write_stream_with_lineage",

@@ -130,39 +130,3 @@ def dedup_stream(docs: DataFrame, text_col: str = "text",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def stream_spatial_join(points_stream: DataFrame, polys: DataFrame,
-                        grid: TileGrid, zoom: int = 6,
-                        edges: DataFrame | None = None) -> DataFrame:
-    """Stream-static spatial join: a streaming point source enriched
-    with its containing polygon — the streaming face of the two-phase
-    join (north-rule streaming ingest over the same operator surface).
-
-    Structured Streaming executes stream-static INNER joins
-    statelessly per micro-batch, so the plan is the batch plan with
-    the static side broadcast: cell key (Column math) -> candidate
-    equi-join on cell -> envelope pretest -> JVM ray-cast edge fold.
-    No watermark needed (no stream-stream state).  Exactly the same
-    candidate + exact phases as operators.spatial_join — batch/stream
-    parity is asserted in tests/test_streaming.py.
-    """
-    from .. import functions as gf
-    from ..operators.spatial_join import edges_table, polygon_cells
-
-    pts = points_stream.withColumn(
-        "cell", gf.cell_col(grid, zoom, F.col("x"), F.col("y")))
-    pcells = F.broadcast(polygon_cells(polys, grid, zoom).select(
-        "cell", "fid", "xmin", "ymin", "xmax", "ymax"))
-    cand = pts.join(pcells, "cell", "inner").filter(
-        (F.col("x") >= F.col("xmin")) & (F.col("x") <= F.col("xmax"))
-        & (F.col("y") >= F.col("ymin")) & (F.col("y") <= F.col("ymax")))
-    if edges is None:
-        edges = edges_table(polys)
-    matched = (cand.join(F.broadcast(edges), "fid", "inner")
-               .filter(gf.pip_inside_col(F.col("edges"),
-                                         F.col("x"), F.col("y")))
-               .drop("edges", "cell", "xmin", "ymin", "xmax", "ymax"))
-    attrs = polys.drop("wkb")
-    attrs = attrs.drop(*[c for c in ("xmin", "ymin", "xmax", "ymax")
-                         if c in attrs.columns])
-    return matched.join(F.broadcast(attrs), "fid", "inner")

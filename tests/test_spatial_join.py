@@ -9,7 +9,8 @@ from pyspark.sql import functions as F
 from gdal_spark.kernels import pip as kpip
 from gdal_spark.kernels import wkb as kwkb
 from gdal_spark.kernels.cells import TileGrid
-from gdal_spark.operators.spatial_join import extract_geo_points, spatial_join
+from gdal_spark.operators.spatial_join import (extract_geo_points, spatial_join,
+                                               spatial_join_s2)
 from gdal_spark.sources import fixtures as fx
 
 N_DOCS = 2000
@@ -133,15 +134,6 @@ def test_auto_salt_and_broadcast_agree(spark):
     assert a == b and len(a) > 0
 
 
-def test_exact_pandas_path_matches_column(data):
-    """The cogrouped Arrow exact phase (bit-match demo path) must
-    produce the same pairs as the JVM aggregate() path."""
-    docs, polys, grid, pts, want = data
-    joined = spatial_join(extract_geo_points(docs), polys, grid, zoom=6,
-                          exact="pandas")
-    assert _got_pairs(joined) == want
-
-
 def test_prepare_edges_reused_across_calls(data):
     """A prepared (persisted) edge table must serve repeated joins on
     the same polygon layer from cache: the second call's plan reads
@@ -189,23 +181,51 @@ def test_edges_table_distributed_100k(spark):
     assert agg["ne"] == 4 * n  # one closed square ring -> 4 edges
 
 
-def test_s2_join_parity_with_quadtree(spark):
-    """The S2-keyed and quadtree-keyed joins are two candidate
-    generators over the SAME exact phase — outputs must be row-equal."""
-    from pyspark.sql import functions as F
-
-    from gdal_spark.kernels.cells import TileGrid
-    from gdal_spark.operators.spatial_join import (spatial_join,
-                                                   spatial_join_s2)
-    from gdal_spark.queries import _derive as dv
+@pytest.fixture(scope="module")
+def scaled(spark):
+    """The pip_join fixture in lon/lat degrees (both generators'
+    common CRS) plus the brute-force oracle: for every point row, the
+    sorted fids of the polygons containing it."""
     from gdal_spark.queries.spatial import _scaled_fixture
 
     pts, polys = _scaled_fixture(spark, "/root/testdata/sf0.001")
+    pts, polys = pts.cache(), polys.cache()
+    ppdf = pts.toPandas()
+    xs, ys = ppdf["x"].to_numpy(), ppdf["y"].to_numpy()
+    fids = [[] for _ in range(len(ppdf))]
+    for _, prow in polys.toPandas().sort_values("fid").iterrows():
+        inside = kpip.points_in_polygon(
+            xs, ys, kwkb.polygon_rings(bytes(prow["wkb"])))
+        for i in np.flatnonzero(inside):
+            fids[i].append(int(prow["fid"]))
+    return pts, polys, ppdf, fids
+
+
+_DEG_GRID = TileGrid.local(-1.2, -1.0, 1.2, 1.0, tile_size=256)
+_JOINS = {
+    "quadtree": lambda p, q, **kw: spatial_join(
+        p, q, _DEG_GRID, zoom=5, broadcast=True, **kw),
+    "quadtree_salted": lambda p, q, **kw: spatial_join(
+        p, q, _DEG_GRID, zoom=5, broadcast=False, salt=4, **kw),
+    "s2": lambda p, q, **kw: spatial_join_s2(p, q, level=8, **kw),
+}
+
+
+def _rows(df, cols):
+    """Output multiset as a sorted list; a null fid sorts as -1."""
+    return sorted(tuple(-1 if (c == "fid" and r[c] is None) else r[c]
+                        for c in cols)
+                  for r in df.select(*cols).collect())
+
+
+def test_s2_join_parity_with_quadtree(scaled):
+    """The S2-keyed and quadtree-keyed joins are two candidate
+    generators over the SAME exact phase — outputs must be row-equal."""
+    pts, polys = scaled[:2]
     s2_rows = sorted((r["doc_id"], r["fid"]) for r in
                      spatial_join_s2(pts, polys, level=8).collect())
-    grid = TileGrid.local(-1.2, -1.0, 1.2, 1.0, tile_size=256)
     qt_rows = sorted((r["doc_id"], r["fid"]) for r in
-                     spatial_join(pts, polys, grid, zoom=5).collect())
+                     spatial_join(pts, polys, _DEG_GRID, zoom=5).collect())
     assert s2_rows == qt_rows and len(s2_rows) > 0
 
     # first_match parity too (lowest fid per point)
@@ -213,6 +233,42 @@ def test_s2_join_parity_with_quadtree(spark):
                    spatial_join_s2(pts, polys, level=8,
                                    first_match=True).collect())
     qt_fm = sorted((r["doc_id"], r["fid"]) for r in
-                   spatial_join(pts, polys, grid, zoom=5,
+                   spatial_join(pts, polys, _DEG_GRID, zoom=5,
                                 first_match=True).collect())
     assert s2_fm == qt_fm
+
+
+@pytest.mark.parametrize("gen", sorted(_JOINS))
+def test_join_shape_matches_bruteforce(scaled, gen):
+    """how='left' and first_match key on the WHOLE point row: every
+    input row comes back (left) or comes back once at its lowest fid
+    (first_match), whatever the point columns look like."""
+    pts, polys, ppdf, fids = scaled
+    join = _JOINS[gen]
+    ids = ppdf["doc_id"].tolist()
+    assert sum(map(bool, fids)) > 0
+
+    # how='left', first column constant (not a point key)
+    left = pts.select(F.lit(1).alias("k"), "doc_id", "x", "y")
+    want = sorted((1, d, f) for d, fs in zip(ids, fids) for f in fs or [-1])
+    assert _rows(join(left, polys, how="left"), ["k", "doc_id", "fid"]) == want
+
+    # how='left', one all-null point column
+    nulls = pts.withColumn("tag", F.lit(None).cast("string"))
+    want = sorted((d, None, f) for d, fs in zip(ids, fids) for f in fs or [-1])
+    assert _rows(join(nulls, polys, how="left"),
+                 ["doc_id", "tag", "fid"]) == want
+
+    # first_match on a table of only (x, y)
+    xy = pts.select("x", "y")
+    want = sorted((x, y, fs[0]) for x, y, fs
+                  in zip(ppdf["x"], ppdf["y"], fids) if fs)
+    assert _rows(join(xy, polys, first_match=True), ["x", "y", "fid"]) == want
+
+    # first_match with one matched input row duplicated
+    dup = ids[next(i for i, fs in enumerate(fids) if fs)]
+    twice = pts.unionByName(pts.filter(F.col("doc_id") == dup))
+    want = sorted([(d, fs[0]) for d, fs in zip(ids, fids) if fs]
+                  + [(dup, fids[ids.index(dup)][0])])
+    assert _rows(join(twice, polys, first_match=True),
+                 ["doc_id", "fid"]) == want

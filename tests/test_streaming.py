@@ -134,19 +134,19 @@ def test_stateful_dedup_stream(spark, dirs):
 
 
 def test_stream_spatial_join_parity(spark, dirs):
-    """Stream-static spatial join over a file stream produces exactly
-    the batch spatial_join rows (stateless micro-batch execution)."""
+    """spatial_join on a file stream (the stream-static join) produces
+    exactly the batch spatial_join rows (stateless micro-batch
+    execution)."""
     in_dir, out_dir, ckpt = dirs
     from gdal_spark.operators.spatial_join import spatial_join
     from gdal_spark.sources import fixtures as fx
-    from gdal_spark.streaming.pipeline import stream_spatial_join
 
     pts = _batch(spark, n=800)
     pts.write.mode("overwrite").parquet(in_dir)
     polys = spark.createDataFrame(fx.polygons_pandas())
 
     stream = stream_docs_from_files(spark, in_dir, SCHEMA)
-    joined = stream_spatial_join(stream, polys, dv.GRID, zoom=6)
+    joined = spatial_join(stream, polys, dv.GRID, zoom=6, broadcast=True)
     q = (joined.writeStream.format("parquet")
          .option("path", out_dir).option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())

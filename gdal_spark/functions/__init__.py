@@ -133,9 +133,11 @@ def pip_inside_col(edges: Column, x: Column, y: Column) -> Column:
     (vertex i+1, vertex i) pairing of OGRLinearRing::isPointInRing
     (ogrlinearring.cpp:498-517).  Exactly the kernel arithmetic —
     relative coords, strict/inclusive straddle split, intersection
-    strictly > 0 — but folded inside Catalyst with aggregate(), so
-    the exact phase of the spatial join stays in whole-stage codegen:
-    no Python, no Arrow hop, same IEEE doubles as the numpy kernel.
+    strictly > 0 — but folded inside Catalyst with aggregate(): no
+    Python, no Arrow hop, same IEEE doubles as the numpy kernel.
+    ``ArrayAggregate`` is ``CodegenFallback``, so the fold runs
+    interpreted, edge by edge; the spatial join's classified cell
+    cover keeps the arrays it is given short.
     """
     def crossing(e):
         y1 = e["ey1"] - y

@@ -19,36 +19,56 @@ from __future__ import annotations
 import numpy as np
 
 
+def ray_cast_odd(edges, px, py):
+    """Odd/even ray-cast crossing count of N points over M edges.
+
+    edges : float64 array (M, 4) of (x1, y1, x2, y2) rows — edge i of a
+            ring runs from vertex i (x2, y2) to vertex i+1 (x1, y1), the
+            reference's iPoint / iPoint-1 pairing.
+    px, py: float64 arrays (N,)
+    Returns bool array (N,): True == odd number of crossings.
+    """
+    e = np.asarray(edges, dtype=np.float64).reshape(-1, 4)
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    # Relative coords: (M, 1) vs (N,) broadcast -> (M, N) per-edge work.
+    x1 = e[:, 0][:, None] - px[None, :]
+    y1 = e[:, 1][:, None] - py[None, :]
+    x2 = e[:, 2][:, None] - px[None, :]
+    y2 = e[:, 3][:, None] - py[None, :]
+
+    straddle = ((y1 > 0) & (y2 <= 0)) | ((y2 > 0) & (y1 <= 0))
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+        inter = (x1 * y2 - x2 * y1) / (y2 - y1)
+    crossing = straddle & (inter > 0.0)
+    return (crossing.sum(axis=0) % 2).astype(bool)
+
+
+def ring_edges(rings):
+    """(M, 4) edge array of a list of (n, 2) rings, in ray_cast_odd's
+    (vertex i+1, vertex i) pairing."""
+    return np.vstack([np.hstack([r[1:], r[:-1]])
+                      for r in map(np.asarray, rings)] or [np.empty((0, 4))]
+                     ).astype(np.float64).reshape(-1, 4)
+
+
 def points_in_ring(px, py, ring_xy, test_envelope=True):
     """Vectorized ray-cast test of N points against one ring.
 
     px, py : float64 arrays (N,)
     ring_xy: float64 array (M, 2) — ring vertices; the reference
              requires an explicitly closed ring (first == last) and
-             >= 4 points (ogrlinearring.cpp:478-481), which we assert.
+             >= 4 points (ogrlinearring.cpp:478-481); shorter rings
+             contain nothing.
     Returns bool array (N,): True == inside (odd crossings).
     """
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
     ring = np.asarray(ring_xy, dtype=np.float64)
-    m = ring.shape[0]
-    if m < 4:
+    if ring.shape[0] < 4:
         return np.zeros(px.shape, dtype=bool)
 
-    # Relative coords: (M, 1) vs (N,) broadcast -> (M, N) per-edge work.
-    rx = ring[:, 0][:, None] - px[None, :]
-    ry = ring[:, 1][:, None] - py[None, :]
-
-    # Edge i: from vertex i (x2,y2=prev) to vertex i+1 (x1,y1) — the
-    # reference iterates iPoint=1..M-1 with prev as vertex iPoint-1.
-    x1, y1 = rx[1:], ry[1:]
-    x2, y2 = rx[:-1], ry[:-1]
-
-    straddle = ((y1 > 0) & (y2 <= 0)) | ((y2 > 0) & (y1 <= 0))
-    with np.errstate(divide="ignore", invalid="ignore"):
-        inter = (x1 * y2 - x2 * y1) / (y2 - y1)
-    crossing = straddle & (inter > 0.0)
-    inside = (crossing.sum(axis=0) % 2).astype(bool)
+    inside = ray_cast_odd(ring_edges([ring]), px, py)
 
     if test_envelope:
         # Envelope pretest (ogrlinearring.cpp:487-497): points outside

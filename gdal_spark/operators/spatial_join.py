@@ -6,17 +6,22 @@ distributed plan:
 
   phase 1 (coarse candidates, one generator per cell system):
       quadtree (``spatial_join``): points -> cell id (Column math);
-      polygons -> covering cell set (sequence + explode); equi-join
-      on cell — broadcast when the polygon side is small, else
+      polygons -> classified cell cover (``cell_cover``: one numpy
+      Arrow stage over the edge table) where each cell of the bbox is
+      inside, boundary or outside, and outside cells get no row;
+      equi-join on cell — broadcast when the cover is small, else
       shuffle with explicit hot-cell salting (north_rule), on top of
       AQE's skew handling;
-      S2 (``spatial_join_s2``): the same equi-join on S2 cell keys.
+      S2 (``spatial_join_s2``): the same equi-join on S2 cell keys,
+      every candidate carrying its polygon's full ring.
 
   phase 2 (``_exact_tail``, shared by both generators):
-      envelope pretest as a Column predicate; ray-cast PIP as a JVM
-      fold over the fid's broadcast edge array — bit-identical to
-      OGRLinearRing::isPointInRing (ogrlinearring.cpp:462-532);
-      polygon attributes by fid; OGR first-match / LEFT JOIN shape.
+      envelope pretest as a Column predicate; inside cells accept (the
+      bbox-inside accept); the rest ray-cast as a JVM fold over the
+      candidate's edge array (a boundary cell's row edges, or the full
+      ring) — bit-identical to OGRLinearRing::isPointInRing
+      (ogrlinearring.cpp:462-532); polygon attributes by fid; OGR
+      first-match / LEFT JOIN shape.
 
 Matching GDAL's index-nested-loop (SetSpatialFilter per feature,
 ogrlayer.cpp:3345) result set with a shuffle plan that survives
@@ -27,11 +32,13 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .. import functions as gf
-from ..kernels.cells import TileGrid
+from ..kernels.cells import TileGrid, pack_cell
+from ..kernels import pip as kpip
 from ..kernels import wkb as kwkb
 
 DEFAULT_ZOOM = 12
@@ -52,7 +59,10 @@ def extract_geo_points(docs: DataFrame) -> DataFrame:
 
 
 def polygon_cells(polys: DataFrame, grid: TileGrid, zoom: int) -> DataFrame:
-    """polygons -> one row per covering cell (coarse index side)."""
+    """polygons -> one row per cell of the bbox (unclassified cover).
+
+    ``spatial_join`` keys on ``cell_cover`` instead; this is the plain
+    phase-1 plan that perfbench counts candidates with."""
     return polys.withColumn(
         "cell",
         F.explode(gf.covering_cells_col(
@@ -60,8 +70,11 @@ def polygon_cells(polys: DataFrame, grid: TileGrid, zoom: int) -> DataFrame:
     )
 
 
-_EDGES_SCHEMA = ("fid bigint, edges array<struct<ex1:double,ey1:double,"
-                 "ex2:double,ey2:double>>")
+_EDGE_FIELDS = ("ex1", "ey1", "ex2", "ey2")
+_EDGE_ARRAY = "array<struct<ex1:double,ey1:double,ex2:double,ey2:double>>"
+_EDGES_SCHEMA = f"fid bigint, edges {_EDGE_ARRAY}"
+_COVER_SCHEMA = ("cell bigint, fid bigint, xmin double, ymin double, "
+                 f"xmax double, ymax double, inside boolean, edges {_EDGE_ARRAY}")
 
 
 def edges_table(polys: DataFrame) -> DataFrame:
@@ -76,17 +89,9 @@ def edges_table(polys: DataFrame) -> DataFrame:
         for pdf in batches:
             fids, edge_lists = [], []
             for fid, wkb in zip(pdf["fid"], pdf["wkb"]):
-                edges = []
-                for ring in kwkb.polygon_rings(bytes(wkb)):
-                    for i in range(len(ring) - 1):
-                        edges.append({
-                            "ex1": float(ring[i + 1][0]),
-                            "ey1": float(ring[i + 1][1]),
-                            "ex2": float(ring[i][0]),
-                            "ey2": float(ring[i][1]),
-                        })
+                e = kpip.ring_edges(kwkb.polygon_rings(bytes(wkb)))
                 fids.append(int(fid))
-                edge_lists.append(edges)
+                edge_lists.append([dict(zip(_EDGE_FIELDS, v)) for v in e.tolist()])
             yield pd.DataFrame({"fid": fids, "edges": edge_lists})
 
     return polys.select("fid", "wkb").mapInPandas(gen, _EDGES_SCHEMA)
@@ -96,8 +101,8 @@ def prepare_edges(polys: DataFrame) -> DataFrame:
     """Build and persist the exact-phase edge table for a polygon
     layer ONCE, for reuse across spatial_join calls.
 
-    The edge build is the only Python (Arrow) stage in the join; a
-    layer queried repeatedly (the tile pipeline, the bench, any
+    The WKB decode is the polygon side's costly Python (Arrow) stage;
+    a layer queried repeatedly (the tile pipeline, the bench, any
     dashboard) should pay it once, not per call.  The caller owns the
     lifecycle (``.unpersist()`` when done) — deliberately no hidden
     module-level registry (see round-2 wrong #3).  Persisted
@@ -108,29 +113,178 @@ def prepare_edges(polys: DataFrame) -> DataFrame:
     return edges_table(polys).persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def _exact_tail(cand: DataFrame, points: DataFrame, polys: DataFrame,
-                edges: DataFrame | None, broadcast: bool | None,
-                first_match: bool, how: str) -> DataFrame:
-    """Phase 1b + 2 of every candidate generator.
+# Coordinate magnitudes (0 or within [_TINY, _HUGE]) for which an edge
+# wholly right of a point's column and straddling its y always yields
+# inter > 0: no product or quotient of relative coordinates underflows
+# to zero or overflows.
+_TINY, _HUGE = 2.0 ** -300, 2.0 ** 400
 
-    cand: the point columns + (cell, fid, xmin, ymin, xmax, ymax) of
-    each candidate (point, polygon) pair.  Envelope pretest, JVM
-    ray-cast over the fid's edge array (no Python workers), polygon
-    attributes by fid, then the OGR join shape.  The whole point row is the point's identity — null-safe,
-    with multiplicity — so ``first_match`` returns one row per input
-    row and ``how='left'`` exactly the input rows without a match.
+
+def _plain(v) -> bool:
+    a = np.abs(np.asarray(v, dtype=np.float64))
+    return bool(np.all((a == 0) | ((a >= _TINY) & (a <= _HUGE))))
+
+
+def _classify(e: np.ndarray, grid: TileGrid, z: int):
+    """Cover rows of one polygon's (M, 4) edges: arrays (tx, ty, inside,
+    n_edges, edge_index), the row edges of row i being
+    ``e[edge_index[sum(n_edges[:i]):][:n_edges[i]]]``.
+
+    tx/ty are the points' own cell function (``TileGrid.tile_xy``, the
+    twin of ``functions.cell_col``), and they are monotone, so:
+    - an edge whose endpoint rows miss a point's row never straddles
+      its y;
+    - an edge whose endpoints lie in columns left of the point's never
+      gives inter > 0;
+    - a cell inside no edge's endpoint-cell box has, in its row, only
+      edges wholly left or wholly right of it, and every vertex in the
+      row has both incident edges on the same side, so the crossing
+      count's parity is the same for every point of the cell.
+    A boundary cell (in some edge's box) therefore keeps its row
+    edges that reach its column, and any other bbox cell takes the
+    ray-cast answer of its tile centre: inside cells accept, outside
+    cells get no row.  The last two facts also need closed rings
+    (every vertex an even number of times) and coordinates in the
+    _plain range, where no intersection is NaN (which Spark orders
+    above 0); when either fails every bbox cell is a boundary cell
+    with all its row edges.  A polygon with a non-finite vertex gets
+    no rows: its envelope admits no point.
     """
-    if edges is None:
-        edges = edges_table(polys)
-    if broadcast is not False:
-        edges = F.broadcast(edges)
+    if not len(e) or not np.isfinite(e).all():
+        return None
+    xs, ys = e[:, 0::2], e[:, 1::2]
+    tx0, ty1 = grid.tile_xy(z, xs.min(axis=1), ys.min(axis=1))
+    tx1, ty0 = grid.tile_xy(z, xs.max(axis=1), ys.max(axis=1))
+    a0, b0 = int(tx0.min()), int(ty0.min())
+    w, h = int(tx1.max()) - a0 + 1, int(ty1.max()) - b0 + 1
+
+    # boundary = union of the edges' endpoint-cell boxes (2-D prefix sum)
+    d = np.zeros((h + 1, w + 1), np.int64)
+    for r, c, v in ((ty0, tx0, 1), (ty0, tx1 + 1, -1),
+                    (ty1 + 1, tx0, -1), (ty1 + 1, tx1 + 1, 1)):
+        np.add.at(d, (r - b0, c - a0), v)
+    boundary = d.cumsum(axis=0).cumsum(axis=1)[:h, :w] > 0
+    _, counts = np.unique(np.vstack([e[:, :2], e[:, 2:]]), axis=0,
+                          return_counts=True)
+    plain = (not (counts % 2).any() and _plain(e)
+             and _plain([grid.top_left_x, grid.top_left_y])
+             and _TINY <= grid.tile_span(z) <= _HUGE)
+    if not plain:
+        boundary[:] = True
+
+    cols = np.arange(a0, a0 + w)
+    out = []
+    for r in range(h):
+        b = b0 + r
+        row = np.flatnonzero((ty0 <= b) & (b <= ty1))
+        row = row[np.argsort(-tx1[row], kind="stable")]
+        edge_cell = boundary[r].copy()
+        free = cols[~edge_cell]
+        inside = np.zeros(w, bool)
+        if free.size:
+            minx, miny, maxx, maxy = grid.tile_bounds(z, free, np.full(free.size, b))
+            cx, cy = (minx + maxx) / 2.0, (miny + maxy) / 2.0
+            ctx, cty = grid.tile_xy(z, cx, cy)
+            ok = ((ctx == free) & (cty == b) & (np.abs(cx) <= _HUGE)
+                  & (np.abs(cy) <= _HUGE))
+            edge_cell[free[~ok] - a0] = True
+            inside[free[ok] - a0] = kpip.ray_cast_odd(e[row], cx[ok], cy[ok])
+        keep = np.flatnonzero(edge_cell | inside)
+        # a boundary cell at column a keeps the row edges with tx1 >= a:
+        # a prefix of the row sorted by tx1 descending
+        reach = (np.searchsorted(-tx1[row], -cols[keep], side="right") if plain
+                 else np.full(keep.size, row.size))
+        reach[inside[keep]] = 0
+        start = np.repeat(np.cumsum(reach) - reach, reach)
+        out.append((cols[keep], np.full(keep.size, b), inside[keep], reach,
+                    row[np.arange(reach.sum()) - start]))
+    return tuple(np.concatenate(parts) for parts in zip(*out))
+
+
+def _polygon_edges(batch):
+    """(fid, (M, 4) edges) of each row of a (fid, edges) edge-table or
+    (fid, wkb) polygon Arrow batch."""
+    fids = batch.column("fid").to_pylist()
+    if "wkb" in batch.schema.names:
+        for fid, wkb in zip(fids, batch.column("wkb").to_pylist()):
+            yield fid, kpip.ring_edges(kwkb.polygon_rings(wkb))
+        return
+    lists = batch.column("edges")
+    flat = np.column_stack([lists.values.field(f).to_numpy(zero_copy_only=False)
+                            for f in _EDGE_FIELDS]).reshape(-1, 4)
+    offs = lists.offsets.to_numpy()
+    for i, fid in enumerate(fids):
+        yield fid, flat[offs[i]:offs[i + 1]]
+
+
+def cell_cover(layer: DataFrame, grid: TileGrid, zoom: int) -> DataFrame:
+    """Classified cell cover of a polygon layer, from its edge table
+    (``edges_table`` / ``prepare_edges``) or its (fid, wkb) columns.
+
+    One row (cell, fid, xmin, ymin, xmax, ymax, inside, edges) per
+    boundary or inside cell of each polygon's bbox (see
+    ``_classify``); xmin..ymax is the vertex envelope, inside cells
+    carry no edges.  One Arrow map on the input's own partitions:
+    numpy work per polygon, no per-cell Python, no driver collect.
+    Reading WKB directly, rather than a chained ``edges_table``,
+    keeps the polygon side to one Python worker per task.
+    """
+    def gen(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            out = {"cell": [np.empty(0, np.int64)], "fid": [np.empty(0, np.int64)],
+                   "xmin": [np.empty(0)], "ymin": [np.empty(0)],
+                   "xmax": [np.empty(0)], "ymax": [np.empty(0)],
+                   "inside": [np.empty(0, bool)], "n": [np.empty(0, np.int64)],
+                   "edges": [np.empty((0, 4))]}
+            for fid, e in _polygon_edges(batch):
+                rows = None if fid is None else _classify(e, grid, zoom)
+                if rows is None:
+                    continue
+                tx, ty, inside, n_edges, idx = rows
+                out["cell"].append(pack_cell(zoom, tx, ty))
+                out["fid"].append(np.full(tx.size, fid, np.int64))
+                for c, v in (("xmin", e[:, 0::2].min()), ("ymin", e[:, 1::2].min()),
+                             ("xmax", e[:, 0::2].max()), ("ymax", e[:, 1::2].max())):
+                    out[c].append(np.full(tx.size, v))
+                out["inside"].append(inside)
+                out["n"].append(n_edges)
+                out["edges"].append(e[idx])
+            cols = {c: np.concatenate(v) for c, v in out.items()}
+            ecat, n = cols.pop("edges"), cols.pop("n")
+            offsets = np.concatenate([[0], np.cumsum(n)]).astype(np.int32)
+            struct = pa.StructArray.from_arrays(
+                [pa.array(ecat[:, k]) for k in range(4)], names=list(_EDGE_FIELDS))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(v) for v in cols.values()]
+                + [pa.ListArray.from_arrays(pa.array(offsets), struct)],
+                names=[*cols, "edges"])
+
+    return layer.mapInArrow(gen, _COVER_SCHEMA)
+
+
+def _exact_tail(cand: DataFrame, points: DataFrame, polys: DataFrame,
+                first_match: bool, how: str) -> DataFrame:
+    """Phase 2 of every candidate generator.
+
+    cand: the point columns + (cell, fid, xmin, ymin, xmax, ymax,
+    inside, edges) of each candidate (point, polygon) pair.  Envelope
+    pretest, then inside-accept or the JVM ray-cast over the
+    candidate's edge array (no Python workers), polygon attributes by
+    fid, then the OGR join shape.  The whole point row is the point's
+    identity — null-safe, with multiplicity — so ``first_match``
+    returns one row per input row and ``how='left'`` exactly the input
+    rows without a match.  The pretest also drops the non-finite
+    points that the clamped cell function puts in a border cell.
+    """
     matched = (
         cand.filter(
             (F.col("x") >= F.col("xmin")) & (F.col("x") <= F.col("xmax"))
-            & (F.col("y") >= F.col("ymin")) & (F.col("y") <= F.col("ymax")))
-        .join(edges, "fid", "inner")
-        .filter(gf.pip_inside_col(F.col("edges"), F.col("x"), F.col("y")))
-        .drop("edges", "cell", "xmin", "ymin", "xmax", "ymax"))
+            & (F.col("y") >= F.col("ymin")) & (F.col("y") <= F.col("ymax"))
+            & (F.col("inside")
+               | gf.pip_inside_col(F.col("edges"), F.col("x"), F.col("y"))))
+        .drop("edges", "inside", "cell", "xmin", "ymin", "xmax", "ymax"))
 
     # re-attach full polygon attributes (cheap broadcast by fid)
     attrs = polys.drop("wkb", "xmin", "ymin", "xmax", "ymax")
@@ -157,18 +311,19 @@ def spatial_join(points: DataFrame, polys: DataFrame, grid: TileGrid,
     polys  : DF with fid bigint, wkb binary, xmin/ymin/xmax/ymax double
     how    : 'inner' (matches only) or 'left' (keep unmatched points,
              null polygon attrs — OGR LEFT JOIN shape)
-    broadcast : True = broadcast-hint the polygon cell index, False =
+    broadcast : True = broadcast-hint the polygon cell cover, False =
              force a shuffle join, None = leave the choice to Catalyst
              statistics + AQE runtime re-planning (no extra driver
              action — a count here would serialize every call)
-    salt   : replicate the polygon index `salt` ways and scatter
+    salt   : replicate the polygon cell cover `salt` ways and scatter
              points by a doc hash — explicit hot-cell skew remedy on
              top of AQE (north_rule).  0/1 = unsalted.
     first_match : emit at most one polygon per point (lowest fid) —
              OGR SQL join cardinality (ogr_gensql.cpp:1497-1527).
     edges  : pre-built edge table from ``prepare_edges(polys)`` —
-             reuses one persisted edge build across repeated joins on
-             the same layer instead of a fresh Python stage per call.
+             reuses one persisted WKB decode across repeated joins on
+             the same layer; each call classifies its cell cover from
+             it (``cell_cover``, one small Python stage).
 
     On a streaming ``points`` frame with ``broadcast=True`` this is the
     stream-static join: Structured Streaming runs it statelessly per
@@ -176,9 +331,8 @@ def spatial_join(points: DataFrame, polys: DataFrame, grid: TileGrid,
     batch input).
     """
     pts = points.withColumn("cell", gf.cell_col(grid, zoom, F.col("x"), F.col("y")))
-
-    pcells = polygon_cells(polys, grid, zoom).select(
-        "cell", "fid", "xmin", "ymin", "xmax", "ymax")
+    cover = cell_cover(polys.select("fid", "wkb") if edges is None else edges,
+                       grid, zoom)
 
     if salt == "auto":
         # hot-cell diagnostic on the POINT side drives the salt factor
@@ -190,7 +344,7 @@ def spatial_join(points: DataFrame, polys: DataFrame, grid: TileGrid,
     if salt and salt > 1:
         pts = pts.withColumn("_salt", F.pmod(F.xxhash64(F.col("x"), F.col("y")),
                                              F.lit(salt)).cast("int"))
-        pcells = pcells.withColumn("_salt", F.explode(
+        cover = cover.withColumn("_salt", F.explode(
             F.sequence(F.lit(0), F.lit(salt - 1)))).withColumn(
             "_salt", F.col("_salt").cast("int"))
         join_keys = ["cell", "_salt"]
@@ -198,19 +352,19 @@ def spatial_join(points: DataFrame, polys: DataFrame, grid: TileGrid,
         join_keys = ["cell"]
 
     if broadcast is True:
-        right = F.broadcast(pcells)
+        right = F.broadcast(cover)
     elif broadcast is False:
-        right = pcells.hint("shuffle_hash")
+        right = cover.hint("shuffle_hash")
     else:
-        # Catalyst's parquet-stat size estimate picks broadcast for a
-        # small dim; AQE converts sort-merge -> broadcast at runtime
-        # otherwise.  No driver-side count per call.
-        right = pcells
+        # Catalyst's size estimate picks broadcast for a small cover;
+        # AQE converts sort-merge -> broadcast at runtime otherwise.
+        # No driver-side count per call.
+        right = cover
 
     cand = pts.join(right, join_keys, "inner")
     if salt and salt > 1:
         cand = cand.drop("_salt")
-    return _exact_tail(cand, points, polys, edges, broadcast, first_match, how)
+    return _exact_tail(cand, points, polys, first_match, how)
 
 
 def spatial_join_s2(points: DataFrame, polys: DataFrame,
@@ -258,6 +412,12 @@ def spatial_join_s2(points: DataFrame, polys: DataFrame,
                              "ymin double, xmax double, ymax double")
 
     right = F.broadcast(pcells) if broadcast is True else pcells
-    # a point has exactly ONE cell key, so no (point, fid) pair repeats
-    cand = pts.join(right, "cell", "inner")
-    return _exact_tail(cand, points, polys, edges, broadcast, first_match, how)
+    if edges is None:
+        edges = edges_table(polys)
+    if broadcast is not False:
+        edges = F.broadcast(edges)
+    # a point has exactly ONE cell key, so no (point, fid) pair repeats;
+    # every candidate ray-casts its polygon's full ring
+    cand = (pts.join(right, "cell", "inner").join(edges, "fid", "inner")
+            .withColumn("inside", F.lit(False)))
+    return _exact_tail(cand, points, polys, first_match, how)

@@ -12,21 +12,43 @@ from gdal_spark.sources.fixtures import POLY_BBOX
 
 
 def test_cell_col_matches_kernel(spark):
+    """JVM cell_col == numpy tile_xy, row by row: on random points, on
+    the polygon fixture's edge endpoints, on the border values
+    top_left +/- k*ts (where tile_bounds and tile_xy can disagree) and
+    on their nextafter neighbours.  The spatial join's cell cover is
+    classified with tile_xy and the points are keyed with cell_col."""
+    from gdal_spark.kernels import wkb as kwkb
+    from gdal_spark.sources.fixtures import polygons_pandas
+
     rng = np.random.RandomState(42)
     minx, miny, maxx, maxy = POLY_BBOX
     n = 5000
-    pdf = pd.DataFrame({
-        "x": rng.uniform(minx - 500, maxx + 500, n),
-        "y": rng.uniform(miny - 500, maxy + 500, n),
-    })
+    xs = [rng.uniform(minx - 500, maxx + 500, n)]
+    ys = [rng.uniform(miny - 500, maxy + 500, n)]
+    for wkb in polygons_pandas()["wkb"]:
+        for ring in kwkb.polygon_rings(bytes(wkb)):
+            xs.append(ring[:, 0])
+            ys.append(ring[:, 1])
     grid = cells.TileGrid.local(*POLY_BBOX)
-    z = 7
-    df = spark.createDataFrame(pdf).withColumn(
-        "cell", gf.cell_col(grid, z, F.col("x"), F.col("y")))
-    got = np.array([r["cell"] for r in df.select("cell").collect()])
-    # collect preserves row order for a local createDataFrame -> select
-    want = cells.cell_of_point(grid, z, pdf["x"].to_numpy(), pdf["y"].to_numpy())
-    assert sorted(got.tolist()) == sorted(want.tolist())
+    for z in (4, 6, 7, 8):
+        ts = grid.tile_span(z)
+        k = np.arange(-1, (1 << z) + 2)
+        bx = np.concatenate([grid.top_left_x + k * ts, grid.top_left_x - k * ts])
+        by = np.concatenate([grid.top_left_y - k * ts, grid.top_left_y + k * ts])
+        for vx, vy in ((bx, by), (np.nextafter(bx, -np.inf), np.nextafter(by, np.inf)),
+                       (np.nextafter(bx, np.inf), np.nextafter(by, -np.inf))):
+            xs.append(vx)
+            ys.append(vy)
+            xs.append(rng.permutation(vx))  # border x with off-border y
+            ys.append(rng.uniform(miny, maxy, vy.size))
+    pdf = pd.DataFrame({"x": np.concatenate(xs), "y": np.concatenate(ys)})
+    pdf["id"] = np.arange(len(pdf))
+    df = spark.createDataFrame(pdf)
+    for z in (4, 6, 7, 8):
+        got = (df.select("id", gf.cell_col(grid, z, F.col("x"), F.col("y"))
+                         .alias("cell")).toPandas().sort_values("id"))
+        want = cells.cell_of_point(grid, z, pdf["x"].to_numpy(), pdf["y"].to_numpy())
+        assert (got["cell"].to_numpy() == want).all(), z
 
 
 def test_hilbert_col_matches_kernel(spark):

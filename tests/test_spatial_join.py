@@ -272,3 +272,159 @@ def test_join_shape_matches_bruteforce(scaled, gen):
                   + [(dup, fids[ids.index(dup)][0])])
     assert _rows(join(twice, polys, first_match=True),
                  ["doc_id", "fid"]) == want
+
+
+def _border_polygons(grid):
+    """Non-convex polygons whose vertices sit on zoom-6 cell borders
+    ``top_left +/- k*ts`` — about half of which ``tile_xy`` puts in the
+    cell before the one ``tile_bounds`` starts at — one with a hole."""
+    ts = grid.tile_span(6)
+    bx = grid.top_left_x + np.arange(65) * ts
+    by = grid.top_left_y - np.arange(65) * ts
+    # comb with slanted teeth
+    comb = [(bx[6], by[50]), (bx[26], by[50])]
+    for i in range(26, 6, -2):
+        comb += [(bx[i], by[30 + i % 5]), (bx[i - 1], by[44])]
+    comb += [(bx[6], by[31]), (bx[6], by[50])]
+    # star: vertices on x borders, on y borders, or on both
+    rng = np.random.RandomState(6)
+    star = []
+    for i in range(36):
+        ang = 2 * np.pi * i / 36
+        rad = (6 if i % 2 else 11) + rng.uniform(-1.5, 1.5)
+        x, y = 45 + rad * np.cos(ang), 20 + rad * np.sin(ang)
+        vx = bx[int(round(x))] if i % 3 != 2 else bx[0] + x * ts
+        vy = by[int(round(y))] if i % 3 != 1 else by[0] - y * ts
+        star.append((vx, vy))
+    star.append(star[0])
+    # square with a non-convex hole (diamond with a notch)
+    outer = [(bx[34], by[60]), (bx[60], by[60]), (bx[60], by[34]),
+             (bx[34], by[34]), (bx[34], by[60])]
+    hole = [(bx[47], by[38]), (bx[56], by[47]), (bx[47], by[56]),
+            (bx[38], by[47]), (bx[44], by[44]), (bx[47], by[38])]
+    return [[np.array(comb)], [np.array(star)],
+            [np.array(outer), np.array(hole)]]
+
+
+def _border_points(grid, polygons):
+    """Points on every ring vertex, on the edges, on every zoom-8
+    border line, and their nextafter neighbours."""
+    rng = np.random.RandomState(8)
+    up, down = np.inf, -np.inf
+    rings = [r for p in polygons for r in p]
+    allv = np.vstack(rings)
+    ts8, ts6 = grid.tile_span(8), grid.tile_span(6)
+    k8 = np.arange(-1, 258)
+    k6 = np.arange(-1, 66)
+
+    def near(v):
+        v = np.asarray(v, np.float64)
+        return np.concatenate([v, np.nextafter(v, down), np.nextafter(v, up)])
+
+    def within(v, lo, hi):
+        return v[(v >= lo - ts6) & (v <= hi + ts6)]
+
+    (x0, y0), (x1, y1) = allv.min(axis=0), allv.max(axis=0)
+    lines_x = near(within(grid.top_left_x + k8 * ts8, x0, x1))
+    lines_y = near(within(grid.top_left_y - k8 * ts8, y0, y1))
+    cross_x = np.concatenate([near(within(grid.top_left_x + k6 * ts6, x0, x1)),
+                              rng.uniform(x0, x1, 24)])
+    cross_y = np.concatenate([near(within(grid.top_left_y - k6 * ts6, y0, y1)),
+                              rng.uniform(y0, y1, 24)])
+    xs = [np.repeat(lines_x, cross_y.size), np.tile(cross_x, lines_y.size)]
+    ys = [np.tile(cross_y, lines_x.size), np.repeat(lines_y, cross_x.size)]
+    # vertices and their 8 nextafter neighbours
+    for vx in (allv[:, 0], np.nextafter(allv[:, 0], down), np.nextafter(allv[:, 0], up)):
+        for vy in (allv[:, 1], np.nextafter(allv[:, 1], down), np.nextafter(allv[:, 1], up)):
+            xs.append(vx)
+            ys.append(vy)
+    # on the edges: where they cross border lines, and at fractions
+    for ring in rings:
+        for (ax, ay), (bx_, by_) in zip(ring[:-1], ring[1:]):
+            if ay != by_:
+                ly = lines_y[(lines_y >= min(ay, by_)) & (lines_y <= max(ay, by_))]
+                ex = ax + (ly - ay) * (bx_ - ax) / (by_ - ay)
+                xs.append(near(ex))
+                ys.append(np.tile(ly, 3))
+            if ax != bx_:
+                lx = lines_x[(lines_x >= min(ax, bx_)) & (lines_x <= max(ax, bx_))]
+                ey = ay + (lx - ax) * (by_ - ay) / (bx_ - ax)
+                xs.append(np.tile(lx, 3))
+                ys.append(near(ey))
+            t = np.array([0.25, 0.5, 0.75])
+            xs.append(near(ax + t * (bx_ - ax)))
+            ys.append(np.tile(ay + t * (by_ - ay), 3))
+    return np.concatenate(xs), np.concatenate(ys)
+
+
+@pytest.fixture(scope="module")
+def border_case(spark):
+    import pandas as pd
+
+    grid = TileGrid.local(*fx.POLY_BBOX)
+    polygons = _border_polygons(grid)
+    rows = []
+    for fid, rings in enumerate(polygons):
+        wkb = kwkb.wkb_polygon(rings)
+        b = kwkb.wkb_bbox(wkb)
+        rows.append({"fid": fid, "name": f"p{fid}", "wkb": wkb,
+                     "xmin": b[0], "ymin": b[1], "xmax": b[2], "ymax": b[3]})
+    polys = spark.createDataFrame(pd.DataFrame(rows)).cache()
+    px, py = _border_points(grid, polygons)
+    pdf = pd.DataFrame({"id": np.arange(px.size), "x": px, "y": py})
+    pts = spark.createDataFrame(pdf).cache()
+    want = {(int(i), fid) for fid, rings in enumerate(polygons)
+            for i in np.flatnonzero(kpip.points_in_polygon(px, py, rings))}
+    return grid, pts, polys, want, px.size
+
+
+@pytest.mark.parametrize("salted", [False, True], ids=["quadtree", "quadtree_salted"])
+@pytest.mark.parametrize("zoom", [4, 6, 8])
+def test_cell_cover_exact_on_cell_borders(border_case, zoom, salted):
+    """Every (point, polygon) decision of the classified-cover join
+    equals the numpy ray-cast kernel, for points on vertices, on edges,
+    on every cell border line and one ulp to either side of each."""
+    grid, pts, polys, want, n = border_case
+    kw = dict(broadcast=False, salt=4) if salted else {}
+    got = spatial_join(pts, polys, grid, zoom=zoom, **kw).select("id", "fid").toPandas()
+    got = set(zip(got["id"].tolist(), got["fid"].tolist()))
+    assert len(want) > 10_000 and n > 200_000
+    wrong = got ^ want
+    assert not wrong, f"{len(wrong)} wrong decisions of {n} points, e.g. {sorted(wrong)[:5]}"
+
+
+@pytest.mark.parametrize("salted", [False, True], ids=["quadtree", "quadtree_salted"])
+def test_non_finite_points_stay_unmatched(spark, salted):
+    """NaN points get no cell; +/-inf points clamp into a border cell
+    of a grid smaller than the polygon, where only the envelope
+    pretest drops them: the ray cast alone accepts (-inf, 5) in numpy
+    and (inf, 5) in the JVM, through 0 * inf = NaN at the vertex
+    (0, 5) (Spark orders NaN above 0)."""
+    import pandas as pd
+
+    from gdal_spark import functions as gf
+    from gdal_spark.operators.spatial_join import edges_table
+
+    ring = np.array([(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0),
+                     (0.0, 5.0), (0.0, 0.0)])
+    assert kpip.points_in_ring([-np.inf], [5.0], ring, test_envelope=False)[0]
+    wkb = kwkb.wkb_polygon([ring])
+    polys = spark.createDataFrame(pd.DataFrame(
+        {"fid": [7], "wkb": [wkb], "xmin": [0.0], "ymin": [0.0],
+         "xmax": [10.0], "ymax": [10.0]}))
+    inf, nan = np.inf, np.nan
+    xy = [(5.0, 5.0), (inf, 5.0), (-inf, 5.0), (5.0, inf), (5.0, -inf),
+          (nan, 5.0), (5.0, nan), (-inf, 0.0), (inf, inf), (nan, nan)]
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"id": np.arange(len(xy)), "x": [p[0] for p in xy],
+         "y": [p[1] for p in xy]}))
+    jvm = pts.crossJoin(edges_table(polys)).filter(
+        gf.pip_inside_col(F.col("edges"), F.col("x"), F.col("y")))
+    assert 1 in {r["id"] for r in jvm.select("id").collect()}
+    grid = TileGrid.local(3.0, 3.0, 7.0, 7.0)
+    kw = dict(broadcast=False, salt=4) if salted else {}
+    for z in (0, 2):
+        inner = spatial_join(pts, polys, grid, zoom=z, **kw)
+        assert _rows(inner, ["id", "fid"]) == [(0, 7)]
+        left = spatial_join(pts, polys, grid, zoom=z, how="left", **kw)
+        assert _rows(left, ["id", "fid"]) == [(0, 7)] + [(i, -1) for i in range(1, len(xy))]

@@ -14,7 +14,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..kernels.cells import TileGrid, X_SHIFT, Z_SHIFT
-from ..kernels.hilbert import HILBERT_MAX
 
 
 def tile_xy_cols(grid: TileGrid, z: int, x: Column, y: Column):
@@ -175,22 +174,6 @@ def hilbert_u32_pandas(x: Column, y: Column) -> Column:
     return _h(x, y)
 
 
-def hilbert_key_col(px: Column, py: Column, minx: float, miny: float,
-                    width: float, height: float) -> Column:
-    """Column twin of kernels.hilbert.hilbert_of_xy_f64: world point ->
-    uint32 Hilbert key over a fixed extent.  Use as the
-    repartitionByRange key for spatial locality (north_rule)."""
-    if width != 0.0:
-        gx = F.floor(F.lit(float(HILBERT_MAX)) * (px - F.lit(minx)) / F.lit(width))
-    else:
-        gx = F.lit(0)
-    if height != 0.0:
-        gy = F.floor(F.lit(float(HILBERT_MAX)) * (py - F.lit(miny)) / F.lit(height))
-    else:
-        gy = F.lit(0)
-    return hilbert_u32_col(gx.cast("long"), gy.cast("long"))
-
-
 def covering_cells_col(grid: TileGrid, z: int,
                        xmin: Column, ymin: Column, xmax: Column, ymax: Column) -> Column:
     """Array of cell ids whose tiles intersect a bbox — the Column twin
@@ -223,22 +206,6 @@ def s2_cell_pandas(x: Column, y: Column, z: Column,
         return pd.DataFrame({"face": f.astype("int32"), "pos": p})
 
     return _s2(x, y, z)
-
-
-def s2_cell_lonlat_pandas(lon: Column, lat: Column,
-                          level: int = 30) -> Column:
-    """Degrees -> struct(face, pos) via the unit sphere (same kernel)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..kernels import s2 as ks2
-
-    @pandas_udf("face int, pos long")
-    def _s2(lons: pd.Series, lats: pd.Series) -> pd.DataFrame:
-        f, p = ks2.s2_encode_lonlat(lons.to_numpy(dtype="float64"),
-                                    lats.to_numpy(dtype="float64"), level)
-        return pd.DataFrame({"face": f.astype("int32"), "pos": p})
-
-    return _s2(lon, lat)
 
 
 def s2_cell_pandas_key(lon: Column, lat: Column, level: int) -> Column:

@@ -254,51 +254,6 @@ def _bw_core(xs, ys, scale: float) -> list[tuple[int, int, int]]:
     return out
 
 
-def _delaunay_triangles_scalar(xs, ys,
-                               scale: float = 30.0
-                               ) -> list[tuple[int, int, int]]:
-    """The pre-vectorization scalar Bowyer-Watson, kept verbatim as
-    the bit-equivalence reference for the vectorized scan (the test
-    asserts identical facet lists on random inputs); the
-    super-triangle placement expression matches _bw_core exactly."""
-    xs = np.asarray(xs, dtype=np.float64)
-    ys = np.asarray(ys, dtype=np.float64)
-    n = len(xs)
-    if n < 3:
-        return []
-    minx, maxx = float(xs.min()), float(xs.max())
-    miny, maxy = float(ys.min()), float(ys.max())
-    span = max(maxx - minx, maxy - miny, 1.0)
-    midx, midy = (minx + maxx) / 2.0, (miny + maxy) / 2.0
-    px = np.concatenate([xs, [midx - scale * span, midx,
-                              midx + scale * span]])
-    py = np.concatenate([ys, [midy - scale * span * (2.0 / 3.0),
-                              midy + scale * span,
-                              midy - scale * span * (2.0 / 3.0)]])
-
-    tris: list[tuple[int, int, int]] = [(n, n + 1, n + 2)]
-    for p in range(n):
-        bad = []
-        for t_idx, (a, b, c) in enumerate(tris):
-            if _circumcircle_contains(px[a], py[a], px[b], py[b],
-                                      px[c], py[c], px[p], py[p]):
-                bad.append(t_idx)
-        edge_count: dict[tuple[int, int], int] = {}
-        for t_idx in bad:
-            a, b, c = tris[t_idx]
-            for e in ((a, b), (b, c), (c, a)):
-                key = (min(e), max(e))
-                edge_count[key] = edge_count.get(key, 0) + 1
-        for t_idx in reversed(bad):
-            del tris[t_idx]
-        for (u, v), cnt in sorted(edge_count.items()):
-            if cnt == 1:
-                tris.append(tuple(sorted((u, v, p))))
-
-    out = sorted(t for t in tris if max(t) < n)
-    return [tuple(int(v) for v in t) for t in out]
-
-
 def brute_force_delaunay(xs, ys) -> list[tuple[int, int, int]]:
     """The enumeration definition — every ascending triple whose
     circumcircle contains no other point (the SQL oracle's exact

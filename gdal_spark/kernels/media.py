@@ -435,6 +435,12 @@ def _dct_matrix() -> np.ndarray:
 _DCT_T = _dct_matrix()
 
 
+def _idct_blocks(s: np.ndarray) -> np.ndarray:
+    """(n, 8, 8) dequantized coefficients -> (n, 8, 8) level-shifted
+    samples: T.T @ S @ T per block, as two batched matmuls."""
+    return _DCT_T.T @ s @ _DCT_T + 128.0
+
+
 def _huff_codes(bits, values):
     """T.81 Annex C canonical code assignment: (value -> (code, len))."""
     out = {}
@@ -974,7 +980,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                         preds[cid] = zz[0]
                         coeff[cid][my * sv + by, mx * sh + bx] = zz
             mcu_count += 1
-    # dequantize + IDCT per component (batched einsum), then upsample
+    # dequantize + IDCT per component (batched matmuls), then upsample
     planes = []
     for comp in comps:
         cid, sh, sv, tq = comp
@@ -982,7 +988,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
         nat = np.zeros_like(zz)
         nat[:, _ZIGZAG] = zz              # inverse zigzag
         s = (nat * qtabs[tq][None, :]).astype(np.float64).reshape(-1, 8, 8)
-        blocks = np.einsum("xu,nuv,yv->nxy", _DCT_T.T, s, _DCT_T.T) + 128.0
+        blocks = _idct_blocks(s)
         nby, nbx = mcus_y * sv, mcus_x * sh
         plane = (blocks.reshape(nby, nbx, 8, 8).transpose(0, 2, 1, 3)
                  .reshape(nby * 8, nbx * 8))
@@ -1068,7 +1074,10 @@ def decode_avi(payload: bytes):
 
     RIFF chunk walk tolerant of unknown chunks (same approach as the
     WAV reader); only biCompression == 0 (BI_RGB) 24-bit streams are
-    supported — anything else raises."""
+    supported — anything else raises.  Hostile input raises
+    ``ValueError`` only, and every frame chunk's length and bounds are
+    checked before the frame array is allocated, so allocation is
+    bounded by the payload length."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
         raise ValueError("not an AVI payload")
     w = h = None
@@ -1078,14 +1087,16 @@ def decode_avi(payload: bytes):
     frames = []
     cur_fcc = None                        # stream type of the last strh
 
-    def walk(pos: int, end: int):
+    def walk(pos: int, end: int, depth: int):
         nonlocal w, h, rate, scale, bottom_up, n_declared, cur_fcc
+        if depth > 8:
+            raise ValueError("AVI LIST nesting deeper than 8")
         while pos + 8 <= end:
             tag = payload[pos:pos + 4]
             (ln,) = struct.unpack("<I", payload[pos + 4:pos + 8])
             body_start = pos + 8
             if tag == b"LIST":
-                walk(body_start + 4, body_start + ln)
+                walk(body_start + 4, body_start + ln, depth + 1)
             elif tag == b"avih":
                 flds = struct.unpack("<10I", payload[body_start:
                                                      body_start + 40])
@@ -1111,16 +1122,26 @@ def decode_avi(payload: bytes):
                 frames.append((body_start, ln))
             pos = body_start + ln + (ln % 2)
 
-    walk(12, 8 + struct.unpack("<I", payload[4:8])[0])
+    try:
+        walk(12, 8 + struct.unpack("<I", payload[4:8])[0], 0)
+    except struct.error as e:
+        raise ValueError(f"truncated AVI header: {e}") from None
     if w is None or not frames:
         raise ValueError("missing avih header or frame chunks")
     if rate is None or scale is None:
         raise ValueError("no 'vids' stream header (strh) found")
+    if rate == 0 or scale == 0:
+        raise ValueError(f"AVI stream rate/scale {rate}/{scale}")
     stride = (w * 3 + 3) & ~3
-    out = np.empty((len(frames), h, w, 3), dtype=np.uint8)
     for fi, (off, ln) in enumerate(frames):
         if ln != stride * h:
             raise ValueError(f"frame {fi} size {ln} != {stride * h}")
+        if off + ln > len(payload):
+            raise ValueError(f"frame {fi} runs past the payload end")
+    if len(frames) * stride * h > len(payload):
+        raise ValueError("frame chunks overlap")
+    out = np.empty((len(frames), h, w, 3), dtype=np.uint8)
+    for fi, (off, ln) in enumerate(frames):
         a = np.frombuffer(payload, dtype=np.uint8, count=ln, offset=off)
         out[fi] = _dib_unpack(a, w, h, bottom_up=bottom_up)
     return int(rate), int(scale), out

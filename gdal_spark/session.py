@@ -10,9 +10,12 @@ Python workers fork from ``gdal_spark.worker_daemon`` rather than
 the start of every task, which makes each zipimporter on the workers'
 path re-read its archive's whole directory (pyspark.zip and the
 spark-core jar, 16 times a task); that daemon puts no large archive on
-the path.  ``spark.executorEnv.PYTHONPATH`` names the directory (or
-``--py-files`` zip) holding this package, so the daemon imports from
-any working directory.
+the path.  It also imports pandas and pyarrow and calls ``gc.freeze()``
+before forking, so the full ``gc.collect()`` PySpark runs after every
+task walks only what the task made, not the ~73k objects every Arrow
+worker imports.  ``spark.executorEnv.PYTHONPATH`` names the directory
+(or ``--py-files`` zip) holding this package, so the daemon imports
+from any working directory.
 """
 
 from __future__ import annotations

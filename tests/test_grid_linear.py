@@ -9,7 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from gdal_spark.kernels.cells import TileGrid
-from gdal_spark.kernels.delaunay import (brute_force_delaunay,
+from gdal_spark.kernels.delaunay import (_bw_core, _circumcircle_contains,
+                                         brute_force_delaunay,
                                          delaunay_triangles)
 from gdal_spark.operators.grid_interp import grid_linear
 
@@ -55,15 +56,55 @@ def test_bowyer_watson_matches_enumeration(n, salt):
     assert len(bw) == 2 * n - 2 - hull
 
 
+def _delaunay_triangles_scalar(xs, ys,
+                               scale: float = 30.0
+                               ) -> list[tuple[int, int, int]]:
+    """The pre-vectorization scalar Bowyer-Watson, kept verbatim as
+    the bit-equivalence reference for the vectorized scan; the
+    super-triangle placement expression matches _bw_core exactly."""
+    xs = np.asarray(xs, dtype=np.float64)
+    ys = np.asarray(ys, dtype=np.float64)
+    n = len(xs)
+    if n < 3:
+        return []
+    minx, maxx = float(xs.min()), float(xs.max())
+    miny, maxy = float(ys.min()), float(ys.max())
+    span = max(maxx - minx, maxy - miny, 1.0)
+    midx, midy = (minx + maxx) / 2.0, (miny + maxy) / 2.0
+    px = np.concatenate([xs, [midx - scale * span, midx,
+                              midx + scale * span]])
+    py = np.concatenate([ys, [midy - scale * span * (2.0 / 3.0),
+                              midy + scale * span,
+                              midy - scale * span * (2.0 / 3.0)]])
+
+    tris: list[tuple[int, int, int]] = [(n, n + 1, n + 2)]
+    for p in range(n):
+        bad = []
+        for t_idx, (a, b, c) in enumerate(tris):
+            if _circumcircle_contains(px[a], py[a], px[b], py[b],
+                                      px[c], py[c], px[p], py[p]):
+                bad.append(t_idx)
+        edge_count: dict[tuple[int, int], int] = {}
+        for t_idx in bad:
+            a, b, c = tris[t_idx]
+            for e in ((a, b), (b, c), (c, a)):
+                key = (min(e), max(e))
+                edge_count[key] = edge_count.get(key, 0) + 1
+        for t_idx in reversed(bad):
+            del tris[t_idx]
+        for (u, v), cnt in sorted(edge_count.items()):
+            if cnt == 1:
+                tris.append(tuple(sorted((u, v, p))))
+
+    out = sorted(t for t in tris if max(t) < n)
+    return [tuple(int(v) for v in t) for t in out]
+
+
 @pytest.mark.parametrize("n,salt", [(50, 11), (200, 12), (700, 13)])
 def test_vectorized_scan_matches_scalar(n, salt):
     """The numpy-vectorized bad-triangle scan must produce the
     bit-identical facet list of the scalar Bowyer-Watson it replaced
     (same IEEE expression, same insertion order)."""
-    import numpy as np
-
-    from gdal_spark.kernels.delaunay import (_bw_core,
-                                             _delaunay_triangles_scalar)
     xs, ys = _pts(n, salt)
     xa = np.asarray(xs, dtype=np.float64)
     ya = np.asarray(ys, dtype=np.float64)

@@ -128,3 +128,78 @@ def test_top_down_avi_decodes_upright():
     struct.pack_into("<i", raw, i + 16, -5)
     _, _, out = km.decode_avi(bytes(raw))
     np.testing.assert_array_equal(out, fr)
+
+
+def _avi_mutants(n, seed):
+    """``n`` seeded corruptions of one valid clip: every fourth is a
+    truncation, the rest overwrite 1-4 bytes (half of them inside the
+    first 256 bytes, where the RIFF/avih/strh/strf headers live)."""
+    import random
+
+    rng = random.Random(seed)
+    frames = np.random.RandomState(seed).randint(
+        0, 256, (6, 9, 11, 3)).astype(np.uint8)
+    clip = km.encode_avi(frames, rate=12)
+    for i in range(n):
+        b = bytearray(clip)
+        if i % 4 == 3:
+            del b[rng.randrange(len(b)):]
+        else:
+            for _ in range(rng.randint(1, 4)):
+                pos = (rng.randrange(256) if rng.random() < 0.5
+                       else rng.randrange(len(b)))
+                b[pos] = rng.randrange(256)
+        yield bytes(b)
+
+
+def test_avi_hostile_input_raises_value_error_with_bounded_allocation():
+    """Hostile-input contract: a corrupt clip raises ValueError (never
+    struct.error or MemoryError), and decoding allocates no more than
+    the payload plus a small constant, whatever the headers declare."""
+    import tracemalloc
+
+    outcomes = {"ok": 0, "ValueError": 0}
+    for p in _avi_mutants(400, seed=5):
+        tracemalloc.start()
+        try:
+            km.decode_avi(p)
+            outcomes["ok"] += 1
+        except ValueError:
+            outcomes["ValueError"] += 1
+        finally:
+            peak = tracemalloc.get_traced_memory()[1]
+            tracemalloc.stop()
+        assert peak <= len(p) + 16 * 1024, (len(p), peak)
+    assert outcomes["ok"] and outcomes["ValueError"], outcomes
+
+
+def test_avi_frame_chunks_checked_before_allocation():
+    fr = np.zeros((2, 4, 5, 3), dtype=np.uint8)
+    raw = bytearray(km.encode_avi(fr))
+    avih = raw.index(b"avih") + 8
+    big = bytearray(raw)
+    big[avih + 32:avih + 40] = (1 << 20).to_bytes(4, "little") * 2
+    with pytest.raises(ValueError, match="frame 0 size"):
+        km.decode_avi(bytes(big))
+    with pytest.raises(ValueError, match="truncated AVI header"):
+        km.decode_avi(bytes(raw[:raw.index(b"strh") + 12]))
+    zero_rate = bytearray(raw)
+    strh = raw.index(b"strh") + 8
+    zero_rate[strh + 24:strh + 28] = bytes(4)       # dwRate
+    with pytest.raises(ValueError, match="rate/scale"):
+        km.decode_avi(bytes(zero_rate))
+    nested = b"".join(b"LIST" + (12 * (2000 - i)).to_bytes(4, "little") + b"xxxx"
+                      for i in range(2000))
+    with pytest.raises(ValueError, match="nesting"):
+        km.decode_avi(b"RIFF" + (4 + len(nested)).to_bytes(4, "little")
+                      + b"AVI " + nested)
+    # LISTs declared 12 bytes long: each inner 64-byte frame runs on
+    # past its LIST, and the next LIST starts inside that frame's body
+    unit = b"LIST" + (12).to_bytes(4, "little") + b"movi" + b"00db" + (64).to_bytes(4, "little")
+    body = raw[12:raw.index(b"LIST", raw.index(b"strl") + 4)] + unit * 200 + bytes(64)
+    with pytest.raises(ValueError, match="overlap"):
+        km.decode_avi(b"RIFF" + (4 + len(body)).to_bytes(4, "little") + b"AVI " + body)
+    cut = raw[:raw.index(b"idx1") - 10]   # inside the last frame's body
+    cut[4:8] = (len(cut) - 8).to_bytes(4, "little")
+    with pytest.raises(ValueError, match="past the payload end"):
+        km.decode_avi(bytes(cut))

@@ -222,3 +222,54 @@ def test_stream_without_eoi_keeps_last_entropy_byte():
     raw = km.encode_jpeg(img, quality=75)
     assert raw.endswith(b"\xFF\xD9")
     np.testing.assert_array_equal(km.decode_jpeg(raw[:-2]), km.decode_jpeg(raw))
+
+
+def _einsum_idct(s):
+    """The decoder's former IDCT: one einsum over all blocks."""
+    return np.einsum("xu,nuv,yv->nxy", km._DCT_T.T, s, km._DCT_T.T) + 128.0
+
+
+def _random_jpegs(n, seed):
+    """Seeded random baseline JPEGs: gray and RGB, quality None / 10 /
+    50 / 75 / 90 / 95, 4:4:4 and 4:2:0, restart interval 0..3, 1-40 px
+    sides, content from noise to block-constant."""
+    rng = np.random.RandomState(seed)
+    out = []
+    for i in range(n):
+        h, w = rng.randint(1, 41), rng.randint(1, 41)
+        shape = (h, w) if i % 3 == 0 else (h, w, 3)
+        img = rng.randint(0, 256, size=shape)
+        if i % 4 == 1:                      # smooth: a ramp plus noise
+            img = np.add.outer(np.arange(h), np.arange(w)) * rng.randint(1, 9)
+            if len(shape) == 3:
+                img = img[..., None] + np.array([0, 40, 80])
+            img = img % 256 + rng.randint(-8, 9, size=shape)
+        elif i % 4 == 2:                    # constant 8x8 blocks
+            img = np.kron(rng.randint(0, 256, size=((h + 7) // 8, (w + 7) // 8)),
+                          np.ones((8, 8), dtype=np.int64))[:h, :w]
+            if len(shape) == 3:
+                img = np.stack([img, img[::-1], img[:, ::-1]], axis=2)
+        out.append(km.encode_jpeg(
+            np.clip(img, 0, 255).astype(np.uint8),
+            quality=(None, 10, 50, 75, 90, 95)[i % 6],
+            subsampling=("444", "420")[i // 6 % 2],
+            restart_interval=i // 12 % 4))
+    return out
+
+
+def test_matmul_idct_bit_identical_to_einsum(monkeypatch):
+    """decode_jpeg's two-matmul IDCT gives the same pixels as the
+    einsum it replaced, on the benchmark's JPEG recipe (perfbench
+    media_decode, three seeds) and on 1,500 seeded random JPEGs."""
+    from perfbench.inputs import media_payloads
+
+    corpus = _random_jpegs(1500, seed=20261017)
+    for seed in (1, 2, 3):
+        pay, _ = media_payloads(800, seed)
+        corpus += [bytes(p) for p in pay.loc[pay["kind"] == "jpeg", "payload"]]
+    new = [km.decode_jpeg(p) for p in corpus]
+    monkeypatch.setattr(km, "_idct_blocks", _einsum_idct)
+    for p, a in zip(corpus, new):
+        b = km.decode_jpeg(p)
+        assert a.dtype == b.dtype and a.shape == b.shape
+        np.testing.assert_array_equal(a, b)

@@ -8,6 +8,7 @@ transcription error in the tables or the state machine fails them.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from gdal_spark.kernels import s2 as ks2
@@ -84,15 +85,27 @@ def test_locality_nearby_points_share_prefix():
     assert np.median(depth) >= 18
 
 
+def s2_cell_lonlat_pandas(lon, lat, level: int = 30):
+    """Degrees -> struct(face, pos) via the unit sphere, as an Arrow
+    UDF over the numpy kernel."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("face int, pos long")
+    def _s2(lons: pd.Series, lats: pd.Series) -> pd.DataFrame:
+        f, p = ks2.s2_encode_lonlat(lons.to_numpy(dtype="float64"),
+                                    lats.to_numpy(dtype="float64"), level)
+        return pd.DataFrame({"face": f.astype("int32"), "pos": p})
+
+    return _s2(lon, lat)
+
+
 def test_spark_udf_matches_kernel(spark):
     from pyspark.sql import functions as F
-
-    from gdal_spark import functions as gf
 
     pts = [(float(a) / 7.0 - 10.0, float(a % 13) * 6.0 - 36.0)
            for a in range(200)]
     df = spark.createDataFrame(pts, "lon double, lat double")
-    out = (df.withColumn("c", gf.s2_cell_lonlat_pandas(
+    out = (df.withColumn("c", s2_cell_lonlat_pandas(
                F.col("lon"), F.col("lat")))
              .select("lon", "lat", "c.face", "c.pos").toPandas())
     f, p = ks2.s2_encode_lonlat(out["lon"].to_numpy(),

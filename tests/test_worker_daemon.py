@@ -1,6 +1,7 @@
 """Python workers fork from gdal_spark.worker_daemon: no archive-heavy
 import path (no jar, pyspark from the unpacked tree), same PySpark,
-workers still reused across tasks."""
+pandas and pyarrow frozen in the permanent generation, per-task
+garbage still collected, workers still reused across tasks."""
 
 import os
 from collections import Counter
@@ -78,3 +79,57 @@ def test_session_names_daemon_and_its_import_root(spark):
     assert conf.get("spark.python.daemon.module") == "gdal_spark.worker_daemon"
     root = conf.get("spark.executorEnv.PYTHONPATH")
     assert os.path.isfile(os.path.join(root, "gdal_spark", "worker_daemon.py"))
+
+
+def _probe_rows(spark):
+    """One row per task: the worker's pid, its frozen-object count, and
+    how many of the reference cycles made by earlier tasks in this
+    process are still alive.  Each task then leaves one new cycle
+    behind (unreachable once the task returns)."""
+    def probe(batches):
+        import gc as _gc
+        import os as _os
+        import sys as _sys
+        import weakref
+
+        import pandas as pd
+
+        class Node:
+            pass
+
+        earlier = _sys.__dict__.setdefault("_gdal_spark_cycle_probe", [])
+        seen, alive = len(earlier), sum(r() is not None for r in earlier)
+        for _ in batches:
+            pass
+        node = Node()
+        node.self = node
+        earlier.append(weakref.ref(node))
+        del node
+        yield pd.DataFrame({"pid": [_os.getpid()],
+                            "frozen": [_gc.get_freeze_count()],
+                            "seen": [seen], "alive": [alive]})
+
+    return (spark.range(0, 64, numPartitions=32)
+            .mapInPandas(probe, "pid long, frozen long, seen long, alive long")
+            .collect())
+
+
+def test_workers_inherit_frozen_pandas_and_pyarrow(spark):
+    rows = _probe_rows(spark)
+    assert len(rows) == 32
+    # importing pandas and pyarrow leaves tens of thousands of container
+    # objects; the daemon freezes them before it forks any worker
+    assert min(r.frozen for r in rows) >= 20_000, sorted({r.frozen for r in rows})
+
+
+def test_per_task_cycles_are_collected_in_frozen_workers(spark):
+    rows = _probe_rows(spark)
+    # the regime under test: workers forked from the frozen daemon
+    assert min(r.frozen for r in rows) > 0
+    # one pid serves several tasks, so earlier tasks' cycles are visible
+    served = Counter(r.pid for r in rows)
+    assert max(served.values()) >= 2, served
+    assert sum(r.seen for r in rows) > 0
+    # every cycle an earlier task left behind is gone before the next task
+    # of the same worker starts: freezing leaks no per-task garbage
+    assert [r for r in rows if r.alive] == []

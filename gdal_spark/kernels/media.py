@@ -53,6 +53,8 @@ def decode_wav(payload: bytes):
         (sz,) = struct.unpack("<I", payload[pos + 4:pos + 8])
         body = payload[pos + 8:pos + 8 + sz]
         if cid == b"fmt ":
+            if len(body) < 16:
+                raise ValueError(f"fmt chunk of {len(body)} bytes")
             fmt, nch, rate, _br, _ba, bits = struct.unpack(
                 "<HHIIHH", body[:16])
             if fmt != 1:
@@ -64,6 +66,8 @@ def decode_wav(payload: bytes):
         raise ValueError("missing fmt/data chunk")
     if bits != 16 or nch != 1:
         raise ValueError(f"only 16-bit mono supported ({bits}b x{nch})")
+    if rate == 0:
+        raise ValueError("sample rate 0")
     return rate, np.frombuffer(data, dtype="<i2")
 
 
@@ -105,11 +109,15 @@ def decode_bmp(payload: bytes) -> np.ndarray:
     """24-bit uncompressed BMP -> HxWx3 uint8 RGB."""
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
+    if len(payload) < 34:
+        raise ValueError("truncated BMP header")
     (off,) = struct.unpack("<I", payload[10:14])
     hsz, w, h, _planes, bits, comp = struct.unpack(
         "<IiiHHI", payload[14:34])
     if bits != 24 or comp != 0:
         raise ValueError(f"only 24-bit uncompressed supported ({bits})")
+    if w < 0:
+        raise ValueError(f"negative BMP width {w}")
     flip = h > 0
     h = abs(h)
     stride = (w * 3 + 3) & ~3
@@ -242,6 +250,8 @@ def decode_png(payload: bytes) -> np.ndarray:
         ctag = payload[pos + 4:pos + 8]
         body = payload[pos + 8:pos + 8 + ln]
         if ctag == b"IHDR":
+            if len(body) != 13:
+                raise ValueError(f"IHDR of {len(body)} bytes")
             w, h, depth, ctype, comp, filt, ilace = struct.unpack(
                 ">IIBBBBB", body)
             if depth != 8 or ctype not in _PNG_CHANNELS:
@@ -259,10 +269,21 @@ def decode_png(payload: bytes) -> np.ndarray:
         raise ValueError("missing IHDR")
     ch = _PNG_CHANNELS[ctype]
     stride = w * ch
-    raw = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
-    if raw.size != h * (stride + 1):
+    # Inflate at most one byte past the declared size, so a corrupt
+    # or hostile stream allocates no more than the image it claims; a
+    # claim deflate cannot meet (1032:1 is its ceiling) stops first.
+    size = h * (stride + 1)
+    if size > 1032 * len(idat):
+        raise ValueError(f"IHDR {w}x{h} exceeds what {len(idat)} IDAT "
+                         f"bytes can inflate to")
+    inflate = zlib.decompressobj()
+    try:
+        raw = inflate.decompress(bytes(idat), size + 1)
+    except zlib.error as e:
+        raise ValueError(f"corrupt IDAT stream: {e}") from None
+    if len(raw) != size or not inflate.eof:
         raise ValueError("IDAT size mismatch")
-    raw = raw.reshape(h, stride + 1)
+    raw = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride + 1)
     ftypes, rows = raw[:, 0], raw[:, 1:]
     out = np.empty((h, stride), dtype=np.uint8)
     prior = np.zeros(stride, dtype=np.uint8)

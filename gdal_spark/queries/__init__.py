@@ -20,10 +20,13 @@ compare):
 
 from __future__ import annotations
 
+import os
+import stat
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -52,9 +55,53 @@ def register(name: str, sql: str | Callable[[], str] | None = None,
     return deco
 
 
+# path -> (file signature, schema inferred from the files it names)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _signature(path: str) -> tuple | None:
+    """``(name, size, mtime_ns, inode)`` of a local file, or of every
+    file under a local directory; None when ``os.stat`` cannot see the
+    path (a non-local URI)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns,
+                 st.st_ino),)
+    sig = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for f in sorted(files):
+            fs = os.stat(os.path.join(root, f))
+            sig.append((os.path.relpath(os.path.join(root, f), path),
+                        fs.st_size, fs.st_mtime_ns, fs.st_ino))
+    return tuple(sig)
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver-generated parquet table."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Load one driver-generated parquet table.
+
+    ``spark.read.parquet`` infers the schema with a Spark job on every
+    call.  The inferred ``StructType`` is memoized per path, keyed by
+    the local file signature (``_signature``): an unchanged table is
+    read with ``spark.read.schema(memo)``, which runs no job, and a
+    rewritten file (new size, mtime or inode) misses and is inferred
+    again.  A path ``os.stat`` cannot see is always inferred.  Every
+    call still returns a fresh relation with its own attribute ids, so
+    a self-join of two ``t()`` reads of one table stays well-formed;
+    only the schema is shared, never a DataFrame or a view.
+    """
+    path = f"{sf_dir}/{name}.parquet"
+    sig = _signature(path)
+    hit = _SCHEMAS.get(path)
+    if sig is not None and hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if sig is not None:
+        _SCHEMAS[path] = (sig, df.schema)
+    return df
 
 
 # Importing submodules populates QUERIES.

@@ -1,0 +1,109 @@
+"""Cheap catalog query building: ``queries.t`` infers each table's
+schema once per file version, and ``get_spark`` turns off PySpark's
+per-Column call-site capture (several py4j round trips per ``F.*`` call)."""
+
+from __future__ import annotations
+
+import itertools
+
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import functions as F
+
+from gdal_spark.queries import QUERIES, t
+
+_GROUPS = itertools.count()
+
+
+def _jobs_during(spark, fn):
+    """(result of fn(), ids of the Spark jobs it submitted)."""
+    sc = spark.sparkContext
+    group = f"catalog-build-test-{next(_GROUPS)}"
+    sc.setJobGroup(group, "t() memo")
+    try:
+        out = fn()
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _write(path, **cols):
+    pq.write_table(pa.table(cols), path)
+
+
+def test_second_read_of_unchanged_table_submits_no_job(spark, tmp_path):
+    _write(tmp_path / "orders.parquet", o_orderkey=[1, 2, 3], o_custkey=[7, 7, 8])
+    first, jobs = _jobs_during(spark, lambda: t(spark, str(tmp_path), "orders"))
+    assert jobs, "schema inference ran no job: the check below shows nothing"
+    second, jobs = _jobs_during(spark, lambda: t(spark, str(tmp_path), "orders"))
+    assert jobs == []
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_rewritten_file_is_read_with_its_new_schema(spark, tmp_path):
+    _write(tmp_path / "tab.parquet", a=[1, 2])
+    assert t(spark, str(tmp_path), "tab").columns == ["a"]
+    _write(tmp_path / "tab.parquet", b=["x", "y", "z"], c=[1.5, 2.5, 3.5])
+    df = t(spark, str(tmp_path), "tab")
+    assert df.columns == ["b", "c"]
+    assert sorted(df.collect()) == [("x", 1.5), ("y", 2.5), ("z", 3.5)]
+
+
+def test_directory_table_misses_when_a_part_file_changes(spark, tmp_path):
+    d = tmp_path / "parts.parquet"
+    d.mkdir()
+    _write(d / "part-0.parquet", k=[1])
+    assert t(spark, str(tmp_path), "parts").count() == 1
+    _write(d / "part-1.parquet", k=[2, 3])
+    df, jobs = _jobs_during(spark, lambda: t(spark, str(tmp_path), "parts"))
+    assert jobs, "a new part file must be inferred again"
+    assert df.count() == 3
+
+
+def test_self_join_of_two_reads_matches_pandas(spark, tmp_path):
+    orders = pd.DataFrame({"o_orderkey": range(40),
+                           "o_custkey": [i * 7 % 9 for i in range(40)]})
+    orders.to_parquet(tmp_path / "orders.parquet", index=False)
+    t(spark, str(tmp_path), "orders")          # memoize the schema
+    a = t(spark, str(tmp_path), "orders").alias("a")
+    b = t(spark, str(tmp_path), "orders").alias("b")
+    got = sorted(tuple(r) for r in a.join(b, F.col("a.o_custkey") == F.col("b.o_custkey"))
+                 .select(F.col("a.o_orderkey"), F.col("b.o_orderkey")).collect())
+    m = orders.merge(orders, on="o_custkey")
+    want = sorted(zip(m["o_orderkey_x"], m["o_orderkey_y"]))
+    assert got == want
+    assert len(got) == sum(n * n for n in orders["o_custkey"].value_counts())
+
+
+def test_sessions_skip_call_site_capture(spark):
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+
+
+def test_pip_join_build_py4j_budget(spark, tmp_path):
+    """Building ``pip_join`` (warm) sends ~420 py4j commands; with the
+    call-site capture on it sends ~1,170.  Memory commands (proxies
+    released by the garbage collector, at times it chooses) are not
+    counted."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    _write(tmp_path / "documents.parquet", doc_id=list(range(2000)))
+    QUERIES["pip_join"].fn(spark, str(tmp_path))
+    client.send_command = counting
+    try:
+        QUERIES["pip_join"].fn(spark, str(tmp_path))
+    finally:
+        client.send_command = send
+    assert 0 < len(sent) <= 600, len(sent)

@@ -172,3 +172,47 @@ def test_decode_image_real_unknown_magic_fails_loudly():
         pass
     with pytest.raises(ValueError, match="unrecognized image container"):
         decode_image_real(b"GIF89a" + b"\x00" * 32)
+
+
+# ---- hostile input: ValueError only, allocation bounded -------------------
+# 64 KiB of slack: zlib's inflate window alone is 32 KiB.
+def test_png_hostile_input_raises_value_error_with_bounded_allocation(hostile_contract):
+    img = np.random.RandomState(3).randint(0, 256, (9, 13, 3)).astype(np.uint8)
+    hostile_contract(km.decode_png, km.encode_png(img), seed=7, head=64, slack=64 * 1024)
+
+
+def test_bmp_hostile_input_raises_value_error_with_bounded_allocation(hostile_contract):
+    img = np.random.RandomState(4).randint(0, 256, (9, 13, 3)).astype(np.uint8)
+    hostile_contract(km.decode_bmp, km.encode_bmp(img), seed=8, head=64, slack=64 * 1024)
+
+
+def test_wav_hostile_input_raises_value_error_with_bounded_allocation(hostile_contract):
+    s = np.random.RandomState(5).randint(-3000, 3000, 200).astype(np.int16)
+    hostile_contract(km.decode_wav, km.encode_wav(s), seed=9, head=64, slack=64 * 1024)
+
+
+def test_png_inflates_no_more_than_ihdr_declares():
+    """A 1x1 gray PNG whose IDAT inflates to 8 MB is refused after
+    inflating two bytes past its declared size, not after all 8 MB;
+    a size deflate cannot reach is refused before inflating."""
+    import struct
+    import tracemalloc
+    import zlib
+
+    sig = km.encode_png(np.zeros((1, 1), dtype=np.uint8))[:8]
+
+    def png(w, h, idat):
+        return (sig + km._png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))
+                + km._png_chunk(b"IDAT", idat) + km._png_chunk(b"IEND", b""))
+
+    bomb = png(1, 1, zlib.compress(bytes(8 << 20), 9))
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="IDAT size mismatch"):
+            km.decode_png(bomb)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak <= len(bomb) + 64 * 1024, peak
+    with pytest.raises(ValueError, match="exceeds what"):
+        km.decode_png(png(1 << 20, 1 << 20, zlib.compress(b"\x00" * 16)))

@@ -187,77 +187,8 @@ def _encode_sub(t, p):
     raise ValueError(f"unsupported GC member type {t}")
 
 
-def _wkt_coord_groups(body: str):
-    """Split a WKT body into paren-nested coordinate groups at depth
-    >= 1: 'POLYGON((a),(b))' body -> [pts_a, pts_b]."""
-    groups = []
-    depth = 0
-    cur = ""
-    for ch in body:
-        if ch == "(":
-            depth += 1
-            cur = ""
-        elif ch == ")":
-            depth -= 1
-            if cur.strip():
-                pts = [tuple(map(float, t.split()))
-                       for t in cur.split(",") if t.strip()]
-                groups.append(np.array(pts, dtype=np.float64))
-            cur = ""
-        elif depth:
-            cur += ch
-    return groups
-
-
 def _st_geomfromtext(ws: pd.Series) -> pd.Series:
-    def one(w):
-        if w is None:
-            return None
-        w = w.strip()
-        up = w.upper()
-        if "(" not in w:
-            raise ValueError(f"unsupported WKT: {w[:30]}")
-        body = w[w.index("("):w.rindex(")") + 1]
-        if up.startswith("POINT"):
-            x, y = kwkb.parse_wkt_point(w)
-            return kwkb.wkb_point(x, y)
-        if up.startswith("MULTIPOINT"):
-            inner = body[1:-1]
-            if "(" in inner:     # MULTIPOINT((1 2),(3 4)) form
-                pts = np.vstack(_wkt_coord_groups(body[1:-1])) \
-                    if inner.strip() else np.empty((0, 2))
-            else:                # MULTIPOINT(1 2, 3 4) form
-                pts = np.array([tuple(map(float, t.split()))
-                                for t in inner.split(",") if t.strip()])
-            return kwkb.wkb_multipoint([tuple(p) for p in pts])
-        if up.startswith("LINESTRING"):
-            inner = body[1:-1]
-            pts = np.array([tuple(map(float, t.split()))
-                            for t in inner.split(",") if t.strip()])
-            return kwkb.wkb_linestring(pts)
-        if up.startswith("MULTILINESTRING"):
-            return kwkb.wkb_multilinestring(_wkt_coord_groups(body[1:-1]))
-        if up.startswith("POLYGON"):
-            return kwkb.wkb_polygon(_wkt_coord_groups(body[1:-1]))
-        if up.startswith("MULTIPOLYGON"):
-            # split top-level polygon groups, each with its own rings
-            polys = []
-            depth = 0
-            start = None
-            inner = body[1:-1]
-            for i, ch in enumerate(inner):
-                if ch == "(":
-                    if depth == 0:
-                        start = i
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        polys.append(
-                            _wkt_coord_groups(inner[start:i + 1]))
-            return kwkb.wkb_multipolygon(polys)
-        raise ValueError(f"unsupported WKT: {w[:30]}")
-    return ws.map(one)
+    return ws.map(lambda w: None if w is None else kwkb.wkt_to_wkb(w))
 
 
 def _st_x(bs: pd.Series) -> pd.Series:

@@ -97,8 +97,9 @@ def winding_number(px, py, ring_xy):
 
     Mirrors polygon_ring_appender.h:50-87: signed crossings of the
     upward/downward edges using the isLeft orientation test.  Nonzero
-    winding == inside; used for polygonize hole nesting, not for the
-    bit-match PIP path.
+    winding == inside.  No engine path calls it: the bit-match PIP
+    path is the even-odd ray cast above, and polygonize tells outer
+    rings from holes by signed area (kernels/polygonize.py).
     """
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)

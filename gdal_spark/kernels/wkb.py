@@ -317,3 +317,72 @@ def parse_wkt_point(wkt: str):
     inner = wkt[wkt.index("(") + 1:wkt.rindex(")")]
     xs, ys = inner.split()
     return float(xs), float(ys)
+
+
+def _wkt_coord_groups(body: str):
+    """Split a WKT body into paren-nested coordinate groups at depth
+    >= 1: 'POLYGON((a),(b))' body -> [pts_a, pts_b]."""
+    groups = []
+    depth = 0
+    cur = ""
+    for ch in body:
+        if ch == "(":
+            depth += 1
+            cur = ""
+        elif ch == ")":
+            depth -= 1
+            if cur.strip():
+                pts = [tuple(map(float, t.split()))
+                       for t in cur.split(",") if t.strip()]
+                groups.append(np.array(pts, dtype=np.float64))
+            cur = ""
+        elif depth:
+            cur += ch
+    return groups
+
+
+def wkt_to_wkb(wkt: str) -> bytes:
+    """2-D WKT (POINT, LINESTRING, POLYGON and their MULTI forms) ->
+    WKB; ``ValueError`` for any other text."""
+    w = wkt.strip()
+    up = w.upper()
+    if "(" not in w:
+        raise ValueError(f"unsupported WKT: {w[:30]}")
+    body = w[w.index("("):w.rindex(")") + 1]
+    if up.startswith("POINT"):
+        return wkb_point(*parse_wkt_point(w))
+    if up.startswith("MULTIPOINT"):
+        inner = body[1:-1]
+        if "(" in inner:     # MULTIPOINT((1 2),(3 4)) form
+            pts = np.vstack(_wkt_coord_groups(body[1:-1])) \
+                if inner.strip() else np.empty((0, 2))
+        else:                # MULTIPOINT(1 2, 3 4) form
+            pts = np.array([tuple(map(float, t.split()))
+                            for t in inner.split(",") if t.strip()])
+        return wkb_multipoint([tuple(p) for p in pts])
+    if up.startswith("LINESTRING"):
+        inner = body[1:-1]
+        pts = np.array([tuple(map(float, t.split()))
+                        for t in inner.split(",") if t.strip()])
+        return wkb_linestring(pts)
+    if up.startswith("MULTILINESTRING"):
+        return wkb_multilinestring(_wkt_coord_groups(body[1:-1]))
+    if up.startswith("POLYGON"):
+        return wkb_polygon(_wkt_coord_groups(body[1:-1]))
+    if up.startswith("MULTIPOLYGON"):
+        # split top-level polygon groups, each with its own rings
+        polys = []
+        depth = 0
+        start = None
+        inner = body[1:-1]
+        for i, ch in enumerate(inner):
+            if ch == "(":
+                if depth == 0:
+                    start = i
+                depth += 1
+            elif ch == ")":
+                depth -= 1
+                if depth == 0:
+                    polys.append(_wkt_coord_groups(inner[start:i + 1]))
+        return wkb_multipolygon(polys)
+    raise ValueError(f"unsupported WKT: {w[:30]}")

@@ -20,47 +20,42 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..kernels import wkb as kwkb
 
 
-def _wkt_to_wkb(wkt: str) -> bytes:
-    w = wkt.strip()
-    u = w.upper()
-    if u.startswith("POINT"):
-        return kwkb.wkb_point(*kwkb.parse_wkt_point(w))
-    if u.startswith("POLYGON"):
-        body = w[w.index("(") + 1:w.rindex(")")]
-        rings, depth, cur = [], 0, ""
-        for ch in body:
-            if ch == "(":
-                depth += 1
-                cur = ""
-            elif ch == ")":
-                depth -= 1
-                pts = [tuple(map(float, t.split()))
-                       for t in cur.split(",") if t.strip()]
-                rings.append(np.array(pts))
-            elif depth:
-                cur += ch
-        return kwkb.wkb_polygon(rings)
-    if u.startswith("LINESTRING"):
-        inner = w[w.index("(") + 1:w.rindex(")")]
-        pts = [tuple(map(float, t.split())) for t in inner.split(",")]
-        return kwkb.wkb_linestring(np.array(pts))
-    raise ValueError(f"unsupported WKT type: {w[:24]}")
-
-
-def _geom_cols(df: DataFrame, wkt_col: str) -> DataFrame:
-    @F.pandas_udf("binary")
-    def to_wkb(ws: pd.Series) -> pd.Series:
-        return ws.map(lambda w: _wkt_to_wkb(w) if w else None)
-
+def _with_bbox(df: DataFrame) -> DataFrame:
+    """Append the xmin/ymin/xmax/ymax companions of the ``wkb`` column
+    (header-only scan, NULL for a NULL geometry)."""
     @F.pandas_udf("xmin double, ymin double, xmax double, ymax double")
     def bbox(bs: pd.Series) -> pd.DataFrame:
         vals = [kwkb.wkb_bbox(bytes(b)) if b is not None else
                 (None, None, None, None) for b in bs]
         return pd.DataFrame(vals, columns=["xmin", "ymin", "xmax", "ymax"])
 
-    out = df.withColumn("wkb", to_wkb(F.col(wkt_col))).drop(wkt_col)
-    return out.withColumn("_bb", bbox(F.col("wkb"))).select(
+    return df.withColumn("_bb", bbox(F.col("wkb"))).select(
         "*", "_bb.xmin", "_bb.ymin", "_bb.xmax", "_bb.ymax").drop("_bb")
+
+
+def _geojson_layer(df: DataFrame) -> DataFrame:
+    """(fid, geom_json, props) -> layer DataFrame: GeoJSON geometry
+    objects (Point/LineString/Polygon subset) become WKB + bbox."""
+    @F.pandas_udf("binary")
+    def gj_wkb(gs: pd.Series) -> pd.Series:
+        def one(g):
+            if not g:
+                return None
+            o = json.loads(g)
+            t = o.get("type", "").lower()
+            c = o.get("coordinates")
+            if t == "point":
+                return kwkb.wkb_point(float(c[0]), float(c[1]))
+            if t == "linestring":
+                return kwkb.wkb_linestring(np.array(c, dtype=np.float64))
+            if t == "polygon":
+                return kwkb.wkb_polygon(
+                    [np.array(r, dtype=np.float64) for r in c])
+            raise ValueError(f"unsupported GeoJSON geometry {t}")
+        return gs.map(one)
+
+    return _with_bbox(
+        df.withColumn("wkb", gj_wkb("geom_json")).drop("geom_json"))
 
 
 def read_wkt_csv(spark: SparkSession, path: str, wkt_col: str = "wkt",
@@ -76,7 +71,13 @@ def read_wkt_csv(spark: SparkSession, path: str, wkt_col: str = "wkt",
     rdd = raw.rdd.zipWithIndex().map(lambda t: (*t[0], t[1]))
     with_fid = spark.createDataFrame(rdd, raw.columns + ["fid"])
     with_fid = with_fid.withColumn("fid", F.col("fid").cast("long"))
-    return _geom_cols(with_fid, wkt_col)
+
+    @F.pandas_udf("binary")
+    def to_wkb(ws: pd.Series) -> pd.Series:
+        return ws.map(lambda w: kwkb.wkt_to_wkb(w) if w else None)
+
+    return _with_bbox(
+        with_fid.withColumn("wkb", to_wkb(F.col(wkt_col))).drop(wkt_col))
 
 
 def read_geojson(spark: SparkSession, path: str) -> DataFrame:
@@ -96,35 +97,8 @@ def read_geojson(spark: SparkSession, path: str) -> DataFrame:
             yield (i, json.dumps(geom), json.dumps(props))
 
     rows = text.flatMap(feats)
-    df = spark.createDataFrame(rows, "fid long, geom_json string, props string")
-
-    @F.pandas_udf("binary")
-    def gj_wkb(gs: pd.Series) -> pd.Series:
-        def one(g):
-            if not g:
-                return None
-            o = json.loads(g)
-            t = o.get("type", "").lower()
-            c = o.get("coordinates")
-            if t == "point":
-                return kwkb.wkb_point(float(c[0]), float(c[1]))
-            if t == "linestring":
-                return kwkb.wkb_linestring(np.array(c, dtype=np.float64))
-            if t == "polygon":
-                return kwkb.wkb_polygon(
-                    [np.array(r, dtype=np.float64) for r in c])
-            raise ValueError(f"unsupported GeoJSON geometry {t}")
-        return gs.map(one)
-
-    @F.pandas_udf("xmin double, ymin double, xmax double, ymax double")
-    def bbox(bs: pd.Series) -> pd.DataFrame:
-        vals = [kwkb.wkb_bbox(bytes(b)) if b is not None else
-                (None, None, None, None) for b in bs]
-        return pd.DataFrame(vals, columns=["xmin", "ymin", "xmax", "ymax"])
-
-    out = df.withColumn("wkb", gj_wkb("geom_json")).drop("geom_json")
-    return out.withColumn("_bb", bbox(F.col("wkb"))).select(
-        "*", "_bb.xmin", "_bb.ymin", "_bb.xmax", "_bb.ymax").drop("_bb")
+    return _geojson_layer(spark.createDataFrame(
+        rows, "fid long, geom_json string, props string"))
 
 
 def wkb_to_geojson_geom(wkb: bytes | None) -> str | None:
@@ -208,11 +182,8 @@ def read_geojson_seq(spark: SparkSession, path: str,
              .filter(lambda s: bool(s))
              .zipWithIndex()
              .map(lambda t: (t[1],) + _feature_fields(t[0])))
-    df = spark.createDataFrame(
-        lines, "fid long, geom_json string, props string")
-    out = df.withColumn("wkb", _gj_wkb_udf("geom_json")).drop("geom_json")
-    return out.withColumn("_bb", _gj_bbox_udf(F.col("wkb"))).select(
-        "*", "_bb.xmin", "_bb.ymin", "_bb.xmax", "_bb.ymax").drop("_bb")
+    return _geojson_layer(spark.createDataFrame(
+        lines, "fid long, geom_json string, props string"))
 
 
 def _feature_fields(line: str) -> tuple:
@@ -220,36 +191,6 @@ def _feature_fields(line: str) -> tuple:
     geom = f.get("geometry") or {}
     props = f.get("properties") or {}
     return (json.dumps(geom), json.dumps(props))
-
-
-def _gj_wkb_udf(col):
-    @F.pandas_udf("binary")
-    def _u(gs: pd.Series) -> pd.Series:
-        def one(g):
-            if not g:
-                return None
-            o = json.loads(g)
-            t = o.get("type", "").lower()
-            c = o.get("coordinates")
-            if t == "point":
-                return kwkb.wkb_point(float(c[0]), float(c[1]))
-            if t == "linestring":
-                return kwkb.wkb_linestring(np.array(c, dtype=np.float64))
-            if t == "polygon":
-                return kwkb.wkb_polygon(
-                    [np.array(r, dtype=np.float64) for r in c])
-            raise ValueError(f"unsupported GeoJSON geometry {t}")
-        return gs.map(one)
-    return _u(col)
-
-
-def _gj_bbox_udf(col):
-    @F.pandas_udf("xmin double, ymin double, xmax double, ymax double")
-    def _u(bs: pd.Series) -> pd.DataFrame:
-        vals = [kwkb.wkb_bbox(bytes(b)) if b is not None else
-                (None, None, None, None) for b in bs]
-        return pd.DataFrame(vals, columns=["xmin", "ymin", "xmax", "ymax"])
-    return _u(col)
 
 
 def write_geojson_seq(df: DataFrame, out_dir: str,

@@ -3,11 +3,12 @@
 The reference parses OGR SQL with a flex/bison pair
 (/root/reference/ogr/swq_scanner.l token rules,
 /root/reference/ogr/swq_parser.y grammar).  This module is the
-scanner half re-expressed for the Spark shim: it produces a flat
-token stream over which `ogr_dialect` performs its three dialect
-rewrites, so quoted identifiers, string literals, and comments are
-atomic — text such as ``LEFT JOIN`` inside a literal can never be
-mistaken for syntax (the failure mode of the former regex scanner).
+scanner half re-expressed for the Spark shim: it produces the flat
+token stream that `parser` builds its grammar tree from and its
+expression re-spellings walk, so quoted identifiers, string
+literals, and comments are atomic — text such as ``LEFT JOIN``
+inside a literal can never be mistaken for syntax (the failure mode
+of the former regex scanner).
 
 Token kinds (mirroring swq_scanner.l's lexeme classes):
 

@@ -32,12 +32,14 @@ the dialect's quirks:
 Everything else (WHERE trees, LIKE/ILIKE, CAST, DISTINCT, ORDER BY,
 LIMIT/OFFSET, UNION ALL) passes through to Spark SQL untouched.
 
-Statements are tokenized first (`lexer.tokenize`, the swq_scanner.l
-role) and every rewrite walks the token stream, so string literals,
-quoted identifiers, and comments are atomic: a literal containing
-``LEFT JOIN`` or ``* EXCLUDE (...)`` text can never trigger a
-rewrite, which was the documented failure mode of the previous
-regex-based scanner.
+Statements are tokenized (`lexer.tokenize`, the swq_scanner.l role)
+and parsed by the grammar in `sql/parser.py`; its one tree walk
+(`parser.emit`) is the only code that applies these rewrites, so
+string literals, quoted identifiers, and comments are atomic: a
+literal containing ``LEFT JOIN`` or ``* EXCLUDE (...)`` text can never
+trigger a rewrite.  A statement the grammar rejects (e.g. ``WITH``)
+is Spark SQL, not OGR dialect: it runs with only the expression-level
+re-spellings (double-quoted identifiers, HSTORE_GET_VALUE).
 """
 
 from __future__ import annotations
@@ -47,9 +49,9 @@ import re
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..kernels import geom as kgeom
-from ..kernels import wkb as kwkb
-from .lexer import Token, significant, tokenize
+from .ddl import try_execute_ddl
+from .parser import ParseError, emit, parse, respell
+from .spatial_rewrite import try_spatial_join_rewrite
 
 
 _GEOM_TYPE_NAMES = {
@@ -129,196 +131,6 @@ def style_tool_param_col(style, tool: str, param: str):
     return F.nullif(val, F.lit(""))
 
 
-_PLAIN_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
-_NAME_KINDS = ("ident", "qident", "bident")
-
-
-def _emit_name(name: str) -> str:
-    """Spell an identifier for Spark SQL: bare when it lexes as one,
-    backtick-quoted (with `` escaping) otherwise."""
-    if _PLAIN_IDENT.match(name):
-        return name
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _splice(sql: str, edits: list[tuple[int, int, str]]) -> str:
-    """Apply non-overlapping [start, end) -> text edits."""
-    for start, end, text in sorted(edits, reverse=True):
-        sql = sql[:start] + text + sql[end:]
-    return sql
-
-
-def _rewrite_exclude(sql: str, spark: SparkSession) -> str:
-    """``* EXCLUDE (f1, f2)`` -> explicit column list from the layer
-    schema (swq PushExcludeField, /root/reference/ogr/ogr_swq.h:453)."""
-    toks = significant(tokenize(sql))
-    edits: list[tuple[int, int, str]] = []
-    i = 0
-    while i + 2 < len(toks):
-        if not (toks[i].kind == "op" and toks[i].text == "*"
-                and toks[i + 1].is_kw("EXCLUDE")
-                and toks[i + 2].kind == "op" and toks[i + 2].text == "("):
-            i += 1
-            continue
-        j = i + 3
-        excluded: set[str] = set()
-        while j < len(toks) and not (toks[j].kind == "op"
-                                     and toks[j].text == ")"):
-            if toks[j].kind in _NAME_KINDS:
-                excluded.add(toks[j].name.lower())
-            j += 1
-        if j == len(toks):
-            raise ValueError("unclosed EXCLUDE(...) list")
-        # the dialect has no subqueries: the statement's single
-        # depth-0 FROM names the layer whose schema we expand
-        table = None
-        depth = 0
-        seen_from = False
-        for t in toks[j + 1:]:
-            if t.kind == "op":
-                depth += t.text == "("
-                depth -= t.text == ")"
-            elif depth == 0 and t.is_kw("FROM"):
-                seen_from = True
-            elif depth == 0 and seen_from and t.kind in _NAME_KINDS:
-                table = t.name
-                break
-        if table is None:
-            i = j
-            continue
-        cols = [_emit_name(c) for c in spark.table(table).columns
-                if c.lower() not in excluded]
-        edits.append((toks[i].start, toks[j].end, ", ".join(cols)))
-        i = j + 1
-    return _splice(sql, edits)
-
-
-def _rewrite_first_match_join(sql: str, spark: SparkSession) -> str:
-    """LEFT JOIN t ON a.k = t.k2  ->  first-match subquery on t.
-
-    'First' = lowest FID (OGR iterates the secondary in FID order,
-    ogr_gensql.cpp:1497-1527); layers without FID fall back to the
-    join key itself (then first == any of the equal-key rows,
-    deterministic because ties are keyed).
-
-    Only joins at paren depth 0 are rewritten: a parenthesized
-    subquery is beyond the OGR dialect (swq has no subqueries) and
-    passes through to Spark SQL with standard all-matches semantics.
-    Multiple depth-0 LEFT JOINs (multi-secondary,
-    ogr_sql_dialect.rst JOIN section) each get their own wrapper.
-    Paren depth is counted over TOKENS, so parens inside string
-    literals or quoted identifiers never open a scope."""
-    toks = significant(tokenize(sql))
-    edits: list[tuple[int, int, str]] = []
-    depth = 0
-    i = 0
-
-    def name_dot_name(k: int) -> tuple[str, str] | None:
-        if (k + 2 < len(toks) and toks[k].kind in _NAME_KINDS
-                and toks[k + 1].kind == "op" and toks[k + 1].text == "."
-                and toks[k + 2].kind in _NAME_KINDS):
-            return toks[k].name, toks[k + 2].name
-        return None
-
-    while i < len(toks):
-        t = toks[i]
-        if t.kind == "op":
-            depth += t.text == "("
-            depth -= t.text == ")"
-            i += 1
-            continue
-        if not (depth == 0 and t.is_kw("LEFT")
-                and i + 3 < len(toks) and toks[i + 1].is_kw("JOIN")
-                and toks[i + 2].kind in _NAME_KINDS
-                and toks[i + 3].is_kw("ON")):
-            i += 1
-            continue
-        t1 = toks[i + 2].name
-        lhs = name_dot_name(i + 4)
-        if lhs is None or not (i + 7 < len(toks) and toks[i + 7].kind == "op"
-                               and toks[i + 7].text == "="):
-            i += 1
-            continue
-        rhs = name_dot_name(i + 8)
-        if rhs is None:
-            i += 1
-            continue
-        (a, k_a), (b, k_b) = lhs, rhs
-        if b.lower() == t1.lower():
-            sec, sec_key, prim, prim_key = t1, k_b, a, k_a
-        elif a.lower() == t1.lower():
-            sec, sec_key, prim, prim_key = t1, k_a, b, k_b
-        else:
-            i += 1
-            continue
-        try:
-            order = "FID" if "FID" in spark.table(sec).columns else sec_key
-        except Exception:
-            order = sec_key
-        sec_q, key_q = _emit_name(sec), _emit_name(sec_key)
-        sub = (
-            f"(SELECT * FROM (SELECT *, ROW_NUMBER() OVER "
-            f"(PARTITION BY {key_q} ORDER BY {_emit_name(order)}) AS __rn "
-            f"FROM {sec_q}) WHERE __rn = 1) {sec_q}"
-        )
-        edits.append((
-            t.start, toks[i + 10].end,
-            f"LEFT JOIN {sub} ON {_emit_name(prim)}.{_emit_name(prim_key)} "
-            f"= {sec_q}.{key_q}",
-        ))
-        i += 11
-    return _splice(sql, edits)
-
-
-def _rewrite_hstore(sql: str) -> str:
-    """HSTORE_GET_VALUE(h, 'k') -> str_to_map(h, ',', '=>')['k']
-    (swq_op_general.cpp:291).  Arguments are split at the TOP-LEVEL
-    comma by token-balanced paren scan, so nested calls and literals
-    containing commas or parens pass through intact."""
-    toks = significant(tokenize(sql))
-    edits: list[tuple[int, int, str]] = []
-    i = 0
-    while i + 1 < len(toks):
-        if not (toks[i].is_kw("HSTORE_GET_VALUE")
-                and toks[i + 1].kind == "op" and toks[i + 1].text == "("):
-            i += 1
-            continue
-        depth = 1
-        comma = None
-        j = i + 2
-        while j < len(toks) and depth:
-            tj = toks[j]
-            if tj.kind == "op":
-                depth += tj.text == "("
-                depth -= tj.text == ")"
-                if depth == 1 and tj.text == ",":
-                    comma = tj
-            j += 1
-        if depth or comma is None:
-            raise ValueError("malformed HSTORE_GET_VALUE(...) call")
-        rparen = toks[j - 1]
-        h = sql[toks[i + 1].end:comma.start].strip()
-        k = sql[comma.end:rparen.start].strip()
-        edits.append((
-            toks[i].start, rparen.end,
-            f"str_to_map(replace({h}, ' ', ''), ',', '=>')[{k}]",
-        ))
-        i = j
-    return _splice(sql, edits)
-
-
-def _rewrite_quoted_idents(sql: str) -> str:
-    """Re-spell OGR double-quoted identifiers as Spark backtick
-    identifiers.  In the dialect ``"..."`` is always a column/table
-    reference (swq_scanner.l), while Spark SQL lexes it as a string
-    literal — so every surviving qident token is converted, with
-    ``""`` unescaped and ``\\``` re-escaped."""
-    toks = tokenize(sql)
-    edits = [(t.start, t.end, _emit_name(t.name))
-             for t in toks if t.kind == "qident"]
-    return _splice(sql, edits)
-
-
 def ogr_sql(spark: SparkSession, sql: str) -> DataFrame | None:
     """Execute an OGR-SQL-dialect statement against registered layers.
 
@@ -332,18 +144,14 @@ def ogr_sql(spark: SparkSession, sql: str) -> DataFrame | None:
     (sql/parser.py — the swq_parser.y select_statement, extended with
     sub-SELECT in FROM) and one tree walk applies every dialect
     rewrite in correct scope.  Statements the grammar does not cover
-    fall back to the token-stream rewrites (identical behavior on the
-    shared surface, pinned by tests/test_ogr_parser.py)."""
-    from .ddl import try_execute_ddl
-    from .parser import ParseError, emit, parse
-    from .spatial_rewrite import try_spatial_join_rewrite
-
+    run as Spark SQL with only `parser.respell` applied (no EXCLUDE
+    expansion, no first-match joins)."""
     if try_execute_ddl(spark, sql):
         return None
     try:
         tree = parse(sql)
     except ParseError:
-        return spark.sql(_legacy_rewrites(spark, sql))
+        return spark.sql(respell(sql))
     # SURVEY §4.3 auto-rewrite: a JOIN ... ON ST_Intersects(a.g, b.g)
     # statement re-plans as the salted two-phase cell join instead of
     # Catalyst's CartesianProduct + per-pair UDF (spatial_rewrite.py)
@@ -352,10 +160,3 @@ def ogr_sql(spark: SparkSession, sql: str) -> DataFrame | None:
         return rewritten
     return spark.sql(emit(tree, spark))
 
-
-def _legacy_rewrites(spark: SparkSession, sql: str) -> str:
-    sql = _rewrite_exclude(sql, spark)
-    sql = _rewrite_first_match_join(sql, spark)
-    sql = _rewrite_hstore(sql)
-    sql = _rewrite_quoted_idents(sql)
-    return sql

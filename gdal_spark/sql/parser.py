@@ -3,20 +3,19 @@
 Mirrors the swq bison grammar's select_statement
 (/root/reference/ogr/swq_parser.y:821 — SELECT select_field_list FROM
 table_def join_def* where_clause? order_by? limit? offset?, chained by
-UNION ALL), re-expressed as a token-tree over `lexer.tokenize`.  One
-tree walk replaces the former three independent stream rewrites, and
-the grammar EXTENDS swq with a parenthesized sub-SELECT in FROM (the
-reference dialect has no subqueries; Spark does), with the dialect
-rewrites scoped correctly at every nesting level:
+UNION ALL), re-expressed as a token-tree over `lexer.tokenize`.  The
+grammar EXTENDS swq with a parenthesized sub-SELECT in FROM (the
+reference dialect has no subqueries; Spark does), and one tree walk
+(`emit`) applies every dialect rewrite in its scope:
 
 * ``* EXCLUDE (...)`` expands against the columns of ITS OWN query's
-  FROM target — including a sub-SELECT's output schema — where the
-  stream shim could only see the statement's first depth-0 table;
-* HSTORE_GET_VALUE / double-quoted-identifier re-spelling apply to
-  every expression slice at every depth;
+  FROM target — including a sub-SELECT's output schema;
+* HSTORE_GET_VALUE / double-quoted-identifier re-spelling (`respell`)
+  apply to every expression slice at every depth;
 * one-to-first-match LEFT JOIN semantics apply ONLY to the top-level
-  statement's joins (a nested sub-SELECT is Spark SQL, not OGR
-  dialect — its joins keep standard all-matches semantics, as
+  statement's joins whose ON clause is exactly ``a.k = b.k`` (a nested
+  sub-SELECT is Spark SQL, not OGR dialect — its joins keep standard
+  all-matches semantics, as
   tests/test_ogr_sql.py::test_subquery_left_join_untouched pins).
 
 Expressions are kept as raw token slices (the dialect's expression
@@ -27,6 +26,7 @@ exactly the productions the dialect treats specially.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -37,6 +37,7 @@ _CLAUSE_KWS = frozenset(
     ["FROM", "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET",
      "UNION", "JOIN", "LEFT", "INNER", "ON"])
 _NAME_KINDS = ("ident", "qident", "bident")
+_PLAIN_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 
 
 class ParseError(ValueError):
@@ -335,14 +336,78 @@ def _raw_until(cur: _Cursor, stop_kws: list[str], nested: bool,
 
 
 # ------------------------------------------------------------------ emit
+def _emit_name(name: str) -> str:
+    """Spell an identifier for Spark SQL: bare when it lexes as one,
+    backtick-quoted (with `` escaping) otherwise."""
+    if _PLAIN_IDENT.match(name):
+        return name
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _splice(sql: str, edits: list[tuple[int, int, str]]) -> str:
+    """Apply non-overlapping [start, end) -> text edits."""
+    for start, end, text in sorted(edits, reverse=True):
+        sql = sql[:start] + text + sql[end:]
+    return sql
+
+
+def _rewrite_hstore(sql: str) -> str:
+    """HSTORE_GET_VALUE(h, 'k') -> str_to_map(h, ',', '=>')['k']
+    (swq_op_general.cpp:291).  Arguments are split at the TOP-LEVEL
+    comma by token-balanced paren scan, so nested calls and literals
+    containing commas or parens pass through intact."""
+    toks = significant(tokenize(sql))
+    edits: list[tuple[int, int, str]] = []
+    i = 0
+    while i + 1 < len(toks):
+        if not (toks[i].is_kw("HSTORE_GET_VALUE")
+                and toks[i + 1].kind == "op" and toks[i + 1].text == "("):
+            i += 1
+            continue
+        depth = 1
+        comma = None
+        j = i + 2
+        while j < len(toks) and depth:
+            tj = toks[j]
+            if tj.kind == "op":
+                depth += tj.text == "("
+                depth -= tj.text == ")"
+                if depth == 1 and tj.text == ",":
+                    comma = tj
+            j += 1
+        if depth or comma is None:
+            raise ValueError("malformed HSTORE_GET_VALUE(...) call")
+        rparen = toks[j - 1]
+        h = sql[toks[i + 1].end:comma.start].strip()
+        k = sql[comma.end:rparen.start].strip()
+        edits.append((
+            toks[i].start, rparen.end,
+            f"str_to_map(replace({h}, ' ', ''), ',', '=>')[{k}]",
+        ))
+        i = j
+    return _splice(sql, edits)
+
+
+def _rewrite_quoted_idents(sql: str) -> str:
+    """Re-spell OGR double-quoted identifiers as Spark backtick
+    identifiers.  In the dialect ``"..."`` is always a column/table
+    reference (swq_scanner.l), while Spark SQL lexes it as a string
+    literal — so every qident token is converted, with ``""``
+    unescaped and ``\\``` re-escaped."""
+    toks = tokenize(sql)
+    edits = [(t.start, t.end, _emit_name(t.name))
+             for t in toks if t.kind == "qident"]
+    return _splice(sql, edits)
+
+
+def respell(sql: str) -> str:
+    """The expression-level dialect re-spellings: HSTORE_GET_VALUE
+    calls, then double-quoted identifiers."""
+    return _rewrite_quoted_idents(_rewrite_hstore(sql))
+
+
 def emit(stmt: SelectStmt, spark: SparkSession, top: bool = True) -> str:
     """Walk the tree once, applying the dialect rewrites in scope."""
-    from .ogr_dialect import (_emit_name, _rewrite_hstore,
-                              _rewrite_quoted_idents)
-
-    def fix(expr: str) -> str:
-        return _rewrite_quoted_idents(_rewrite_hstore(expr))
-
     parts = ["SELECT"]
     if stmt.distinct:
         parts.append("DISTINCT")
@@ -355,18 +420,18 @@ def emit(stmt: SelectStmt, spark: SparkSession, top: bool = True) -> str:
                 _emit_name(c) for c in _from_columns(stmt.from_item, spark)
                 if c.lower() not in {v.lower() for v in val}))
         else:
-            cols.append(fix(val))
+            cols.append(respell(val))
     parts.append(", ".join(cols))
     if stmt.from_item is not None:
         parts.append("FROM")
         parts.append(_emit_from(stmt.from_item, spark))
         for j in stmt.joins:
-            parts.append(_emit_join(j, stmt, spark, first_match=top))
+            parts.append(_emit_join(j, spark, first_match=top))
     for kw, val in (("WHERE", stmt.where), ("GROUP BY", stmt.group_by),
                     ("HAVING", stmt.having), ("ORDER BY", stmt.order_by),
                     ("LIMIT", stmt.limit), ("OFFSET", stmt.offset)):
         if val:
-            parts.append(f"{kw} {fix(val) if kw not in ('LIMIT', 'OFFSET') else val}")
+            parts.append(f"{kw} {respell(val) if kw not in ('LIMIT', 'OFFSET') else val}")
     out = " ".join(parts)
     if stmt.union_next is not None:
         out += " UNION ALL " + emit(stmt.union_next, spark, top=top)
@@ -382,8 +447,6 @@ def _from_columns(item: FromItem | None, spark: SparkSession) -> list[str]:
 
 
 def _emit_from(item: FromItem, spark: SparkSession) -> str:
-    from .ogr_dialect import _emit_name
-
     if item.table is not None:
         base = ".".join(_emit_name(p) for p in item.table.split(".")) \
             if "." in item.table else _emit_name(item.table)
@@ -394,39 +457,38 @@ def _emit_from(item: FromItem, spark: SparkSession) -> str:
     return base
 
 
-def _emit_join(j: Join, stmt: SelectStmt, spark: SparkSession,
-               first_match: bool) -> str:
-    from .ogr_dialect import (_emit_name, _rewrite_hstore,
-                              _rewrite_quoted_idents)
-
-    kw = "LEFT JOIN" if j.left else "JOIN"
+def _first_match_keys(j: Join) -> tuple[str, str, str] | None:
+    """(secondary key, primary ref, primary key) of a LEFT JOIN whose
+    ON clause is ``a.ka = b.kb`` with one side naming the joined item;
+    None for any other join."""
     ref = j.item.ref_name
-    if not (first_match and j.left and j.eq is not None
-            and ref is not None):
-        return (f"{kw} {_emit_from(j.item, spark)} ON "
-                f"{_rewrite_quoted_idents(_rewrite_hstore(j.on_text))}")
+    if not (j.left and j.eq is not None and ref is not None):
+        return None
     a, ka, b, kb = j.eq
-    if b.lower() == (ref or "").lower():
-        sec_key, prim, prim_key = kb, a, ka
-    elif a.lower() == (ref or "").lower():
-        sec_key, prim, prim_key = ka, b, kb
-    else:
-        return (f"{kw} {_emit_from(j.item, spark)} ON "
-                f"{_rewrite_quoted_idents(_rewrite_hstore(j.on_text))}")
+    if b.lower() == ref.lower():
+        return kb, a, ka
+    if a.lower() == ref.lower():
+        return ka, b, kb
+    return None
+
+
+def _emit_join(j: Join, spark: SparkSession, first_match: bool) -> str:
+    keys = _first_match_keys(j) if first_match else None
+    if keys is None:
+        kw = "LEFT JOIN" if j.left else "JOIN"
+        return f"{kw} {_emit_from(j.item, spark)} ON {respell(j.on_text)}"
+    sec_key, prim, prim_key = keys
     # one-to-FIRST-match (ogr_gensql.cpp:1497-1527): lowest FID wins;
     # layers (or sub-selects) without FID order by the join key
     try:
-        cols = (spark.table(j.item.table).columns
-                if j.item.table is not None
-                else _from_columns(j.item, spark))
-        order = "FID" if "FID" in cols else sec_key
+        order = "FID" if "FID" in _from_columns(j.item, spark) else sec_key
     except Exception:
         order = sec_key
     if j.item.table is not None:
         src = _emit_name(j.item.table)
     else:
         src = "(" + emit(j.item.sub, spark, top=False) + ")"
-    ref_q, key_q = _emit_name(ref), _emit_name(sec_key)
+    ref_q, key_q = _emit_name(j.item.ref_name), _emit_name(sec_key)
     sub = (f"(SELECT * FROM (SELECT *, ROW_NUMBER() OVER "
            f"(PARTITION BY {key_q} ORDER BY {_emit_name(order)}) AS __rn "
            f"FROM {src}) WHERE __rn = 1) {ref_q}")

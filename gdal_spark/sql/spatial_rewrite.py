@@ -59,7 +59,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..kernels.cells import TileGrid
 from .lexer import significant, tokenize
-from .parser import FromItem, SelectStmt, emit
+from .parser import (_NAME_KINDS, FromItem, SelectStmt, _emit_name,
+                     _splice, emit)
 
 # Coarse join zoom: a polygon bbox covers O(10-100) cells (same
 # trade as queries/spatial.py Z_JOIN).  Salt 4: explicit replication
@@ -84,50 +85,45 @@ def _match_st_intersects(on_text: str):
         if want in ("(", ")", ".", ","):
             if not (t.kind == "op" and t.text == want):
                 return None
-        elif t.kind not in ("ident", "qident", "bident"):
+        elif t.kind not in _NAME_KINDS:
             return None
     if toks[0].text.upper() != "ST_INTERSECTS":
         return None
     return (toks[2].name, toks[4].name), (toks[6].name, toks[8].name)
 
 
-def _strip_qualifiers(expr: str, aliases: set[str]) -> str:
-    """Rewrite ``a.col`` -> ``col`` for the two joined-away aliases,
-    token-wise (literals and quoted runs stay atomic)."""
-    from .ogr_dialect import _emit_name
-
+def _qualified_refs(expr: str, aliases: set[str]):
+    """Yield ``(start, end, alias, col)`` for every ``alias.col``
+    reference to one of the joined-away aliases, token-wise (literals
+    and quoted runs stay atomic); a qualified name followed by ``(``
+    is a function call, not a reference."""
     toks = significant(tokenize(expr))
-    edits = []
     i = 0
     while i + 2 < len(toks):
-        if (toks[i].kind in ("ident", "qident", "bident")
+        if (toks[i].kind in _NAME_KINDS
                 and toks[i].name.lower() in aliases
                 and toks[i + 1].kind == "op" and toks[i + 1].text == "."
-                and toks[i + 2].kind in ("ident", "qident", "bident")
-                # a qualified ref is NOT a function call
+                and toks[i + 2].kind in _NAME_KINDS
                 and not (i + 3 < len(toks) and toks[i + 3].kind == "op"
                          and toks[i + 3].text == "(")):
-            edits.append((toks[i].start, toks[i + 2].end,
-                          _emit_name(toks[i + 2].name)))
+            yield (toks[i].start, toks[i + 2].end, toks[i].name.lower(),
+                   toks[i + 2].name)
             i += 3
         else:
             i += 1
-    for start, end, text in sorted(edits, reverse=True):
-        expr = expr[:start] + text + expr[end:]
-    return expr
+
+
+def _strip_qualifiers(expr: str, aliases: set[str]) -> str:
+    """Rewrite ``a.col`` -> ``col`` for the two joined-away aliases."""
+    return _splice(expr, [(start, end, _emit_name(col))
+                          for start, end, _, col
+                          in _qualified_refs(expr, aliases)])
 
 
 def _qualified_cols(expr: str, aliases: set[str]) -> set[tuple[str, str]]:
     """(alias, column) pairs referenced as ``alias.col``."""
-    toks = significant(tokenize(expr))
-    out = set()
-    for i in range(len(toks) - 2):
-        if (toks[i].kind in ("ident", "qident", "bident")
-                and toks[i].name.lower() in aliases
-                and toks[i + 1].kind == "op" and toks[i + 1].text == "."
-                and toks[i + 2].kind in ("ident", "qident", "bident")):
-            out.add((toks[i].name.lower(), toks[i + 2].name.lower()))
-    return out
+    return {(alias, col.lower())
+            for _, _, alias, col in _qualified_refs(expr, aliases)}
 
 
 def try_spatial_join_rewrite(spark: SparkSession,

@@ -42,9 +42,7 @@ def test_parse_shapes():
 
 
 def test_exclude_scoped_to_subquery_output(layers):
-    """* EXCLUDE against a sub-SELECT's output schema — the stream
-    shim resolved EXCLUDE against the statement's first depth-0
-    table and could not handle this at all."""
+    """* EXCLUDE expands against a sub-SELECT's output schema."""
     rows = ogr_sql(
         layers,
         "SELECT * EXCLUDE (val, OGR_STYLE) FROM "
@@ -65,15 +63,16 @@ def test_exclude_inside_subquery(layers):
 
 
 def test_first_match_join_against_subquery(layers):
-    """Top-level LEFT JOIN against a parenthesized sub-SELECT still
-    gets one-to-first-match semantics (lowest FID wins)."""
-    rows = ogr_sql(
-        layers,
-        "SELECT pbase.fid, s.tag FROM pbase "
-        "LEFT JOIN (SELECT fid AS FID, k, tag FROM psec) s "
-        "ON pbase.k = s.k ORDER BY pbase.fid").collect()
-    assert [(r["fid"], r["tag"]) for r in rows] == [
-        (1, "first"), (2, "only"), (3, "first")]
+    """Top-level LEFT JOIN against a parenthesized sub-SELECT, or
+    against a layer under an alias, still gets one-to-first-match
+    semantics (lowest FID wins)."""
+    for secondary in ("(SELECT fid AS FID, k, tag FROM psec) s", "psec s"):
+        rows = ogr_sql(
+            layers,
+            f"SELECT pbase.fid, s.tag FROM pbase LEFT JOIN {secondary} "
+            "ON pbase.k = s.k ORDER BY pbase.fid").collect()
+        assert [(r["fid"], r["tag"]) for r in rows] == [
+            (1, "first"), (2, "only"), (3, "first")], secondary
 
 
 def test_union_all_chain(layers):
@@ -96,12 +95,14 @@ def test_quoted_ident_and_hstore_in_subquery(layers):
 
 
 def test_inner_join_passes_through(layers):
-    rows = ogr_sql(
-        layers,
-        "SELECT COUNT(*) AS n FROM pbase "
-        "JOIN psec ON pbase.k = psec.k").collect()
-    # inner join keeps ALL matches: k=10 (2 base x 2 sec) + k=20 (1 x 1)
-    assert rows[0]["n"] == 5
+    """An inner join, and a LEFT JOIN whose ON clause is more than one
+    key equality, keep standard all-matches semantics."""
+    for join in ("JOIN psec ON pbase.k = psec.k",
+                 "LEFT JOIN psec ON pbase.k = psec.k AND psec.tag <> 'x'"):
+        rows = ogr_sql(
+            layers, f"SELECT COUNT(*) AS n FROM pbase {join}").collect()
+        # ALL matches: k=10 (2 base x 2 sec) + k=20 (1 x 1)
+        assert rows[0]["n"] == 5, join
 
 
 def test_group_having(layers):
@@ -113,8 +114,17 @@ def test_group_having(layers):
 
 
 def test_fallback_on_unparsed(layers):
-    """Statements outside the grammar fall back to the stream
-    rewrites and still execute."""
+    """Statements outside the grammar run as Spark SQL with only the
+    expression re-spellings: double-quoted identifiers and
+    HSTORE_GET_VALUE."""
     rows = ogr_sql(layers, "WITH c AS (SELECT 4 AS n) "
                            "SELECT n FROM c").collect()
     assert rows[0]["n"] == 4
+    df = layers.createDataFrame(
+        pd.DataFrame({"fid": [1], "props": ["a=>1,b=>2"]}))
+    register_layer(layers, "ph", df, wkb_col=None)
+    rows = ogr_sql(
+        layers,
+        'WITH c AS (SELECT HSTORE_GET_VALUE(props, \'b\') AS "v" '
+        'FROM ph) SELECT "v" FROM c').collect()
+    assert rows[0]["v"] == "2"

@@ -39,6 +39,24 @@ def test_read_wkt_csv(spark, tmpd):
     assert rows["c"]["xmax"] == 3.0
 
 
+
+def test_read_wkt_csv_multipolygon(spark, tmpd):
+    """The CSV reader parses WKT with the same kernel as
+    ST_GeomFromText, so MULTI geometries ingest too."""
+    p = os.path.join(tmpd, "mp.csv")
+    with open(p, "w") as f:
+        f.write("name,wkt\n")
+        f.write('m,"MULTIPOLYGON(((0 0,2 0,2 2,0 2,0 0)),'
+                '((5 5,9 5,9 7,5 7,5 5),(6 6,7 6,7 6.5,6 6)))"\n')
+    row = read_wkt_csv(spark, p).collect()[0]
+    ring = lambda *xy: np.array(xy, dtype=np.float64)  # noqa: E731
+    assert bytes(row["wkb"]) == kwkb.wkb_multipolygon([
+        [ring((0, 0), (2, 0), (2, 2), (0, 2), (0, 0))],
+        [ring((5, 5), (9, 5), (9, 7), (5, 7), (5, 5)),
+         ring((6, 6), (7, 6), (7, 6.5), (6, 6))]])
+    assert (row["xmin"], row["ymin"], row["xmax"], row["ymax"]) == (
+        0.0, 0.0, 9.0, 7.0)
+
 def test_read_geojson(spark, tmpd):
     p = os.path.join(tmpd, "fc.geojson")
     with open(p, "w") as f:

@@ -22,11 +22,23 @@ BITMAPINFOHEADER fields incl. the positive-height bottom-up rule and
 BGR component order (frmts/bmpdataset.cpp:115-129 header struct,
 :378-394 24-bit component offsets, :282 scanline stride rounded to 4
 bytes).  GDAL has no audio driver; WAV follows the public RIFF spec.
+
+Features come from batch kernels (``wav_batch``, ``bmp_batch``,
+``png_batch``, ``jpeg_batch``, ``avi_frame_batch``): each takes a list
+of payloads of one kind and returns numpy feature columns.  Parsing,
+Huffman decode and PNG inflate/unfilter run per payload; the JPEG
+dequantise + IDCT and every feature reduction run once over the whole
+list.  A mean is an exact integer sum divided by its count, which is
+bit-identical to numpy's float ``mean()`` of the decoded array while
+the sum stays below 2**53.  The per-payload ``decode_*`` functions
+run the same parse, Huffman and block phases on one payload, and the
+``*_features`` functions take numpy means of what they decode.
 """
 
 from __future__ import annotations
 
 import struct
+from array import array
 
 import numpy as np
 
@@ -43,7 +55,13 @@ def encode_wav(samples: np.ndarray, rate: int = 8000) -> bytes:
 
 
 def decode_wav(payload: bytes):
-    """Canonical PCM WAV -> (rate, int16 numpy samples).  Walks the
+    """Canonical PCM WAV -> (rate, int16 numpy samples)."""
+    rate, data = _wav_parse(payload)
+    return rate, np.frombuffer(data, dtype="<i2")
+
+
+def _wav_parse(payload: bytes):
+    """(rate, data chunk bytes) of a 16-bit mono PCM WAV.  Walks the
     RIFF chunk list (fmt / data may have extra chunks between)."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
@@ -68,7 +86,9 @@ def decode_wav(payload: bytes):
         raise ValueError(f"only 16-bit mono supported ({bits}b x{nch})")
     if rate == 0:
         raise ValueError("sample rate 0")
-    return rate, np.frombuffer(data, dtype="<i2")
+    if len(data) % 2:
+        raise ValueError(f"odd-length 16-bit PCM data ({len(data)} bytes)")
+    return rate, data
 
 
 # ---- BMP (BITMAPINFOHEADER, 24-bit, uncompressed) -------------------------
@@ -105,8 +125,9 @@ def encode_bmp(rgb: np.ndarray) -> bytes:
     return hdr + _dib_pack(rgb)
 
 
-def decode_bmp(payload: bytes) -> np.ndarray:
-    """24-bit uncompressed BMP -> HxWx3 uint8 RGB."""
+def _bmp_parse(payload: bytes):
+    """(pixel offset, width, height, bottom_up) of a 24-bit
+    uncompressed BMP whose pixel block lies inside the payload."""
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
     if len(payload) < 34:
@@ -118,15 +139,115 @@ def decode_bmp(payload: bytes) -> np.ndarray:
         raise ValueError(f"only 24-bit uncompressed supported ({bits})")
     if w < 0:
         raise ValueError(f"negative BMP width {w}")
-    flip = h > 0
-    h = abs(h)
+    if off + ((w * 3 + 3) & ~3) * abs(h) > len(payload):
+        raise ValueError("BMP pixel data runs past the payload end")
+    return off, w, abs(h), h > 0
+
+
+def decode_bmp(payload: bytes) -> np.ndarray:
+    """24-bit uncompressed BMP -> HxWx3 uint8 RGB."""
+    off, w, h, flip = _bmp_parse(payload)
     stride = (w * 3 + 3) & ~3
     arr = np.frombuffer(payload, dtype=np.uint8,
                         count=stride * h, offset=off)
     return _dib_unpack(arr, w, h, bottom_up=flip)
 
 
-# ---- features --------------------------------------------------------------
+# ---- batch reductions -------------------------------------------------------
+# Every feature mean is an integer sum over the decoded samples divided
+# by their count.  numpy's float ``mean()`` adds the same integers in
+# float64, exactly while every partial sum stays below 2**53, and then
+# divides by the count, so the two agree bit for bit.  A uint8 channel
+# reaches 2**53 only past 3.5e13 pixels, more than any payload Arrow
+# can carry decodes to; squared int16 samples reach it past 2**23
+# samples, so ``wav_batch`` falls back to the float mean there.
+_EXACT_SUM = 1 << 53
+
+
+def _segment_reduce(ufunc, values: np.ndarray, counts) -> np.ndarray:
+    """``ufunc`` over consecutive segments of ``values`` (axis 0) of
+    the given lengths, in int64; an empty segment gives 0 (reduceat
+    alone would return the next segment's first element)."""
+    counts = np.asarray(counts, dtype=np.int64)
+    starts = np.cumsum(counts) - counts
+    full = counts > 0
+    if full.all():
+        return ufunc.reduceat(values, starts, axis=0, dtype=np.int64)
+    out = np.zeros((len(counts),) + values.shape[1:], dtype=np.int64)
+    if full.any():
+        out[full] = ufunc.reduceat(values, starts[full], axis=0,
+                                   dtype=np.int64)
+    return out
+
+
+def _segment_offsets(counts: np.ndarray) -> np.ndarray:
+    """Each element's position inside its segment, for consecutive
+    segments of the given lengths."""
+    return np.arange(counts.sum()) - np.repeat(np.cumsum(counts) - counts,
+                                               counts)
+
+
+def _image_columns(width, height, sums: np.ndarray) -> dict:
+    """Feature columns of images from their (n, 3) R, G, B sums; a
+    zero-pixel image has NaN means, as numpy's mean of nothing."""
+    width = np.asarray(width, dtype=np.int64)
+    height = np.asarray(height, dtype=np.int64)
+    npix = (width * height)[:, None]
+    means = np.divide(sums, npix, out=np.full(sums.shape, np.nan),
+                      where=npix > 0)
+    return {"width": width, "height": height, "mean_r": means[:, 0],
+            "mean_g": means[:, 1], "mean_b": means[:, 2]}
+
+
+def _dib_sums(blocks) -> np.ndarray:
+    """(n, 3) int64 R, G, B sums of DIB pixel blocks, each given as
+    (buffer, offset, width, height).  Read straight from the BGR rows,
+    skipping their padding: a sum depends on neither row order nor
+    channel order beyond the final B, G, R -> R, G, B swap."""
+    parts, npix = [], []
+    for buf, off, w, h in blocks:
+        row = 3 * w
+        stride = (row + 3) & ~3
+        mv = memoryview(buf)
+        if row == stride:
+            parts.append(mv[off:off + row * h])
+        else:
+            parts.extend(mv[o:o + row]
+                         for o in range(off, off + stride * h, stride))
+        npix.append(w * h)
+    px = np.frombuffer(b"".join(parts), dtype=np.uint8).reshape(-1, 3)
+    return _segment_reduce(np.add, px, npix)[:, ::-1]
+
+
+def wav_batch(payloads: list) -> dict:
+    """Feature columns of WAV payloads: rate, n_samples, duration_ms,
+    rms and peak (0 for a payload without samples)."""
+    parsed = [_wav_parse(p) for p in payloads]
+    rate = np.array([r for r, _ in parsed], dtype=np.int64)
+    n = np.array([len(d) // 2 for _, d in parsed], dtype=np.int64)
+    s = np.frombuffer(b"".join(d for _, d in parsed), dtype="<i2")
+    sq = s.astype(np.int64)
+    sq *= sq
+    sumsq = _segment_reduce(np.add, sq, n)
+    # int16 abs, like np.abs(s).max(): -32768 stays -32768
+    peak = _segment_reduce(np.maximum, np.abs(s), n)
+    rms = np.sqrt(np.divide(sumsq, n, out=np.zeros(len(n)), where=n > 0))
+    for i in np.flatnonzero(sumsq >= _EXACT_SUM):
+        x = np.frombuffer(parsed[i][1], dtype="<i2").astype(np.float64)
+        rms[i] = np.sqrt((x * x).mean())
+    return {"rate": rate, "n_samples": n, "duration_ms": n * 1000 // rate,
+            "rms": rms, "peak": peak}
+
+
+def bmp_batch(payloads: list) -> dict:
+    """Feature columns (width, height, mean_r/g/b) of BMP payloads."""
+    parsed = [_bmp_parse(p) for p in payloads]
+    sums = _dib_sums((p, off, w, h)
+                     for p, (off, w, h, _) in zip(payloads, parsed))
+    return _image_columns([w for _, w, _, _ in parsed],
+                          [h for _, _, h, _ in parsed], sums)
+
+
 def wav_features(payload: bytes) -> dict:
     rate, s = decode_wav(payload)
     x = s.astype(np.float64)
@@ -139,8 +260,11 @@ def wav_features(payload: bytes) -> dict:
     }
 
 
-def bmp_features(payload: bytes) -> dict:
-    a = decode_bmp(payload)
+def _array_features(a: np.ndarray) -> dict:
+    """Per-payload image features: numpy means of the decoded array
+    (a gray image's one channel is all three, alpha is dropped)."""
+    if a.ndim == 2:
+        a = a[:, :, None].repeat(3, axis=2)
     return {
         "width": int(a.shape[1]),
         "height": int(a.shape[0]),
@@ -148,6 +272,10 @@ def bmp_features(payload: bytes) -> dict:
         "mean_g": float(a[:, :, 1].mean()),
         "mean_b": float(a[:, :, 2].mean()),
     }
+
+
+def bmp_features(payload: bytes) -> dict:
+    return _array_features(decode_bmp(payload))
 
 
 def bmp_decimate(payload: bytes, factor: int) -> np.ndarray:
@@ -235,11 +363,19 @@ def encode_png(img: np.ndarray, filter_mode: str = "cycle") -> bytes:
 
 
 def decode_png(payload: bytes) -> np.ndarray:
-    """PNG -> uint8 array (H,W) for gray, (H,W,ch) otherwise.  All 5
-    filter types; Sub reconstructs as a per-lane cumsum, Up as one
-    vector add, Average/Paeth byte by byte as Python ints over a
-    bytearray (each byte depends on the one ``ch`` before it, and
-    int arithmetic beats several numpy calls per pixel)."""
+    """PNG -> uint8 array (H,W) for gray, (H,W,ch) otherwise."""
+    h, w, ch, out = _png_rows(payload)
+    if ch == 1:
+        return out.reshape(h, w)
+    return out.reshape(h, w, ch)
+
+
+def _png_rows(payload: bytes):
+    """(height, width, channels, unfiltered (H, W*ch) uint8 rows) of
+    a PNG.  All 5 filter types; Sub reconstructs as a per-lane cumsum,
+    Up as one vector add, Average/Paeth byte by byte as Python ints
+    over a bytearray (each byte depends on the one ``ch`` before it,
+    and int arithmetic beats several numpy calls per pixel)."""
     import zlib
     if payload[:8] != _PNG_SIG:
         raise ValueError("not a PNG payload")
@@ -324,22 +460,27 @@ def decode_png(payload: bytes) -> np.ndarray:
             raise ValueError(f"bad filter type {f}")
         out[r] = rec
         prior = out[r]
-    if ctype == 0:
-        return out.reshape(h, w)
-    return out.reshape(h, w, ch)
+    return h, w, ch, out
+
+
+def png_batch(payloads: list) -> dict:
+    """Feature columns (width, height, mean_r/g/b) of PNG payloads; a
+    gray image's one channel is all three, RGBA drops alpha."""
+    rows = [_png_rows(p) for p in payloads]
+    sums = np.zeros((len(rows), 3), dtype=np.int64)
+    for ch in _PNG_CHANNELS.values():
+        idx = [i for i, r in enumerate(rows) if r[2] == ch]
+        if not idx:
+            continue
+        px = np.concatenate([rows[i][3].reshape(-1) for i in idx])
+        s = _segment_reduce(np.add, px.reshape(-1, ch),
+                            [rows[i][0] * rows[i][1] for i in idx])
+        sums[idx] = s[:, [0, 0, 0]] if ch == 1 else s[:, :3]
+    return _image_columns([r[1] for r in rows], [r[0] for r in rows], sums)
 
 
 def png_features(payload: bytes) -> dict:
-    a = decode_png(payload)
-    if a.ndim == 2:
-        a = a[:, :, None].repeat(3, axis=2)
-    return {
-        "width": int(a.shape[1]),
-        "height": int(a.shape[0]),
-        "mean_r": float(a[:, :, 0].mean()),
-        "mean_g": float(a[:, :, 1].mean()),
-        "mean_b": float(a[:, :, 2].mean()),
-    }
+    return _array_features(decode_png(payload))
 
 
 # ---- JPEG (baseline sequential DCT, written from ITU-T T.81) --------------
@@ -593,7 +734,7 @@ def _ycbcr_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray):
     g = yf - 0.344136 * cbf - 0.714136 * crf
     b = yf + 1.772 * cbf
     return np.stack([np.clip(np.round(c), 0, 255).astype(np.uint8)
-                     for c in (r, g, b)], axis=2)
+                     for c in (r, g, b)], axis=-1)
 
 
 def _dht_segment(tclass: int, tid: int, bits, values) -> bytes:
@@ -721,37 +862,40 @@ def encode_jpeg(img: np.ndarray, quality=None, subsampling: str = "444",
 
 
 _HUFF_LUT_CACHE: dict = {}
+_HUFF_LUT_SIZE = 65536                    # one entry per 16-bit peek
 
 
 def _huff_decode_table(bits, values):
     """Table-driven Huffman decode: the Annex C canonical codes,
-    left-aligned into a 65536-entry (value, length) LUT so one 16-bit
-    peek resolves any code (max length 16) in O(1) instead of walking
-    the tree bit by bit.  Cached by table content — tiny fixtures
-    would otherwise pay the 64k build per image."""
-    key = (tuple(bits), tuple(values))
+    left-aligned into two 65536-byte LUTs (value, code length), so one
+    16-bit peek resolves any code (max length 16) in O(1) instead of
+    walking the tree bit by bit; length 0 marks a peek no code starts.
+    Cached by table content — tiny fixtures would otherwise pay the
+    64k build per image."""
+    key = (bytes(bits), bytes(values))
     hit = _HUFF_LUT_CACHE.get(key)
     if hit is not None:
         return hit
     if len(_HUFF_LUT_CACHE) >= 64:
         # bound executor memory: wild corpora carry per-image
-        # optimized tables (~1 MB of LUT each) — evict FIFO
+        # optimized tables (128 KB of LUT each) — evict FIFO
         _HUFF_LUT_CACHE.pop(next(iter(_HUFF_LUT_CACHE)))
-    val = np.zeros(65536, dtype=np.int16)
-    lng = np.zeros(65536, dtype=np.uint8)
+    val = bytearray(_HUFF_LUT_SIZE)       # indexing yields plain ints
+    lng = bytearray(_HUFF_LUT_SIZE)
     code = 0
     k = 0
     for ln in range(1, 17):
         for _ in range(bits[ln - 1]):
-            lo = code << (16 - ln)
-            val[lo:lo + (1 << (16 - ln))] = values[k]
-            lng[lo:lo + (1 << (16 - ln))] = ln
+            # an over-subscribed table's extra codes fall off the end
+            lo = min(code << (16 - ln), _HUFF_LUT_SIZE)
+            hi = min(lo + (1 << (16 - ln)), _HUFF_LUT_SIZE)
+            val[lo:hi] = bytes((values[k],)) * (hi - lo)
+            lng[lo:hi] = bytes((ln,)) * (hi - lo)
             code += 1
             k += 1
         code <<= 1
-    out = (val.tolist(), lng.tolist())   # list indexing beats np scalar
-    _HUFF_LUT_CACHE[key] = out
-    return out
+    _HUFF_LUT_CACHE[key] = (val, lng)
+    return val, lng
 
 
 def _entropy_segments(payload: bytes, pos: int) -> list:
@@ -788,165 +932,102 @@ def _entropy_segments(payload: bytes, pos: int) -> list:
     return segs
 
 
-class _FastBits:
-    """MSB-first bit reader over unstuffed entropy bytes; 1-fills past
-    the end (the spec's pad rule), so a block whose final EOB abuts
-    the segment end decodes without bounds checks."""
-    __slots__ = ("data", "pos", "acc", "nbits")
+class _JpegScan:
+    """A parsed baseline JPEG: everything the Huffman, block and tile
+    phases read.  Blocks are numbered in decode (MCU) order: per MCU,
+    each scan component's sv x sh blocks in raster order."""
+    __slots__ = ("h", "w", "mcus_x", "mcus_y", "layout", "order",
+                 "qrows", "dri", "segs", "nblocks")
 
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def _need(self, n: int):
-        while self.nbits < n:
-            if self.pos < len(self.data):
-                self.acc = (self.acc << 8) | self.data[self.pos]
-                self.pos += 1
-            else:
-                self.acc = (self.acc << 8) | 0xFF
-            self.nbits += 8
-
-    def peek16(self) -> int:
-        if self.nbits < 16:
-            self._need(16)
-        return (self.acc >> (self.nbits - 16)) & 0xFFFF
-
-    def skip(self, n: int):
-        self.nbits -= n
-        self.acc &= (1 << self.nbits) - 1
-
-    def take(self, n: int) -> int:
-        if self.nbits < n:
-            self._need(n)
-        self.nbits -= n
-        v = (self.acc >> self.nbits) & ((1 << n) - 1)
-        self.acc &= (1 << self.nbits) - 1
-        return v
+    # layout: per frame component (SOF order: Y, Cb, Cr), its first
+    #   block's index inside an MCU and its sampling factors (sh, sv);
+    # order: per scan component, (blocks per MCU, DC value LUT, DC
+    #   length LUT, AC value LUT, AC length LUT);
+    # qrows: per block of an MCU, its natural-order quantisation table.
 
 
-def _decode_block(fb: "_FastBits", dc_val, dc_len, ac_val, ac_len) -> list:
-    """One 8x8 block's zigzag coefficients as a 64-int list (DC is the
-    DIFF value — caller applies the predictor).  T.81 F.2.2.1 EXTEND
-    is inlined."""
-    v16 = fb.peek16()
-    ln = dc_len[v16]
-    if not ln:
-        raise ValueError("invalid Huffman code in JPEG entropy stream")
-    fb.skip(ln)
-    sz = dc_val[v16]
-    zz = [0] * 64
-    if sz:
-        d = fb.take(sz)
-        zz[0] = d if d >= (1 << (sz - 1)) else d - (1 << sz) + 1
-    k = 1
-    while k < 64:
-        v16 = fb.peek16()
-        ln = ac_len[v16]
-        if not ln:
-            raise ValueError("invalid Huffman code in JPEG entropy stream")
-        fb.skip(ln)
-        rs = ac_val[v16]
-        s = rs & 0x0F
-        if s == 0:
-            if rs == 0xF0:       # ZRL: 16 zeros
-                k += 16
-                continue
-            break                # EOB
-        k += rs >> 4
-        if k > 63:
-            raise ValueError("AC run overflows block")
-        v = fb.take(s)
-        zz[k] = v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-        k += 1
-    return zz
-
-
-def decode_jpeg(payload: bytes) -> np.ndarray:
-    """Baseline sequential JPEG -> uint8 (H,W) gray / (H,W,3) RGB.
-
-    Written from ITU-T T.81: marker parse (tables always taken from
-    the stream's own DQT/DHT, never assumed), Annex F Huffman + DIFF
-    decoding, RSTn restart handling, dequantize, inverse zigzag,
-    8x8 IDCT (orthonormal matrix product), chroma upsampling by
-    sample replication, JFIF YCbCr->RGB.
-    """
+def _jpeg_parse(payload: bytes) -> _JpegScan:
+    """Marker walk — tables always taken from the stream's own
+    DQT/DHT, never assumed — and every check a corrupt stream needs
+    before anything is allocated: segment bounds, table and component
+    references, sampling factors, and a block count the entropy-coded
+    bytes can hold (each block costs at least 2 bits: a DC code and an
+    EOB).  Raises ValueError only."""
     if payload[:2] != b"\xFF\xD8":
         raise ValueError("not a JPEG payload (missing SOI)")
+    n = len(payload)
     pos = 2
     qtabs: dict[int, np.ndarray] = {}     # id -> natural-order int64[64]
-    htabs: dict[tuple, dict] = {}         # (class, id) -> decode table
+    htabs: dict[tuple, tuple] = {}        # (class, id) -> decode LUTs
     frame = None
     dri = 0
     scan = None
-    while pos + 2 <= len(payload):
+    while pos + 2 <= n:
         if payload[pos] != 0xFF:
             raise ValueError(f"expected marker at {pos}")
         while payload[pos + 1] == 0xFF:   # fill bytes
             pos += 1
-            if pos + 1 >= len(payload):
+            if pos + 1 >= n:
                 raise ValueError("truncated JPEG")
         m = payload[pos + 1]
         pos += 2
         if m == 0xD9:                     # EOI
             break
-        (ln,) = struct.unpack(">H", payload[pos:pos + 2])
-        body = payload[pos + 2:pos + ln]
+        if pos + 2 > n:
+            raise ValueError("truncated JPEG")
+        ln = (payload[pos] << 8) | payload[pos + 1]
         nxt = pos + ln
+        if ln < 2 or nxt > n:
+            raise ValueError(f"bad marker FF{m:02X} segment length {ln}")
+        body = payload[pos + 2:nxt]
         if m == 0xDB:                     # DQT (1+ tables per segment)
             i = 0
             while i < len(body):
                 pq, tq = body[i] >> 4, body[i] & 0x0F
-                i += 1
-                if pq == 0:
-                    tab = np.frombuffer(
-                        body[i:i + 64], dtype=np.uint8).astype(np.int64)
-                    i += 64
-                else:                     # 16-bit precision
-                    tab = np.frombuffer(
-                        body[i:i + 128], dtype=">u2").astype(np.int64)
-                    i += 128
+                size = 64 if pq == 0 else 128   # 8- / 16-bit entries
+                if i + 1 + size > len(body):
+                    raise ValueError("truncated DQT segment")
                 nat = np.empty(64, dtype=np.int64)
-                nat[_ZIGZAG] = tab        # DQT is in zigzag order
+                nat[_ZIGZAG] = np.frombuffer(      # DQT is in zigzag order
+                    body, dtype=np.uint8 if pq == 0 else ">u2", count=64,
+                    offset=i + 1)
                 qtabs[tq] = nat
+                i += 1 + size
         elif m == 0xC4:                   # DHT (1+ tables per segment)
             i = 0
             while i < len(body):
                 tc, th = body[i] >> 4, body[i] & 0x0F
-                i += 1
-                bits = list(body[i:i + 16])
-                i += 16
-                n = sum(bits)
-                vals = list(body[i:i + n])
-                i += n
-                htabs[(tc, th)] = _huff_decode_table(bits, vals)
+                bits = body[i + 1:i + 17]
+                cnt = sum(bits)
+                if len(bits) < 16 or i + 17 + cnt > len(body):
+                    raise ValueError("truncated DHT segment")
+                htabs[(tc, th)] = _huff_decode_table(
+                    bits, body[i + 17:i + 17 + cnt])
+                i += 17 + cnt
         elif m in (0xC0, 0xC1):           # SOF0 / SOF1 (both Huffman seq.)
+            if len(body) < 6:
+                raise ValueError("truncated SOF segment")
             prec, h, w, nc = struct.unpack(">BHHB", body[:6])
             if prec != 8:
                 raise ValueError(f"only 8-bit precision (got {prec})")
-            comps = []
-            for ci in range(nc):
-                cid = body[6 + 3 * ci]
-                hv = body[7 + 3 * ci]
-                tq = body[8 + 3 * ci]
-                comps.append([cid, hv >> 4, hv & 0x0F, tq])
-            frame = (h, w, comps)
+            if len(body) < 6 + 3 * nc:
+                raise ValueError("truncated SOF segment")
+            frame = (h, w, [(body[6 + 3 * c], body[7 + 3 * c] >> 4,
+                             body[7 + 3 * c] & 0x0F, body[8 + 3 * c])
+                            for c in range(nc)])
         elif 0xC2 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
             raise ValueError(
                 f"unsupported SOF FF{m:02X}: baseline sequential only")
         elif m == 0xDD:                   # DRI
-            (dri,) = struct.unpack(">H", body[:2])
+            if len(body) < 2:
+                raise ValueError("truncated DRI segment")
+            dri = (body[0] << 8) | body[1]
         elif m == 0xDA:                   # SOS
-            ns = body[0]
-            scomps = []
-            i = 1
-            for _ in range(ns):
-                cs, tt = body[i], body[i + 1]
-                i += 2
-                scomps.append((cs, tt >> 4, tt & 0x0F))
-            scan = (scomps, nxt)
+            ns = body[0] if body else 0
+            if len(body) < 1 + 2 * ns:
+                raise ValueError("truncated SOS segment")
+            scan = ([(body[1 + 2 * k], body[2 + 2 * k] >> 4,
+                      body[2 + 2 * k] & 0x0F) for k in range(ns)], nxt)
             break
         # APPn / COM / anything else: skip
         pos = nxt
@@ -960,6 +1041,8 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
         raise ValueError(
             f"single-component JPEG with sampling "
             f"{comps[0][1]}x{comps[0][2]} not supported")
+    if len(comps) not in (1, 3):
+        raise ValueError(f"unsupported component count {len(comps)}")
     if len(scomps) != len(comps):
         # T.81 allows baseline images split into per-component scans;
         # this decoder handles the (ubiquitous) single interleaved
@@ -967,75 +1050,237 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
         raise ValueError(
             f"multi-scan baseline JPEG not supported (scan has "
             f"{len(scomps)} of {len(comps)} components)")
+    by_id = {c[0]: i for i, c in enumerate(comps)}
+    if (len(by_id) != len(comps)
+            or sorted(c[0] for c in scomps) != sorted(by_id)):
+        raise ValueError("scan components do not match the frame's")
+    for cid, sh, sv, tq in comps:
+        if not (1 <= sh <= 4 and 1 <= sv <= 4):
+            raise ValueError(f"component {cid} sampling {sh}x{sv} "
+                             f"outside 1..4")
+        if tq not in qtabs:
+            raise ValueError(f"component {cid} uses undefined "
+                             f"quantization table {tq}")
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    by_id = {c[0]: c for c in comps}
-    order = []                 # (comp, dc_val, dc_len, ac_val, ac_len)
+    if any(hmax % c[1] or vmax % c[2] for c in comps):
+        raise ValueError("fractional chroma sampling not supported")
+    j = _JpegScan()
+    offs = [0] * len(comps)
+    j.order, j.qrows, bpm = [], [], 0
     for cs, td, ta in scomps:
-        dcv, dcl = htabs[(0, td)]
-        acv, acl = htabs[(1, ta)]
-        order.append((by_id[cs], dcv, dcl, acv, acl))
-    coeff = {c[0]: np.zeros((mcus_y * c[2], mcus_x * c[1], 64),
-                            dtype=np.int64) for c in comps}
-    segs = _entropy_segments(payload, data_pos)
-    seg_i = 0
-    fb = _FastBits(segs[0])
-    preds = {c[0]: 0 for c in comps}
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if dri and mcu_count and mcu_count % dri == 0:
-                seg_i += 1
-                if seg_i >= len(segs):
-                    raise ValueError("missing RSTn restart segment")
-                fb = _FastBits(segs[seg_i])
-                preds = {c[0]: 0 for c in comps}
-            for comp, dcv, dcl, acv, acl in order:
-                cid, sh, sv = comp[0], comp[1], comp[2]
-                for by in range(sv):
-                    for bx in range(sh):
-                        zz = _decode_block(fb, dcv, dcl, acv, acl)
-                        zz[0] += preds[cid]
-                        preds[cid] = zz[0]
-                        coeff[cid][my * sv + by, mx * sh + bx] = zz
-            mcu_count += 1
-    # dequantize + IDCT per component (batched matmuls), then upsample
+        ci = by_id[cs]
+        _, sh, sv, tq = comps[ci]
+        if (0, td) not in htabs or (1, ta) not in htabs:
+            raise ValueError(f"scan component {cs} uses an undefined "
+                             f"Huffman table")
+        offs[ci] = bpm
+        bpm += sh * sv
+        j.order.append((sh * sv,) + htabs[(0, td)] + htabs[(1, ta)])
+        j.qrows += [qtabs[tq]] * (sh * sv)
+    j.h, j.w, j.dri = h, w, dri
+    j.layout = tuple((offs[i], c[1], c[2]) for i, c in enumerate(comps))
+    j.mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
+    j.mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
+    j.nblocks = j.mcus_x * j.mcus_y * bpm
+    j.segs = _entropy_segments(payload, data_pos)
+    coded = sum(map(len, j.segs))
+    if j.nblocks > 4 * coded:
+        raise ValueError(f"{j.nblocks} blocks declared but only {coded} "
+                         f"entropy-coded bytes")
+    return j
+
+
+def _jpeg_huffman(j: _JpegScan, out: array, base: int) -> None:
+    """Annex F entropy decode of the whole scan into ``out`` (an
+    int64 array, zero-filled) from ``base``: 64 zigzag coefficients
+    per block, DC after prediction, RSTn restarts resetting the
+    predictors.  The bit reader is inlined (MSB first over the
+    unstuffed bytes, 1-filled past the end — the spec's pad rule — so
+    a block whose final EOB abuts the segment end needs no bounds
+    check); T.81 F.2.2.1 EXTEND is inlined too."""
+    segs, dri, order = j.segs, j.dri, j.order
+    data, si = segs[0], 0
+    n, pos, acc, nbits = len(data), 0, 0, 0
+    preds = [0] * len(order)
+    b = base
+    for m in range(j.mcus_x * j.mcus_y):
+        if dri and m and m % dri == 0:
+            si += 1
+            if si >= len(segs):
+                raise ValueError("missing RSTn restart segment")
+            data = segs[si]
+            n, pos, acc, nbits = len(data), 0, 0, 0
+            preds = [0] * len(order)
+        for ci, (nblk, dcv, dcl, acv, acl) in enumerate(order):
+            for _ in range(nblk):
+                while nbits < 16:
+                    acc = ((acc << 8) | (data[pos] if pos < n else 0xFF)) \
+                        & 0xFFFFFF
+                    pos += 1
+                    nbits += 8
+                v = (acc >> (nbits - 16)) & 0xFFFF
+                ln = dcl[v]
+                if not ln:
+                    raise ValueError(
+                        "invalid Huffman code in JPEG entropy stream")
+                nbits -= ln
+                s = dcv[v]
+                if s:
+                    if s > 11:
+                        raise ValueError(f"DC difference category {s} > 11")
+                    while nbits < 16:
+                        acc = ((acc << 8) | (data[pos] if pos < n
+                                             else 0xFF)) & 0xFFFFFF
+                        pos += 1
+                        nbits += 8
+                    nbits -= s
+                    d = (acc >> nbits) & ((1 << s) - 1)
+                    if d < 1 << (s - 1):
+                        d -= (1 << s) - 1
+                    preds[ci] += d
+                out[b] = preds[ci]
+                k = 1
+                while k < 64:
+                    while nbits < 16:
+                        acc = ((acc << 8) | (data[pos] if pos < n
+                                             else 0xFF)) & 0xFFFFFF
+                        pos += 1
+                        nbits += 8
+                    v = (acc >> (nbits - 16)) & 0xFFFF
+                    ln = acl[v]
+                    if not ln:
+                        raise ValueError(
+                            "invalid Huffman code in JPEG entropy stream")
+                    nbits -= ln
+                    rs = acv[v]
+                    s = rs & 0x0F
+                    if not s:
+                        if rs == 0xF0:    # ZRL: 16 zeros
+                            k += 16
+                            continue
+                        break             # EOB
+                    k += rs >> 4
+                    if k > 63:
+                        raise ValueError("AC run overflows block")
+                    while nbits < 16:
+                        acc = ((acc << 8) | (data[pos] if pos < n
+                                             else 0xFF)) & 0xFFFFFF
+                        pos += 1
+                        nbits += 8
+                    nbits -= s
+                    d = (acc >> nbits) & ((1 << s) - 1)
+                    if d < 1 << (s - 1):
+                        d -= (1 << s) - 1
+                    out[b + k] = d
+                    k += 1
+                b += 64
+
+
+_UNZIGZAG = np.argsort(_ZIGZAG)
+
+
+def _jpeg_blocks(zz: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """(n, 64) zigzag coefficients and their (n, 64) natural-order
+    quantisation rows -> (n, 8, 8) uint8 samples: dequantise, inverse
+    zigzag, IDCT, round and clip, over all n blocks at once."""
+    s = (zz[:, _UNZIGZAG] * q).astype(np.float64).reshape(-1, 8, 8)
+    return np.clip(np.round(_idct_blocks(s)), 0, 255).astype(np.uint8)
+
+
+def _jpeg_tiles(layout: tuple, pix: np.ndarray) -> np.ndarray:
+    """Blocks in MCU order -> one (8*vmax, 8*hmax) tile per MCU, gray
+    or (..., 3) RGB: each component's blocks placed in its MCU, chroma
+    upsampled by sample replication, JFIF YCbCr -> RGB."""
+    hmax = max(sh for _, sh, _ in layout)
+    vmax = max(sv for _, _, sv in layout)
+    t = pix.reshape(-1, sum(sh * sv for _, sh, sv in layout), 8, 8)
     planes = []
-    for comp in comps:
-        cid, sh, sv, tq = comp
-        zz = coeff[cid].reshape(-1, 64)
-        nat = np.zeros_like(zz)
-        nat[:, _ZIGZAG] = zz              # inverse zigzag
-        s = (nat * qtabs[tq][None, :]).astype(np.float64).reshape(-1, 8, 8)
-        blocks = _idct_blocks(s)
-        nby, nbx = mcus_y * sv, mcus_x * sh
-        plane = (blocks.reshape(nby, nbx, 8, 8).transpose(0, 2, 1, 3)
-                 .reshape(nby * 8, nbx * 8))
-        plane = np.clip(np.round(plane), 0, 255).astype(np.uint8)
-        if sh < hmax or sv < vmax:        # sample replication upsample
-            plane = plane.repeat(vmax // sv, axis=0).repeat(
-                hmax // sh, axis=1)
-        planes.append(plane[:h, :w])
-    if len(planes) == 1:
-        return planes[0]
-    if len(planes) != 3:
-        raise ValueError(f"unsupported component count {len(planes)}")
-    return _ycbcr_to_rgb(*planes)
+    for off, sh, sv in layout:
+        p = (t[:, off:off + sh * sv].reshape(-1, sv, sh, 8, 8)
+             .transpose(0, 1, 3, 2, 4).reshape(-1, 8 * sv, 8 * sh))
+        if sh < hmax or sv < vmax:
+            p = p.repeat(vmax // sv, axis=1).repeat(hmax // sh, axis=2)
+        planes.append(p)
+    return planes[0] if len(planes) == 1 else _ycbcr_to_rgb(*planes)
+
+
+def _jpeg_coefficients(scans: list) -> tuple:
+    """Huffman-decode every scan into one int64 coefficient array:
+    (n_blocks, 64) zigzag coefficients and their (n_blocks, 64)
+    quantisation rows, scans in the given order."""
+    nb = np.array([j.nblocks for j in scans], dtype=np.int64)
+    coeff = array("q", [0]) * (64 * int(nb.sum()))
+    base = 0
+    for j in scans:
+        _jpeg_huffman(j, coeff, base)
+        base += 64 * j.nblocks
+    # block i of a scan uses row i % blocks-per-MCU of its qrows
+    bpm = np.array([len(j.qrows) for j in scans], dtype=np.int64)
+    row = (np.repeat(np.cumsum(bpm) - bpm, nb)
+           + _segment_offsets(nb) % np.repeat(bpm, nb))
+    q = np.array([t for j in scans for t in j.qrows])[row]
+    return np.frombuffer(coeff, dtype=np.int64).reshape(-1, 64), q
+
+
+def decode_jpeg(payload: bytes) -> np.ndarray:
+    """Baseline sequential JPEG -> uint8 (H,W) gray / (H,W,3) RGB.
+
+    Written from ITU-T T.81: marker parse, Annex F Huffman + DIFF
+    decoding, RSTn restart handling, dequantize, inverse zigzag, 8x8
+    IDCT (orthonormal matrix product), chroma upsampling by sample
+    replication, JFIF YCbCr->RGB — the same phases ``jpeg_batch``
+    runs over many payloads.
+    """
+    j = _jpeg_parse(payload)
+    tiles = _jpeg_tiles(j.layout, _jpeg_blocks(*_jpeg_coefficients([j])))
+    th, tw = tiles.shape[1:3]
+    img = (tiles.reshape((j.mcus_y, j.mcus_x) + tiles.shape[1:])
+           .swapaxes(1, 2)
+           .reshape((j.mcus_y * th, j.mcus_x * tw) + tiles.shape[3:]))
+    return img[:j.h, :j.w]
+
+
+def _tile_sums(tiles: np.ndarray, scans: list) -> np.ndarray:
+    """Per-image sums of consecutive MCU tiles over each image's crop:
+    a 2-D prefix sum per tile, read at the tile's last row and column
+    inside the image, then added up per image."""
+    th, tw = tiles.shape[1:3]
+    nm = np.array([j.mcus_x * j.mcus_y for j in scans], dtype=np.int64)
+    per_mcu = np.repeat([[j.mcus_x, j.h, j.w] for j in scans], nm, axis=0)
+    m = _segment_offsets(nm)
+    rows = np.minimum(th, per_mcu[:, 1] - m // per_mcu[:, 0] * th)
+    cols = np.minimum(tw, per_mcu[:, 2] - m % per_mcu[:, 0] * tw)
+    cum = tiles.cumsum(1, dtype=np.int64).cumsum(2)
+    return _segment_reduce(np.add, cum[np.arange(len(tiles)), rows - 1,
+                                       cols - 1], nm)
+
+
+def jpeg_batch(payloads: list) -> dict:
+    """Feature columns (width, height, mean_r/g/b) of baseline JPEG
+    payloads.  Parse and Huffman decode run per payload; one
+    dequantise + IDCT covers every block of the list, then the tiles
+    and crop sums run once per MCU layout (gray, 4:4:4, 4:2:0 ...)."""
+    scans = [_jpeg_parse(p) for p in payloads]
+    groups: dict[tuple, list] = {}
+    for i, j in enumerate(scans):
+        groups.setdefault(j.layout, []).append(i)
+    ordered = [scans[i] for idx in groups.values() for i in idx]
+    sums = np.zeros((len(scans), 3), dtype=np.int64)
+    if ordered:
+        pix = _jpeg_blocks(*_jpeg_coefficients(ordered))
+        start = 0
+        for layout, idx in groups.items():
+            end = start + sum(scans[i].nblocks for i in idx)
+            s = _tile_sums(_jpeg_tiles(layout, pix[start:end]),
+                           [scans[i] for i in idx])
+            sums[idx] = s[:, None] if s.ndim == 1 else s
+            start = end
+    return _image_columns([j.w for j in scans], [j.h for j in scans], sums)
 
 
 def jpeg_features(payload: bytes) -> dict:
-    a = decode_jpeg(payload)
-    if a.ndim == 2:
-        a = a[:, :, None].repeat(3, axis=2)
-    return {
-        "width": int(a.shape[1]),
-        "height": int(a.shape[0]),
-        "mean_r": float(a[:, :, 0].mean()),
-        "mean_g": float(a[:, :, 1].mean()),
-        "mean_b": float(a[:, :, 2].mean()),
-    }
+    return _array_features(decode_jpeg(payload))
 
 
 # ---- AVI (RIFF 'AVI ', uncompressed DIB video frames) ----------------------
@@ -1091,14 +1336,26 @@ def encode_avi(frames: np.ndarray, rate: int = 10, scale: int = 1) -> bytes:
 
 
 def decode_avi(payload: bytes):
-    """Uncompressed DIB AVI -> (rate, scale, frames (N,H,W,3) RGB).
+    """Uncompressed DIB AVI -> (rate, scale, frames (N,H,W,3) RGB)."""
+    rate, scale, w, h, bottom_up, frames = _avi_parse(payload)
+    size = ((w * 3 + 3) & ~3) * h
+    out = np.empty((len(frames), h, w, 3), dtype=np.uint8)
+    for fi, off in enumerate(frames):
+        a = np.frombuffer(payload, dtype=np.uint8, count=size, offset=off)
+        out[fi] = _dib_unpack(a, w, h, bottom_up=bottom_up)
+    return rate, scale, out
+
+
+def _avi_parse(payload: bytes):
+    """(rate, scale, width, height, bottom_up, frame data offsets) of
+    an uncompressed DIB AVI.
 
     RIFF chunk walk tolerant of unknown chunks (same approach as the
     WAV reader); only biCompression == 0 (BI_RGB) 24-bit streams are
     supported — anything else raises.  Hostile input raises
     ``ValueError`` only, and every frame chunk's length and bounds are
-    checked before the frame array is allocated, so allocation is
-    bounded by the payload length."""
+    checked here, before any frame is read, so allocation is bounded
+    by the payload length."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
         raise ValueError("not an AVI payload")
     w = h = None
@@ -1161,11 +1418,27 @@ def decode_avi(payload: bytes):
             raise ValueError(f"frame {fi} runs past the payload end")
     if len(frames) * stride * h > len(payload):
         raise ValueError("frame chunks overlap")
-    out = np.empty((len(frames), h, w, 3), dtype=np.uint8)
-    for fi, (off, ln) in enumerate(frames):
-        a = np.frombuffer(payload, dtype=np.uint8, count=ln, offset=off)
-        out[fi] = _dib_unpack(a, w, h, bottom_up=bottom_up)
-    return int(rate), int(scale), out
+    return int(rate), int(scale), w, h, bottom_up, [off for off, _ in frames]
+
+
+def avi_frame_batch(payloads: list, stride: int) -> dict:
+    """Every ``stride``-th frame of each AVI payload: ``row`` (the
+    payload's index in the list), frame_idx, ts_ms, width, height and
+    the frame's mean_r/g/b, with the channel sums read straight from
+    the sampled frames' DIB bytes."""
+    parsed = [_avi_parse(p) for p in payloads]
+    k = np.array([len(range(0, len(fr), stride)) for *_, fr in parsed],
+                 dtype=np.int64)
+    rate, scale, w, h = (np.repeat(np.array([a[c] for a in parsed],
+                                            dtype=np.int64), k)
+                         for c in range(4))
+    fidx = _segment_offsets(k) * stride
+    sums = _dib_sums((p, off, a[2], a[3]) for p, a in zip(payloads, parsed)
+                     for off in a[5][::stride])
+    cols = _image_columns(w, h, sums)
+    cols.update(row=np.repeat(np.arange(len(payloads)), k), frame_idx=fidx,
+                ts_ms=fidx * (1000 * scale) // rate)
+    return cols
 
 
 def avi_features(payload: bytes) -> dict:

@@ -9,10 +9,22 @@ images; AVI video with per-frame sampling; MP4/ISO-BMFF metadata
 box walk); only the codec sample payloads inside MP4 mdat (H.264/
 AAC) stay behind the clearly-marked stub, since no codec library
 ships in this container.
+
+``decode_media_real`` and ``frame_sample_real`` are ``mapInArrow``
+maps over an (id, kind, payload) projection.  Each Arrow batch is
+grouped by kind and handed to one batch kernel per kind
+(``kernels.media.wav_batch`` / ``bmp_batch`` / ``png_batch`` /
+``jpeg_batch`` / ``avi_frame_batch``).  A kernel parses and
+entropy-decodes its payloads one by one, then runs the JPEG IDCT and
+every feature reduction once for the whole batch, and returns numpy
+columns that become the output Arrow batch: no per-row dicts, no
+pandas.  Features are bit-identical to the per-payload
+``kernels.media.*_features``.
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator
 
 import numpy as np
@@ -116,6 +128,14 @@ def frame_sample(df: DataFrame, id_col: str = "doc_id",
     ).withColumn("ts_ms", F.col("frame_idx") * fps_ms)
 
 
+_MEDIA_KERNELS = {"wav": "wav_batch", "bmp": "bmp_batch",
+                  "png": "png_batch", "jpeg": "jpeg_batch"}
+_MEDIA_FEATURES = (("rate", "int"), ("n_samples", "int"),
+                   ("duration_ms", "int"), ("rms", "double"), ("peak", "int"),
+                   ("width", "int"), ("height", "int"), ("mean_r", "double"),
+                   ("mean_g", "double"), ("mean_b", "double"))
+
+
 def decode_media_real(df: DataFrame, id_col: str = "doc_id",
                       kind_col: str = "kind",
                       payload_col: str = "payload") -> DataFrame:
@@ -126,41 +146,51 @@ def decode_media_real(df: DataFrame, id_col: str = "doc_id",
     formats (mp4/webp/...) stay behind decode_media_stub, clearly
     flagged.
 
-    One Arrow pass; per-kind feature columns (0 where not
+    One ``mapInArrow`` pass over the (id, kind, payload) projection.
+    Each Arrow batch is grouped by kind and each group goes to one
+    batch kernel (``kernels.media.<kind>_batch``), which parses every
+    payload and then reduces the whole group at once; the kernels'
+    numpy columns become the output batch directly, with no per-row
+    dicts and no pandas.  Per-kind feature columns (0 where not
     applicable): rate, n_samples, duration_ms, rms, peak for audio;
-    width, height, mean_r/g/b for images.
+    width, height, mean_r/g/b for images.  An unknown kind, or a
+    payload its decoder rejects, raises ValueError and fails the job.
     """
+    return df.select(F.col(id_col).cast("long").alias("doc_id"),
+                     F.col(kind_col).alias("kind"),
+                     F.col(payload_col).alias("payload")).mapInArrow(
+        _decode_batches, "doc_id long, kind string, " + ", ".join(
+            f"{c} {t}" for c, t in _MEDIA_FEATURES))
+
+
+def _decode_batches(batches):
+    import pyarrow as pa
+
     from ..kernels import media as km
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, kind, payload in zip(
-                    pdf[id_col], pdf[kind_col], pdf[payload_col]):
-                base = {"doc_id": did, "kind": kind,
-                        "rate": 0, "n_samples": 0, "duration_ms": 0,
-                        "rms": 0.0, "peak": 0, "width": 0, "height": 0,
-                        "mean_r": 0.0, "mean_g": 0.0, "mean_b": 0.0}
-                if kind == "wav":
-                    base.update(km.wav_features(bytes(payload)))
-                elif kind == "bmp":
-                    base.update(km.bmp_features(bytes(payload)))
-                elif kind == "png":
-                    base.update(km.png_features(bytes(payload)))
-                elif kind == "jpeg":
-                    base.update(km.jpeg_features(bytes(payload)))
-                else:
-                    raise ValueError(
-                        f"no stdlib codec for kind={kind!r}; "
-                        "use decode_media_stub for compressed formats")
-                rows.append(base)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(
-        _decode,
-        "doc_id long, kind string, rate int, n_samples int, "
-        "duration_ms int, rms double, peak int, width int, height int, "
-        "mean_r double, mean_g double, mean_b double")
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        payloads = rb.column(2).to_pylist()
+        by_kind: dict = {}
+        for i, kind in enumerate(rb.column(1).to_pylist()):
+            by_kind.setdefault(kind, []).append(i)
+        cols = {c: np.zeros(rb.num_rows, dtype=np.int64 if t == "int"
+                            else np.float64) for c, t in _MEDIA_FEATURES}
+        for kind, idx in by_kind.items():
+            if kind not in _MEDIA_KERNELS:
+                raise ValueError(
+                    f"no stdlib codec for kind={kind!r}; "
+                    "use decode_media_stub for compressed formats")
+            feats = getattr(km, _MEDIA_KERNELS[kind])(
+                [payloads[i] for i in idx])
+            for c, v in feats.items():
+                cols[c][idx] = v
+        yield pa.RecordBatch.from_arrays(
+            [rb.column(0), rb.column(1)]
+            + [pa.array(cols[c], pa.int32() if t == "int" else pa.float64())
+               for c, t in _MEDIA_FEATURES],
+            names=["doc_id", "kind"] + [c for c, _ in _MEDIA_FEATURES])
 
 
 def synth_media_col_rows(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -197,52 +227,39 @@ def frame_sample_real(df: DataFrame, id_col: str = "doc_id",
                       payload_col: str = "payload",
                       stride: int = 2) -> DataFrame:
     """REAL video frame sampling: decode AVI container bytes
-    (kernels/media.py — RIFF walk + per-frame DIB decode), emit every
+    (kernels/media.py — one RIFF chunk walk per payload), emit every
     ``stride``-th frame with its timestamp and per-frame channel
-    means.  One Arrow pass; the per-doc frame explode happens inside
-    the batch (numpy slicing), so the exchanged payload is decoded
-    exactly once where it lands — the decode-where-the-bytes-are rule
-    that keeps a 100 TB video corpus off the driver."""
-    from ..kernels import media as km
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # columnar accumulators: the per-frame feature math is one
-            # vectorized mean over ALL sampled frames of a payload, and
-            # the batch is assembled from arrays, not per-row dicts —
-            # this loop is the hot path of a video-corpus scan
-            dids, idxs, tss, ws, hs = [], [], [], [], []
-            means = []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                rate, scale, frames = km.decode_avi(bytes(payload))
-                n, h, w, _ = frames.shape
-                sampled = frames[::stride]
-                k = sampled.shape[0]
-                means.append(
-                    sampled.reshape(k, -1, 3).mean(axis=1,
-                                                   dtype=np.float64))
-                fidx = np.arange(0, n, stride, dtype=np.int64)
-                idxs.append(fidx)
-                tss.append(fidx * (1000 * scale) // rate)
-                dids.append(np.full(k, did, dtype=np.int64))
-                ws.append(np.full(k, w, dtype=np.int32))
-                hs.append(np.full(k, h, dtype=np.int32))
-            if not dids:
-                continue
-            m = np.concatenate(means)
-            yield pd.DataFrame({
-                "doc_id": np.concatenate(dids),
-                "frame_idx": np.concatenate(idxs).astype(np.int32),
-                "ts_ms": np.concatenate(tss),
-                "width": np.concatenate(ws),
-                "height": np.concatenate(hs),
-                "mean_r": m[:, 0], "mean_g": m[:, 1], "mean_b": m[:, 2],
-            })
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        _sample,
+    means.  One ``mapInArrow`` pass: each Arrow batch goes to one
+    ``kernels.media.avi_frame_batch`` call, which walks every payload's
+    chunks and then sums the sampled frames' DIB bytes for the whole
+    batch at once, so the exchanged payload is read exactly once where
+    it lands — the decode-where-the-bytes-are rule that keeps a 100 TB
+    video corpus off the driver."""
+    if stride < 1:
+        raise ValueError(f"frame stride {stride} < 1")
+    return df.select(F.col(id_col).cast("long").alias("doc_id"),
+                     F.col(payload_col).alias("payload")).mapInArrow(
+        functools.partial(_sample_batches, stride=stride),
         "doc_id long, frame_idx int, ts_ms long, width int, height int, "
         "mean_r double, mean_g double, mean_b double")
+
+
+def _sample_batches(batches, stride: int):
+    import pyarrow as pa
+
+    from ..kernels import media as km
+
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        f = km.avi_frame_batch(rb.column(1).to_pylist(), stride)
+        yield pa.RecordBatch.from_arrays(
+            [rb.column(0).take(f["row"]), pa.array(f["frame_idx"], pa.int32()),
+             pa.array(f["ts_ms"]), pa.array(f["width"], pa.int32()),
+             pa.array(f["height"], pa.int32()), pa.array(f["mean_r"]),
+             pa.array(f["mean_g"]), pa.array(f["mean_b"])],
+            names=["doc_id", "frame_idx", "ts_ms", "width", "height",
+                   "mean_r", "mean_g", "mean_b"])
 
 
 def synth_avi_col_rows(df: DataFrame, id_col: str = "doc_id") -> DataFrame:

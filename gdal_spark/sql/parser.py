@@ -29,6 +29,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 from .lexer import Token, significant, tokenize
@@ -406,7 +407,8 @@ def respell(sql: str) -> str:
     return _rewrite_quoted_idents(_rewrite_hstore(sql))
 
 
-def emit(stmt: SelectStmt, spark: SparkSession, top: bool = True) -> str:
+def emit(stmt: SelectStmt, spark: SparkSession | None,
+         top: bool = True) -> str:
     """Walk the tree once, applying the dialect rewrites in scope."""
     parts = ["SELECT"]
     if stmt.distinct:
@@ -446,10 +448,14 @@ def _from_columns(item: FromItem | None, spark: SparkSession) -> list[str]:
     return spark.sql(emit(item.sub, spark, top=False)).columns
 
 
+def _emit_table(name: str) -> str:
+    """Spell a possibly schema-qualified table name part by part."""
+    return ".".join(_emit_name(p) for p in name.split("."))
+
+
 def _emit_from(item: FromItem, spark: SparkSession) -> str:
     if item.table is not None:
-        base = ".".join(_emit_name(p) for p in item.table.split(".")) \
-            if "." in item.table else _emit_name(item.table)
+        base = _emit_table(item.table)
     else:
         base = "(" + emit(item.sub, spark, top=False) + ")"
     if item.alias:
@@ -472,7 +478,7 @@ def _first_match_keys(j: Join) -> tuple[str, str, str] | None:
     return None
 
 
-def _emit_join(j: Join, spark: SparkSession, first_match: bool) -> str:
+def _emit_join(j: Join, spark: SparkSession | None, first_match: bool) -> str:
     keys = _first_match_keys(j) if first_match else None
     if keys is None:
         kw = "LEFT JOIN" if j.left else "JOIN"
@@ -480,12 +486,15 @@ def _emit_join(j: Join, spark: SparkSession, first_match: bool) -> str:
     sec_key, prim, prim_key = keys
     # one-to-FIRST-match (ogr_gensql.cpp:1497-1527): lowest FID wins;
     # layers (or sub-selects) without FID order by the join key
-    try:
-        order = "FID" if "FID" in _from_columns(j.item, spark) else sec_key
-    except Exception:
+    if spark is None:
         order = sec_key
+    else:
+        try:
+            order = "FID" if "FID" in _from_columns(j.item, spark) else sec_key
+        except AnalysisException:
+            order = sec_key
     if j.item.table is not None:
-        src = _emit_name(j.item.table)
+        src = _emit_table(j.item.table)
     else:
         src = "(" + emit(j.item.sub, spark, top=False) + ")"
     ref_q, key_q = _emit_name(j.item.ref_name), _emit_name(sec_key)

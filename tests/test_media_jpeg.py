@@ -273,3 +273,40 @@ def test_matmul_idct_bit_identical_to_einsum(monkeypatch):
         b = km.decode_jpeg(p)
         assert a.dtype == b.dtype and a.shape == b.shape
         np.testing.assert_array_equal(a, b)
+
+
+# One Huffman LUT is two 65,536-entry byte tables (value, code length).
+# A mutated DHT makes the decoder build fresh ones — at most the four
+# tables of a colour scan — so the slack covers four of them plus
+# 64 KiB for everything else.
+_HUFF_LUT_BYTES = 2 * 65536
+
+
+def test_jpeg_hostile_input_raises_value_error_with_bounded_allocation(hostile_contract):
+    """Marker, table, sampling and entropy corruption raises ValueError
+    only (not IndexError, KeyError, OverflowError or struct.error), and
+    a SOF that declares more blocks than the entropy-coded bytes can
+    hold (2 bits each at least) is refused before coefficients are
+    allocated."""
+    import tracemalloc
+
+    slack = 4 * _HUFF_LUT_BYTES + 64 * 1024
+    rng = np.random.RandomState(6)
+    gray = km.encode_jpeg(rng.randint(0, 256, (13, 21)).astype(np.uint8),
+                          quality=75, restart_interval=2)
+    hostile_contract(km.decode_jpeg, gray, seed=10, head=128, slack=slack)
+    rgb = km.encode_jpeg(rng.randint(0, 256, (13, 21, 3)).astype(np.uint8),
+                         quality=75, subsampling="420", restart_interval=1)
+    hostile_contract(km.decode_jpeg, rgb, seed=11, head=128, slack=slack)
+
+    raw = bytearray(gray)
+    i = raw.find(b"\xFF\xC0")
+    raw[i + 5:i + 9] = b"\xFF\xFF\xFF\xFF"          # 65535 x 65535 px
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="entropy-coded bytes"):
+            km.decode_jpeg(bytes(raw))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak <= len(raw) + 64 * 1024, peak

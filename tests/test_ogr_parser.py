@@ -128,3 +128,15 @@ def test_fallback_on_unparsed(layers):
         'WITH c AS (SELECT HSTORE_GET_VALUE(props, \'b\') AS "v" '
         'FROM ph) SELECT "v" FROM c').collect()
     assert rows[0]["v"] == "2"
+
+
+def test_schema_qualified_first_match_secondary_spelled_like_from():
+    """A schema-qualified secondary is spelled part by part in the
+    first-match subquery, as in FROM; without a session the subquery
+    orders by the join key."""
+    from gdal_spark.sql.parser import emit
+
+    sql = emit(parse("SELECT * FROM db.base b LEFT JOIN db.sec s ON b.k = s.k"), None)
+    assert sql.startswith("SELECT * FROM db.base b LEFT JOIN ")
+    assert "FROM db.sec)" in sql and "`db.sec`" not in sql
+    assert "PARTITION BY k ORDER BY k" in sql

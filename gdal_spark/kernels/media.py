@@ -27,12 +27,14 @@ Features come from batch kernels (``wav_batch``, ``bmp_batch``,
 ``png_batch``, ``jpeg_batch``, ``avi_frame_batch``): each takes a list
 of payloads of one kind and returns numpy feature columns.  Parsing,
 Huffman decode and PNG inflate/unfilter run per payload; the JPEG
-dequantise + IDCT and every feature reduction run once over the whole
-list.  A mean is an exact integer sum divided by its count, which is
-bit-identical to numpy's float ``mean()`` of the decoded array while
-the sum stays below 2**53.  The per-payload ``decode_*`` functions
-run the same parse, Huffman and block phases on one payload, and the
-``*_features`` functions take numpy means of what they decode.
+dequantise + IDCT and every feature reduction run once per run of
+payloads holding up to ``_RUN_SAMPLES`` decoded samples, so memory
+follows that constant, not the Arrow batch size.  A mean is an exact
+integer sum divided by its count, which is bit-identical to numpy's
+float ``mean()`` of the decoded array while the sum stays below
+2**53.  The per-payload ``decode_*`` functions run the same parse,
+Huffman and block phases on one payload, and the ``*_features``
+functions take numpy means of what they decode.
 """
 
 from __future__ import annotations
@@ -104,11 +106,18 @@ def _dib_pack(rgb: np.ndarray) -> bytes:
     return bytes(body)
 
 
-def _dib_unpack(arr: np.ndarray, w: int, h: int,
-                bottom_up: bool = True) -> np.ndarray:
-    """Flat uint8 DIB pixel block (stride*h bytes) -> HxWx3 RGB."""
+def _dib_rows(buf, off: int, w: int, h: int) -> np.ndarray:
+    """The DIB pixel block at ``off`` in ``buf`` as an (h, w, 3) BGR
+    view in stored row order, row padding sliced off."""
     stride = (w * 3 + 3) & ~3
-    a = arr.reshape(h, stride)[:, :w * 3].reshape(h, w, 3)
+    return (np.frombuffer(buf, dtype=np.uint8, count=stride * h, offset=off)
+            .reshape(h, stride)[:, :w * 3].reshape(h, w, 3))
+
+
+def _dib_unpack(buf, off: int, w: int, h: int,
+                bottom_up: bool = True) -> np.ndarray:
+    """DIB pixel block -> HxWx3 RGB."""
+    a = _dib_rows(buf, off, w, h)
     if bottom_up:
         a = a[::-1]
     return a[:, :, ::-1].copy()               # BGR -> RGB
@@ -147,10 +156,7 @@ def _bmp_parse(payload: bytes):
 def decode_bmp(payload: bytes) -> np.ndarray:
     """24-bit uncompressed BMP -> HxWx3 uint8 RGB."""
     off, w, h, flip = _bmp_parse(payload)
-    stride = (w * 3 + 3) & ~3
-    arr = np.frombuffer(payload, dtype=np.uint8,
-                        count=stride * h, offset=off)
-    return _dib_unpack(arr, w, h, bottom_up=flip)
+    return _dib_unpack(payload, off, w, h, bottom_up=flip)
 
 
 # ---- batch reductions -------------------------------------------------------
@@ -162,6 +168,38 @@ def decode_bmp(payload: bytes) -> np.ndarray:
 # can carry decodes to; squared int16 samples reach it past 2**23
 # samples, so ``wav_batch`` falls back to the float mean there.
 _EXACT_SUM = 1 << 53
+
+# A batch kernel decodes and reduces its payloads in runs of at most
+# this many decoded samples (audio samples, pixel bytes, JPEG
+# coefficients), so its working set is one run's (about 12 MB for
+# JPEG's int64 coefficients, float64 IDCT and colour planes), not the
+# whole batch's.  A payload above it forms a run alone: the same
+# phases over one payload, as ``decode_*`` runs them.  Batching pays
+# while payloads are small next to a run (numpy's per-call cost is then
+# most of a per-payload decode); a payload of a run or more gains
+# nothing from it and loses nothing either.
+_RUN_SAMPLES = 1 << 18
+
+
+def _in_runs(kernel, items, size) -> dict:
+    """``kernel`` (a list of items -> dict of numpy columns, one entry
+    per item or per output row) over consecutive runs of ``items``
+    whose ``size`` adds up to at most _RUN_SAMPLES, the columns
+    concatenated.  ``items`` is consumed lazily, so only one run's
+    parsed payloads are held at a time."""
+    parts, run, total = [], [], 0
+    for x in items:
+        n = size(x)
+        if run and total + n > _RUN_SAMPLES:
+            parts.append(kernel(run))
+            run, total = [], 0
+        run.append(x)
+        total += n
+    if run or not parts:
+        parts.append(kernel(run))
+    if len(parts) == 1:
+        return parts[0]
+    return {c: np.concatenate([p[c] for p in parts]) for c in parts[0]}
 
 
 def _segment_reduce(ufunc, values: np.ndarray, counts) -> np.ndarray:
@@ -199,30 +237,19 @@ def _image_columns(width, height, sums: np.ndarray) -> dict:
             "mean_g": means[:, 1], "mean_b": means[:, 2]}
 
 
-def _dib_sums(blocks) -> np.ndarray:
+def _dib_sums(blocks: list) -> np.ndarray:
     """(n, 3) int64 R, G, B sums of DIB pixel blocks, each given as
-    (buffer, offset, width, height).  Read straight from the BGR rows,
-    skipping their padding: a sum depends on neither row order nor
+    (buffer, offset, width, height): the BGR rows read in place with
+    their padding sliced off.  A sum depends on neither row order nor
     channel order beyond the final B, G, R -> R, G, B swap."""
-    parts, npix = [], []
-    for buf, off, w, h in blocks:
-        row = 3 * w
-        stride = (row + 3) & ~3
-        mv = memoryview(buf)
-        if row == stride:
-            parts.append(mv[off:off + row * h])
-        else:
-            parts.extend(mv[o:o + row]
-                         for o in range(off, off + stride * h, stride))
-        npix.append(w * h)
-    px = np.frombuffer(b"".join(parts), dtype=np.uint8).reshape(-1, 3)
-    return _segment_reduce(np.add, px, npix)[:, ::-1]
+    px = [_dib_rows(*b).reshape(-1, 3) for b in blocks]
+    if not px:
+        return np.zeros((0, 3), dtype=np.int64)
+    return _segment_reduce(np.add, np.concatenate(px),
+                           [len(p) for p in px])[:, ::-1]
 
 
-def wav_batch(payloads: list) -> dict:
-    """Feature columns of WAV payloads: rate, n_samples, duration_ms,
-    rms and peak (0 for a payload without samples)."""
-    parsed = [_wav_parse(p) for p in payloads]
+def _wav_run(parsed: list) -> dict:
     rate = np.array([r for r, _ in parsed], dtype=np.int64)
     n = np.array([len(d) // 2 for _, d in parsed], dtype=np.int64)
     s = np.frombuffer(b"".join(d for _, d in parsed), dtype="<i2")
@@ -239,13 +266,22 @@ def wav_batch(payloads: list) -> dict:
             "rms": rms, "peak": peak}
 
 
+def wav_batch(payloads: list) -> dict:
+    """Feature columns of WAV payloads: rate, n_samples, duration_ms,
+    rms and peak (0 for a payload without samples)."""
+    return _in_runs(_wav_run, map(_wav_parse, payloads),
+                    lambda rd: len(rd[1]) // 2)
+
+
+def _bmp_run(blocks: list) -> dict:
+    return _image_columns([b[2] for b in blocks], [b[3] for b in blocks],
+                          _dib_sums(blocks))
+
+
 def bmp_batch(payloads: list) -> dict:
     """Feature columns (width, height, mean_r/g/b) of BMP payloads."""
-    parsed = [_bmp_parse(p) for p in payloads]
-    sums = _dib_sums((p, off, w, h)
-                     for p, (off, w, h, _) in zip(payloads, parsed))
-    return _image_columns([w for _, w, _, _ in parsed],
-                          [h for _, _, h, _ in parsed], sums)
+    return _in_runs(_bmp_run, ((p,) + _bmp_parse(p)[:3] for p in payloads),
+                    lambda b: 3 * b[2] * b[3])
 
 
 def wav_features(payload: bytes) -> dict:
@@ -463,10 +499,7 @@ def _png_rows(payload: bytes):
     return h, w, ch, out
 
 
-def png_batch(payloads: list) -> dict:
-    """Feature columns (width, height, mean_r/g/b) of PNG payloads; a
-    gray image's one channel is all three, RGBA drops alpha."""
-    rows = [_png_rows(p) for p in payloads]
+def _png_run(rows: list) -> dict:
     sums = np.zeros((len(rows), 3), dtype=np.int64)
     for ch in _PNG_CHANNELS.values():
         idx = [i for i, r in enumerate(rows) if r[2] == ch]
@@ -477,6 +510,12 @@ def png_batch(payloads: list) -> dict:
                             [rows[i][0] * rows[i][1] for i in idx])
         sums[idx] = s[:, [0, 0, 0]] if ch == 1 else s[:, :3]
     return _image_columns([r[1] for r in rows], [r[0] for r in rows], sums)
+
+
+def png_batch(payloads: list) -> dict:
+    """Feature columns (width, height, mean_r/g/b) of PNG payloads; a
+    gray image's one channel is all three, RGBA drops alpha."""
+    return _in_runs(_png_run, map(_png_rows, payloads), lambda r: r[3].size)
 
 
 def png_features(payload: bytes) -> dict:
@@ -1256,27 +1295,29 @@ def _tile_sums(tiles: np.ndarray, scans: list) -> np.ndarray:
                                        cols - 1], nm)
 
 
-def jpeg_batch(payloads: list) -> dict:
-    """Feature columns (width, height, mean_r/g/b) of baseline JPEG
-    payloads.  Parse and Huffman decode run per payload; one
-    dequantise + IDCT covers every block of the list, then the tiles
-    and crop sums run once per MCU layout (gray, 4:4:4, 4:2:0 ...)."""
-    scans = [_jpeg_parse(p) for p in payloads]
+def _jpeg_run(scans: list) -> dict:
+    """Feature columns of parsed scans: per MCU layout (gray, 4:4:4,
+    4:2:0 ...), one Huffman pass per scan into one coefficient array,
+    then one dequantise + IDCT, one tile build and one crop sum over
+    every block of the layout."""
     groups: dict[tuple, list] = {}
     for i, j in enumerate(scans):
         groups.setdefault(j.layout, []).append(i)
-    ordered = [scans[i] for idx in groups.values() for i in idx]
     sums = np.zeros((len(scans), 3), dtype=np.int64)
-    if ordered:
-        pix = _jpeg_blocks(*_jpeg_coefficients(ordered))
-        start = 0
-        for layout, idx in groups.items():
-            end = start + sum(scans[i].nblocks for i in idx)
-            s = _tile_sums(_jpeg_tiles(layout, pix[start:end]),
-                           [scans[i] for i in idx])
-            sums[idx] = s[:, None] if s.ndim == 1 else s
-            start = end
+    for layout, idx in groups.items():
+        grp = [scans[i] for i in idx]
+        pix = _jpeg_blocks(*_jpeg_coefficients(grp))
+        s = _tile_sums(_jpeg_tiles(layout, pix), grp)
+        sums[idx] = s[:, None] if s.ndim == 1 else s
     return _image_columns([j.w for j in scans], [j.h for j in scans], sums)
+
+
+def jpeg_batch(payloads: list) -> dict:
+    """Feature columns (width, height, mean_r/g/b) of baseline JPEG
+    payloads, parsed one by one and decoded and reduced a run of
+    blocks at a time."""
+    return _in_runs(_jpeg_run, map(_jpeg_parse, payloads),
+                    lambda j: 64 * j.nblocks)
 
 
 def jpeg_features(payload: bytes) -> dict:
@@ -1338,11 +1379,9 @@ def encode_avi(frames: np.ndarray, rate: int = 10, scale: int = 1) -> bytes:
 def decode_avi(payload: bytes):
     """Uncompressed DIB AVI -> (rate, scale, frames (N,H,W,3) RGB)."""
     rate, scale, w, h, bottom_up, frames = _avi_parse(payload)
-    size = ((w * 3 + 3) & ~3) * h
     out = np.empty((len(frames), h, w, 3), dtype=np.uint8)
     for fi, off in enumerate(frames):
-        a = np.frombuffer(payload, dtype=np.uint8, count=size, offset=off)
-        out[fi] = _dib_unpack(a, w, h, bottom_up=bottom_up)
+        out[fi] = _dib_unpack(payload, off, w, h, bottom_up=bottom_up)
     return rate, scale, out
 
 
@@ -1421,24 +1460,30 @@ def _avi_parse(payload: bytes):
     return int(rate), int(scale), w, h, bottom_up, [off for off, _ in frames]
 
 
+def _avi_run(items: list, stride: int) -> dict:
+    k = np.array([len(range(0, len(a[5]), stride)) for _, _, a in items],
+                 dtype=np.int64)
+    rate, scale, w, h = (np.repeat(np.array([a[c] for _, _, a in items],
+                                            dtype=np.int64), k)
+                         for c in range(4))
+    fidx = _segment_offsets(k) * stride
+    cols = _image_columns(w, h, _dib_sums(
+        [(p, off, a[2], a[3]) for _, p, a in items for off in a[5][::stride]]))
+    cols.update(row=np.repeat(np.array([i for i, _, _ in items],
+                                       dtype=np.int64), k),
+                frame_idx=fidx, ts_ms=fidx * (1000 * scale) // rate)
+    return cols
+
+
 def avi_frame_batch(payloads: list, stride: int) -> dict:
     """Every ``stride``-th frame of each AVI payload: ``row`` (the
     payload's index in the list), frame_idx, ts_ms, width, height and
     the frame's mean_r/g/b, with the channel sums read straight from
     the sampled frames' DIB bytes."""
-    parsed = [_avi_parse(p) for p in payloads]
-    k = np.array([len(range(0, len(fr), stride)) for *_, fr in parsed],
-                 dtype=np.int64)
-    rate, scale, w, h = (np.repeat(np.array([a[c] for a in parsed],
-                                            dtype=np.int64), k)
-                         for c in range(4))
-    fidx = _segment_offsets(k) * stride
-    sums = _dib_sums((p, off, a[2], a[3]) for p, a in zip(payloads, parsed)
-                     for off in a[5][::stride])
-    cols = _image_columns(w, h, sums)
-    cols.update(row=np.repeat(np.arange(len(payloads)), k), frame_idx=fidx,
-                ts_ms=fidx * (1000 * scale) // rate)
-    return cols
+    return _in_runs(
+        lambda items: _avi_run(items, stride),
+        ((i, p, _avi_parse(p)) for i, p in enumerate(payloads)),
+        lambda x: len(range(0, len(x[2][5]), stride)) * 3 * x[2][2] * x[2][3])
 
 
 def avi_features(payload: bytes) -> dict:

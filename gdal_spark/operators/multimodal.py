@@ -16,10 +16,14 @@ grouped by kind and handed to one batch kernel per kind
 (``kernels.media.wav_batch`` / ``bmp_batch`` / ``png_batch`` /
 ``jpeg_batch`` / ``avi_frame_batch``).  A kernel parses and
 entropy-decodes its payloads one by one, then runs the JPEG IDCT and
-every feature reduction once for the whole batch, and returns numpy
-columns that become the output Arrow batch: no per-row dicts, no
-pandas.  Features are bit-identical to the per-payload
-``kernels.media.*_features``.
+every feature reduction once per run of payloads (up to
+``kernels.media._RUN_SAMPLES`` decoded samples, so a batch of large
+payloads is worked through a run at a time and a payload of a run or
+more alone), and returns numpy columns that become the output Arrow
+batch: no per-row dicts, no pandas.  Features are bit-identical to the
+per-payload ``kernels.media.*_features``.  The gain is the numpy
+per-call cost saved on small payloads; a large payload decodes as it
+would on its own.
 """
 
 from __future__ import annotations
@@ -128,8 +132,6 @@ def frame_sample(df: DataFrame, id_col: str = "doc_id",
     ).withColumn("ts_ms", F.col("frame_idx") * fps_ms)
 
 
-_MEDIA_KERNELS = {"wav": "wav_batch", "bmp": "bmp_batch",
-                  "png": "png_batch", "jpeg": "jpeg_batch"}
 _MEDIA_FEATURES = (("rate", "int"), ("n_samples", "int"),
                    ("duration_ms", "int"), ("rms", "double"), ("peak", "int"),
                    ("width", "int"), ("height", "int"), ("mean_r", "double"),
@@ -148,12 +150,12 @@ def decode_media_real(df: DataFrame, id_col: str = "doc_id",
 
     One ``mapInArrow`` pass over the (id, kind, payload) projection.
     Each Arrow batch is grouped by kind and each group goes to one
-    batch kernel (``kernels.media.<kind>_batch``), which parses every
-    payload and then reduces the whole group at once; the kernels'
-    numpy columns become the output batch directly, with no per-row
-    dicts and no pandas.  Per-kind feature columns (0 where not
-    applicable): rate, n_samples, duration_ms, rms, peak for audio;
-    width, height, mean_r/g/b for images.  An unknown kind, or a
+    batch kernel (``kernels.media.<kind>_batch``), which parses its
+    payloads one by one and decodes and reduces them a bounded run at
+    a time; the kernels' numpy columns become the output batch
+    directly, with no per-row dicts and no pandas.  Per-kind feature
+    columns (0 where not applicable): rate, n_samples, duration_ms,
+    rms, peak for audio; width, height, mean_r/g/b for images.  An unknown kind, or a
     payload its decoder rejects, raises ValueError and fails the job.
     """
     return df.select(F.col(id_col).cast("long").alias("doc_id"),
@@ -168,6 +170,8 @@ def _decode_batches(batches):
 
     from ..kernels import media as km
 
+    kernels = {"wav": km.wav_batch, "bmp": km.bmp_batch,
+               "png": km.png_batch, "jpeg": km.jpeg_batch}
     for rb in batches:
         if rb.num_rows == 0:
             continue
@@ -178,12 +182,11 @@ def _decode_batches(batches):
         cols = {c: np.zeros(rb.num_rows, dtype=np.int64 if t == "int"
                             else np.float64) for c, t in _MEDIA_FEATURES}
         for kind, idx in by_kind.items():
-            if kind not in _MEDIA_KERNELS:
+            if kind not in kernels:
                 raise ValueError(
                     f"no stdlib codec for kind={kind!r}; "
                     "use decode_media_stub for compressed formats")
-            feats = getattr(km, _MEDIA_KERNELS[kind])(
-                [payloads[i] for i in idx])
+            feats = kernels[kind]([payloads[i] for i in idx])
             for c, v in feats.items():
                 cols[c][idx] = v
         yield pa.RecordBatch.from_arrays(
@@ -231,10 +234,10 @@ def frame_sample_real(df: DataFrame, id_col: str = "doc_id",
     ``stride``-th frame with its timestamp and per-frame channel
     means.  One ``mapInArrow`` pass: each Arrow batch goes to one
     ``kernels.media.avi_frame_batch`` call, which walks every payload's
-    chunks and then sums the sampled frames' DIB bytes for the whole
-    batch at once, so the exchanged payload is read exactly once where
-    it lands — the decode-where-the-bytes-are rule that keeps a 100 TB
-    video corpus off the driver."""
+    chunks and sums the sampled frames' DIB bytes a bounded run of
+    payloads at a time, so the exchanged payload is read exactly once
+    where it lands — the decode-where-the-bytes-are rule that keeps a
+    100 TB video corpus off the driver."""
     if stride < 1:
         raise ValueError(f"frame stride {stride} < 1")
     return df.select(F.col(id_col).cast("long").alias("doc_id"),

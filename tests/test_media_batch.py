@@ -123,6 +123,54 @@ def test_avi_frame_batch_bit_identical_to_decoded_frames():
             assert np.array_equal(got[col], m[:, c])
 
 
+def _large_payload(kind):
+    """One payload of each kind big enough that a few fill a run."""
+    yy, xx = np.mgrid[0:256, 0:256]
+    img = np.stack([(yy + xx) // 2, yy, 255 - xx], axis=-1).astype(np.uint8)
+    if kind == "jpeg":
+        return km.encode_jpeg(img, quality=50, subsampling="420")
+    if kind == "png":
+        return km.encode_png(img[:96], "cycle")
+    if kind == "bmp":
+        return km.encode_bmp(img[:, :80])
+    return km.encode_wav((np.arange(90_000) * 37 % 65536 - 32768).astype(np.int16))
+
+
+@pytest.mark.parametrize("kind", ["jpeg", "png", "bmp", "wav"])
+def test_batch_kernel_peak_memory_is_one_runs_not_the_batchs(kind):
+    """A batch kernel decodes a run of at most _RUN_SAMPLES samples at a
+    time, so six runs' worth of payloads peak like one run's worth; a
+    kernel that decoded the whole list at once would peak about six
+    times higher.  The features still match the per-payload ones across
+    the run boundaries."""
+    import tracemalloc
+
+    p = _large_payload(kind)
+    kernel = getattr(km, f"{kind}_batch")
+    samples = {"jpeg": lambda: 64 * km._jpeg_parse(p).nblocks,
+               "png": lambda: km.decode_png(p).size,
+               "bmp": lambda: km.decode_bmp(p).size,
+               "wav": lambda: km.decode_wav(p)[1].size}[kind]()
+    per_run = km._RUN_SAMPLES // samples
+    assert per_run >= 2
+    kernel([p])                              # warm caches (Huffman LUTs)
+
+    def peak(payloads):
+        tracemalloc.start()
+        try:
+            got = kernel(payloads)
+            return tracemalloc.get_traced_memory()[1], got
+        finally:
+            tracemalloc.stop()
+
+    one_run, _ = peak([p] * per_run)
+    six_runs, got = peak([p] * (6 * per_run))
+    assert six_runs <= 1.25 * one_run, (six_runs, one_run)
+    want = _PER_PAYLOAD[kind](p)
+    for c, v in want.items():
+        assert (got[c] == v).all(), c
+
+
 # ---- edge semantics -----------------------------------------------------
 def test_zero_sample_wav_gives_zero_rms_and_peak_inside_a_batch():
     wavs = [km.encode_wav(np.array(s, dtype=np.int16))

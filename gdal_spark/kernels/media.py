@@ -368,7 +368,7 @@ def encode_png(img: np.ndarray, filter_mode: str = "cycle") -> bytes:
     h, w, _ = img.shape
     raw = img.reshape(h, w * ch).astype(np.int16)
     prior = np.zeros(w * ch, dtype=np.int16)
-    left = np.zeros_like(raw[0])
+    left = np.zeros(w * ch, dtype=np.int16)
     out = bytearray()
     for r in range(h):
         cur = raw[r]
@@ -471,7 +471,7 @@ def _png_rows(payload: bytes):
         elif f == 3:                       # Average
             rec = bytearray(cur.tobytes())
             pr = prior.tobytes()
-            for i in range(ch):
+            for i in range(min(ch, stride)):
                 rec[i] = (rec[i] + (pr[i] >> 1)) & 0xFF
             for i in range(ch, stride):
                 rec[i] = (rec[i] + ((rec[i - ch] + pr[i]) >> 1)) & 0xFF
@@ -479,7 +479,7 @@ def _png_rows(payload: bytes):
         elif f == 4:                       # Paeth
             rec = bytearray(cur.tobytes())
             pr = prior.tobytes()
-            for i in range(ch):            # left = upleft = 0: predicts up
+            for i in range(min(ch, stride)):  # left = upleft = 0: predicts up
                 rec[i] = (rec[i] + pr[i]) & 0xFF
             for i in range(ch, stride):
                 a, b, c = rec[i - ch], pr[i], pr[i - ch]

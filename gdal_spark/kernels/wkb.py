@@ -174,8 +174,23 @@ def wkb_collection(wkbs, base: int = GEOMETRYCOLLECTION,
     return struct.pack("<BI", _LE, iso_type(base, z, m)) + body
 
 
+# the part types each homogeneous collection may hold (a corrupt part
+# type is refused here, not by a TypeError later); GeometryCollection
+# takes any part
+_PART_TYPES = {
+    MULTIPOINT: (POINT,), MULTILINESTRING: (LINESTRING,),
+    MULTIPOLYGON: (POLYGON,), POLYHEDRALSURFACE: (POLYGON, TRIANGLE),
+    TIN: (POLYGON, TRIANGLE), MULTICURVE: (LINESTRING, CIRCULARSTRING),
+}
+_MAX_DEPTH = 32  # collection nesting, as OGR's recursion limit
+
+
 def _read_header(buf: memoryview, off: int):
+    if off + 5 > len(buf):
+        raise ValueError(f"truncated WKB header at byte {off}")
     bo = buf[off]
+    if bo > 1:
+        raise ValueError(f"bad WKB byte-order marker {bo} at byte {off}")
     fmt = "<I" if bo == 1 else ">I"
     (raw,) = struct.unpack_from(fmt, buf, off + 1)
     base, z, m = decode_type(raw)
@@ -198,8 +213,13 @@ def parse_wkb(data: bytes):
 def parse_wkb_full(data: bytes):
     """Parse WKB -> (base_type, has_z, has_m, payload) with FULL-width
     coordinates: each vertex carries 2+z+m ordinates in (x, y, z, m)
-    order, exactly as OGRGeometryFactory::createFromWkb reads them."""
-    (base, z, m, payload), _ = _parse_at(memoryview(data), 0)
+    order, exactly as OGRGeometryFactory::createFromWkb reads them.
+
+    Malformed input of any kind raises ``ValueError``."""
+    try:
+        (base, z, m, payload), _ = _parse_at(memoryview(data), 0)
+    except struct.error as exc:  # a count or coordinate past the end
+        raise ValueError(f"truncated WKB: {exc}") from None
     return base, z, m, payload
 
 
@@ -220,7 +240,7 @@ def _project2d(base, payload):
     return [[r[:, :2] for r in poly] for poly in payload]
 
 
-def _parse_at(buf: memoryview, off: int):
+def _parse_at(buf: memoryview, off: int, depth: int = 0):
     le, base, z, m, off = _read_header(buf, off)
     bo = "<" if le else ">"
     dims = 2 + int(z) + int(m)
@@ -244,24 +264,19 @@ def _parse_at(buf: memoryview, off: int):
             rings.append(a.reshape(n, dims).astype(np.float64))
             off += 4 + step * n
         return (base, z, m, rings), off
-    if base in (MULTIPOINT, MULTILINESTRING, MULTIPOLYGON,
-                POLYHEDRALSURFACE, TIN):
+    if base in _PART_TYPES or base == GEOMETRYCOLLECTION:
+        if depth >= _MAX_DEPTH:
+            raise ValueError(f"WKB collections nested over {_MAX_DEPTH} deep")
         (np_,) = struct.unpack_from(bo + "I", buf, off)
         off += 4
         parts = []
         for _ in range(np_):
-            (pb, _pz, _pm, pp), off = _parse_at(buf, off)
-            parts.append(pp)
-        return (base, z, m, parts), off
-    if base in _TAGGED:
-        # parts keep their own type tag (GC members are heterogeneous;
-        # MultiCurve mixes LineString and CircularString)
-        (np_,) = struct.unpack_from(bo + "I", buf, off)
-        off += 4
-        parts = []
-        for _ in range(np_):
-            (pb, _pz, _pm, pp), off = _parse_at(buf, off)
-            parts.append((pb, pp))
+            (pb, _pz, _pm, pp), off = _parse_at(buf, off, depth + 1)
+            if pb not in _PART_TYPES.get(base, (pb,)):
+                raise ValueError(f"WKB type {base} holds a type {pb} part")
+            # GC and MultiCurve parts keep their own type tag (GC members
+            # are heterogeneous; MultiCurve mixes Line- and CircularString)
+            parts.append((pb, pp) if base in _TAGGED else pp)
         return (base, z, m, parts), off
     raise ValueError(f"unsupported WKB geometry type {base}")
 

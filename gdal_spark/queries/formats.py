@@ -188,7 +188,7 @@ def geojson_seq_scan_q(spark, sf_dir):
                                              100.0 - i * 2.25]},
                 "properties": {"name": f"f{i}", "val": (i * 7) % 13},
             }, sort_keys=True) + "\n")
-    df = read_geojson_seq(spark, path, n_partitions=3)
+    df = read_geojson_seq(spark, path)
     props = F.from_json("props", "name string, val long")
     return df.select(
         "fid", F.col("xmin").alias("x"), F.col("ymin").alias("y"),

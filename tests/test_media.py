@@ -191,6 +191,17 @@ def test_wav_hostile_input_raises_value_error_with_bounded_allocation(hostile_co
     hostile_contract(km.decode_wav, km.encode_wav(s), seed=9, head=64, slack=64 * 1024)
 
 
+@pytest.mark.parametrize("shape", [(0, 5), (5, 0), (0, 0)])
+@pytest.mark.parametrize("channels", [None, 3, 4], ids=["gray", "rgb", "rgba"])
+def test_png_zero_size_roundtrip(shape, channels):
+    """A zero-row or zero-column image encodes (every filter of the
+    cycle, none of them reading a byte that is not there) and decodes
+    back to the same shape."""
+    img = np.zeros(shape if channels is None else (*shape, channels), np.uint8)
+    out = km.decode_png(km.encode_png(img))
+    assert out.shape == img.shape and out.dtype == np.uint8
+
+
 def test_png_inflates_no_more_than_ihdr_declares():
     """A 1x1 gray PNG whose IDAT inflates to 8 MB is refused after
     inflating two bytes past its declared size, not after all 8 MB;

@@ -226,3 +226,58 @@ def test_explode_zm_multicurve_parts(spark):
         base, hz, hm, payload = kw.parse_wkb_full(bytes(r.wkb))
         assert hz and hm
         np.testing.assert_array_equal(payload, src)
+
+
+# ---- hostile input: ValueError only, allocation bounded -------------------
+def _holed_square():
+    ring = lambda *xy: np.array(xy, dtype=np.float64)  # noqa: E731
+    return kw.wkb_polygon([ring((0, 0), (10, 0), (10, 10), (0, 10), (0, 0)),
+                           ring((2, 2), (3, 2), (3, 3), (2, 2))])
+
+
+@pytest.mark.parametrize("parse", [kw.parse_wkb_full, kw.parse_wkb,
+                                   kw.wkb_bbox, kw.polygon_rings],
+                         ids=lambda f: f.__name__)
+def test_wkb_hostile_input_raises_value_error_with_bounded_allocation(
+        hostile_contract, parse):
+    hostile_contract(parse, _holed_square(), seed=7, head=32, slack=16 * 1024)
+
+
+@pytest.mark.parametrize("blob", [
+    kw.wkb_multipolygon([[np.zeros((4, 2))], [np.ones((4, 2))]]),
+    kw.wkb_multipoint([(1.0, 2.0), (3.0, 4.0)]),
+    kw.wkb_collection([kw.wkb_point(1, 2), kw.wkb_linestring(np.zeros((2, 2))),
+                       _holed_square()]),
+], ids=["multipolygon", "multipoint", "collection"])
+def test_wkb_collection_mutants_raise_value_error(hostile_contract, blob):
+    """A mutated part header (wrong part type, byte order or length)
+    is refused as ValueError, never IndexError or TypeError."""
+    hostile_contract(kw.wkb_bbox, blob, seed=11, head=32, slack=16 * 1024)
+
+
+def test_wkb_part_types_and_nesting_are_checked():
+    bad_part = kw.wkb_multipoint([(1.0, 2.0)])[:9] + kw.wkb_linestring(
+        np.zeros((2, 2)))
+    with pytest.raises(ValueError, match="holds a type 2 part"):
+        kw.parse_wkb(bad_part)
+    deep = kw.wkb_point(0, 0)
+    for _ in range(40):
+        deep = kw.wkb_collection([deep])
+    with pytest.raises(ValueError, match="nested"):
+        kw.parse_wkb(deep)
+    with pytest.raises(ValueError, match="byte-order"):
+        kw.parse_wkb(b"\x02" + kw.wkb_point(0, 0)[1:])
+
+
+def test_wkb_huge_part_count_raises_before_allocating():
+    import tracemalloc
+
+    blob = struct.pack("<BII", 1, kw.MULTIPOLYGON, 1 << 28)
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError):
+            kw.parse_wkb_full(blob)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 64 * 1024

@@ -68,7 +68,10 @@ def point_segment_dist2(px, py, ax, ay, bx, by):
 
 def bbox_intersects(a, b) -> bool:
     """Envelope overlap — the pessimistic phase-1 test
-    (ogr_wkb.h:36 OGRWKBIntersectsPessimistic role)."""
+    (ogr_wkb.h:36 OGRWKBIntersectsPessimistic role).  An EMPTY
+    geometry's envelope (None, see ``wkb_bbox``) overlaps nothing."""
+    if a is None or b is None:
+        return False
     return not (a[2] < b[0] or b[2] < a[0] or a[3] < b[1] or b[3] < a[1])
 
 

@@ -1604,7 +1604,10 @@ def decode_mp4_meta(payload: bytes) -> dict:
                 walk(body, pos + sz, depth + 1)
             pos += sz
 
-    walk(0, len(payload), 0)
+    try:
+        walk(0, len(payload), 0)
+    except (struct.error, IndexError) as exc:   # a box body cut short
+        raise ValueError(f"truncated ISO BMFF box: {exc}") from None
     if brand is None or timescale is None:
         raise ValueError("not an ISO BMFF payload (missing ftyp/mvhd)")
     return {

@@ -24,6 +24,7 @@ length) for Z-aware paths (explode, curve linearization, roundtrip).
 
 from __future__ import annotations
 
+import math
 import struct
 
 import numpy as np
@@ -283,15 +284,24 @@ def _parse_at(buf: memoryview, off: int, depth: int = 0):
 
 def wkb_bbox(data: bytes):
     """(minx, miny, maxx, maxy) scanned from WKB coords — the
-    no-deserialize envelope of OGRWKBGetBoundingBox (ogr_wkb.h:30-34)."""
+    no-deserialize envelope of OGRWKBGetBoundingBox (ogr_wkb.h:30-34).
+    None for an EMPTY geometry (no vertex, or POINT EMPTY's NaN x and
+    y): every reader gives such a feature a NULL bbox."""
     gtype, payload = parse_wkb(data)
     if gtype == POINT:
         x, y = payload
-        return x, y, x, y
+        return None if np.isnan(x) and np.isnan(y) else (x, y, x, y)
     coords = _all_coords(gtype, payload)
+    if not len(coords):
+        return None
     mn = coords.min(axis=0)
     mx = coords.max(axis=0)
     return float(mn[0]), float(mn[1]), float(mx[0]), float(mx[1])
+
+
+def _stack(parts) -> np.ndarray:
+    """Vertices of several parts as one (N, 2) array; (0, 2) for none."""
+    return np.vstack(parts) if len(parts) else np.empty((0, 2))
 
 
 def _all_coords(gtype, payload):
@@ -300,19 +310,19 @@ def _all_coords(gtype, payload):
     if gtype in (LINESTRING, CIRCULARSTRING):
         return payload
     if gtype in (POLYGON, TRIANGLE):
-        return np.vstack(payload)
+        return _stack(payload)
     if gtype in _TAGGED:                  # GC / MultiCurve: tagged parts
-        return np.vstack([_all_coords(t, p) for t, p in payload])
+        return _stack([_all_coords(t, p) for t, p in payload])
     # multi* / PolyhedralSurface / TIN
     parts = []
     for p in payload:
         if isinstance(p, tuple):          # multipoint part
             parts.append(np.array([p], dtype=np.float64))
         elif isinstance(p, list):         # multipolygon/PS/TIN part
-            parts.append(np.vstack(p))
+            parts.append(_stack(p))
         else:
             parts.append(p)
-    return np.vstack(parts)
+    return _stack(parts)
 
 
 def polygon_rings(data: bytes):
@@ -356,11 +366,26 @@ def _wkt_coord_groups(body: str):
     return groups
 
 
+# ``<kind> EMPTY`` WKT -> WKB; POINT EMPTY is NaN x and y, as OGR writes it
+_EMPTY_WKT = {
+    "POINT EMPTY": lambda: wkb_point(math.nan, math.nan),
+    "LINESTRING EMPTY": lambda: wkb_linestring(np.empty((0, 2))),
+    "POLYGON EMPTY": lambda: wkb_polygon([]),
+    "MULTIPOINT EMPTY": lambda: wkb_multipoint([]),
+    "MULTILINESTRING EMPTY": lambda: wkb_multilinestring([]),
+    "MULTIPOLYGON EMPTY": lambda: wkb_multipolygon([]),
+}
+
+
 def wkt_to_wkb(wkt: str) -> bytes:
-    """2-D WKT (POINT, LINESTRING, POLYGON and their MULTI forms) ->
-    WKB; ``ValueError`` for any other text."""
+    """2-D WKT (POINT, LINESTRING, POLYGON and their MULTI forms, each
+    also as ``<kind> EMPTY``) -> WKB; ``ValueError`` for any other
+    text."""
     w = wkt.strip()
     up = w.upper()
+    empty = _EMPTY_WKT.get(" ".join(up.split()))
+    if empty is not None:
+        return empty()
     if "(" not in w:
         raise ValueError(f"unsupported WKT: {w[:30]}")
     body = w[w.index("("):w.rindex(")") + 1]

@@ -20,8 +20,12 @@ distributed plan:
       bbox-inside accept); the rest ray-cast as a JVM fold over the
       candidate's edge array (a boundary cell's row edges, or the full
       ring) — bit-identical to OGRLinearRing::isPointInRing
-      (ogrlinearring.cpp:462-532); polygon attributes by fid; OGR
-      first-match / LEFT JOIN shape.
+      (ogrlinearring.cpp:462-532); OGR first-match / LEFT JOIN shape.
+
+The polygon attributes ride in the cover (and edge table) rows as one
+struct column, ``_attrs``, so the small polygon side is broadcast once
+per join: a second broadcast of the attributes by fid would cost a
+Spark job of its own.
 
 Matching GDAL's index-nested-loop (SetSpatialFilter per feature,
 ogrlayer.cpp:3345) result set with a shuffle plan that survives
@@ -30,11 +34,10 @@ ogrlayer.cpp:3345) result set with a shuffle plan that survives
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import StructField, StructType
 
 from .. import functions as gf
 from ..kernels.cells import TileGrid, pack_cell
@@ -75,31 +78,77 @@ _EDGE_ARRAY = "array<struct<ex1:double,ey1:double,ex2:double,ey2:double>>"
 _EDGES_SCHEMA = f"fid bigint, edges {_EDGE_ARRAY}"
 _COVER_SCHEMA = ("cell bigint, fid bigint, xmin double, ymin double, "
                  f"xmax double, ymax double, inside boolean, edges {_EDGE_ARRAY}")
+_ATTRS = "_attrs"
+# polygon layer columns the operator consumes; every other one is an
+# attribute (names match case-insensitively, like Spark's resolution)
+_LAYER_KEYS = ("fid", "wkb", "xmin", "ymin", "xmax", "ymax")
+
+
+def _attr_cols(polys: DataFrame) -> list[str]:
+    return [c for c in polys.columns if c.lower() not in _LAYER_KEYS]
+
+
+def _layer(polys: DataFrame) -> DataFrame:
+    """(fid, wkb[, _attrs]) of a polygon layer: its attribute columns,
+    in order, packed into one struct (absent when there are none)."""
+    attrs = _attr_cols(polys)
+    if not attrs:
+        return polys.select("fid", "wkb")
+    return polys.select("fid", "wkb", F.struct(
+        *[F.col(f"`{c}`") for c in attrs]).alias(_ATTRS))
+
+
+def _arrow_schema(ddl: str, layer: DataFrame) -> str | StructType:
+    """Output schema ``ddl`` of an Arrow map over ``layer``, plus the
+    layer's ``_attrs`` struct when it has one."""
+    if _ATTRS not in layer.columns:
+        return ddl
+    return StructType(StructType.fromDDL(ddl).fields
+                      + [StructField(_ATTRS, layer.schema[_ATTRS].dataType)])
+
+
+def _edge_lists(edges: np.ndarray, counts: np.ndarray):
+    """Arrow list<struct<ex1..ey2>> whose row i holds the next
+    ``counts[i]`` rows of the (M, 4) ``edges``."""
+    import pyarrow as pa
+
+    offsets = np.concatenate([[0], np.cumsum(counts)]).astype(np.int32)
+    struct = pa.StructArray.from_arrays(
+        [pa.array(edges[:, k]) for k in range(4)], names=list(_EDGE_FIELDS))
+    return pa.ListArray.from_arrays(pa.array(offsets), struct)
 
 
 def edges_table(polys: DataFrame) -> DataFrame:
-    """(fid, edges array<struct>) table for the JVM exact phase,
-    built DISTRIBUTIVELY (Arrow mapInPandas over wkb) — never a
+    """(fid, edges array<struct>[, _attrs]) table for the JVM exact
+    phase, built DISTRIBUTIVELY (one Arrow map over wkb) — never a
     driver collect, so a 10^6-polygon layer decodes in parallel on
     executors.  Edges use the kernel's (vertex i+1, vertex i)
     pairing; even-odd crossings over the full edge set handles holes
-    exactly like points_in_polygon."""
+    exactly like points_in_polygon.  The layer's attribute columns
+    (all but fid, wkb and the bbox) pass through, unchanged, as the
+    ``_attrs`` struct the join's output expands."""
+    def gen(batches):
+        import pyarrow as pa
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fids, edge_lists = [], []
-            for fid, wkb in zip(pdf["fid"], pdf["wkb"]):
-                e = kpip.ring_edges(kwkb.polygon_rings(bytes(wkb)))
-                fids.append(int(fid))
-                edge_lists.append([dict(zip(_EDGE_FIELDS, v)) for v in e.tolist()])
-            yield pd.DataFrame({"fid": fids, "edges": edge_lists})
+        for batch in batches:
+            per_row = [e for _, e in _polygon_edges(batch)]
+            arrays = [batch.column("fid").cast(pa.int64()), _edge_lists(
+                np.vstack([np.empty((0, 4)), *per_row]),
+                np.array([len(e) for e in per_row], np.int64))]
+            names = ["fid", "edges"]
+            if _ATTRS in batch.schema.names:
+                arrays.append(batch.column(_ATTRS))
+                names.append(_ATTRS)
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return polys.select("fid", "wkb").mapInPandas(gen, _EDGES_SCHEMA)
+    layer = _layer(polys)
+    return layer.mapInArrow(gen, _arrow_schema(_EDGES_SCHEMA, layer))
 
 
 def prepare_edges(polys: DataFrame) -> DataFrame:
-    """Build and persist the exact-phase edge table for a polygon
-    layer ONCE, for reuse across spatial_join calls.
+    """Build and persist the exact-phase edge table (``edges_table``,
+    attributes included) for a polygon layer ONCE, for reuse across
+    spatial_join calls.
 
     The WKB decode is the polygon side's costly Python (Arrow) stage;
     a layer queried repeatedly (the tile pipeline, the bench, any
@@ -219,15 +268,19 @@ def _polygon_edges(batch):
 
 def cell_cover(layer: DataFrame, grid: TileGrid, zoom: int) -> DataFrame:
     """Classified cell cover of a polygon layer, from its edge table
-    (``edges_table`` / ``prepare_edges``) or its (fid, wkb) columns.
+    (``edges_table`` / ``prepare_edges``) or its (fid, wkb) columns,
+    either with an optional ``_attrs`` struct.
 
-    One row (cell, fid, xmin, ymin, xmax, ymax, inside, edges) per
-    boundary or inside cell of each polygon's bbox (see
+    One row (cell, fid, xmin, ymin, xmax, ymax, inside, edges[,
+    _attrs]) per boundary or inside cell of each polygon's bbox (see
     ``_classify``); xmin..ymax is the vertex envelope, inside cells
-    carry no edges.  One Arrow map on the input's own partitions:
-    numpy work per polygon, no per-cell Python, no driver collect.
-    Reading WKB directly, rather than a chained ``edges_table``,
-    keeps the polygon side to one Python worker per task.
+    carry no edges, and ``_attrs`` is the polygon row's own struct
+    (``pa.Array.take`` per cover row), so the join needs no second
+    lookup of the attributes by fid.  One Arrow map on the input's own
+    partitions: numpy work per polygon, no per-cell Python, no driver
+    collect.  Reading WKB directly, rather than a chained
+    ``edges_table``, keeps the polygon side to one Python worker per
+    task.
     """
     def gen(batches):
         import pyarrow as pa
@@ -237,8 +290,8 @@ def cell_cover(layer: DataFrame, grid: TileGrid, zoom: int) -> DataFrame:
                    "xmin": [np.empty(0)], "ymin": [np.empty(0)],
                    "xmax": [np.empty(0)], "ymax": [np.empty(0)],
                    "inside": [np.empty(0, bool)], "n": [np.empty(0, np.int64)],
-                   "edges": [np.empty((0, 4))]}
-            for fid, e in _polygon_edges(batch):
+                   "edges": [np.empty((0, 4))], "row": [np.empty(0, np.int64)]}
+            for i, (fid, e) in enumerate(_polygon_edges(batch)):
                 rows = None if fid is None else _classify(e, grid, zoom)
                 if rows is None:
                     continue
@@ -251,32 +304,34 @@ def cell_cover(layer: DataFrame, grid: TileGrid, zoom: int) -> DataFrame:
                 out["inside"].append(inside)
                 out["n"].append(n_edges)
                 out["edges"].append(e[idx])
+                out["row"].append(np.full(tx.size, i, np.int64))
             cols = {c: np.concatenate(v) for c, v in out.items()}
-            ecat, n = cols.pop("edges"), cols.pop("n")
-            offsets = np.concatenate([[0], np.cumsum(n)]).astype(np.int32)
-            struct = pa.StructArray.from_arrays(
-                [pa.array(ecat[:, k]) for k in range(4)], names=list(_EDGE_FIELDS))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(v) for v in cols.values()]
-                + [pa.ListArray.from_arrays(pa.array(offsets), struct)],
-                names=[*cols, "edges"])
+            ecat, n, row = cols.pop("edges"), cols.pop("n"), cols.pop("row")
+            arrays = [pa.array(v) for v in cols.values()] + [_edge_lists(ecat, n)]
+            names = [*cols, "edges"]
+            if _ATTRS in batch.schema.names:
+                arrays.append(batch.column(_ATTRS).take(pa.array(row)))
+                names.append(_ATTRS)
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return layer.mapInArrow(gen, _COVER_SCHEMA)
+    return layer.mapInArrow(gen, _arrow_schema(_COVER_SCHEMA, layer))
 
 
-def _exact_tail(cand: DataFrame, points: DataFrame, polys: DataFrame,
-                first_match: bool, how: str) -> DataFrame:
+def _exact_tail(cand: DataFrame, points: DataFrame, first_match: bool,
+                how: str) -> DataFrame:
     """Phase 2 of every candidate generator.
 
     cand: the point columns + (cell, fid, xmin, ymin, xmax, ymax,
-    inside, edges) of each candidate (point, polygon) pair.  Envelope
-    pretest, then inside-accept or the JVM ray-cast over the
-    candidate's edge array (no Python workers), polygon attributes by
-    fid, then the OGR join shape.  The whole point row is the point's
-    identity — null-safe, with multiplicity — so ``first_match``
-    returns one row per input row and ``how='left'`` exactly the input
-    rows without a match.  The pretest also drops the non-finite
-    points that the clamped cell function puts in a border cell.
+    inside, edges[, _attrs]) of each candidate (point, polygon) pair.
+    Envelope pretest, then inside-accept or the JVM ray-cast over the
+    candidate's edge array (no Python workers), then the OGR join
+    shape.  The output is (fid, point columns, polygon attributes): the
+    attributes are the candidate's own ``_attrs`` fields, so this phase
+    joins nothing.  The whole point row is the point's identity —
+    null-safe, with multiplicity — so ``first_match`` returns one row
+    per input row and ``how='left'`` exactly the input rows without a
+    match.  The pretest also drops the non-finite points that the
+    clamped cell function puts in a border cell.
     """
     matched = (
         cand.filter(
@@ -285,10 +340,9 @@ def _exact_tail(cand: DataFrame, points: DataFrame, polys: DataFrame,
             & (F.col("inside")
                | gf.pip_inside_col(F.col("edges"), F.col("x"), F.col("y"))))
         .drop("edges", "inside", "cell", "xmin", "ymin", "xmax", "ymax"))
-
-    # re-attach full polygon attributes (cheap broadcast by fid)
-    attrs = polys.drop("wkb", "xmin", "ymin", "xmax", "ymax")
-    matched = matched.join(F.broadcast(attrs), "fid", "inner")
+    rest = [F.col(f"`{c}`") for c in matched.columns if c not in ("fid", _ATTRS)]
+    attrs = [f"{_ATTRS}.*"] if _ATTRS in matched.columns else []
+    matched = matched.select("fid", *rest, *attrs)
 
     if first_match:
         w = Window.partitionBy(*points.columns).orderBy(F.col("fid").asc())
@@ -298,6 +352,17 @@ def _exact_tail(cand: DataFrame, points: DataFrame, polys: DataFrame,
         unmatched = points.exceptAll(matched.select(*points.columns))
         matched = matched.unionByName(unmatched, allowMissingColumns=True)
     return matched
+
+
+def _check_edges(edges: DataFrame, polys: DataFrame) -> None:
+    """A prepared edge table carries the attributes of the layer it was
+    built from; they must be the attributes of ``polys``."""
+    got = ([f.name for f in edges.schema[_ATTRS].dataType.fields]
+           if _ATTRS in edges.columns else [])
+    if got != _attr_cols(polys):
+        raise ValueError(
+            f"edges carries attributes {got}, the polygon layer "
+            f"{_attr_cols(polys)}: build it with prepare_edges(polys)")
 
 
 def spatial_join(points: DataFrame, polys: DataFrame, grid: TileGrid,
@@ -323,16 +388,22 @@ def spatial_join(points: DataFrame, polys: DataFrame, grid: TileGrid,
     edges  : pre-built edge table from ``prepare_edges(polys)`` —
              reuses one persisted WKB decode across repeated joins on
              the same layer; each call classifies its cell cover from
-             it (``cell_cover``, one small Python stage).
+             it (``cell_cover``, one small Python stage).  Its
+             attributes must be those of ``polys`` (ValueError).
+
+    Output: (fid, the point columns, the polygon attributes in layer
+    order).  The attributes travel in the cover rows, so a join
+    broadcasts (or shuffles) the polygon side once.
 
     On a streaming ``points`` frame with ``broadcast=True`` this is the
     stream-static join: Structured Streaming runs it statelessly per
     micro-batch (inner only; ``first_match`` and ``how='left'`` need
     batch input).
     """
+    if edges is not None:
+        _check_edges(edges, polys)
     pts = points.withColumn("cell", gf.cell_col(grid, zoom, F.col("x"), F.col("y")))
-    cover = cell_cover(polys.select("fid", "wkb") if edges is None else edges,
-                       grid, zoom)
+    cover = cell_cover(_layer(polys) if edges is None else edges, grid, zoom)
 
     if salt == "auto":
         # hot-cell diagnostic on the POINT side drives the salt factor
@@ -364,7 +435,7 @@ def spatial_join(points: DataFrame, polys: DataFrame, grid: TileGrid,
     cand = pts.join(right, join_keys, "inner")
     if salt and salt > 1:
         cand = cand.drop("_salt")
-    return _exact_tail(cand, points, polys, first_match, how)
+    return _exact_tail(cand, points, first_match, how)
 
 
 def spatial_join_s2(points: DataFrame, polys: DataFrame,
@@ -380,9 +451,11 @@ def spatial_join_s2(points: DataFrame, polys: DataFrame,
     Phase 1 keys both sides on level-``level`` S2 cells: points via
     the Arrow pandas UDF (kernels/s2.py, one key per point), polygons
     via the bbox coverer (overcovering candidate set; undercoverage
-    bounded by the coverer's dilation rule).  Phase 1b/2 are the SAME
-    ``_exact_tail`` as spatial_join, so the exact semantics are shared,
-    not re-implemented.
+    bounded by the coverer's dilation rule).  Phase 1b joins the edge
+    table (``edges``, or ``edges_table(polys)``), which also carries
+    the polygon attributes.  Phase 2 is the SAME ``_exact_tail`` as
+    spatial_join, so the exact semantics are shared, not
+    re-implemented; the output has spatial_join's columns.
 
     points: DF with lon/lat degree columns named x, y.
     polys:  DF(fid, wkb, xmin/ymin/xmax/ymax) in the same lon/lat CRS.
@@ -414,10 +487,13 @@ def spatial_join_s2(points: DataFrame, polys: DataFrame,
     right = F.broadcast(pcells) if broadcast is True else pcells
     if edges is None:
         edges = edges_table(polys)
+    else:
+        _check_edges(edges, polys)
     if broadcast is not False:
         edges = F.broadcast(edges)
     # a point has exactly ONE cell key, so no (point, fid) pair repeats;
-    # every candidate ray-casts its polygon's full ring
+    # every candidate ray-casts its polygon's full ring, and the edge
+    # join brings the polygon's attributes with it
     cand = (pts.join(right, "cell", "inner").join(edges, "fid", "inner")
             .withColumn("inside", F.lit(False)))
-    return _exact_tail(cand, points, polys, first_match, how)
+    return _exact_tail(cand, points, first_match, how)

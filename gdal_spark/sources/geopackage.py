@@ -31,7 +31,11 @@ _ENV_SIZE = {0: 0, 1: 32, 2: 48, 3: 48, 4: 64}
 
 
 def gpkg_blob_to_wkb(blob: bytes):
-    """Returns (wkb, bbox|None); None for empty/null geometries."""
+    """Returns (wkb, bbox|None); None for empty/null geometries.
+
+    A blob too short for its header or envelope raises ``ValueError``
+    (the hostile-input contract of the in-repo byte parsers); the WKB
+    after the header is returned as it is."""
     if blob is None or len(blob) < 8 or blob[0:2] != b"GP":
         return None, None
     flags = blob[3]
@@ -46,6 +50,9 @@ def gpkg_blob_to_wkb(blob: bytes):
         return None, None
     off = 8
     bbox = None
+    if len(blob) < off + env_size:
+        raise ValueError(f"GeoPackage blob of {len(blob)} bytes ends inside "
+                         f"its {env_size}-byte envelope")
     if env_size:
         little = bool(flags & 0x01)
         fmt = "<4d" if little else ">4d"

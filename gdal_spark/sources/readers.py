@@ -53,21 +53,34 @@ _POSITIONS = (
 _SPLIT = ("_fid_file", "_fid_start")
 
 
+def _single_split(scan: DataFrame) -> bool:
+    """Whether Spark reads ``scan`` as one file in one split.  Asks the
+    scan's own RDD for its partitions, which plans the scan but runs no
+    job, rather than re-deriving Spark's split rule."""
+    return (len(scan.inputFiles()) == 1
+            and scan._jdf.rdd().getNumPartitions() == 1)
+
+
 def _numbered(scan: DataFrame, keep: Column | None = None) -> DataFrame:
     """``fid`` + the columns of a file scan, keeping the rows ``keep``
     passes, numbered by the FID rule of the module docstring.
 
     Every split of every file is read whole by one task, so the rows
     of a split get consecutive ``monotonically_increasing_id`` values
-    in byte order.  One small aggregate gives each split its first id
-    and row count; a prefix sum over the splits in (path, offset) order
-    turns that into the number of the split's first row.  The scan thus
-    runs twice, in parallel, and only one row per split is broadcast:
-    no task sees every feature."""
-    rows = (scan if keep is None else scan.where(keep)).selectExpr(
+    in byte order.  When the scan is one file read by one split, those
+    values are the FIDs: one stage, no job while building.  Otherwise
+    one small aggregate gives each split its first id and row count; a
+    prefix sum over the splits in (path, offset) order turns that into
+    the number of the split's first row.  The scan thus runs twice, in
+    parallel, and only one row per split is broadcast: no task sees
+    every feature."""
+    # ids are taken after the filter: a dropped row takes no id
+    kept = scan if keep is None else scan.where(keep)
+    if _single_split(scan):
+        return kept.selectExpr("monotonically_increasing_id() AS fid", "*")
+    rows = kept.selectExpr(
         "*", "_metadata.file_path AS _fid_file",
         "_metadata.file_block_start AS _fid_start",
-        # after the filter: a dropped row takes no id
         "monotonically_increasing_id() AS _fid_row")
     base = rows.groupBy(*_SPLIT).agg(
         F.expr("min(_fid_row) AS _first"), F.expr("count(1) AS _n")
@@ -81,7 +94,10 @@ def _numbered(scan: DataFrame, keep: Column | None = None) -> DataFrame:
 
 def _positions(c, ndim: int) -> np.ndarray:
     """GeoJSON positions nested ``ndim`` deep (1: one position) as a
-    float64 array whose last axis holds 2 or 3 ordinates."""
+    float64 array whose last axis holds 2 or 3 ordinates; ``[]`` of
+    positions is an EMPTY (0, 2) array."""
+    if ndim > 1 and c == []:
+        return np.empty((0, 2))
     a = np.asarray(c, dtype=np.float64)
     if a.ndim != ndim or a.shape[-1] not in (2, 3):
         raise ValueError(f"GeoJSON positions of shape {a.shape}, "
@@ -91,10 +107,13 @@ def _positions(c, ndim: int) -> np.ndarray:
 
 def _geojson_to_wkb(gtype: str, coordinates: str) -> bytes:
     """A GeoJSON geometry's ``type`` and ``coordinates`` text -> WKB
-    (Point/LineString/Polygon; 3-D positions give Z WKB)."""
+    (Point/LineString/Polygon; 3-D positions give Z WKB; empty
+    coordinates give the EMPTY geometry, as ``wkt_to_wkb`` does)."""
     t = gtype.lower()
     c = json.loads(coordinates)
     if t == "point":
+        if c == []:
+            return kwkb.wkt_to_wkb("POINT EMPTY")
         return kwkb.wkb_point(*map(float, _positions(c, 1)))
     if t == "linestring":
         a = _positions(c, 2)
@@ -114,7 +133,8 @@ def _geojson_layer(df: DataFrame) -> DataFrame:
     ``props`` is the properties object as compact JSON text (``{}``
     when absent).  The bbox is min/max over the positions that
     ``from_json`` parses for the geometry's type; WKB comes from one
-    Arrow UDF.  A NULL geometry gives NULL wkb and bbox."""
+    Arrow UDF.  A NULL geometry gives NULL wkb and bbox, an EMPTY one
+    (no positions) EMPTY wkb and a NULL bbox."""
     @F.pandas_udf("binary")
     def wkb(types: pd.Series, coords: pd.Series) -> pd.Series:
         return pd.Series([None if t is None else _geojson_to_wkb(t, c)
@@ -125,7 +145,7 @@ def _geojson_layer(df: DataFrame) -> DataFrame:
         "_f.geometry AS _geom", f"{_POSITIONS} AS _pos",
     ).select(
         "fid", "props", wkb("_geom.type", "_geom.coordinates").alias("wkb"),
-        *(F.expr(f"array_{f}(transform(_pos, p -> p[{i}])) AS {c}{f}")
+        *(F.expr(f"array_{f}(transform(_pos, p -> get(p, {i}))) AS {c}{f}")
           for f in ("min", "max") for i, c in enumerate("xy")))
 
 
@@ -202,7 +222,8 @@ def read_wkt_csv(spark: SparkSession, path: str, wkt_col: str = "wkt",
         out = []
         for w in ws:
             b = kwkb.wkt_to_wkb(w) if w else None
-            out.append((None,) * 5 if b is None else (b, *kwkb.wkb_bbox(b)))
+            bbox = b is not None and kwkb.wkb_bbox(b)
+            out.append((b, *(bbox or (None,) * 4)))
         return pd.DataFrame(out, columns=["wkb", *_BBOX])
 
     g = wkt_layer(F.col(wkt_col))

@@ -50,6 +50,26 @@ def _ring_is_cw(ring: np.ndarray) -> bool:
 
 
 def _shape_to_wkb(buf: bytes) -> bytes | None:
+    """One .shp record's shape -> WKB (None for a null shape).
+
+    Malformed input of any kind raises ``ValueError``: counts past the
+    record's end, negative counts and part offsets outside the points
+    are refused before anything is allocated for them."""
+    try:
+        return _shape_wkb(buf)
+    except struct.error as exc:        # a field past the record's end
+        raise ValueError(f"truncated shape record: {exc}") from None
+
+
+def _counted(buf: bytes, dtype: str, count: int, offset: int) -> np.ndarray:
+    """``count`` items of ``dtype`` at ``offset``; ValueError when the
+    count is negative or the items run past the buffer."""
+    if count < 0 or offset + count * np.dtype(dtype).itemsize > len(buf):
+        raise ValueError(f"shape record holds no {count} x {dtype} at {offset}")
+    return np.frombuffer(buf, dtype=dtype, count=count, offset=offset)
+
+
+def _shape_wkb(buf: bytes) -> bytes | None:
     stype = struct.unpack_from("<i", buf, 0)[0]
     b = _base(stype)
     if b == _SHP_NULL:
@@ -59,14 +79,17 @@ def _shape_to_wkb(buf: bytes) -> bytes | None:
         return kwkb.wkb_point(x, y)
     if b == _SHP_MULTIPOINT:
         n = struct.unpack_from("<i", buf, 36)[0]
-        pts = np.frombuffer(buf, dtype="<f8", count=2 * n,
-                            offset=40).reshape(n, 2)
+        pts = _counted(buf, "<f8", 2 * n, 40).reshape(n, 2)
         return kwkb.wkb_multipoint(pts)
+    if b not in (_SHP_ARC, _SHP_POLYGON):
+        raise ValueError(f"unsupported shape type {stype}")
     # arc / polygon: bbox(32) numParts numPoints parts[] points[]
     n_parts, n_pts = struct.unpack_from("<2i", buf, 36)
-    parts = np.frombuffer(buf, dtype="<i4", count=n_parts, offset=44)
-    pts = np.frombuffer(buf, dtype="<f8", count=2 * n_pts,
-                        offset=44 + 4 * n_parts).reshape(n_pts, 2)
+    parts = _counted(buf, "<i4", n_parts, 44)
+    pts = _counted(buf, "<f8", 2 * n_pts, 44 + 4 * n_parts).reshape(n_pts, 2)
+    if n_parts and (np.any(np.diff(parts) < 0) or parts[0] < 0
+                    or parts[-1] > n_pts):
+        raise ValueError("shape part offsets out of order or past the points")
     rings = [pts[parts[i]:(parts[i + 1] if i + 1 < n_parts else n_pts)]
              for i in range(n_parts)]
     if b == _SHP_ARC:
@@ -149,10 +172,8 @@ def read_shapefile(spark: SparkSession, path: str,
                     for rec in range(r0, r1):
                         fshp.seek(offs[rec] + 8)
                         wkb = _shape_to_wkb(fshp.read(lens[rec]))
-                        if wkb is None:
-                            bbox = (None, None, None, None)
-                        else:
-                            bbox = kwkb.wkb_bbox(wkb)
+                        bbox = ((wkb is not None and kwkb.wkb_bbox(wkb))
+                                or (None, None, None, None))
                         drec = dbf_chunk[(rec - r0) * dbf_rsize:
                                          (rec - r0 + 1) * dbf_rsize]
                         attrs = {

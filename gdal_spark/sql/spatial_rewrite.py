@@ -30,10 +30,10 @@ plain Spark plan, which stays correct):
   engine's point contract, operators/spatial_join.py:133) and the
   other a polygon layer carrying ``fid, wkb, xmin, ymin, xmax,
   ymax``;
-* the join grid is derived from the polygon layer's bbox columns —
-  one bounded 4-scalar aggregate, the OGRLayer::GetExtent role
-  (/root/reference/ogr/ogrsf_frmts/generic/ogrlayer.cpp:1037) —
-  at ``DIALECT_ZOOM``, with explicit ``DIALECT_SALT``-way hot-cell
+* the join grid is derived from the polygon layer's extent
+  (``_extent``, the OGRLayer::GetExtent role,
+  ogr/ogrsf_frmts/generic/ogrlayer.cpp:1037 in the reference) at
+  ``DIALECT_ZOOM``, with explicit ``DIALECT_SALT``-way hot-cell
   salting (north_rule skew remedy; the polygon cell index is the
   small side, so replication is cheap);
 * boundary semantics are the two-phase filter's (bbox pretest +
@@ -53,6 +53,7 @@ pushes through the join into the parquet scan.
 
 from __future__ import annotations
 
+import math
 from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -124,6 +125,30 @@ def _qualified_cols(expr: str, aliases: set[str]) -> set[tuple[str, str]]:
     """(alias, column) pairs referenced as ``alias.col``."""
     return {(alias, col.lower())
             for _, _, alias, col in _qualified_refs(expr, aliases)}
+
+
+def _sql_order(v):
+    """Spark's order of doubles: NaN above every other value."""
+    return (math.isnan(v), v)
+
+
+def _extent(polys: DataFrame):
+    """(xmin, ymin, xmax, ymax) of a polygon layer: min of the mins,
+    max of the maxes, by SQL's rules (NULLs ignored, NaN above every
+    number; all NULL or no rows -> NULL).
+
+    A layer whose bbox projection optimizes to a ``LocalRelation`` (a
+    small ``createDataFrame``) is collected on the driver, which runs
+    no Spark job; any other layer takes one 4-scalar aggregate."""
+    bbox = polys.select("xmin", "ymin", "xmax", "ymax")
+    plan = bbox._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return tuple(bbox.agg(F.min("xmin"), F.min("ymin"),
+                              F.max("xmax"), F.max("ymax")).collect()[0])
+    cols = [[v for v in c if v is not None]
+            for c in zip(*bbox.collect())] or [[]] * 4
+    return tuple(pick(c, key=_sql_order) if c else None
+                 for pick, c in zip((min, min, max, max), cols))
 
 
 def try_spatial_join_rewrite(spark: SparkSession,
@@ -221,10 +246,9 @@ def try_spatial_join_rewrite(spark: SparkSession,
         if c not in (pts_lower if q == points_ref else polys_out):
             return None
 
-    # GetExtent role: one bounded 4-scalar aggregate over the polygon
-    # side sizes the grid (polygons bound the join's match region)
-    ext = polys.agg(F.min("xmin"), F.min("ymin"),
-                    F.max("xmax"), F.max("ymax")).collect()[0]
+    # GetExtent role: the polygon side's extent sizes the grid
+    # (polygons bound the join's match region)
+    ext = _extent(polys)
     if ext[0] is None:
         return None
     pad = max((ext[2] - ext[0]), (ext[3] - ext[1]), 1e-9) * 1e-9

@@ -23,6 +23,7 @@ def _jobs_during(spark, fn):
     sc.setJobGroup(group, "t() memo")
     try:
         out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()   # every job start lands
         return out, sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -31,6 +32,10 @@ def _jobs_during(spark, fn):
 
 def _write(path, **cols):
     pq.write_table(pa.table(cols), path)
+
+
+def _sink(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
 
 def test_second_read_of_unchanged_table_submits_no_job(spark, tmp_path):
@@ -107,3 +112,27 @@ def test_pip_join_build_py4j_budget(spark, tmp_path):
     finally:
         client.send_command = send
     assert 0 < len(sent) <= 600, len(sent)
+
+
+def test_pip_join_executes_in_four_jobs(spark, tmp_path):
+    """The cell cover carries the polygon attributes, so the join
+    broadcasts the polygon side once: no second broadcast by fid."""
+    _write(tmp_path / "documents.parquet", doc_id=list(range(2000)))
+    q = QUERIES["pip_join"]
+    _sink(q.fn(spark, str(tmp_path)))                    # warm
+    df = q.fn(spark, str(tmp_path))
+    _, jobs = _jobs_during(spark, lambda: _sink(df))
+    assert 0 < len(jobs) <= 4, jobs
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastHashJoin") == 1, plan
+
+
+def test_dialect_join_over_a_local_layer_builds_without_a_job(spark, tmp_path):
+    """The grid comes from the polygon layer's extent; a local layer's
+    extent is read on the driver, not by an aggregate job."""
+    _write(tmp_path / "documents.parquet", doc_id=list(range(2000)))
+    q = QUERIES["dialect_spatial_join"]
+    q.fn(spark, str(tmp_path))                           # warm
+    df, jobs = _jobs_during(spark, lambda: q.fn(spark, str(tmp_path)))
+    assert jobs == []
+    assert df.count() > 0

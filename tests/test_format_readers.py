@@ -417,3 +417,41 @@ def test_geojson_seq_rs_markers_and_blanks(spark, tmp_path):
     df = read_geojson_seq(spark, str(src))
     rows = df.orderBy("fid").collect()
     assert [(r["xmin"], r["ymin"]) for r in rows] == [(1.0, 2.0), (3.0, 4.0)]
+
+
+# ---- hostile input: ValueError only, allocation bounded -------------------
+def _holed_square_wkb():
+    outer = np.array([(0, 0), (10, 0), (10, 10), (0, 10), (0, 0)], float)
+    hole = np.array([(2, 2), (2, 3), (3, 3), (2, 2)], float)
+    return kwkb.wkb_polygon([outer, hole])
+
+
+def test_gpkg_blob_hostile_input_raises_value_error_with_bounded_allocation(
+        hostile_contract):
+    from gdal_spark.sources.geopackage import gpkg_blob_to_wkb, wkb_to_gpkg_blob
+
+    hostile_contract(gpkg_blob_to_wkb, wkb_to_gpkg_blob(_holed_square_wkb()),
+                     seed=7, head=48, slack=16 * 1024)
+
+
+def test_shape_record_hostile_input_raises_value_error_with_bounded_allocation(
+        hostile_contract):
+    from gdal_spark.sources.shapefile import _shape_to_wkb, _wkb_to_shape
+
+    _stype, content = _wkb_to_shape(_holed_square_wkb())
+    hostile_contract(_shape_to_wkb, content, seed=7, head=48, slack=16 * 1024)
+
+
+def test_shape_record_counts_are_checked_before_use():
+    from gdal_spark.sources.shapefile import _shape_to_wkb, _wkb_to_shape
+
+    _stype, content = _wkb_to_shape(_holed_square_wkb())
+    for n_parts, n_pts in ((-1, 9), (2, -4), (2, 1 << 30), (1 << 29, 9)):
+        bad = content[:36] + struct.pack("<2i", n_parts, n_pts) + content[44:]
+        with pytest.raises(ValueError):
+            _shape_to_wkb(bad)
+    backwards = content[:44] + struct.pack("<2i", 5, 0) + content[52:]
+    with pytest.raises(ValueError, match="part offsets"):
+        _shape_to_wkb(backwards)
+    with pytest.raises(ValueError, match="shape type"):
+        _shape_to_wkb(struct.pack("<i", 31) + content[4:])

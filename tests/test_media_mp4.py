@@ -87,3 +87,22 @@ def test_mp4_boxes_structurally_valid_sizes():
     j = raw.find(b"stsz")
     fixed, cnt = struct.unpack(">II", raw[j + 8:j + 16])
     assert fixed != 0 and cnt == 7
+
+
+def test_mp4_short_boxes_raise_value_error():
+    def box(tag, body):
+        return struct.pack(">I", len(body) + 8) + tag + body
+
+    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 0) + b"isom")
+    for tail in (box(b"mvhd", b""), box(b"mvhd", b"\x00" * 5),
+                 box(b"moov", box(b"trak", box(b"tkhd", b"")))):
+        with pytest.raises(ValueError, match="truncated"):
+            km.decode_mp4_meta(ftyp + tail)
+
+
+def test_mp4_hostile_input_raises_value_error_with_bounded_allocation(
+        hostile_contract):
+    raw = km.encode_mp4_meta(
+        [(b"vide", 640, 360, 90), (b"soun", 0, 0, 431)],
+        timescale=600, duration=1800, brand=b"mp42")
+    hostile_contract(km.decode_mp4_meta, raw, seed=7, head=64, slack=16 * 1024)

@@ -32,6 +32,7 @@ def _jobs_during(spark, fn):
     sc.setJobGroup(group, "reader build")
     try:
         out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()   # every job start lands
         return out, list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -41,6 +42,14 @@ def _jobs_during(spark, fn):
 def _executed_plan(df) -> str:
     df.collect()
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+# the nodes of the multi-split numbering: per-split aggregate, prefix sum
+_NUMBERING_NODES = ("HashAggregate", "Window")
+
+
+def _sink(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
 
 def _feature(i: int, pad: int = 0) -> str:
@@ -114,6 +123,29 @@ def test_geojson_seq_scan_runs_no_python(spark, tmp_path):
     assert not [n for n in _PYTHON_NODES if n in plan], plan
 
 
+def test_geojson_seq_scan_executes_in_three_jobs(spark, tmp_path):
+    """One file read by one split is numbered in the scan's own stage:
+    no aggregate, window or broadcast beside the query's sort."""
+    q = QUERIES["geojson_seq_scan"]
+    _sink(q.fn(spark, str(tmp_path)))                    # warm
+    df = q.fn(spark, str(tmp_path))
+    _, jobs = _jobs_during(spark, lambda: _sink(df))
+    assert 0 < len(jobs) <= 3, jobs
+    plan = _executed_plan(df)
+    assert not [n for n in _NUMBERING_NODES if n in plan], plan
+    assert [r["fid"] for r in df.collect()] == list(range(40))
+
+
+def test_single_split_fids_skip_blank_lines(spark, tmp_path):
+    path = str(tmp_path / "one.geojsonl")
+    _write_seq(path, range(12))
+    assert spark.read.text(path)._jdf.rdd().getNumPartitions() == 1
+    df = read_geojson_seq(spark, path)
+    assert not [n for n in _NUMBERING_NODES if n in _executed_plan(df)]
+    rows = sorted((r["fid"], r["xmin"]) for r in df.collect())
+    assert rows == [(i, float(i)) for i in range(12)]
+
+
 def test_reader_plans_scan_files_not_rdds(spark, inputs):
     for name, build in _readers(spark, inputs).items():
         plan = _executed_plan(build())
@@ -127,6 +159,8 @@ def test_seq_fids_are_byte_order_across_splits(spark, tmp_path, small_splits):
     assert os.path.getsize(path) > 3 * 2048
     assert spark.read.text(path)._jdf.rdd().getNumPartitions() >= 3
     df = read_geojson_seq(spark, path)
+    plan = _executed_plan(df)
+    assert all(n in plan for n in _NUMBERING_NODES), plan
     rows = sorted((r["fid"], r["xmin"]) for r in df.collect())
     assert rows == [(i, float(i)) for i in range(60)]
 
@@ -152,6 +186,7 @@ def test_csv_fids_follow_row_order_across_splits(spark, tmp_path, small_splits):
     df = read_wkt_csv(spark, path)
     assert df.columns == ["name", "fid", "wkb", "xmin", "ymin", "xmax", "ymax"]
     assert spark.read.csv(path)._jdf.rdd().getNumPartitions() >= 3
+    assert all(n in _executed_plan(df) for n in _NUMBERING_NODES)
     rows = sorted((r["fid"], r["name"], r["xmin"]) for r in df.collect())
     assert rows == [(i, f"n{i}", float(i)) for i in range(300)]
 
@@ -220,6 +255,11 @@ def test_jvm_bbox_equals_wkb_bbox(spark, tmp_path):
 
 
 def test_repeated_reads_leave_no_cached_blocks(spark, inputs):
+    """Data that earlier tests cached is released first: Spark may drop
+    its blocks during the loop, which says nothing about the readers."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(True)
     jsc = spark.sparkContext._jsc.sc()
     before = {i.id() for i in jsc.getRDDStorageInfo()}
     for _ in range(20):
@@ -285,3 +325,28 @@ def test_session_keeps_one_python_worker_pool(inputs):
     assert out.returncode == 0, out.stderr[-3000:]
     line = [s for s in out.stdout.splitlines() if s.startswith("DAEMONS ")]
     assert len(json.loads(line[0].split(" ", 1)[1])) == 1, out.stdout
+
+
+def test_csv_and_seq_readers_agree_on_empty_geometries(spark, tmp_path):
+    """One rule for EMPTY on both paths: EMPTY WKB and a NULL bbox."""
+    wkts = ["POINT EMPTY", "LINESTRING EMPTY", "POLYGON EMPTY", "POINT (1 -2)"]
+    geoms = [{"type": "Point", "coordinates": []},
+             {"type": "LineString", "coordinates": []},
+             {"type": "Polygon", "coordinates": []},
+             {"type": "Point", "coordinates": [1, -2]}]
+    csv_path, seq_path = tmp_path / "e.csv", tmp_path / "e.geojsonl"
+    csv_path.write_text("name,wkt\n" + "".join(
+        f'n{i},"{w}"\n' for i, w in enumerate(wkts)))
+    seq_path.write_text("".join(json.dumps(
+        {"type": "Feature", "properties": {}, "geometry": g}) + "\n"
+        for g in geoms))
+    cols = ["fid", "wkb", "xmin", "ymin", "xmax", "ymax"]
+    got = [sorted(tuple(r) for r in df.select(*cols).collect())
+           for df in (read_wkt_csv(spark, str(csv_path)),
+                      read_geojson_seq(spark, str(seq_path)))]
+    assert [r[1:] for r in got[0]] == [r[1:] for r in got[1]]
+    assert [r[0] for r in got[0]] == [0, 1, 2, 3]
+    for fid, wkb, *bbox in got[0]:
+        want = kwkb.wkb_bbox(bytes(wkb))
+        assert bbox == (list(want) if want else [None] * 4), fid
+    assert [r[2] for r in got[0]] == [None, None, None, 1.0]

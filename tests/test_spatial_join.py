@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -154,6 +155,45 @@ def test_prepare_edges_reused_across_calls(data):
         assert _got_pairs(j2) == want
     finally:
         edges.unpersist()
+
+
+def test_output_keeps_polygon_attributes_in_layer_order(data):
+    docs, polys, grid, pts, want = data
+    points = extract_geo_points(docs)
+    joined = spatial_join(points, polys, grid, zoom=6)
+    attrs = [f for f in polys.schema.fields
+             if f.name not in ("fid", "wkb", "xmin", "ymin", "xmax", "ymax")]
+    assert joined.columns == ["fid", *points.columns, *[f.name for f in attrs]]
+    assert [joined.schema[f.name].dataType for f in attrs] == [
+        f.dataType for f in attrs]
+    eas = {r["fid"]: r["eas_id"] for r in polys.collect()}
+    assert all(r["eas_id"] == eas[r["fid"]]
+               for r in joined.select("fid", "eas_id").collect())
+
+
+def test_duplicate_fid_rows_keep_their_own_attributes(spark, data):
+    """Each polygon row's match carries that row's attributes only."""
+    docs, polys, grid, pts, want = data
+    pdf = fx.polygons_pandas()
+    twin = pdf[pdf["fid"] == 3].assign(eas_id=-1)
+    layer = spark.createDataFrame(pd.concat([pdf, twin], ignore_index=True))
+    points = extract_geo_points(docs)
+    got = sorted((r["doc_id"], r["fid"], r["eas_id"]) for r in spatial_join(
+        points, layer, grid, zoom=6).select("doc_id", "fid", "eas_id").collect())
+    eas = dict(zip(pdf["fid"], pdf["eas_id"]))
+    assert got == sorted([(d, f, eas[f]) for d, f in want]
+                         + [(d, f, -1) for d, f in want if f == 3])
+
+
+def test_prepared_edges_must_match_the_layer_attributes(data):
+    from gdal_spark.operators.spatial_join import edges_table
+
+    docs, polys, grid, pts, want = data
+    edges = edges_table(polys.drop("area"))
+    with pytest.raises(ValueError, match="prepare_edges"):
+        spatial_join(extract_geo_points(docs), polys, grid, zoom=6, edges=edges)
+    with pytest.raises(ValueError, match="prepare_edges"):
+        spatial_join_s2(extract_geo_points(docs), polys, edges=edges)
 
 
 def test_edges_table_distributed_100k(spark):

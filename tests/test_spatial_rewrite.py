@@ -105,3 +105,49 @@ def test_non_contract_statement_falls_back(layers):
     stmt3 = parse("SELECT p.doc_id, g.wkb FROM pts p JOIN polyl g "
                   "ON ST_Intersects(p.wkb, g.wkb)")
     assert try_spatial_join_rewrite(layers, stmt3) is None
+
+
+_NAN = float("nan")
+
+
+@pytest.mark.parametrize("values, expected", [
+    ([(0.0, -1.0, 2.0, 3.0), (None, -5.0, None, 1.0), (-4.0, None, 9.5, None)],
+     (-4.0, -5.0, 9.5, 3.0)),
+    ([(1.0, _NAN, _NAN, 2.0), (0.5, 3.0, 4.0, 1.0)], (0.5, 3.0, _NAN, 2.0)),
+    ([(None, None, None, None)], (None,) * 4),
+    ([], (None,) * 4),
+], ids=["nulls", "nan", "all_null", "empty"])
+def test_local_extent_equals_the_aggregate(spark, tmp_path, values, expected):
+    """The driver-side extent of a local layer follows SQL's rules
+    (NULLs skipped, NaN above every number) like the aggregate that any
+    other layer takes; reading it runs no job."""
+    import math
+
+    import pyarrow as pa
+
+    from gdal_spark.sql.spatial_rewrite import _extent
+
+    cols = ("xmin", "ymin", "xmax", "ymax")
+    local = spark.createDataFrame(pa.table(
+        {c: pa.array([r[i] for r in values], pa.float64())
+         for i, c in enumerate(cols)}))
+    assert local._jdf.queryExecution().optimizedPlan().getClass() \
+        .getSimpleName() == "LocalRelation"
+    local.write.parquet(str(tmp_path / "bbox.parquet"))
+    scanned = spark.read.parquet(str(tmp_path / "bbox.parquet"))
+
+    sc = spark.sparkContext
+    group = f"local-extent-{tmp_path.name}"
+    sc.setJobGroup(group, "extent")
+    try:
+        got = _extent(local)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def key(ext):
+        return [None if v is None else "nan" if math.isnan(v) else v
+                for v in ext]
+
+    assert key(got) == key(_extent(scanned)) == key(expected)

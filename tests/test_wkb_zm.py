@@ -281,3 +281,29 @@ def test_wkb_huge_part_count_raises_before_allocating():
     finally:
         tracemalloc.stop()
     assert peak < 64 * 1024
+
+
+# ---- EMPTY geometries: NULL bbox, WKB EMPTY --------------------------------
+@pytest.mark.parametrize("wkt", [
+    "POINT EMPTY", "LINESTRING EMPTY", "POLYGON EMPTY", "MULTIPOINT EMPTY",
+    "MULTILINESTRING EMPTY", " multipolygon  Empty "])
+def test_empty_wkt_gives_empty_wkb_with_null_bbox(wkt):
+    blob = kw.wkt_to_wkb(wkt)
+    base, _payload = kw.parse_wkb(blob)
+    assert base == {"POINT": kw.POINT, "LINESTRING": kw.LINESTRING,
+                    "POLYGON": kw.POLYGON, "MULTIPOINT": kw.MULTIPOINT,
+                    "MULTILINESTRING": kw.MULTILINESTRING,
+                    "MULTIPOLYGON": kw.MULTIPOLYGON}[wkt.split()[0].upper()]
+    assert kw.wkb_bbox(blob) is None
+
+
+def test_empty_geometries_have_null_bbox():
+    for blob in (kw.wkb_linestring(np.empty((0, 2))), kw.wkb_polygon([]),
+                 kw.wkb_polygon([np.empty((0, 2))]), kw.wkb_collection([]),
+                 kw.wkb_multipolygon([[]]), kw.wkb_point(np.nan, np.nan)):
+        assert kw.wkb_bbox(blob) is None
+    # one empty part does not hide the others
+    assert kw.wkb_bbox(kw.wkb_collection([
+        kw.wkb_polygon([]), kw.wkb_point(1.0, -2.0)])) == (1.0, -2.0, 1.0, -2.0)
+    with pytest.raises(ValueError, match="unsupported WKT"):
+        kw.wkt_to_wkb("TRIANGLE EMPTY")

@@ -314,12 +314,6 @@ def bmp_features(payload: bytes) -> dict:
     return _array_features(decode_bmp(payload))
 
 
-def bmp_decimate(payload: bytes, factor: int) -> np.ndarray:
-    """Nearest (top-left) downsample — the resize-by-decimation step
-    of a media feature pipeline (overview 'near' rule)."""
-    return decode_bmp(payload)[::factor, ::factor]
-
-
 # ---- PNG (spec-written: zlib + the 5 scanline filters) --------------------
 # PNG 1.2 spec (also ISO/IEC 15948): 8-byte signature, chunked layout
 # (IHDR/IDAT/IEND, each len+type+data+crc32), IDAT is one zlib stream
@@ -1484,20 +1478,6 @@ def avi_frame_batch(payloads: list, stride: int) -> dict:
         lambda items: _avi_run(items, stride),
         ((i, p, _avi_parse(p)) for i, p in enumerate(payloads)),
         lambda x: len(range(0, len(x[2][5]), stride)) * 3 * x[2][2] * x[2][3])
-
-
-def avi_features(payload: bytes) -> dict:
-    rate, scale, frames = decode_avi(payload)
-    return {
-        "width": int(frames.shape[2]),
-        "height": int(frames.shape[1]),
-        "n_frames": int(frames.shape[0]),
-        "rate": int(rate),
-        "duration_ms": int(frames.shape[0] * 1000 * scale // rate),
-        "mean_r": float(frames[:, :, :, 0].mean()),
-        "mean_g": float(frames[:, :, :, 1].mean()),
-        "mean_b": float(frames[:, :, :, 2].mean()),
-    }
 
 
 # ---- MP4 / ISO BMFF (metadata box walk; sample DECODE stays stubbed) ------

@@ -41,6 +41,44 @@ _TYPE_SIZE = {1: 1, _T_ASCII: 1, _T_SHORT: 2, _T_LONG: 4, 11: 4,
 
 _FMT_OF_KIND = {"u": 1, "i": 2, "f": 3}
 _KIND_OF_FMT = {1: "u", 2: "i", 3: "f"}
+_INT_FMT = {1: "B", _T_SHORT: "H", _T_LONG: "I", 16: "Q", 17: "q"}
+_NEED = object()
+
+
+def _tag_reader(tags: dict, bo: str):
+    """``vals(tag[, default])`` over one IFD's raw (type, count, bytes)
+    tags: GDAL_NODATA as text, the georeferencing tags as floats and
+    every other tag as ints.  An absent tag gives ``default``, or
+    ValueError when there is none; so does a field type the tag does
+    not take, a zero count or a value cut short by the end of the
+    file."""
+    def vals(tag, default=_NEED):
+        if tag not in tags:
+            if default is _NEED:
+                raise ValueError(f"TIFF tag {tag} missing")
+            return default
+        typ, cnt, raw = tags[tag]
+        fmt = ({_T_ASCII: "s"} if tag == _NODATA
+               else {_T_DOUBLE: "d"} if tag in (_PSCALE, _TIEPOINT)
+               else _INT_FMT).get(typ)
+        if fmt is None or not cnt or len(raw) < cnt * struct.calcsize(fmt):
+            raise ValueError(f"TIFF tag {tag}: bad type {typ} or count {cnt}")
+        if fmt == "s":
+            return raw.split(b"\x00")[0].decode()
+        return list(struct.unpack(f"{bo}{cnt}{fmt}", raw))
+    return vals
+
+
+def _sample_dtype(bo: str, sfmts: list, bpss: list) -> np.dtype:
+    if len(set(sfmts)) > 1 or len(set(bpss)) > 1:
+        raise ValueError("heterogeneous per-band sample types")
+    kind = _KIND_OF_FMT.get(sfmts[0])
+    if kind is None:
+        raise ValueError(f"unsupported sample format {sfmts[0]}")
+    try:
+        return np.dtype(f"{bo}{kind}{bpss[0] // 8}")
+    except TypeError:
+        raise ValueError(f"unsupported {bpss[0]}-bit {kind} samples") from None
 
 
 def _hdiff(block: np.ndarray) -> np.ndarray:
@@ -220,13 +258,14 @@ def write_geotiff(arr: np.ndarray, geotransform=None, epsg: int | None = None,
     return bytes(out)
 
 
-def lzw_decode(src: bytes) -> bytes:
+def lzw_decode(src: bytes, limit: int | None = None) -> bytes:
     """TIFF-variant LZW decode (TIFF 6.0 §13): MSB-first variable-width
     codes starting at 9 bits, ClearCode 256, EOI 257, with the "early
     change" convention (width bumps one code EARLY relative to naive
     LZW — the libtiff behavior GDAL reads/writes).  Decoder only: the
     writer emits DEFLATE; this accepts the wild's most common legacy
-    GeoTIFF compression."""
+    GeoTIFF compression.  Decoding stops after ``limit`` output bytes
+    when one is given."""
     CLEAR, EOI = 256, 257
     out = bytearray()
     table: list[bytes] = []
@@ -251,25 +290,26 @@ def lzw_decode(src: bytes) -> bytes:
             bitbuf = (bitbuf << 8) | src[i]
             i += 1
             nbits += 8
-        code = (bitbuf >> (nbits - width)) & ((1 << width) - 1)
         nbits -= width
+        code = bitbuf >> nbits
+        bitbuf &= (1 << nbits) - 1
         if code == EOI:
             return bytes(out)
         if code == CLEAR:
             width = reset()
             prev = None
             continue
-        if prev is None:
+        if code < len(table):
             entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):
+        elif code == len(table) and prev is not None:
             entry = prev + prev[:1]
-            table.append(entry)
         else:
             raise ValueError("corrupt LZW stream")
+        if prev is not None:
+            table.append(prev + entry[:1])
         out += entry
+        if limit is not None and len(out) >= limit:
+            return bytes(out[:limit])
         prev = entry
         # early change: the decoder's table lags the encoder's by ONE
         # entry, so it widens when its next free code reaches
@@ -277,6 +317,12 @@ def lzw_decode(src: bytes) -> bytes:
         if len(table) >= (1 << width) - 2 and width < 12:
             width += 1
     return bytes(out)
+
+
+def _fits(need: int, data: bytes) -> None:
+    """Uncompressed pixels are bytes of the file itself."""
+    if need > len(data):
+        raise ValueError(f"{need} bytes of pixels in a {len(data)}-byte file")
 
 
 def _read_ifd(data: bytes, bo: str, ifd_off: int):
@@ -294,40 +340,26 @@ def _read_ifd(data: bytes, bo: str, ifd_off: int):
     (next_off,) = struct.unpack_from(bo + "I", data,
                                      ifd_off + 2 + 12 * n_ent)
 
-    def vals(tag, default=None):
-        if tag not in tags:
-            return default
-        typ, cnt, raw = tags[tag]
-        if typ == _T_ASCII:
-            return raw.split(b"\x00")[0].decode()
-        fmt = {_T_SHORT: "H", _T_LONG: "I", _T_DOUBLE: "d"}[typ]
-        return list(struct.unpack(bo + str(cnt) + fmt, raw))
-
+    vals = _tag_reader(tags, bo)
     w = vals(_W)[0]
     h = vals(_H)[0]
     comp = vals(_COMP, [1])[0]
     if comp not in (1, 5, 8):
         raise ValueError(f"unsupported compression {comp}")
     spp = vals(_SPP, [1])[0]
-    sfmts = vals(_SFMT, [1])
-    bpss = vals(_BPS, [8])
-    if len(set(sfmts)) > 1 or len(set(bpss)) > 1:
-        raise ValueError("heterogeneous per-band sample types")
-    kind = _KIND_OF_FMT.get(sfmts[0])
-    if kind is None:
-        raise ValueError(f"unsupported sample format {sfmts[0]}")
-    dtype = np.dtype(f"{bo}{kind}{bpss[0] // 8}")
+    dtype = _sample_dtype(bo, vals(_SFMT, [1]), vals(_BPS, [8]))
     planar = vals(_PLANAR, [1])[0]
-    soff = vals(_SOFF)
-    scnt = vals(_SCNT)
-    raw = [data[o:o + c] for o, c in zip(soff, scnt)]
-    if comp == 8:
-        import zlib
-        raw = [zlib.decompress(s) for s in raw]
-    elif comp == 5:
-        raw = [lzw_decode(s) for s in raw]
-    buf = b"".join(raw)
-    flat = np.frombuffer(buf, dtype=dtype, count=h * w * spp)
+    need = h * w * spp * dtype.itemsize
+    if comp == 1:
+        _fits(need, data)
+    # strips decode in turn until the image is full, none past it
+    raw, got, mv = [], 0, memoryview(data)
+    for o, c in zip(vals(_SOFF), vals(_SCNT)):
+        if got >= need:
+            break
+        raw.append(_decompress(mv[o:o + c], comp, need - got))
+        got += len(raw[-1])
+    flat = np.frombuffer(b"".join(raw), dtype=dtype, count=h * w * spp)
     if spp == 1:
         arr = flat.reshape(h, w)
     elif planar == 1:       # chunky: pixel-interleaved
@@ -351,7 +383,17 @@ def read_geotiff(data: bytes, return_overviews: bool = False):
     """Decode our baseline subset (either byte order) ->
     (array, geotransform | None, epsg | None, nodata | None), or with
     ``return_overviews`` a 5-tuple whose last element is the list of
-    reduced-resolution arrays from chained overview IFDs."""
+    reduced-resolution arrays from chained overview IFDs.
+
+    Malformed input of any kind raises ``ValueError``, and decoding
+    allocates at most about the file's size plus the image's."""
+    try:
+        return _read_geotiff(data, return_overviews)
+    except struct.error as exc:  # a header, IFD or value past the end
+        raise ValueError(f"truncated TIFF: {exc}") from None
+
+
+def _read_geotiff(data: bytes, return_overviews: bool):
     if data[:2] == b"II":
         bo = "<"
     elif data[:2] == b"MM":
@@ -366,6 +408,8 @@ def read_geotiff(data: bytes, return_overviews: bool = False):
         import io
         f = io.BytesIO(data)
         m = tiff_meta(f)
+        if m.comp == 1:
+            _fits(m.h * m.w * m.spp * m.dtype.itemsize, data)
         arr = read_tiff_rows(f, m, 0, m.h)
         if not return_overviews:
             return arr, m.gt, m.epsg, m.nodata
@@ -390,7 +434,7 @@ def read_geotiff(data: bytes, return_overviews: bool = False):
             kid, loc, cnt, v = keys[k:k + 4]
             if kid in (2048, 3072) and loc == 0:
                 epsg = int(v)
-    nod = vals(_NODATA)
+    nod = vals(_NODATA, None)
     nodata = float(nod) if nod is not None else None
     if not return_overviews:
         return arr, gt, epsg, nodata
@@ -622,16 +666,7 @@ def tiff_meta(f) -> TiffMeta:
         f.seek(voff)
         tags[tag] = (typ, cnt, f.read(size))
 
-    def vals(tag, default=None):
-        if tag not in tags:
-            return default
-        typ, cnt, raw = tags[tag]
-        if typ == _T_ASCII:
-            return raw.split(b"\x00")[0].decode()
-        fmt = {_T_SHORT: "H", _T_LONG: "I", _T_DOUBLE: "d",
-               _T_LONG8: "Q", 17: "q"}[typ]
-        return list(struct.unpack(bo + str(cnt) + fmt, raw))
-
+    vals = _tag_reader(tags, bo)
     m = TiffMeta()
     m.bo, m.big = bo, big
     m.w, m.h = vals(_W)[0], vals(_H)[0]
@@ -641,22 +676,21 @@ def tiff_meta(f) -> TiffMeta:
     m.spp = vals(_SPP, [1])[0]
     m.planar = vals(_PLANAR, [1])[0]
     m.pred = vals(_PRED, [1])[0]
-    sfmts, bpss = vals(_SFMT, [1]), vals(_BPS, [8])
-    if len(set(sfmts)) > 1 or len(set(bpss)) > 1:
-        raise ValueError("heterogeneous per-band sample types")
-    kind = _KIND_OF_FMT.get(sfmts[0])
-    if kind is None:
-        raise ValueError(f"unsupported sample format {sfmts[0]}")
-    m.dtype = np.dtype(f"{bo}{kind}{bpss[0] // 8}")
+    m.dtype = _sample_dtype(bo, vals(_SFMT, [1]), vals(_BPS, [8]))
     m.tiled = _TOFF in tags
     if m.tiled:
         m.tw, m.th = vals(_TW)[0], vals(_TH)[0]
         m.rps = None
         m.offsets, m.counts = vals(_TOFF), vals(_TCNT)
+        bw, bh = m.tw, m.th
     else:
         m.tw = m.th = None
         m.rps = vals(_RPS, [m.h or 1])[0]
         m.offsets, m.counts = vals(_SOFF), vals(_SCNT)
+        bw, bh = m.w, m.rps
+    if not (bw and bh and m.spp) or min(len(m.offsets), len(m.counts)) < (
+            -(-m.w // bw) * -(-m.h // bh) * (m.spp if m.planar == 2 else 1)):
+        raise ValueError("TIFF blocks do not cover the image")
     m.gt = None
     if _PSCALE in tags and _TIEPOINT in tags:
         dx, dy, _ = vals(_PSCALE)
@@ -669,18 +703,23 @@ def tiff_meta(f) -> TiffMeta:
             kid, loc, _cnt, v = keys[k:k + 4]
             if kid in (2048, 3072) and loc == 0:
                 m.epsg = int(v)
-    nod = vals(_NODATA)
+    nod = vals(_NODATA, None)
     m.nodata = float(nod) if nod is not None else None
     return m
 
 
-def _decompress(raw: bytes, comp: int) -> bytes:
+def _decompress(raw, comp: int, size: int) -> bytes:
+    """One strip or tile, decoded to at most ``size`` bytes (the block
+    it fills), so a corrupt stream cannot inflate past it."""
     if comp == 8:
         import zlib
-        return zlib.decompress(raw)
+        try:
+            return zlib.decompressobj().decompress(raw, size)
+        except zlib.error as exc:
+            raise ValueError(f"corrupt DEFLATE block: {exc}") from None
     if comp == 5:
-        return lzw_decode(raw)
-    return raw
+        return lzw_decode(raw, size)
+    return bytes(raw[:size])
 
 
 def read_tiff_rows(f, m: TiffMeta, row_lo: int, row_hi: int) -> np.ndarray:
@@ -694,9 +733,12 @@ def read_tiff_rows(f, m: TiffMeta, row_lo: int, row_hi: int) -> np.ndarray:
         base = (0, m.w) if m.spp == 1 else (0, m.w, m.spp)
         return np.empty(base, dtype=m.dtype.newbyteorder("="))
 
+    block = ((m.th * m.tw if m.tiled else min(m.rps, m.h) * m.w)
+             * (1 if m.planar == 2 else m.spp) * m.dtype.itemsize)
+
     def _fetch(idx: int) -> bytes:
         f.seek(m.offsets[idx])
-        return _decompress(f.read(m.counts[idx]), m.comp)
+        return _decompress(f.read(m.counts[idx]), m.comp, block)
 
     if m.tiled:
         if m.planar == 2 and m.spp > 1:

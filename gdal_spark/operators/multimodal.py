@@ -86,37 +86,6 @@ def decode_media_stub(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def decode_image_real(payload: bytes) -> np.ndarray:
-    """Real image decode to an HxWx3 uint8 RGB array.
-
-    Dispatches on magic bytes to the spec-written stdlib codecs in
-    kernels/media.py (PNG, baseline JPEG, BMP — the formats this
-    engine writes and reads from scratch).  Other container formats
-    (GIF, WebP, TIFF-as-image, ...) fall back to PIL when it is
-    installed; without PIL they raise ValueError naming the format,
-    so an unsupported payload fails loudly instead of silently.
-    """
-    from gdal_spark.kernels import media as km
-
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        return km.decode_png(payload)
-    if payload[:2] == b"\xff\xd8":
-        return km.decode_jpeg(payload)
-    if payload[:2] == b"BM":
-        return km.decode_bmp(payload)
-    try:
-        from PIL import Image
-        import io
-
-        return np.asarray(Image.open(io.BytesIO(payload)).convert("RGB"))
-    except ImportError as exc:
-        head = payload[:8].hex()
-        raise ValueError(
-            f"unrecognized image container (magic {head}); built-in "
-            "codecs cover PNG/JPEG/BMP and PIL is not installed"
-        ) from exc
-
-
 def frame_sample(df: DataFrame, id_col: str = "doc_id",
                  stride: int = 30, fps_ms: int = 33) -> DataFrame:
     """Video frame sampling: each doc 'has' 1 + (id % 120) frames;

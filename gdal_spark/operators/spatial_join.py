@@ -4,18 +4,17 @@ Reproduces the reference's two-phase spatial filter — bbox reject,
 bbox-inside accept, exact test (ogrlayer.cpp:2253-2325) — as a
 distributed plan:
 
-  phase 1 (coarse candidates, one generator per cell system):
-      quadtree (``spatial_join``): points -> cell id (Column math);
-      polygons -> classified cell cover (``cell_cover``: one numpy
-      Arrow stage over the edge table) where each cell of the bbox is
-      inside, boundary or outside, and outside cells get no row;
-      equi-join on cell — broadcast when the cover is small, else
-      shuffle with explicit hot-cell salting (north_rule), on top of
-      AQE's skew handling;
-      S2 (``spatial_join_s2``): the same equi-join on S2 cell keys,
-      every candidate carrying its polygon's full ring.
+  phase 1 (coarse candidates; one cover builder, two cell systems):
+      points -> cell id; polygons -> ``cell_cover``, one numpy Arrow
+      stage whose per-polygon cell function is the cell system: the
+      quadtree classifies each bbox cell as inside, boundary or
+      outside (outside cells get no row), S2 covers the vertex
+      envelope with boundary cells carrying the full ring; one
+      equi-join step (``_cell_join``) on cell — broadcast when the
+      cover is small, else shuffle with explicit hot-cell salting
+      (north_rule) on top of AQE's skew handling.
 
-  phase 2 (``_exact_tail``, shared by both generators):
+  phase 2 (``_exact_tail``, shared by both cell systems):
       envelope pretest as a Column predicate; inside cells accept (the
       bbox-inside accept); the rest ray-cast as a JVM fold over the
       candidate's edge array (a boundary cell's row edges, or the full
@@ -34,14 +33,17 @@ ogrlayer.cpp:3345) result set with a shuffle plan that survives
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import partial
+
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import StructField, StructType
 
 from .. import functions as gf
 from ..kernels.cells import TileGrid, pack_cell
 from ..kernels import pip as kpip
+from ..kernels import s2 as ks2
 from ..kernels import wkb as kwkb
 
 DEFAULT_ZOOM = 12
@@ -175,8 +177,9 @@ def _plain(v) -> bool:
 
 
 def _classify(e: np.ndarray, grid: TileGrid, z: int):
-    """Cover rows of one polygon's (M, 4) edges: arrays (tx, ty, inside,
-    n_edges, edge_index), the row edges of row i being
+    """The quadtree cell function of ``cell_cover``: cover rows of one
+    polygon's (M, 4) finite edges, as arrays (cell, inside, n_edges,
+    edge_index), the row edges of row i being
     ``e[edge_index[sum(n_edges[:i]):][:n_edges[i]]]``.
 
     tx/ty are the points' own cell function (``TileGrid.tile_xy``, the
@@ -196,11 +199,8 @@ def _classify(e: np.ndarray, grid: TileGrid, z: int):
     (every vertex an even number of times) and coordinates in the
     _plain range, where no intersection is NaN (which Spark orders
     above 0); when either fails every bbox cell is a boundary cell
-    with all its row edges.  A polygon with a non-finite vertex gets
-    no rows: its envelope admits no point.
+    with all its row edges.
     """
-    if not len(e) or not np.isfinite(e).all():
-        return None
     xs, ys = e[:, 0::2], e[:, 1::2]
     tx0, ty1 = grid.tile_xy(z, xs.min(axis=1), ys.min(axis=1))
     tx1, ty0 = grid.tile_xy(z, xs.max(axis=1), ys.max(axis=1))
@@ -245,9 +245,20 @@ def _classify(e: np.ndarray, grid: TileGrid, z: int):
                  else np.full(keep.size, row.size))
         reach[inside[keep]] = 0
         start = np.repeat(np.cumsum(reach) - reach, reach)
-        out.append((cols[keep], np.full(keep.size, b), inside[keep], reach,
+        out.append((pack_cell(z, cols[keep], b), inside[keep], reach,
                     row[np.arange(reach.sum()) - start]))
     return tuple(np.concatenate(parts) for parts in zip(*out))
+
+
+def _s2_cells(e: np.ndarray, level: int):
+    """The S2 cell function of ``cell_cover``: the level-``level``
+    cells covering the vertex envelope of one polygon's (M, 4) finite
+    edges (``kernels.s2.cover_bbox_lonlat``), each a boundary cell
+    carrying the full ring."""
+    cells = ks2.cover_bbox_lonlat(e[:, 0::2].min(), e[:, 1::2].min(),
+                                  e[:, 0::2].max(), e[:, 1::2].max(), level)
+    k, m = cells.size, len(e)
+    return cells, np.zeros(k, bool), np.full(k, m), np.tile(np.arange(m), k)
 
 
 def _polygon_edges(batch):
@@ -266,19 +277,23 @@ def _polygon_edges(batch):
         yield fid, flat[offs[i]:offs[i + 1]]
 
 
-def cell_cover(layer: DataFrame, grid: TileGrid, zoom: int) -> DataFrame:
-    """Classified cell cover of a polygon layer, from its edge table
+def cell_cover(layer: DataFrame, cells: Callable[[np.ndarray], tuple]) -> DataFrame:
+    """Cell cover of a polygon layer, from its edge table
     (``edges_table`` / ``prepare_edges``) or its (fid, wkb) columns,
     either with an optional ``_attrs`` struct.
 
-    One row (cell, fid, xmin, ymin, xmax, ymax, inside, edges[,
-    _attrs]) per boundary or inside cell of each polygon's bbox (see
-    ``_classify``); xmin..ymax is the vertex envelope, inside cells
-    carry no edges, and ``_attrs`` is the polygon row's own struct
-    (``pa.Array.take`` per cover row), so the join needs no second
-    lookup of the attributes by fid.  One Arrow map on the input's own
-    partitions: numpy work per polygon, no per-cell Python, no driver
-    collect.  Reading WKB directly, rather than a chained
+    ``cells`` is the cell system: it maps one polygon's (M, 4) edges,
+    all finite, to arrays (cell, inside, n_edges, edge_index), the
+    edges of row i being ``e[edge_index[sum(n_edges[:i]):][:n_edges[i]]]``
+    (``_classify`` for the quadtree, ``_s2_cells`` for S2).  One row
+    (cell, fid, xmin, ymin, xmax, ymax, inside, edges[, _attrs]) per
+    cell it returns; xmin..ymax is the vertex envelope, and ``_attrs``
+    is the polygon row's own struct (``pa.Array.take`` per cover row),
+    so the join needs no second lookup of the attributes by fid.  A
+    polygon with a NULL fid, no vertex or a non-finite vertex gets no
+    rows: its envelope admits no point.  One Arrow map on the input's
+    own partitions: numpy work per polygon, no per-cell Python, no
+    driver collect.  Reading WKB directly, rather than a chained
     ``edges_table``, keeps the polygon side to one Python worker per
     task.
     """
@@ -292,19 +307,18 @@ def cell_cover(layer: DataFrame, grid: TileGrid, zoom: int) -> DataFrame:
                    "inside": [np.empty(0, bool)], "n": [np.empty(0, np.int64)],
                    "edges": [np.empty((0, 4))], "row": [np.empty(0, np.int64)]}
             for i, (fid, e) in enumerate(_polygon_edges(batch)):
-                rows = None if fid is None else _classify(e, grid, zoom)
-                if rows is None:
+                if fid is None or not len(e) or not np.isfinite(e).all():
                     continue
-                tx, ty, inside, n_edges, idx = rows
-                out["cell"].append(pack_cell(zoom, tx, ty))
-                out["fid"].append(np.full(tx.size, fid, np.int64))
+                cell, inside, n_edges, idx = cells(e)
+                out["cell"].append(cell)
+                out["fid"].append(np.full(cell.size, fid, np.int64))
                 for c, v in (("xmin", e[:, 0::2].min()), ("ymin", e[:, 1::2].min()),
                              ("xmax", e[:, 0::2].max()), ("ymax", e[:, 1::2].max())):
-                    out[c].append(np.full(tx.size, v))
+                    out[c].append(np.full(cell.size, v))
                 out["inside"].append(inside)
                 out["n"].append(n_edges)
                 out["edges"].append(e[idx])
-                out["row"].append(np.full(tx.size, i, np.int64))
+                out["row"].append(np.full(cell.size, i, np.int64))
             cols = {c: np.concatenate(v) for c, v in out.items()}
             ecat, n, row = cols.pop("edges"), cols.pop("n"), cols.pop("row")
             arrays = [pa.array(v) for v in cols.values()] + [_edge_lists(ecat, n)]
@@ -354,15 +368,60 @@ def _exact_tail(cand: DataFrame, points: DataFrame, first_match: bool,
     return matched
 
 
-def _check_edges(edges: DataFrame, polys: DataFrame) -> None:
-    """A prepared edge table carries the attributes of the layer it was
-    built from; they must be the attributes of ``polys``."""
+def _cover_input(polys: DataFrame, edges: DataFrame | None) -> DataFrame:
+    """What a join's ``cell_cover`` reads: the layer's (fid, wkb[,
+    _attrs]), or a prepared edge table, which carries the attributes
+    of the layer it was built from; they must be those of ``polys``."""
+    if edges is None:
+        return _layer(polys)
     got = ([f.name for f in edges.schema[_ATTRS].dataType.fields]
            if _ATTRS in edges.columns else [])
     if got != _attr_cols(polys):
         raise ValueError(
             f"edges carries attributes {got}, the polygon layer "
             f"{_attr_cols(polys)}: build it with prepare_edges(polys)")
+    return edges
+
+
+def _cell_join(points: DataFrame, cell: Column, cover: DataFrame,
+               broadcast: bool | None, salt: int | str, first_match: bool,
+               how: str) -> DataFrame:
+    """Phase 1's join step, shared by both cell systems: key ``points``
+    on the ``cell`` Column, equi-join them to the polygon ``cover`` on
+    cell (see ``spatial_join`` for ``broadcast`` and ``salt``), then
+    phase 2 on the candidates."""
+    pts = points.withColumn("cell", cell)
+    if salt == "auto":
+        # hot-cell diagnostic on the POINT side drives the salt factor
+        # (north_rule: explicit salting for coastline/metro hot cells)
+        from .partitioning import choose_salt
+
+        salt = choose_salt(pts, "cell")
+
+    if salt and salt > 1:
+        pts = pts.withColumn("_salt", F.pmod(F.xxhash64(F.col("x"), F.col("y")),
+                                             F.lit(salt)).cast("int"))
+        cover = cover.withColumn("_salt", F.explode(
+            F.sequence(F.lit(0), F.lit(salt - 1)))).withColumn(
+            "_salt", F.col("_salt").cast("int"))
+        join_keys = ["cell", "_salt"]
+    else:
+        join_keys = ["cell"]
+
+    if broadcast is True:
+        right = F.broadcast(cover)
+    elif broadcast is False:
+        right = cover.hint("shuffle_hash")
+    else:
+        # Catalyst's size estimate picks broadcast for a small cover;
+        # AQE converts sort-merge -> broadcast at runtime otherwise.
+        # No driver-side count per call.
+        right = cover
+
+    cand = pts.join(right, join_keys, "inner")
+    if salt and salt > 1:
+        cand = cand.drop("_salt")
+    return _exact_tail(cand, points, first_match, how)
 
 
 def spatial_join(points: DataFrame, polys: DataFrame, grid: TileGrid,
@@ -400,42 +459,10 @@ def spatial_join(points: DataFrame, polys: DataFrame, grid: TileGrid,
     micro-batch (inner only; ``first_match`` and ``how='left'`` need
     batch input).
     """
-    if edges is not None:
-        _check_edges(edges, polys)
-    pts = points.withColumn("cell", gf.cell_col(grid, zoom, F.col("x"), F.col("y")))
-    cover = cell_cover(_layer(polys) if edges is None else edges, grid, zoom)
-
-    if salt == "auto":
-        # hot-cell diagnostic on the POINT side drives the salt factor
-        # (north_rule: explicit salting for coastline/metro hot cells)
-        from .partitioning import choose_salt
-
-        salt = choose_salt(pts, "cell")
-
-    if salt and salt > 1:
-        pts = pts.withColumn("_salt", F.pmod(F.xxhash64(F.col("x"), F.col("y")),
-                                             F.lit(salt)).cast("int"))
-        cover = cover.withColumn("_salt", F.explode(
-            F.sequence(F.lit(0), F.lit(salt - 1)))).withColumn(
-            "_salt", F.col("_salt").cast("int"))
-        join_keys = ["cell", "_salt"]
-    else:
-        join_keys = ["cell"]
-
-    if broadcast is True:
-        right = F.broadcast(cover)
-    elif broadcast is False:
-        right = cover.hint("shuffle_hash")
-    else:
-        # Catalyst's size estimate picks broadcast for a small cover;
-        # AQE converts sort-merge -> broadcast at runtime otherwise.
-        # No driver-side count per call.
-        right = cover
-
-    cand = pts.join(right, join_keys, "inner")
-    if salt and salt > 1:
-        cand = cand.drop("_salt")
-    return _exact_tail(cand, points, first_match, how)
+    cover = cell_cover(_cover_input(polys, edges),
+                       partial(_classify, grid=grid, z=zoom))
+    return _cell_join(points, gf.cell_col(grid, zoom, F.col("x"), F.col("y")),
+                      cover, broadcast, salt, first_match, how)
 
 
 def spatial_join_s2(points: DataFrame, polys: DataFrame,
@@ -448,52 +475,17 @@ def spatial_join_s2(points: DataFrame, polys: DataFrame,
     the planar twin — results must be identical, asserted by the
     pip_join_s2 oracle and tests).
 
-    Phase 1 keys both sides on level-``level`` S2 cells: points via
-    the Arrow pandas UDF (kernels/s2.py, one key per point), polygons
-    via the bbox coverer (overcovering candidate set; undercoverage
-    bounded by the coverer's dilation rule).  Phase 1b joins the edge
-    table (``edges``, or ``edges_table(polys)``), which also carries
-    the polygon attributes.  Phase 2 is the SAME ``_exact_tail`` as
-    spatial_join, so the exact semantics are shared, not
-    re-implemented; the output has spatial_join's columns.
+    Only the cell system differs: each point gets one level-``level``
+    S2 key (Arrow pandas UDF, kernels/s2.py), so no (point, fid) pair
+    repeats, and each polygon's cover rows are the ``_s2_cells`` of
+    its vertex envelope, every one carrying the full ring.  The join
+    step (unsalted), phase 2, the output columns and the other
+    arguments are spatial_join's; ``broadcast=None`` leaves the
+    choice to Catalyst.
 
     points: DF with lon/lat degree columns named x, y.
     polys:  DF(fid, wkb, xmin/ymin/xmax/ymax) in the same lon/lat CRS.
     """
-    from ..kernels import s2 as ks2
-
-    pts = points.withColumn(
-        "_c", gf.s2_cell_pandas_key(F.col("x"), F.col("y"), level)
-    ).withColumnRenamed("_c", "cell")
-
-    def _cover(batches):
-        for pdf in batches:
-            rows = {"cell": [], "fid": [], "xmin": [], "ymin": [],
-                    "xmax": [], "ymax": []}
-            for _, r in pdf.iterrows():
-                keys = ks2.cover_bbox_lonlat(
-                    r["xmin"], r["ymin"], r["xmax"], r["ymax"], level)
-                for kk in keys:
-                    rows["cell"].append(int(kk))
-                    rows["fid"].append(int(r["fid"]))
-                    for c in ("xmin", "ymin", "xmax", "ymax"):
-                        rows[c].append(float(r[c]))
-            yield pd.DataFrame(rows)
-
-    pcells = polys.select("fid", "xmin", "ymin", "xmax", "ymax") \
-        .mapInPandas(_cover, "cell long, fid long, xmin double, "
-                             "ymin double, xmax double, ymax double")
-
-    right = F.broadcast(pcells) if broadcast is True else pcells
-    if edges is None:
-        edges = edges_table(polys)
-    else:
-        _check_edges(edges, polys)
-    if broadcast is not False:
-        edges = F.broadcast(edges)
-    # a point has exactly ONE cell key, so no (point, fid) pair repeats;
-    # every candidate ray-casts its polygon's full ring, and the edge
-    # join brings the polygon's attributes with it
-    cand = (pts.join(right, "cell", "inner").join(edges, "fid", "inner")
-            .withColumn("inside", F.lit(False)))
-    return _exact_tail(cand, points, first_match, how)
+    cover = cell_cover(_cover_input(polys, edges), partial(_s2_cells, level=level))
+    return _cell_join(points, gf.s2_cell_pandas_key(F.col("x"), F.col("y"), level),
+                      cover, broadcast, 0, first_match, how)

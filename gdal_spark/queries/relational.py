@@ -427,7 +427,9 @@ def tpch_q1(spark, sf_dir):
     "tpch_q3ish",
     sql="""
     SELECT l.l_orderkey,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
+           CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(15, 2))
+                          * (1 - CAST(l.l_discount AS DECIMAL(15, 2)))), 2)
+                AS DOUBLE) AS revenue,
            CAST(o.o_orderdate AS DATE) AS orderdate
     FROM customer c
     JOIN orders o   ON o.o_custkey = c.c_custkey
@@ -443,15 +445,15 @@ def tpch_q3ish(spark, sf_dir):
     cust = t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = t(spark, sf_dir, "orders")
     li = t(spark, sf_dir, "lineitem")
+    # revenue sums in exact DECIMAL in both engines: a rounded DOUBLE
+    # sum depends on the summation order and can differ in the last cent
+    price = F.col("l_extendedprice").cast("decimal(15,2)")
+    disc = F.col("l_discount").cast("decimal(15,2)")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", F.col("o_orderdate").cast("date").alias("orderdate"))
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
+        .agg(F.round(F.sum(price * (1 - disc)), 2).cast("double").alias("revenue"))
         .select("l_orderkey", "revenue", "orderdate")
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
         .limit(10)

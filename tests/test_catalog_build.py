@@ -114,17 +114,32 @@ def test_pip_join_build_py4j_budget(spark, tmp_path):
     assert 0 < len(sent) <= 600, len(sent)
 
 
-def test_pip_join_executes_in_four_jobs(spark, tmp_path):
-    """The cell cover carries the polygon attributes, so the join
-    broadcasts the polygon side once: no second broadcast by fid."""
+def _executed(spark, tmp_path, name):
+    """(Spark jobs of a warm run of catalog query ``name`` over 2,000
+    documents, its executed plan)."""
     _write(tmp_path / "documents.parquet", doc_id=list(range(2000)))
-    q = QUERIES["pip_join"]
+    q = QUERIES[name]
     _sink(q.fn(spark, str(tmp_path)))                    # warm
     df = q.fn(spark, str(tmp_path))
     _, jobs = _jobs_during(spark, lambda: _sink(df))
+    return jobs, df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pip_join_executes_in_four_jobs(spark, tmp_path):
+    """The cell cover carries the polygon attributes, so the join
+    broadcasts the polygon side once: no second broadcast by fid."""
+    jobs, plan = _executed(spark, tmp_path, "pip_join")
     assert 0 < len(jobs) <= 4, jobs
-    plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") == 1, plan
+
+
+def test_pip_join_s2_executes_in_four_jobs(spark, tmp_path):
+    """The S2 join builds its cover with the quadtree's ``cell_cover``:
+    one Arrow map carrying edges and attributes, broadcast once."""
+    jobs, plan = _executed(spark, tmp_path, "pip_join_s2")
+    assert 0 < len(jobs) <= 4, jobs
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert "MapInPandas" not in plan, plan
 
 
 def test_dialect_join_over_a_local_layer_builds_without_a_job(spark, tmp_path):

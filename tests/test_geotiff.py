@@ -50,6 +50,14 @@ def test_rejects_non_tiff_and_compressed():
         read_geotiff(bytes(blob))
 
 
+def test_hostile_input_raises_value_error_with_bounded_allocation(hostile_contract):
+    a = (np.arange(40 * 50).reshape(40, 50) % 251).astype(np.uint8)
+    blob = write_geotiff(a, geotransform=(100.0, 0.5, 0, 200.0, 0, -0.5),
+                         epsg=32633, nodata=7.0)
+    hostile_contract(lambda p: read_geotiff(p, return_overviews=True), blob,
+                     seed=9, head=256, slack=64 * 1024)
+
+
 def test_big_endian_read():
     """Hand-built MM-order file: reader must byte-swap."""
     h, w = 2, 3

@@ -61,12 +61,6 @@ def test_wav_features_formula():
     assert f["rms"] == np.sqrt((9 + 16) / 2)
 
 
-def test_bmp_decimate():
-    a = np.arange(6 * 8 * 3, dtype=np.uint8).reshape(6, 8, 3)
-    d = km.bmp_decimate(km.encode_bmp(a), 2)
-    np.testing.assert_array_equal(d, a[::2, ::2])
-
-
 def test_decode_media_real_distributed(spark):
     from gdal_spark.operators import multimodal as mm
 
@@ -140,38 +134,6 @@ def test_png_features_gray_repeats_channels():
     f = km.png_features(km.encode_png(a))
     assert f["width"] == 5 and f["height"] == 6
     assert f["mean_r"] == f["mean_g"] == f["mean_b"] == a.mean()
-
-
-def test_decode_image_real_dispatches_by_magic():
-    from gdal_spark.operators.multimodal import decode_image_real
-
-    rng = np.random.RandomState(7)
-    img = rng.randint(0, 256, size=(16, 24, 3), dtype=np.uint8)
-
-    # lossless containers decode bit-exact
-    np.testing.assert_array_equal(decode_image_real(km.encode_png(img)), img)
-    np.testing.assert_array_equal(decode_image_real(km.encode_bmp(img)), img)
-
-    # baseline JPEG is lossy: same shape/dtype, bounded error on a
-    # smooth gradient (random noise would stress the quantizer)
-    grad = np.tile(
-        np.linspace(0, 255, 24, dtype=np.uint8), (16, 1)
-    )[..., None].repeat(3, axis=2)
-    out = decode_image_real(km.encode_jpeg(grad, quality=90))
-    assert out.shape == grad.shape and out.dtype == np.uint8
-    assert np.abs(out.astype(int) - grad.astype(int)).mean() < 8
-
-
-def test_decode_image_real_unknown_magic_fails_loudly():
-    from gdal_spark.operators.multimodal import decode_image_real
-
-    try:
-        import PIL  # noqa: F401
-        pytest.skip("PIL present: foreign formats are handed to it")
-    except ImportError:
-        pass
-    with pytest.raises(ValueError, match="unrecognized image container"):
-        decode_image_real(b"GIF89a" + b"\x00" * 32)
 
 
 # ---- hostile input: ValueError only, allocation bounded -------------------

@@ -22,13 +22,6 @@ def test_avi_roundtrip_exact(n, h, w):
     np.testing.assert_array_equal(out, fr)
 
 
-def test_avi_header_fields():
-    fr = np.zeros((5, 4, 6, 3), dtype=np.uint8)
-    f = km.avi_features(km.encode_avi(fr, rate=25, scale=1))
-    assert f["n_frames"] == 5 and (f["width"], f["height"]) == (6, 4)
-    assert f["rate"] == 25 and f["duration_ms"] == 5 * 1000 // 25
-
-
 def test_avi_tolerates_unknown_chunks():
     fr = np.arange(2 * 3 * 4 * 3, dtype=np.uint8).reshape(2, 3, 4, 3)
     raw = bytearray(km.encode_avi(fr))

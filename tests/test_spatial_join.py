@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -157,32 +159,42 @@ def test_prepare_edges_reused_across_calls(data):
         edges.unpersist()
 
 
-def test_output_keeps_polygon_attributes_in_layer_order(data):
-    docs, polys, grid, pts, want = data
-    points = extract_geo_points(docs)
-    joined = spatial_join(points, polys, grid, zoom=6)
-    attrs = [f for f in polys.schema.fields
-             if f.name not in ("fid", "wkb", "xmin", "ymin", "xmax", "ymax")]
-    assert joined.columns == ["fid", *points.columns, *[f.name for f in attrs]]
-    assert [joined.schema[f.name].dataType for f in attrs] == [
-        f.dataType for f in attrs]
-    eas = {r["fid"]: r["eas_id"] for r in polys.collect()}
-    assert all(r["eas_id"] == eas[r["fid"]]
-               for r in joined.select("fid", "eas_id").collect())
+def _generators(data, scaled):
+    """(points, polygon layer, join, brute-force (doc_id, fid) pairs)
+    for the quadtree join on the planar fixture and the S2 join on its
+    lon/lat image."""
+    docs, polys, grid, _, want = data
+    pts, s2_polys, ppdf, fids = scaled
+    return [(extract_geo_points(docs), polys,
+             partial(spatial_join, grid=grid, zoom=6), want),
+            (pts, s2_polys, spatial_join_s2,
+             {(d, f) for d, fs in zip(ppdf["doc_id"], fids) for f in fs})]
 
 
-def test_duplicate_fid_rows_keep_their_own_attributes(spark, data):
+def test_output_keeps_polygon_attributes_in_layer_order(data, scaled):
+    for points, polys, join, _ in _generators(data, scaled):
+        joined = join(points, polys)
+        attrs = [f for f in polys.schema.fields
+                 if f.name not in ("fid", "wkb", "xmin", "ymin", "xmax", "ymax")]
+        assert joined.columns == ["fid", *points.columns, *[f.name for f in attrs]]
+        assert [joined.schema[f.name].dataType for f in attrs] == [
+            f.dataType for f in attrs]
+        eas = {r["fid"]: r["eas_id"] for r in polys.collect()}
+        assert all(r["eas_id"] == eas[r["fid"]]
+                   for r in joined.select("fid", "eas_id").collect())
+
+
+def test_duplicate_fid_rows_keep_their_own_attributes(data, scaled):
     """Each polygon row's match carries that row's attributes only."""
-    docs, polys, grid, pts, want = data
-    pdf = fx.polygons_pandas()
-    twin = pdf[pdf["fid"] == 3].assign(eas_id=-1)
-    layer = spark.createDataFrame(pd.concat([pdf, twin], ignore_index=True))
-    points = extract_geo_points(docs)
-    got = sorted((r["doc_id"], r["fid"], r["eas_id"]) for r in spatial_join(
-        points, layer, grid, zoom=6).select("doc_id", "fid", "eas_id").collect())
-    eas = dict(zip(pdf["fid"], pdf["eas_id"]))
-    assert got == sorted([(d, f, eas[f]) for d, f in want]
-                         + [(d, f, -1) for d, f in want if f == 3])
+    for points, polys, join, want in _generators(data, scaled):
+        twin = polys.filter(F.col("fid") == 3).withColumn(
+            "eas_id", F.lit(-1).cast(polys.schema["eas_id"].dataType))
+        got = sorted(tuple(r) for r in join(points, polys.unionByName(twin))
+                     .select("doc_id", "fid", "eas_id").collect())
+        eas = {r["fid"]: r["eas_id"] for r in polys.collect()}
+        assert any(f == 3 for _, f in want)
+        assert got == sorted([(d, f, eas[f]) for d, f in want]
+                             + [(d, f, -1) for d, f in want if f == 3])
 
 
 def test_prepared_edges_must_match_the_layer_attributes(data):
@@ -312,6 +324,24 @@ def test_join_shape_matches_bruteforce(scaled, gen):
                   + [(dup, fids[ids.index(dup)][0])])
     assert _rows(join(twice, polys, first_match=True),
                  ["doc_id", "fid"]) == want
+
+
+@pytest.mark.parametrize("gen", sorted(_JOINS))
+def test_polygons_without_a_usable_ring_match_nothing(spark, scaled, gen):
+    """A polygon with a NULL fid or a non-finite vertex gets no cover
+    rows, whatever its stored bbox says; a finite twin matches."""
+    pts = scaled[0]
+    ring = np.array([(-0.5, -0.5), (0.5, -0.5), (0.5, 0.5), (-0.5, 0.5),
+                     (-0.5, -0.5)])
+    bad = ring.copy()
+    bad[2] = (np.nan, 0.5)
+    polys = spark.createDataFrame(
+        [(fid, kwkb.wkb_polygon([r]), -0.5, -0.5, 0.5, 0.5)
+         for fid, r in ((None, ring), (8, bad), (9, ring))],
+        "fid bigint, wkb binary, xmin double, ymin double, xmax double, "
+        "ymax double")
+    got = {r["fid"] for r in _JOINS[gen](pts, polys).select("fid").collect()}
+    assert got == {9}
 
 
 def _border_polygons(grid):

@@ -4,12 +4,15 @@ The reference walks the whole raster with a two-row marching-squares
 window (/root/reference/alg/contour.cpp; alg/marching_squares/).
 Distributed:
 
-  1. tiles assemble an east/south 1-px halo (a marching cell's
-     corners can span a tile border); each tile OWNS the cells whose
-     top-left pixel it holds, so every cell is computed exactly once;
-  2. per tile (mapInPandas): marching-squares segments in GLOBAL
-     pixel-center coordinates — crossing points on shared edges are
-     bit-identical across tiles (same two corner values, same ops);
+  1. tiles assemble a 1-px halo through the shared exchange
+     (``operators.focal.halo_apply``); a marching cell's corners can
+     span a tile border, so the east/south strips are read, and each
+     tile OWNS the cells whose top-left pixel it holds, so every cell
+     is computed exactly once;
+  2. per tile (the exchange's grouped stage): marching-squares
+     segments in GLOBAL pixel-center coordinates — crossing points on
+     shared edges are bit-identical across tiles (same two corner
+     values, same ops);
   3. segment connectivity: segments sharing an endpoint join into one
      line — the same iterative min-label propagation used by
      polygonize, with exact (double, double) endpoint structs as
@@ -26,6 +29,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..kernels import contour as kc
 from ..kernels import wkb as kwkb
+from .focal import halo_apply
 
 SEG_SCHEMA = ("seg_id long, level double, x1 double, y1 double, "
               "x2 double, y2 double")
@@ -36,41 +40,11 @@ def tile_segments(tiles: DataFrame, levels, dtype: str = "uint8",
                   tile_size: int = 256) -> DataFrame:
     """Steps 1-2: halo'd per-tile marching squares, globally-unique
     segment ids (tile id in the high bits)."""
-    np_dtype = np.dtype(dtype)
     ts = tile_size
-
-    def _emit_halo(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                arr = np.frombuffer(r["px"], dtype=np_dtype).reshape(ts, ts)
-                tx, ty = int(r["tx"]), int(r["ty"])
-                rows.append((tx, ty, "c", arr.tobytes()))
-                rows.append((tx - 1, ty, "e", arr[:, 0:1].tobytes()))
-                rows.append((tx, ty - 1, "s", arr[0:1, :].tobytes()))
-                rows.append((tx - 1, ty - 1, "se", arr[0:1, 0:1].tobytes()))
-            yield pd.DataFrame(rows, columns=["dtx", "dty", "part", "payload"])
-
-    halo = tiles.select("tx", "ty", "px").mapInPandas(
-        _emit_halo, "dtx long, dty long, part string, payload binary")
-
     lv = [float(l) for l in levels]
 
-    def _march(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        parts = dict(zip(pdf["part"], pdf["payload"]))
-        if "c" not in parts:
-            return pd.DataFrame([], columns=[
-                "seg_id", "level", "x1", "y1", "x2", "y2"])
-        ext = np.full((ts + 1, ts + 1), np.nan)
-        ext[:ts, :ts] = np.frombuffer(
-            parts["c"], dtype=np_dtype).reshape(ts, ts)
-        if "e" in parts:
-            ext[:ts, ts] = np.frombuffer(parts["e"], dtype=np_dtype)
-        if "s" in parts:
-            ext[ts, :ts] = np.frombuffer(parts["s"], dtype=np_dtype)
-        if "se" in parts:
-            ext[ts, ts] = np.frombuffer(parts["se"], dtype=np_dtype)[0]
+    def _march(tx, ty, band, padded) -> pd.DataFrame:
+        ext = padded[1:, 1:]      # the tile + its east/south halo
         rows = []
         base = (tx << 42) | (ty << 21)   # < 2^21 segments per tile
         k = 0
@@ -88,7 +62,7 @@ def tile_segments(tiles: DataFrame, levels, dtype: str = "uint8",
         return pd.DataFrame(rows, columns=[
             "seg_id", "level", "x1", "y1", "x2", "y2"])
 
-    return halo.groupBy("dtx", "dty").applyInPandas(_march, SEG_SCHEMA)
+    return halo_apply(tiles, 1, _march, SEG_SCHEMA, dtype, tile_size)
 
 
 def _segment_lines(segs: DataFrame) -> DataFrame:

@@ -8,10 +8,11 @@ Chebyshev radius ``radius`` (the reference scans four directional
 rays then smooths; same intent, simpler determinism) — pixels with no
 valid neighbor in range stay nodata.
 
-Distributed shape: a generalized k-pixel halo exchange (the focal
-operators' 1-px strips, widened to ``radius``), then per-tile
-vectorized numpy.  Tile-split invariance vs the single-array kernel
-is the correctness contract, as with every raster operator here.
+Distributed shape: the shared halo exchange
+(``operators.focal.halo_apply``) with a ``radius``-px border, then
+per-tile vectorized numpy.  Tile-split invariance vs the single-array
+kernel is the correctness contract, as with every raster operator
+here.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..kernels import checksum as kck
+from .focal import halo_apply
 
 OUT_SCHEMA = "tx long, ty long, px binary, checksum long"
 
@@ -52,49 +54,7 @@ def fill_nodata_tiles(tiles: DataFrame, nodata, radius: int = 3,
     ts = tile_size
     H = radius
 
-    def _emit(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                arr = np.frombuffer(r["px"], dtype=np_dtype).reshape(ts, ts)
-                tx, ty = int(r["tx"]), int(r["ty"])
-                # center + 8 neighbors get H-wide strips
-                for dx, dy, sl in (
-                    (0, 0, np.s_[:, :]),
-                    (1, 0, np.s_[:, -H:]), (-1, 0, np.s_[:, :H]),
-                    (0, 1, np.s_[-H:, :]), (0, -1, np.s_[:H, :]),
-                    (1, 1, np.s_[-H:, -H:]), (-1, 1, np.s_[-H:, :H]),
-                    (1, -1, np.s_[:H, -H:]), (-1, -1, np.s_[:H, :H]),
-                ):
-                    rows.append((tx + dx, ty + dy, f"{dx}:{dy}",
-                                 arr[sl].tobytes()))
-            yield pd.DataFrame(rows, columns=["dtx", "dty", "part", "payload"])
-
-    halo = tiles.select("tx", "ty", "px").mapInPandas(
-        _emit, "dtx long, dty long, part string, payload binary")
-
-    _PLACE = {
-        "0:0": np.s_[1, 1], "1:0": np.s_[1, 0], "-1:0": np.s_[1, 2],
-        "0:1": np.s_[0, 1], "0:-1": np.s_[2, 1],
-        "1:1": np.s_[0, 0], "-1:1": np.s_[0, 2],
-        "1:-1": np.s_[2, 0], "-1:-1": np.s_[2, 2],
-    }
-
-    def _fill(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        parts = dict(zip(pdf["part"], pdf["payload"]))
-        if "0:0" not in parts:
-            return pd.DataFrame(
-                [], columns=["tx", "ty", "px", "checksum"])
-        tx, ty = int(key[0]), int(key[1])
-        P = np.full((ts + 2 * H, ts + 2 * H), np.nan)
-        for part, raw in parts.items():
-            qy, qx = _PLACE[part]
-            hgt = ts if qy == 1 else H
-            wid = ts if qx == 1 else H
-            y0 = 0 if qy == 0 else (H if qy == 1 else H + ts)
-            x0 = 0 if qx == 0 else (H if qx == 1 else H + ts)
-            P[y0:y0 + hgt, x0:x0 + wid] = np.frombuffer(
-                raw, dtype=np_dtype).reshape(hgt, wid)
+    def _fill(tx, ty, band, P) -> pd.DataFrame:
         valid = np.where(P == nodata, np.nan, P)
         center = P[H:H + ts, H:H + ts].copy()
         ys, xs = np.nonzero(center == nodata)
@@ -113,4 +73,4 @@ def fill_nodata_tiles(tiles: DataFrame, nodata, radius: int = 3,
                                       is_float=True)],
         })
 
-    return halo.groupBy("dtx", "dty").applyInPandas(_fill, OUT_SCHEMA)
+    return halo_apply(tiles, radius, _fill, OUT_SCHEMA, dtype, tile_size)

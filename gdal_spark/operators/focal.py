@@ -2,19 +2,23 @@
 
 gdaldem's 3x3 window ops need each pixel's 8 neighbors; at tile
 boundaries those live in OTHER tiles (on other executors at scale).
-``Window.partitionBy`` can't express a 2-D halo, so the operator does
-an explicit halo exchange — the distributed form of gdaldem's
+``Window.partitionBy`` can't express a 2-D halo, so ``halo_apply``
+does an explicit halo exchange — the distributed form of gdaldem's
 three-line rolling window (/root/reference/apps/gdaldem_lib.cpp:466+):
 
   1. per tile (mapInPandas): emit the center payload to itself AND
-     1-px border strips/corners addressed to each of the 8 neighbor
-     tiles — the shuffle carries ~4*ts pixels per tile, not 9 full
+     k-px border strips/corners addressed to each of the 8 neighbor
+     tiles — the shuffle carries ~4*k*ts pixels per tile, not 9 full
      copies;
-  2. groupBy destination tile (applyInPandas): assemble the padded
-     (ts+2)^2 array — NaN where a neighbor doesn't exist (global
-     raster edge, matching gdaldem's edge nodata) — and run the
-     numpy kernel (kernels.focal);
-  3. emit the result tile (float32) with its golden checksum.
+  2. groupBy destination tile and band (applyInPandas): assemble the
+     padded (ts+2k)^2 float64 window — NaN where a neighbor doesn't
+     exist (global raster edge, matching gdaldem's edge nodata) — and
+     hand it to the operator's per-tile function.
+
+Every tiled neighbourhood operator runs on this one exchange: the
+focal kernels here (k=1, numpy kernels.focal, result tile float32
+with its golden checksum), fill nodata (k=radius), point sampling
+(k=1), contour (k=1) and the cubic/gauss overview (k=3 / k=1).
 
 Tile-split invariance: away from the global edge, the assembled halo
 equals the single-array window, so the distributed result ==
@@ -23,76 +27,86 @@ kernels.focal.focal_array — asserted in tests at every kernel.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from ..kernels import checksum as kck
 from ..kernels import focal as kf
 
-HALO_SCHEMA = "dtx long, dty long, band int, part string, payload binary"
 OUT_SCHEMA = "z int, tx bigint, ty bigint, band int, px binary, checksum long"
 
-# part -> (slice of source tile, placement in padded dest)
-_PARTS = {
-    "c":  (np.s_[:, :],   np.s_[1:-1, 1:-1]),
-    "n":  (np.s_[-1:, :], np.s_[0:1, 1:-1]),    # my bottom row = their north halo
-    "s":  (np.s_[0:1, :], np.s_[-1:, 1:-1]),
-    "w":  (np.s_[:, -1:], np.s_[1:-1, 0:1]),
-    "e":  (np.s_[:, 0:1], np.s_[1:-1, -1:]),
-    "nw": (np.s_[-1:, -1:], np.s_[0:1, 0:1]),
-    "ne": (np.s_[-1:, 0:1], np.s_[0:1, -1:]),
-    "sw": (np.s_[0:1, -1:], np.s_[-1:, 0:1]),
-    "se": (np.s_[0:1, 0:1], np.s_[-1:, -1:]),
-}
-_OFFSETS = {
-    "c": (0, 0), "n": (0, 1), "s": (0, -1), "w": (1, 0), "e": (-1, 0),
-    "nw": (1, 1), "ne": (-1, 1), "sw": (1, -1), "se": (-1, -1),
-}
+
+def _span(o: int, k: int, ts: int) -> tuple[slice, slice]:
+    """(source slice, padded slice) along one axis for a tile ``o``
+    tiles (-1, 0, 1) from the destination: the source pixels that fall
+    in the destination's k-px halo window, and where they land in it."""
+    lo, hi = max(0, -k - o * ts), min(ts, ts + k - o * ts)
+    return slice(lo, hi), slice(o * ts + lo + k, o * ts + hi + k)
+
+
+def halo_apply(tiles: DataFrame, k: int,
+               fn: Callable[[int, int, int, np.ndarray], pd.DataFrame],
+               schema: str, dtype, tile_size: int) -> DataFrame:
+    """Run ``fn(tx, ty, band, padded)`` on every tile of ``tiles``
+    (tx, ty, px[, band]) with a ``k``-px border from its neighbours.
+
+    ``padded`` is the (ts+2k)^2 float64 window centred on the tile, NaN
+    where a neighbour tile is absent; ``fn`` returns a pandas frame of
+    ``schema``.  One mapInPandas emits each tile's centre to itself and
+    its strips and corners to its 8 neighbours, keyed (dtx, dty, band);
+    one groupBy(...).applyInPandas assembles the windows.  A group with
+    no centre tile (just past the raster's edge, or a missing tile)
+    emits nothing.  An input without a ``band`` column is band 1.
+    """
+    ts = tile_size
+    if not 1 <= k <= ts:
+        raise ValueError(f"halo width {k} outside 1..{ts} (tile size)")
+    np_dtype = np.dtype(dtype)
+    # (ox, oy): source tile's offset from the destination tile
+    parts = [(ox, oy, _span(oy, k, ts), _span(ox, k, ts))
+             for oy in (-1, 0, 1) for ox in (-1, 0, 1)]
+    src = tiles if "band" in tiles.columns else tiles.withColumn(
+        "band", F.lit(1))
+
+    def _emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for tx, ty, band, raw in zip(pdf["tx"], pdf["ty"], pdf["band"],
+                                         pdf["px"]):
+                arr = np.frombuffer(raw, dtype=np_dtype).reshape(ts, ts)
+                for ox, oy, (ys, _), (xs, _) in parts:
+                    rows.append((int(tx) - ox, int(ty) - oy, int(band),
+                                 ox, oy, arr[ys, xs].tobytes()))
+            yield pd.DataFrame(rows, columns=[
+                "dtx", "dty", "band", "ox", "oy", "payload"])
+
+    halo = src.select("tx", "ty", "band", "px").mapInPandas(
+        _emit, "dtx long, dty long, band int, ox int, oy int, payload binary")
+    place = {(ox, oy): (ys, xs) for ox, oy, (_, ys), (_, xs) in parts}
+
+    def _apply(key, pdf):       # no type hints: PySpark warns on partial ones
+        if not ((pdf["ox"] == 0) & (pdf["oy"] == 0)).any():
+            return pd.DataFrame()
+        padded = np.full((ts + 2 * k, ts + 2 * k), np.nan)
+        for ox, oy, raw in zip(pdf["ox"], pdf["oy"], pdf["payload"]):
+            dst = place[int(ox), int(oy)]
+            padded[dst] = np.frombuffer(raw, dtype=np_dtype).reshape(
+                padded[dst].shape)
+        return fn(int(key[0]), int(key[1]), int(key[2]), padded)
+
+    return halo.groupBy("dtx", "dty", "band").applyInPandas(_apply, schema)
 
 
 def focal_tiles(tiles: DataFrame, kernel: str, zoom: int,
                 ewres: float = 1.0, nsres: float = 1.0,
                 dtype: str = "uint8", tile_size: int = 256,
                 out_dtype: str = "float32") -> DataFrame:
-    np_dtype = np.dtype(dtype)
     np_out = np.dtype(out_dtype)
-    ts = tile_size
 
-    from pyspark.sql import functions as F
-    src_df = tiles if "band" in tiles.columns else tiles.withColumn(
-        "band", F.lit(1))
-
-    def _emit_halo(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                arr = np.frombuffer(r["px"], dtype=np_dtype).reshape(ts, ts)
-                for part, (src, _dst) in _PARTS.items():
-                    dx, dy = _OFFSETS[part]
-                    rows.append((
-                        int(r["tx"]) + dx, int(r["ty"]) + dy,
-                        int(r["band"]), part, arr[src].tobytes(),
-                    ))
-            yield pd.DataFrame(
-                rows, columns=["dtx", "dty", "band", "part", "payload"])
-
-    halo = src_df.select("tx", "ty", "band", "px").mapInPandas(
-        _emit_halo, HALO_SCHEMA)
-
-    def _apply(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, band = int(key[0]), int(key[1]), int(key[2])
-        parts = dict(zip(pdf["part"], pdf["payload"]))
-        if "c" not in parts:        # pure-neighbor group: no center tile
-            return pd.DataFrame(
-                [], columns=["z", "tx", "ty", "band", "px", "checksum"])
-        padded = np.full((ts + 2, ts + 2), np.nan, dtype=np.float64)
-        for part, raw in parts.items():
-            src, dst = _PARTS[part]
-            shape = padded[dst].shape
-            padded[dst] = np.frombuffer(raw, dtype=np_dtype).reshape(shape)
+    def _kernel(tx, ty, band, padded) -> pd.DataFrame:
         out = kf.KERNELS[kernel](padded, ewres, nsres).astype(np_out)
         return pd.DataFrame({
             "z": [zoom], "tx": [tx], "ty": [ty], "band": [band],
@@ -100,6 +114,4 @@ def focal_tiles(tiles: DataFrame, kernel: str, zoom: int,
             "checksum": [kck.checksum(out.astype(np.float64), is_float=True)],
         })
 
-    # band in the key: multi-band inputs filter per band
-    return halo.groupBy("dtx", "dty", "band").applyInPandas(
-        _apply, OUT_SCHEMA)
+    return halo_apply(tiles, 1, _kernel, OUT_SCHEMA, dtype, tile_size)

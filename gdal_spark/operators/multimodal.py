@@ -7,8 +7,7 @@ tested.  Decode is REAL for every modality via the spec-written
 stdlib codecs in kernels/media.py (WAV audio; BMP/PNG/baseline-JPEG
 images; AVI video with per-frame sampling; MP4/ISO-BMFF metadata
 box walk); only the codec sample payloads inside MP4 mdat (H.264/
-AAC) stay behind the clearly-marked stub, since no codec library
-ships in this container.
+AAC) are not decoded, since the engine carries no such codec.
 
 ``decode_media_real`` and ``frame_sample_real`` are ``mapInArrow``
 maps over an (id, kind, payload) projection.  Each Arrow batch is
@@ -33,73 +32,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
-
-FEATURE_SCHEMA = (
-    "doc_id bigint, byte_len int, width int, height int, luma bigint"
-)
-
-
-def synth_payload_col(doc_id: Column) -> Column:
-    """Deterministic 16-byte binary payload: unhex(md5(doc_id)).
-
-    Stands in for a real media blob; identical bytes are derivable in
-    the DuckDB oracle from the same md5 hex string.
-    """
-    return F.unhex(F.md5(doc_id.cast("string")))
-
-
-def decode_media_stub(df: DataFrame, id_col: str = "doc_id",
-                      payload_col: str = "payload") -> DataFrame:
-    """'Decode' media payloads into features — Arrow-batched numpy.
-
-    Fake-but-deterministic codec: width/height from the first four
-    bytes (big-endian, bounded to screen-ish dims), luma = sum of
-    bytes 4..11.  Replace `_decode_batch` with a real codec (PIL /
-    ffmpeg) where available; the Spark plumbing (mapInPandas over
-    binary, explicit output schema, batch-shaped work) is the real
-    deliverable here.
-    """
-
-    def _decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            raw = np.frombuffer(
-                b"".join(pdf[payload_col]), dtype=np.uint8
-            ).reshape(len(pdf), -1)
-            out = pd.DataFrame({
-                "doc_id": pdf[id_col].to_numpy(),
-                "byte_len": np.full(len(pdf), raw.shape[1], dtype=np.int32),
-                "width": (
-                    (raw[:, 0].astype(np.int64) << 8) | raw[:, 1]
-                ).astype(np.int64) % 1920,
-                "height": (
-                    (raw[:, 2].astype(np.int64) << 8) | raw[:, 3]
-                ).astype(np.int64) % 1080,
-                "luma": raw[:, 4:12].astype(np.int64).sum(axis=1),
-            })
-            yield out
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        _decode_batch, FEATURE_SCHEMA
-    )
-
-
-def frame_sample(df: DataFrame, id_col: str = "doc_id",
-                 stride: int = 30, fps_ms: int = 33) -> DataFrame:
-    """Video frame sampling: each doc 'has' 1 + (id % 120) frames;
-    emit every ``stride``-th frame index with its timestamp.
-
-    The explode is JVM-side (sequence), so sampling a 10^12-row video
-    table never touches Python.
-    """
-    n_frames = F.lit(1) + (F.col(id_col) % 120)
-    idx = F.sequence(F.lit(0), n_frames - 1, F.lit(stride))
-    return df.select(
-        F.col(id_col), F.explode(idx).alias("frame_idx")
-    ).withColumn("ts_ms", F.col("frame_idx") * fps_ms)
-
+from pyspark.sql import DataFrame, functions as F
 
 _MEDIA_FEATURES = (("rate", "int"), ("n_samples", "int"),
                    ("duration_ms", "int"), ("rms", "double"), ("peak", "int"),
@@ -113,9 +46,8 @@ def decode_media_real(df: DataFrame, id_col: str = "doc_id",
     """REAL media decode for the stdlib-parsable formats: canonical
     PCM WAV, 24-bit uncompressed BMP, PNG (zlib + 5 filters) and
     baseline JPEG (spec-written T.81 codec) — kernels/media.py,
-    struct + zlib + numpy, no external codec.  Remaining compressed
-    formats (mp4/webp/...) stay behind decode_media_stub, clearly
-    flagged.
+    struct + zlib + numpy, no external codec.  Other compressed
+    formats (mp4/webp/...) are not decoded.
 
     One ``mapInArrow`` pass over the (id, kind, payload) projection.
     Each Arrow batch is grouped by kind and each group goes to one
@@ -152,9 +84,7 @@ def _decode_batches(batches):
                             else np.float64) for c, t in _MEDIA_FEATURES}
         for kind, idx in by_kind.items():
             if kind not in kernels:
-                raise ValueError(
-                    f"no stdlib codec for kind={kind!r}; "
-                    "use decode_media_stub for compressed formats")
+                raise ValueError(f"no stdlib codec for kind={kind!r}")
             feats = kernels[kind]([payloads[i] for i in idx])
             for c, v in feats.items():
                 cols[c][idx] = v
@@ -267,8 +197,7 @@ def mp4_meta(df: DataFrame, id_col: str = "doc_id",
     container bytes (kernels/media.py::decode_mp4_meta — ftyp brand,
     mvhd duration, per-track tkhd dims / hdlr handler / stsz sample
     counts).  One Arrow pass; codec payloads inside mdat are NOT
-    decoded (that genuinely needs external codecs and stays behind
-    decode_media_stub)."""
+    decoded (that needs an external codec)."""
     from ..kernels import media as km
 
     def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -8,10 +8,11 @@ Semantics target: GDALInterpolateAtPoint near/bilinear
 (gx - 0.5, gy - 0.5) with fractional weights.
 
 Distributed shape: points map to their tile by pure Column math; the
-tiles are assembled WITH a 1-px halo (same border-strip exchange as
-the focal operators) so bilinear reads that straddle a tile border
-see real neighbor pixels; points and padded tiles meet in a cogroup
-keyed by (tx, ty) — one shuffle each side, numpy sampling per group.
+tiles are assembled WITH a 1-px halo by the shared exchange
+(``operators.focal.halo_apply``, as for the focal operators) so
+bilinear reads that straddle a tile border see real neighbor pixels;
+points and padded tiles meet in a cogroup keyed by (tx, ty) — one
+shuffle each side, numpy sampling per group.
 """
 
 from __future__ import annotations
@@ -22,46 +23,21 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import functions as gf
 from ..kernels.cells import TileGrid
-from .focal import _OFFSETS, _PARTS
+from .focal import halo_apply
 
 SAMPLE_SCHEMA = "pid long, value double"
-_PS_HALO_SCHEMA = "dtx long, dty long, part string, payload binary"
 
 
 def _padded_tiles(tiles: DataFrame, np_dtype, ts: int) -> DataFrame:
     """(tx, ty, padded binary): each tile with its 1-px neighbor halo
     (NaN where no neighbor exists — dataset edge)."""
 
-    def _emit(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                arr = np.frombuffer(r["px"], dtype=np_dtype).reshape(ts, ts)
-                for part, (src, _dst) in _PARTS.items():
-                    dx, dy = _OFFSETS[part]
-                    rows.append((int(r["tx"]) + dx, int(r["ty"]) + dy,
-                                 part, arr[src].tobytes()))
-            yield pd.DataFrame(rows, columns=["dtx", "dty", "part", "payload"])
+    def _bytes(tx, ty, band, padded) -> pd.DataFrame:
+        return pd.DataFrame({"tx": [tx], "ty": [ty],
+                             "padded": [padded.tobytes()]})
 
-    halo = tiles.select("tx", "ty", "px").mapInPandas(
-        _emit, _PS_HALO_SCHEMA)
-
-    def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        parts = dict(zip(pdf["part"], pdf["payload"]))
-        if "c" not in parts:
-            return pd.DataFrame([], columns=["tx", "ty", "padded"])
-        padded = np.full((ts + 2, ts + 2), np.nan, dtype=np.float64)
-        for part, raw in parts.items():
-            _src, dst = _PARTS[part]
-            padded[dst] = np.frombuffer(raw, dtype=np_dtype).reshape(
-                padded[dst].shape)
-        return pd.DataFrame({
-            "tx": [int(key[0])], "ty": [int(key[1])],
-            "padded": [padded.tobytes()],
-        })
-
-    return halo.groupBy("dtx", "dty").applyInPandas(
-        _assemble, "tx long, ty long, padded binary")
+    return halo_apply(tiles, 1, _bytes, "tx long, ty long, padded binary",
+                      np_dtype, ts)
 
 
 def sample_tiles(tiles: DataFrame, points: DataFrame, grid: TileGrid,

@@ -38,6 +38,7 @@ from .. import functions as gf
 from ..kernels import checksum as kck
 from ..kernels import rasterize as kr
 from ..kernels import wkb as kwkb
+from .focal import halo_apply
 from ..kernels.cells import TileGrid
 
 TILE_SCHEMA = "z int, tx bigint, ty bigint, band int, px binary, checksum long"
@@ -219,54 +220,17 @@ def _conv2x_raw(a: np.ndarray, k: int, weights: np.ndarray,
 
 def _pyramid_reduce_cubic(tiles: DataFrame, zoom: int, dtype: str,
                           tile_size: int, method: str = "cubic") -> DataFrame:
-    """Cubic/gauss 2:1 decimation: k-px halo exchange (taps cross
-    tile borders), separable horizontal-then-vertical passes per
-    tile, then a 2x2 quarter assembly into the parent tile."""
+    """Cubic/gauss 2:1 decimation: the shared k-px halo exchange
+    (``focal.halo_apply``; taps cross tile borders), separable
+    horizontal-then-vertical passes per tile, then a 2x2 quarter
+    assembly into the parent tile."""
     np_dtype = np.dtype(dtype)
     is_float = np.issubdtype(np_dtype, np.floating)
     weights, k, off = _CONV2X[method]
     ts = tile_size
     hs = ts // 2
 
-    src = tiles if "band" in tiles.columns else tiles.withColumn(
-        "band", F.lit(1))
-
-    def _emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                arr = np.frombuffer(r["px"], dtype=np_dtype).reshape(ts, ts)
-                tx, ty = int(r["tx"]), int(r["ty"])
-                band = int(r["band"])
-                for dy in (-1, 0, 1):
-                    for dx in (-1, 0, 1):
-                        ys = np.s_[-k:] if dy == 1 else (
-                            np.s_[:k] if dy == -1 else np.s_[:])
-                        xs = np.s_[-k:] if dx == 1 else (
-                            np.s_[:k] if dx == -1 else np.s_[:])
-                        rows.append((tx + dx, ty + dy, band, -dx, -dy,
-                                     arr[ys, xs].tobytes()))
-            yield pd.DataFrame(
-                rows, columns=["dtx", "dty", "band", "ox", "oy", "payload"])
-
-    halo = src.select("tx", "ty", "band", "px").mapInPandas(
-        _emit, "dtx long, dty long, band int, ox int, oy int, payload binary")
-
-    def _reduce(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty, band = int(key[0]), int(key[1]), int(key[2])
-        has_center = ((pdf["ox"] == 0) & (pdf["oy"] == 0)).any()
-        if not has_center:
-            return pd.DataFrame(
-                [], columns=["ptx", "pty", "band", "qx", "qy", "px"])
-        padded = np.full((ts + 2 * k, ts + 2 * k), np.nan)
-        for _, r in pdf.iterrows():
-            ox, oy = int(r["ox"]), int(r["oy"])
-            h = ts if ox == 0 else k
-            v = ts if oy == 0 else k
-            arr = np.frombuffer(r["payload"], dtype=np_dtype).reshape(v, h)
-            y0 = k if oy == 0 else (0 if oy == -1 else ts + k)
-            x0 = k if ox == 0 else (0 if ox == -1 else ts + k)
-            padded[y0:y0 + v, x0:x0 + h] = arr
+    def _reduce(tx, ty, band, padded) -> pd.DataFrame:
         if method == "gauss":
             # joint 2D normalization: num/den carried separately and
             # divided ONCE (the reference sums its matrix directly)
@@ -292,8 +256,10 @@ def _pyramid_reduce_cubic(tiles: DataFrame, zoom: int, dtype: str,
             "px": [out.astype(np_dtype).tobytes()],
         })
 
-    quarters = halo.groupBy("dtx", "dty", "band").applyInPandas(
-        _reduce, "ptx long, pty long, band int, qx int, qy int, px binary")
+    quarters = halo_apply(
+        tiles, k, _reduce,
+        "ptx long, pty long, band int, qx int, qy int, px binary",
+        np_dtype, ts)
 
     def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
         ptx, pty, band = int(key[0]), int(key[1]), int(key[2])

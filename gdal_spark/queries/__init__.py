@@ -142,9 +142,6 @@ _DEFERRED = [
     "la_poly_identity", "la_poly_union", "la_poly_symdifference",
     "la_poly_update", "cascaded_union", "grid_idw", "grid_metrics", "los",
     "pansharpen", "shapefile_scan",
-    # multimodal plumbing unchanged since round 2 (last touch 2c8b1ad)
-    # and driver-green in r02 — defer to buy two never-checked slots
-    "media_features", "frame_sample",
     # new in round 3 — judge-gate rows this round, rotate into the
     # driver window in round 4
     "viewshed_curved", "rasterize_points", "rasterize_lines",
@@ -225,6 +222,9 @@ _PRIORITY = [
     # micro-int coordinates + total cast_types sort (sf1 sweep finds)
     "line_substring", "segmentize", "lineref_locate",
     "lineref_interpolate", "cast_types",
+    # changed: the real decoders in place of the fake media codec, with
+    # new oracles
+    "media_features", "frame_sample",
 ]
 
 

@@ -510,35 +510,13 @@ def cosine_neardup(spark, sf_dir):
 
 
 # -------------------------------------------------------------- multimodal
-_LUMA_SQL = " + ".join(
-    f"('0x' || substr(h, {9 + 2*k}, 2))::BIGINT" for k in range(8)
-)
-
-@register(
-    "media_features",
-    sql=f"""
-    WITH m AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents)
-    SELECT doc_id,
-           16 AS byte_len,
-           CAST(('0x' || substr(h, 1, 4))::BIGINT % 1920 AS INT) AS width,
-           CAST(('0x' || substr(h, 5, 4))::BIGINT % 1080 AS INT) AS height,
-           CAST({_LUMA_SQL} AS BIGINT) AS luma
-    FROM m ORDER BY doc_id
-    """,
-    desc="multimodal decode plumbing: binary payload column -> features via "
-         "Arrow-batched numpy mapInPandas (codec step is a deterministic stub)",
-)
-def media_features(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents").select("doc_id")
-    docs = docs.withColumn("payload", mm.synth_payload_col(F.col("doc_id")))
-    return mm.decode_media_stub(docs).orderBy("doc_id")
-
-
-@register(
-    "media_decode",
-    sql="""
-    WITH wav AS (
-      SELECT doc_id, 64 + doc_id % 64 AS n FROM documents WHERE doc_id % 2 = 0
+# Per-kind oracle CTEs, each restating from its fixture builder's
+# generating formula the decode_media_real row (doc_id, kind, rate,
+# n_samples, duration_ms, rms, peak, width, height, mean_r/g/b) of
+# every document matching {where}: wavf, bmpf, pngf, jpegf.
+_WAV_SQL = """
+    wav AS (
+      SELECT doc_id, 64 + doc_id % 64 AS n FROM documents WHERE {where}
     ),
     wavs AS (
       SELECT doc_id, n, unnest(generate_series(0, n - 1)) AS i FROM wav
@@ -555,21 +533,24 @@ def media_features(spark, sf_dir):
       FROM (SELECT doc_id, n, (doc_id * 31 + i * 17) % 2048 - 1024 AS s
             FROM wavs)
       GROUP BY doc_id
-    ),
+    )"""
+
+_NO_AUDIO = """CAST(0 AS INT) AS rate, CAST(0 AS INT) AS n_samples,
+             CAST(0 AS INT) AS duration_ms, 0.0 AS rms, CAST(0 AS INT) AS peak"""
+
+_BMP_SQL = """
     bmp AS (
       SELECT doc_id, 8 + doc_id % 8 AS w, 6 + doc_id % 6 AS h
-      FROM documents WHERE doc_id % 2 = 1
+      FROM documents WHERE {where}
     ),
     brow AS (
       SELECT doc_id, w, h, unnest(generate_series(0, h - 1)) AS r FROM bmp
     ),
-    cells AS (
+    bcells AS (
       SELECT doc_id, w, h, r, unnest(generate_series(0, w - 1)) AS c FROM brow
     ),
     bmpf AS (
-      SELECT doc_id, 'bmp' AS kind,
-             CAST(0 AS INT) AS rate, CAST(0 AS INT) AS n_samples,
-             CAST(0 AS INT) AS duration_ms, 0.0 AS rms, CAST(0 AS INT) AS peak,
+      SELECT doc_id, 'bmp' AS kind, """ + _NO_AUDIO + """,
              CAST(MAX(w) AS INT) AS width, CAST(MAX(h) AS INT) AS height,
              SUM(CAST((doc_id * 7 + r * 13 + c * 3) % 256 AS DOUBLE))
                / (MAX(w) * MAX(h)) AS mean_r,
@@ -577,8 +558,96 @@ def media_features(spark, sf_dir):
                / (MAX(w) * MAX(h)) AS mean_g,
              SUM(CAST((doc_id * 7 + r * 13 + c * 3 + 22) % 256 AS DOUBLE))
                / (MAX(w) * MAX(h)) AS mean_b
-      FROM cells GROUP BY doc_id
-    )
+      FROM bcells GROUP BY doc_id
+    )"""
+
+_PNG_SQL = """
+    png AS (
+      SELECT doc_id, 5 + doc_id % 8 AS w, 5 + doc_id % 6 AS h,
+             doc_id % 3 AS k
+      FROM documents WHERE {where}
+    ),
+    prow AS (
+      SELECT doc_id, w, h, k, unnest(generate_series(0, h - 1)) AS r FROM png
+    ),
+    pcells AS (
+      SELECT doc_id, w, h, k, r, unnest(generate_series(0, w - 1)) AS c
+      FROM prow
+    ),
+    pngf AS (
+      SELECT doc_id, 'png' AS kind, """ + _NO_AUDIO + """,
+             CAST(MAX(w) AS INT) AS width, CAST(MAX(h) AS INT) AS height,
+             SUM(CAST((doc_id * 7 + r * 13 + c * 3) % 256 AS DOUBLE))
+               / (MAX(w) * MAX(h)) AS mean_r,
+             SUM(CAST((doc_id * 7 + r * 13 + c * 3
+                       + CASE WHEN k = 0 THEN 0 ELSE 11 END) % 256
+                      AS DOUBLE)) / (MAX(w) * MAX(h)) AS mean_g,
+             SUM(CAST((doc_id * 7 + r * 13 + c * 3
+                       + CASE WHEN k = 0 THEN 0 ELSE 22 END) % 256
+                      AS DOUBLE)) / (MAX(w) * MAX(h)) AS mean_b
+      FROM pcells GROUP BY doc_id, k
+    )"""
+
+_JPEG_SQL = """
+    jpg AS (
+      SELECT doc_id, 9 + doc_id % 16 AS w, 9 + doc_id % 12 AS h
+      FROM documents WHERE {where}
+    ),
+    jrow AS (
+      SELECT doc_id, w, h, unnest(generate_series(0, h - 1)) AS r FROM jpg
+    ),
+    jcells AS (
+      SELECT doc_id, w, h, r, unnest(generate_series(0, w - 1)) AS c
+      FROM jrow
+    ),
+    jpx AS (
+      SELECT doc_id, w, h,
+             CAST((doc_id * 7 + (r // 8) * 13 + (c // 8) * 3) % 256
+                  AS DOUBLE) AS v
+      FROM jcells
+    ),
+    jpegf AS (
+      SELECT doc_id, 'jpeg' AS kind, """ + _NO_AUDIO + """,
+             CAST(MAX(w) AS INT) AS width, CAST(MAX(h) AS INT) AS height,
+             SUM(v) / (MAX(w) * MAX(h)) AS mean_r,
+             SUM(v) / (MAX(w) * MAX(h)) AS mean_g,
+             SUM(v) / (MAX(w) * MAX(h)) AS mean_b
+      FROM jpx GROUP BY doc_id
+    )"""
+
+_IMAGE_COLS = "doc_id, kind, width, height, mean_r, mean_g, mean_b"
+
+
+@register(
+    "media_features",
+    sql=f"""
+    WITH {_WAV_SQL.format(where="doc_id % 4 = 0")},
+    {_BMP_SQL.format(where="doc_id % 4 = 1")},
+    {_PNG_SQL.format(where="doc_id % 4 = 2")},
+    {_JPEG_SQL.format(where="doc_id % 4 = 3")}
+    SELECT * FROM wavf UNION ALL SELECT * FROM bmpf
+    UNION ALL SELECT * FROM pngf UNION ALL SELECT * FROM jpegf
+    ORDER BY doc_id
+    """,
+    desc="mixed-media decode: WAV / BMP / PNG / JPEG payloads chosen by "
+         "doc_id % 4 go through one decode_media_real pass, each kind to "
+         "its batch kernel; the oracle restates every feature from the "
+         "four generating formulas",
+)
+def media_features(spark, sf_dir):
+    docs = t(spark, sf_dir, "documents").select("doc_id")
+    kind = F.col("doc_id") % 4
+    media = (mm.synth_media_col_rows(docs.filter(kind < 2))
+             .unionByName(mm.synth_png_col_rows(docs.filter(kind == 2)))
+             .unionByName(mm.synth_jpeg_col_rows(docs.filter(kind == 3))))
+    return mm.decode_media_real(media).orderBy("doc_id")
+
+
+@register(
+    "media_decode",
+    sql=f"""
+    WITH {_WAV_SQL.format(where="doc_id % 2 = 0")},
+    {_BMP_SQL.format(where="doc_id % 2 = 1")}
     SELECT * FROM wavf UNION ALL SELECT * FROM bmpf ORDER BY doc_id
     """,
     desc="REAL media decode (no stub): deterministic canonical-PCM WAV / "
@@ -596,30 +665,9 @@ def media_decode(spark, sf_dir):
 
 @register(
     "media_decode_png",
-    sql="""
-    WITH d AS (
-      SELECT doc_id, 5 + doc_id % 8 AS w, 5 + doc_id % 6 AS h,
-             doc_id % 3 AS k
-      FROM documents
-    ),
-    rws AS (
-      SELECT doc_id, w, h, k, unnest(generate_series(0, h - 1)) AS r FROM d
-    ),
-    cells AS (
-      SELECT doc_id, w, h, k, r, unnest(generate_series(0, w - 1)) AS c
-      FROM rws
-    )
-    SELECT doc_id, 'png' AS kind,
-           CAST(MAX(w) AS INT) AS width, CAST(MAX(h) AS INT) AS height,
-           SUM(CAST((doc_id * 7 + r * 13 + c * 3) % 256 AS DOUBLE))
-             / (MAX(w) * MAX(h)) AS mean_r,
-           SUM(CAST((doc_id * 7 + r * 13 + c * 3
-                     + CASE WHEN k = 0 THEN 0 ELSE 11 END) % 256
-                    AS DOUBLE)) / (MAX(w) * MAX(h)) AS mean_g,
-           SUM(CAST((doc_id * 7 + r * 13 + c * 3
-                     + CASE WHEN k = 0 THEN 0 ELSE 22 END) % 256
-                    AS DOUBLE)) / (MAX(w) * MAX(h)) AS mean_b
-    FROM cells GROUP BY doc_id, k ORDER BY doc_id
+    sql=f"""
+    WITH {_PNG_SQL.format(where="TRUE")}
+    SELECT {_IMAGE_COLS} FROM pngf ORDER BY doc_id
     """,
     desc="REAL PNG decode, codec written from the public PNG 1.2 spec "
          "(kernels/media.py: stdlib zlib inflate + all 5 scanline filters, "
@@ -638,30 +686,9 @@ def media_decode_png(spark, sf_dir):
 
 @register(
     "media_decode_jpeg",
-    sql="""
-    WITH d AS (
-      SELECT doc_id, 9 + doc_id % 16 AS w, 9 + doc_id % 12 AS h
-      FROM documents
-    ),
-    rws AS (
-      SELECT doc_id, w, h, unnest(generate_series(0, h - 1)) AS r FROM d
-    ),
-    cells AS (
-      SELECT doc_id, w, h, r, unnest(generate_series(0, w - 1)) AS c
-      FROM rws
-    ),
-    px AS (
-      SELECT doc_id, w, h,
-             CAST((doc_id * 7 + (r // 8) * 13 + (c // 8) * 3) % 256
-                  AS DOUBLE) AS v
-      FROM cells
-    )
-    SELECT doc_id, 'jpeg' AS kind,
-           CAST(MAX(w) AS INT) AS width, CAST(MAX(h) AS INT) AS height,
-           SUM(v) / (MAX(w) * MAX(h)) AS mean_r,
-           SUM(v) / (MAX(w) * MAX(h)) AS mean_g,
-           SUM(v) / (MAX(w) * MAX(h)) AS mean_b
-    FROM px GROUP BY doc_id ORDER BY doc_id
+    sql=f"""
+    WITH {_JPEG_SQL.format(where="TRUE")}
+    SELECT {_IMAGE_COLS} FROM jpegf ORDER BY doc_id
     """,
     desc="REAL baseline JPEG decode, codec written from ITU-T T.81 "
          "(kernels/media.py: markers, canonical Huffman, zigzag+quant, "
@@ -680,9 +707,9 @@ def media_decode_jpeg(spark, sf_dir):
             .orderBy("doc_id"))
 
 
-@register(
-    "media_decode_avi",
-    sql="""
+# AVI frame sampling oracle: every {stride}-th frame of each document's
+# synth_avi_col_rows video, restated from its generating pixel formula
+_AVI_SQL = """
     WITH d AS (
       SELECT doc_id, 6 + doc_id % 8 AS w, 5 + doc_id % 6 AS h,
              4 + doc_id % 9 AS nf, 10 + doc_id % 10 AS rate
@@ -690,7 +717,7 @@ def media_decode_jpeg(spark, sf_dir):
     ),
     fr AS (
       SELECT doc_id, w, h, rate,
-             unnest(generate_series(0, nf - 1, 2)) AS f
+             unnest(generate_series(0, nf - 1, {stride})) AS f
       FROM d
     ),
     rws AS (
@@ -717,7 +744,12 @@ def media_decode_jpeg(spark, sf_dir):
            SUM(v1) / (MAX(w) * MAX(h)) AS mean_g,
            SUM(v2) / (MAX(w) * MAX(h)) AS mean_b
     FROM px GROUP BY doc_id, f ORDER BY doc_id, f
-    """,
+    """
+
+
+@register(
+    "media_decode_avi",
+    sql=_AVI_SQL.format(stride=2),
     desc="REAL video decode + frame sampling: deterministic uncompressed "
          "DIB AVIs (RIFF container written from the public AVI layout, "
          "kernels/media.py) with per-doc frame counts/dims/rates are "
@@ -769,16 +801,14 @@ def media_meta_mp4(spark, sf_dir):
 
 @register(
     "frame_sample",
-    sql="""
-    WITH d AS (SELECT doc_id, 1 + (doc_id % 120) AS nf FROM documents)
-    SELECT doc_id, unnest(generate_series(0, nf - 1, 30)) AS frame_idx,
-           unnest(generate_series(0, nf - 1, 30)) * 33 AS ts_ms
-    FROM d ORDER BY doc_id, frame_idx
-    """,
-    desc="video frame sampling: JVM-side sequence explode, no Python",
+    sql=_AVI_SQL.format(stride=3),
+    desc="video frame sampling: every 3rd frame of the synthesized "
+         "uncompressed-DIB AVIs through frame_sample_real (one RIFF walk "
+         "per payload), with its rate-derived timestamp and channel means",
 )
 def frame_sample(spark, sf_dir):
-    return mm.frame_sample(t(spark, sf_dir, "documents")).orderBy(
+    docs = t(spark, sf_dir, "documents").select("doc_id")
+    return mm.frame_sample_real(mm.synth_avi_col_rows(docs), stride=3).orderBy(
         "doc_id", "frame_idx")
 
 

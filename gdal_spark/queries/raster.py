@@ -42,6 +42,16 @@ def _derived_grid_df(spark):
     )
 
 
+def _split_2x2(a, ts, **cols):
+    """Rows of the 2x2 tiles of ``ts`` px that ``a`` (2ts x 2ts) splits
+    into, in row-major tile order: tx, ty, px (the tile's bytes), plus
+    ``cols`` on every row."""
+    return [dict(cols, tx=txx, ty=tyy,
+                 px=a[tyy * ts:(tyy + 1) * ts,
+                      txx * ts:(txx + 1) * ts].tobytes())
+            for tyy in range(2) for txx in range(2)]
+
+
 @register(
     "raster_checksum",
     sql=f"""
@@ -514,16 +524,7 @@ def focal_hillshade(spark, sf_dir):
     def _mk_tiles(key, pdf: pd.DataFrame) -> pd.DataFrame:
         a = np.zeros(GW * GW, dtype=np.float64)
         a[pdf["idx"].to_numpy()] = pdf["v"].to_numpy()
-        a = a.reshape(GW, GW)
-        rows = []
-        for tyy in range(2):
-            for txx in range(2):
-                rows.append({
-                    "tx": txx, "ty": tyy,
-                    "px": a[tyy * ts:(tyy + 1) * ts,
-                            txx * ts:(txx + 1) * ts].tobytes(),
-                })
-        return pd.DataFrame(rows)
+        return pd.DataFrame(_split_2x2(a.reshape(GW, GW), ts))
 
     px = _derived_grid_df(spark)
     tiles = px.withColumn("_g", F.lit(1)).groupBy("_g").applyInPandas(
@@ -585,14 +586,7 @@ def _pixel_tiles_df(spark):
     def _mk(key, pdf: pd.DataFrame) -> pd.DataFrame:
         a = np.zeros(GW * GW, dtype=np.uint8)
         a[pdf["idx"].to_numpy()] = pdf["v"].to_numpy()
-        a = a.reshape(GW, GW)
-        rows = []
-        for tyy in range(2):
-            for txx in range(2):
-                rows.append({"tx": txx, "ty": tyy,
-                             "px": a[tyy * ts:(tyy + 1) * ts,
-                                     txx * ts:(txx + 1) * ts].tobytes()})
-        return pd.DataFrame(rows)
+        return pd.DataFrame(_split_2x2(a.reshape(GW, GW), ts))
 
     px = _derived_grid_df(spark)
     return px.withColumn("_g", F.lit(1)).groupBy("_g").applyInPandas(
@@ -726,13 +720,7 @@ def sieve_q(spark, sf_dir):
         a = ((rr // 8 + cc // 8) % 4).astype(np.uint8)
         speck = (rr * GW + cc) % 97 == 0
         a[speck] = 9
-        rows = []
-        for tyy in range(2):
-            for txx in range(2):
-                rows.append({"tx": txx, "ty": tyy,
-                             "px": a[tyy * ts:(tyy + 1) * ts,
-                                     txx * ts:(txx + 1) * ts].tobytes()})
-        return pd.DataFrame(rows)
+        return pd.DataFrame(_split_2x2(a, ts))
 
     tiles = spark.range(1).withColumn("_g", F.lit(1)).groupBy("_g").applyInPandas(
         _mk, "tx long, ty long, px binary")
@@ -771,15 +759,8 @@ def _two_band_tiles(spark):
         idx = np.arange(GW * GW).reshape(GW, GW)
         a = ((idx * 7) % 256).astype(np.uint8)
         b = ((idx * 13) % 256).astype(np.uint8)
-        rows = []
-        for band, arr in (("A", a), ("B", b)):
-            for tyy in range(2):
-                for txx in range(2):
-                    rows.append({
-                        "band": band, "tx": txx, "ty": tyy,
-                        "px": arr[tyy * ts:(tyy + 1) * ts,
-                                  txx * ts:(txx + 1) * ts].tobytes()})
-        return pd.DataFrame(rows)
+        return pd.DataFrame(_split_2x2(a, ts, band="A")
+                            + _split_2x2(b, ts, band="B"))
 
     both = spark.range(1).withColumn("_g", F.lit(1)).groupBy("_g").applyInPandas(
         _mk, "band string, tx long, ty long, px binary")
@@ -941,14 +922,8 @@ def fill_nodata_q(spark, sf_dir):
 
     def _mk(key, pdf: pd.DataFrame) -> pd.DataFrame:
         idx = np.arange(GW * GW).reshape(GW, GW)
-        a = ((idx * 7) % 256).astype(np.float64)
-        rows = []
-        for tyy in range(2):
-            for txx in range(2):
-                rows.append({"tx": txx, "ty": tyy,
-                             "px": a[tyy * ts:(tyy + 1) * ts,
-                                     txx * ts:(txx + 1) * ts].tobytes()})
-        return pd.DataFrame(rows)
+        return pd.DataFrame(_split_2x2(
+            ((idx * 7) % 256).astype(np.float64), ts))
 
     tiles = spark.range(1).withColumn("_g", F.lit(1)).groupBy("_g").applyInPandas(
         _mk, "tx long, ty long, px binary")
@@ -1488,15 +1463,8 @@ def mosaic_q(spark, sf_dir):
     b = np.where(bv % 4 == 0, 0, bv).astype(np.uint8)
 
     def _mk(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for src, g in ((0, a), (1, b)):
-            for tyy in range(2):
-                for txx in range(2):
-                    rows.append({
-                        "src": src, "tx": txx, "ty": tyy,
-                        "px": g[tyy * ts:(tyy + 1) * ts,
-                                txx * ts:(txx + 1) * ts].tobytes()})
-        return pd.DataFrame(rows)
+        return pd.DataFrame(_split_2x2(a, ts, src=0)
+                            + _split_2x2(b, ts, src=1))
 
     tiles = spark.range(1).withColumn("_g", F.lit(1)).groupBy(
         "_g").applyInPandas(_mk, "src int, tx long, ty long, px binary")
@@ -1720,16 +1688,7 @@ def _focal_query(kernel):
         def _mk_tiles(key, pdf: pd.DataFrame) -> pd.DataFrame:
             a = np.zeros(GW * GW, dtype=np.float64)
             a[pdf["idx"].to_numpy()] = pdf["v"].to_numpy()
-            a = a.reshape(GW, GW)
-            rows = []
-            for tyy in range(2):
-                for txx in range(2):
-                    rows.append({
-                        "tx": txx, "ty": tyy,
-                        "px": a[tyy * ts:(tyy + 1) * ts,
-                                txx * ts:(txx + 1) * ts].tobytes(),
-                    })
-            return pd.DataFrame(rows)
+            return pd.DataFrame(_split_2x2(a.reshape(GW, GW), ts))
 
         px = _derived_grid_df(spark)
         tiles = px.withColumn("_g", F.lit(1)).groupBy("_g").applyInPandas(
@@ -2204,17 +2163,8 @@ def xyz_export_q(spark, sf_dir):
     def _mk_tiles(key, pdf: pd.DataFrame) -> pd.DataFrame:
         a = np.zeros(GW * GW, dtype=np.uint8)
         a[pdf["idx"].to_numpy()] = pdf["v"].to_numpy()
-        a = a.reshape(GW, GW)
-        rows = []
-        for tyy in range(2):
-            for txx in range(2):
-                rows.append({
-                    "z": 1, "tx": txx, "ty": tyy, "band": 1,
-                    "px": a[tyy * ts:(tyy + 1) * ts,
-                            txx * ts:(txx + 1) * ts].tobytes(),
-                    "checksum": 0,
-                })
-        return pd.DataFrame(rows)
+        return pd.DataFrame(_split_2x2(a.reshape(GW, GW), ts, z=1, band=1,
+                                       checksum=0))
 
     tiles = px.withColumn("_g", F.lit(1)).groupBy("_g").applyInPandas(
         _mk_tiles,
@@ -2356,13 +2306,7 @@ def zonal_stats_q(spark, sf_dir):
         z[(rr >= 2) & (rr <= 20) & (cc >= 3) & (cc <= 30)] = 1
         z[(rr >= 25) & (rr <= 60) & (cc >= 0) & (cc <= 40)] = 2
         z[(rr >= 5) & (rr <= 15) & (cc >= 40) & (cc <= 63)] = 3
-        rows = []
-        for tyy in range(2):
-            for txx in range(2):
-                rows.append({"tx": txx, "ty": tyy,
-                             "px": z[tyy * ts:(tyy + 1) * ts,
-                                     txx * ts:(txx + 1) * ts].tobytes()})
-        return pd.DataFrame(rows)
+        return pd.DataFrame(_split_2x2(z, ts))
 
     zones = (spark.range(1).withColumn("_g", F.lit(1)).groupBy("_g")
              .applyInPandas(_mk_zones, "tx long, ty long, px binary"))

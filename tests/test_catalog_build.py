@@ -9,6 +9,7 @@ import itertools
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from gdal_spark.queries import QUERIES, t
@@ -140,6 +141,17 @@ def test_pip_join_s2_executes_in_four_jobs(spark, tmp_path):
     assert 0 < len(jobs) <= 4, jobs
     assert plan.count("BroadcastHashJoin") == 1, plan
     assert "MapInPandas" not in plan, plan
+
+
+@pytest.mark.parametrize("name, most", [("focal_hillshade", 5),
+                                        ("fill_nodata", 5),
+                                        ("point_sample_bilinear", 7)])
+def test_halo_queries_execute_within_their_jobs(spark, tmp_path, name, most):
+    """The halo exchange is one Python map and one grouped Python stage
+    (``operators.focal.halo_apply``); point sampling adds the points'
+    side and the cogroup."""
+    jobs, _ = _executed(spark, tmp_path, name)
+    assert 0 < len(jobs) <= most, jobs
 
 
 def test_dialect_join_over_a_local_layer_builds_without_a_job(spark, tmp_path):

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from gdal_spark.operators.fill import fill_nodata_array, fill_nodata_tiles
 
@@ -46,3 +47,17 @@ def test_fill_tile_split_invariance(spark):
     np.testing.assert_array_equal(got, want)
     # holes actually filled (all had valid neighbors within radius)
     assert (got != NODATA).all()
+
+
+@pytest.mark.parametrize("radius", [0, 9])
+def test_radius_outside_one_tile_is_refused_when_built(spark, radius):
+    # the halo reaches at most one tile over, and a 0-px halo is no fill
+    arr = np.ones((2 * 8, 2 * 8), dtype=np.float32)
+    tiles = spark.createDataFrame(pd.DataFrame([
+        {"tx": tx, "ty": ty,
+         "px": bytearray(arr[ty * 8:(ty + 1) * 8, tx * 8:(tx + 1) * 8]
+                         .tobytes())}
+        for ty in range(2) for tx in range(2)]))
+    with pytest.raises(ValueError, match="halo width"):
+        fill_nodata_tiles(tiles, NODATA, radius=radius, dtype="float32",
+                          tile_size=8)

@@ -35,7 +35,10 @@ def data(spark):
             pts["x"].to_numpy(), pts["y"].to_numpy(), rings)
         for did in pts["doc_id"].to_numpy()[inside]:
             want.add((did, int(prow["fid"])))
-    return docs, polys, grid, pts, want
+    yield docs, polys, grid, pts, want
+    # a cached layer left behind would answer later tests' plans
+    docs.unpersist()
+    polys.unpersist()
 
 
 def _got_pairs(joined):
@@ -250,7 +253,9 @@ def scaled(spark):
             xs, ys, kwkb.polygon_rings(bytes(prow["wkb"])))
         for i in np.flatnonzero(inside):
             fids[i].append(int(prow["fid"]))
-    return pts, polys, ppdf, fids
+    yield pts, polys, ppdf, fids
+    pts.unpersist()
+    polys.unpersist()
 
 
 _DEG_GRID = TileGrid.local(-1.2, -1.0, 1.2, 1.0, tile_size=256)
@@ -445,7 +450,9 @@ def border_case(spark):
     pts = spark.createDataFrame(pdf).cache()
     want = {(int(i), fid) for fid, rings in enumerate(polygons)
             for i in np.flatnonzero(kpip.points_in_polygon(px, py, rings))}
-    return grid, pts, polys, want, px.size
+    yield grid, pts, polys, want, px.size
+    pts.unpersist()
+    polys.unpersist()
 
 
 @pytest.mark.parametrize("salted", [False, True], ids=["quadtree", "quadtree_salted"])

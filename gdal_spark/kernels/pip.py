@@ -1,4 +1,4 @@
-"""Point-in-polygon kernels: ray casting + winding number, vectorized.
+"""Point-in-polygon kernels: vectorized ray casting.
 
 Ray cast reproduces OGRLinearRing::isPointInRing
 (/root/reference/ogr/ogrlinearring.cpp:462-532) arithmetic exactly:
@@ -8,10 +8,6 @@ counted when the edge straddles y=0 with the strict/inclusive split
 ``(x1*y2 - x2*y1)/(y2-y1)`` is strictly > 0.  Same IEEE double ops in
 the same order -> bit-identical inside/outside decisions, including
 the reference's edge-case behavior for points on vertices/edges.
-
-Winding number mirrors the ring-nesting test of the marching-squares
-polygonizer (/root/reference/alg/marching_squares/
-polygon_ring_appender.h:50-87), used for hole assignment.
 """
 
 from __future__ import annotations
@@ -90,26 +86,3 @@ def points_in_polygon(px, py, rings):
     for hole in rings[1:]:
         inside &= ~points_in_ring(px, py, hole)
     return inside
-
-
-def winding_number(px, py, ring_xy):
-    """Vectorized winding number of N points w.r.t. one ring.
-
-    Mirrors polygon_ring_appender.h:50-87: signed crossings of the
-    upward/downward edges using the isLeft orientation test.  Nonzero
-    winding == inside.  No engine path calls it: the bit-match PIP
-    path is the even-odd ray cast above, and polygonize tells outer
-    rings from holes by signed area (kernels/polygonize.py).
-    """
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    ring = np.asarray(ring_xy, dtype=np.float64)
-
-    x1, y1 = ring[:-1, 0][:, None], ring[:-1, 1][:, None]
-    x2, y2 = ring[1:, 0][:, None], ring[1:, 1][:, None]
-    # isLeft((x1,y1),(x2,y2),p) > 0 <=> p left of upward edge
-    is_left = (x2 - x1) * (py[None, :] - y1) - (px[None, :] - x1) * (y2 - y1)
-    up = (y1 <= py[None, :]) & (y2 > py[None, :]) & (is_left > 0)
-    down = (y1 > py[None, :]) & (y2 <= py[None, :]) & (is_left < 0)
-    return (up.sum(axis=0) - down.sum(axis=0)).astype(np.int64)
-

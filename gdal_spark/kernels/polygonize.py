@@ -212,39 +212,3 @@ def _collapse(ring):
             out.append(b)
     out.append(out[0])
     return np.array(out, dtype=np.float64)
-
-
-def ring_area(ring):
-    """Signed ring area in pixel coords (y down, region on left while
-    tracing): outer rings positive, holes negative.  (Region-on-left
-    tracing makes outer rings counterclockwise on screen == clockwise
-    in y-up math coords, so the standard shoelace sign is negated.)"""
-    r = np.asarray(ring, dtype=np.float64)
-    x, y = r[:-1, 0], r[:-1, 1]
-    x2, y2 = r[1:, 0], r[1:, 1]
-    return -0.5 * float(np.sum(x * y2 - x2 * y))
-
-
-def polygonize_array(arr, connect8: bool = False, nodata=None):
-    """Full single-array polygonize: label + trace per component.
-
-    Returns list of dicts {value, label, rings (outer first, then
-    holes), pixel_count} ordered by label.  The distributed operator
-    reproduces this result tile-split-invariantly (tests assert).
-    """
-    a = np.asarray(arr)
-    labels, n = label_components(a, connect8=connect8, nodata=nodata)
-    out = []
-    for lab in range(1, n + 1):
-        mask = labels == lab
-        ys, xs = np.nonzero(mask)
-        val = a[ys[0], xs[0]]
-        rings = trace_rings(mask, connect8=connect8)
-        outer = [r for r in rings if ring_area(r) > 0]
-        holes = [r for r in rings if ring_area(r) < 0]
-        out.append({
-            "value": val, "label": lab,
-            "rings": outer + holes,
-            "pixel_count": int(mask.sum()),
-        })
-    return out

@@ -45,9 +45,3 @@ def proximity_from_targets(shape, tys, txs, maxdist: float,
     d = np.sqrt(best)
     out = np.where(d <= maxdist, d, FILL)
     return out
-
-
-def proximity_array(arr, target_values, maxdist: float):
-    """Single-array reference path."""
-    tys, txs = target_pixels(arr, target_values)
-    return proximity_from_targets(np.asarray(arr).shape, tys, txs, maxdist)

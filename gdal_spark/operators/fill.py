@@ -27,26 +27,6 @@ from .focal import halo_apply
 OUT_SCHEMA = "tx long, ty long, px binary, checksum long"
 
 
-def fill_nodata_array(arr, nodata, radius: int):
-    """Single-array kernel: IDW(1/d^2) over valid pixels within the
-    Chebyshev radius; NaN-padded edges contribute nothing."""
-    a = np.asarray(arr, dtype=np.float64)
-    h, w = a.shape
-    pad = np.full((h + 2 * radius, w + 2 * radius), np.nan)
-    pad[radius:-radius, radius:-radius] = np.where(a == nodata, np.nan, a)
-    out = a.copy()
-    ys, xs = np.nonzero(a == nodata)
-    for y, x in zip(ys.tolist(), xs.tolist()):
-        win = pad[y:y + 2 * radius + 1, x:x + 2 * radius + 1]
-        vy, vx = np.nonzero(~np.isnan(win))
-        if len(vy) == 0:
-            continue
-        d2 = (vy - radius) ** 2.0 + (vx - radius) ** 2.0
-        wgt = 1.0 / d2
-        out[y, x] = float((win[vy, vx] * wgt).sum() / wgt.sum())
-    return out
-
-
 def fill_nodata_tiles(tiles: DataFrame, nodata, radius: int = 3,
                       dtype: str = "float32",
                       tile_size: int = 256) -> DataFrame:

@@ -39,12 +39,23 @@ from pyspark.sql import DataFrame, functions as F
 from .. import functions as gf
 from ..kernels import clip as kclip
 from ..kernels.cells import TileGrid
+from ..placement import broadcast_fit, decide
 from .spatial_join import spatial_join
 
 
 def _matches(points: DataFrame, polys: DataFrame, grid: TileGrid,
              zoom: int) -> DataFrame:
     return spatial_join(points, polys, grid, zoom=zoom, how="inner")
+
+
+def _keys(matches: DataFrame, key: str, bound: DataFrame) -> DataFrame:
+    """Distinct ``key`` of ``matches``, broadcast-hinted when ``bound``
+    (a superset; Catalyst sizes a join as a product) fits."""
+    size, limit, fits = broadcast_fit(bound)
+    decide("layer_algebra.keys_broadcast", "broadcast" if fits else "catalyst",
+           key=key, bound_size=size, threshold=limit)
+    keys = matches.select(key).distinct()
+    return F.broadcast(keys) if fits else keys
 
 
 def intersection(points: DataFrame, polys: DataFrame, grid: TileGrid,
@@ -60,7 +71,7 @@ def clip(points: DataFrame, polys: DataFrame, grid: TileGrid,
     """Input features cut to the method layer's area: point subset,
     input attributes only (ogrlayer.cpp:5497)."""
     key = points.columns[0]
-    hit = _matches(points, polys, grid, zoom).select(key).distinct()
+    hit = _keys(_matches(points, polys, grid, zoom), key, points)
     return points.join(hit, key, "left_semi")
 
 
@@ -68,7 +79,7 @@ def erase(points: DataFrame, polys: DataFrame, grid: TileGrid,
           zoom: int = 6) -> DataFrame:
     """Input minus the method layer's area (ogrlayer.cpp:5806)."""
     key = points.columns[0]
-    hit = _matches(points, polys, grid, zoom).select(key).distinct()
+    hit = _keys(_matches(points, polys, grid, zoom), key, points)
     return points.join(hit, key, "left_anti")
 
 
@@ -85,7 +96,7 @@ def union(points: DataFrame, polys: DataFrame, grid: TileGrid,
     """Identity + method-only remainders: polygons containing no
     point appear once with NULL point attrs (ogrlayer.cpp:3763)."""
     ident = identity(points, polys, grid, zoom)
-    hit_fids = _matches(points, polys, grid, zoom).select("fid").distinct()
+    hit_fids = _keys(_matches(points, polys, grid, zoom), "fid", polys)
     q_only = polys.drop("wkb").join(hit_fids, "fid", "left_anti")
     return ident.unionByName(q_only, allowMissingColumns=True)
 
@@ -102,7 +113,7 @@ def sym_difference(points: DataFrame, polys: DataFrame, grid: TileGrid,
                    zoom: int = 6) -> DataFrame:
     """A-only + B-only remainders (ogrlayer.cpp:4300)."""
     a_only = erase(points, polys, grid, zoom)
-    hit_fids = _matches(points, polys, grid, zoom).select("fid").distinct()
+    hit_fids = _keys(_matches(points, polys, grid, zoom), "fid", polys)
     b_only = polys.drop("wkb").join(hit_fids, "fid", "left_anti")
     return a_only.unionByName(b_only, allowMissingColumns=True)
 

@@ -105,14 +105,6 @@ def sieve_tiles(tiles: DataFrame, threshold: int, dtype: str = "uint8",
     return labeled
 
 
-def sieve_to_array(sieved_runs, shape):
-    """Collect sieved runs into a dense array (tests / small outputs)."""
-    out = np.zeros(shape, dtype=np.int64)
-    for r in sieved_runs:
-        out[r["gy"], r["gx0"]:r["gx1"] + 1] = r["value"]
-    return out
-
-
 def footprint_tiles(tiles: DataFrame, dtype: str = "uint8",
                     tile_size: int = 256, nodata=0,
                     geotransform=None) -> DataFrame:

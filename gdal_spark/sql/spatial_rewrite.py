@@ -59,6 +59,7 @@ from dataclasses import replace
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..kernels.cells import TileGrid
+from ..placement import decide, on_driver
 from .lexer import significant, tokenize
 from .parser import (_NAME_KINDS, FromItem, SelectStmt, _emit_name,
                      _splice, emit)
@@ -137,16 +138,18 @@ def _extent(polys: DataFrame):
     max of the maxes, by SQL's rules (NULLs ignored, NaN above every
     number; all NULL or no rows -> NULL).
 
-    A layer whose bbox projection optimizes to a ``LocalRelation`` (a
-    small ``createDataFrame``) is collected on the driver, which runs
-    no Spark job; any other layer takes one 4-scalar aggregate."""
+    A layer whose bbox projection is held by the driver (a small
+    ``createDataFrame``) is collected there, which runs no Spark job;
+    any other layer takes one 4-scalar aggregate."""
     bbox = polys.select("xmin", "ymin", "xmax", "ymax")
-    plan = bbox._jdf.queryExecution().optimizedPlan()
-    if plan.getClass().getSimpleName() != "LocalRelation":
+    kind, local = on_driver(bbox)
+    rows = bbox.collect() if local else None
+    decide("spatial_rewrite.extent", "driver" if local else "aggregate",
+           plan=kind, rows=len(rows) if local else None)
+    if not local:
         return tuple(bbox.agg(F.min("xmin"), F.min("ymin"),
                               F.max("xmax"), F.max("ymax")).collect()[0])
-    cols = [[v for v in c if v is not None]
-            for c in zip(*bbox.collect())] or [[]] * 4
+    cols = [[v for v in c if v is not None] for c in zip(*rows)] or [[]] * 4
     return tuple(pick(c, key=_sql_order) if c else None
                  for pick, c in zip((min, min, max, max), cols))
 

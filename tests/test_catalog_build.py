@@ -126,12 +126,33 @@ def _executed(spark, tmp_path, name):
     return jobs, df._jdf.queryExecution().executedPlan().toString()
 
 
+def _assert_local_cover_broadcast(plan):
+    """No Python node runs, and the broadcast side is the driver-built
+    cover (``cell`` .. ``inside`` rows), not the points' file scan."""
+    assert not any(node in plan for node in ("MapInArrow", "MapInPandas", "Python")), plan
+    [join] = [line for line in plan.splitlines() if "BroadcastHashJoin" in line]
+    assert "BuildRight" in join, plan
+    build = plan[plan.index("BroadcastExchange"):]
+    assert "LocalTableScan [cell#" in build and "inside#" in build, plan
+    assert "FileScan" not in build, plan
+
+
 def test_pip_join_executes_in_four_jobs(spark, tmp_path):
     """The cell cover carries the polygon attributes, so the join
-    broadcasts the polygon side once: no second broadcast by fid."""
+    broadcasts the polygon side once: no second broadcast by fid.  The
+    layer is local, so the cover is built on the driver."""
     jobs, plan = _executed(spark, tmp_path, "pip_join")
     assert 0 < len(jobs) <= 4, jobs
     assert plan.count("BroadcastHashJoin") == 1, plan
+    _assert_local_cover_broadcast(plan)
+
+
+def test_dialect_spatial_join_executes_in_four_jobs(spark, tmp_path):
+    """The rewrite reads the local layer's extent on the driver and
+    joins to its driver-built, salted cover, broadcast once."""
+    jobs, plan = _executed(spark, tmp_path, "dialect_spatial_join")
+    assert 0 < len(jobs) <= 4, jobs
+    _assert_local_cover_broadcast(plan)
 
 
 def test_pip_join_s2_executes_in_four_jobs(spark, tmp_path):

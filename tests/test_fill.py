@@ -6,7 +6,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from gdal_spark.operators.fill import fill_nodata_array, fill_nodata_tiles
+from gdal_spark.operators.fill import fill_nodata_tiles
+from reference_twins import fill_nodata_array
 
 TS, N, H = 16, 2, 3
 NODATA = 0.0

@@ -7,6 +7,7 @@ import pandas as pd
 
 from gdal_spark.kernels import proximity as kprox
 from gdal_spark.operators.proximity import proximity_tiles
+from reference_twins import proximity_array
 
 TS, N = 16, 3
 
@@ -33,7 +34,7 @@ def _tiles_df(spark, arr):
 def test_proximity_tile_split_invariance(spark):
     arr = _arr()
     maxdist = 20.0
-    want = kprox.proximity_array(arr, [9], maxdist).astype(np.float32)
+    want = proximity_array(arr, [9], maxdist).astype(np.float32)
     rows = proximity_tiles(_tiles_df(spark, arr), [9], maxdist,
                            tile_size=TS).collect()
     assert len(rows) == N * N

@@ -13,7 +13,6 @@ import pandas as pd
 import pytest
 
 from gdal_spark.kernels import checksum as kck
-from gdal_spark.kernels import polygonize as kpoly
 from gdal_spark.kernels import rasterize as kr
 from gdal_spark.kernels import wkb as kwkb
 from gdal_spark.kernels.cells import TileGrid
@@ -21,6 +20,7 @@ from gdal_spark.operators.polygonize import polygonize_tiles
 from gdal_spark.operators.raster_tile import (
     build_pyramid, pyramid_reduce, raster_stats, rasterize_tiles)
 from gdal_spark.sources import fixtures as fx
+from reference_twins import polygonize_array
 
 TS = 64
 ZOOM = 3  # 8x8 tiles of 64px => 512^2 world
@@ -164,7 +164,7 @@ def test_polygonize_tile_split_invariance(spark, connect8):
     arr = np.maximum(arr, np.roll(arr, 1, axis=0))
     arr = np.maximum(arr, np.roll(arr, 1, axis=1))
 
-    want = kpoly.polygonize_array(arr, connect8=connect8, nodata=0)
+    want = polygonize_array(arr, connect8=connect8, nodata=0)
     got_rows = polygonize_tiles(
         _tiles_df(spark, arr, ts), tile_size=ts, connect8=connect8, nodata=0
     ).collect()

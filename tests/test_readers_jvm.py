@@ -9,8 +9,6 @@ from __future__ import annotations
 import itertools
 import json
 import os
-import subprocess
-import sys
 import textwrap
 
 import pytest
@@ -19,9 +17,9 @@ from gdal_spark.kernels import wkb as kwkb
 from gdal_spark.queries import QUERIES
 from gdal_spark.sources.readers import (read_geojson, read_geojson_seq,
                                         read_wkt_csv)
+from worker_pools import daemons_after
 
 _GROUPS = itertools.count()
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInArrow")
 
 
@@ -269,30 +267,11 @@ def test_repeated_reads_leave_no_cached_blocks(spark, inputs):
 
 
 _ONE_POOL = textwrap.dedent('''
-    import json, os, sys
+    import json, sys
     from gdal_spark.session import get_spark
     from gdal_spark.sources.readers import (read_geojson, read_geojson_seq,
                                             read_wkt_csv)
-
-    def children():
-        kids = {}
-        for e in os.scandir("/proc"):
-            if e.name.isdigit():
-                try:
-                    with open(f"/proc/{e.name}/stat") as fh:
-                        stat = fh.read()
-                except OSError:
-                    continue
-                ppid = int(stat[stat.rindex(")") + 2:].split()[1])
-                kids.setdefault(ppid, []).append(int(e.name))
-        return kids
-
-    def cmdline(pid):
-        try:
-            with open(f"/proc/{pid}/cmdline", "rb") as fh:
-                return fh.read().replace(b"\\0", b" ").decode()
-        except OSError:
-            return ""
+    from worker_pools import python_daemons
 
     spark = get_spark(app_name="one-pool", cores=2, shuffle_partitions=2)
     seq, fc, csv = sys.argv[1:4]
@@ -300,16 +279,7 @@ _ONE_POOL = textwrap.dedent('''
                read_wkt_csv(spark, csv)):
         df.collect()
     spark.range(8).mapInArrow(lambda it: it, "id long").collect()
-    jvm = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
-    kids, daemons, todo = children(), [], [jvm]
-    while todo:
-        p = todo.pop()
-        for c in kids.get(p, ()):
-            if "gdal_spark.worker_daemon" in cmdline(c):
-                daemons.append(c)      # a pool's root; its workers are forks
-            else:
-                todo.append(c)
-    print("DAEMONS", json.dumps(daemons))
+    print("DAEMONS", json.dumps(python_daemons(spark)))
     spark.stop()
 ''')
 
@@ -317,14 +287,9 @@ _ONE_POOL = textwrap.dedent('''
 def test_session_keeps_one_python_worker_pool(inputs):
     """RDD-API Python starts a second worker daemon beside the one that
     serves Arrow UDFs; reading the three formats must not."""
-    env = dict(os.environ, PYTHONPATH=_REPO, SPARK_GRAFT_DRIVER_MEM="1g")
-    out = subprocess.run(
-        [sys.executable, "-c", _ONE_POOL, inputs["seq"], inputs["fc"],
-         inputs["csv"]],
-        env=env, capture_output=True, text=True, timeout=600)
-    assert out.returncode == 0, out.stderr[-3000:]
-    line = [s for s in out.stdout.splitlines() if s.startswith("DAEMONS ")]
-    assert len(json.loads(line[0].split(" ", 1)[1])) == 1, out.stdout
+    [daemons] = daemons_after(_ONE_POOL, inputs["seq"], inputs["fc"],
+                              inputs["csv"])
+    assert len(daemons) == 1, daemons
 
 
 def test_csv_and_seq_readers_agree_on_empty_geometries(spark, tmp_path):

@@ -8,7 +8,8 @@ import pytest
 
 from gdal_spark.kernels import sieve as ks
 from gdal_spark.kernels import wkb as kwkb
-from gdal_spark.operators.sieve import footprint_tiles, sieve_tiles, sieve_to_array
+from gdal_spark.operators.sieve import footprint_tiles, sieve_tiles
+from reference_twins import sieve_to_array
 
 TS, N = 16, 2
 
